@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from com_danliris_service_etl_spark.operators.partitioning import spread
+
 DEFAULT_PERMS = 16
 DEFAULT_BANDS = 4
 
@@ -32,185 +34,12 @@ def exact_dedup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "d
     )
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Small corpora often arrive as one parquet file = one partition; the
-    per-token/shingle hashing below is CPU-bound, so spread rows across the
-    cluster first (one cheap shuffle of the compact doc rows buys full
-    parallelism for the expensive explode+hash stages). CONDITIONAL: a
-    well-partitioned input (≥ the cluster's parallelism) is passed through
-    untouched — an unconditional repartition(defaultParallelism) would
-    DOWN-partition a 100 TB input into a handful of giant partitions, the
-    opposite of its purpose.
-
-    The probe REPLAYS Spark's own split planning over the analyzed plan's
-    size statistic instead of converting to an RDD:
-    `df.rdd.getNumPartitions()` is correct but costs 30-900 ms of
-    driver-side plan conversion per FRESH plan (measured r12) — a floor
-    tax paid by every _spread call site on every benched run — while
-    `analyzed().stats().sizeInBytes()` is the already-computed file-index
-    size (1-30 ms). The estimate mirrors FilePartition planning:
-    maxSplit = min(maxPartitionBytes, max(openCostInBytes, size/par)),
-    estParts = ceil(size/maxSplit); for big inputs Spark targets `par`
-    splits by construction so the estimate saturates exactly when the
-    real planner does, and for one-small-file inputs both give 1. The
-    probe is still GUARDED by `_is_scan_rooted`: a composed plan
-    (join/aggregate/window/sort upstream) is passed through untouched —
-    its exchange already partitioned it to `spark.sql.shuffle.partitions`,
-    and a caller wanting different layout repartitions explicitly. Any
-    stats failure falls back to the exact RDD probe."""
-    sc = df.sparkSession.sparkContext
-    if not _is_scan_rooted(df):
-        return df
-    par = sc.defaultParallelism
-    try:
-        # FilePartition planning splits the RELATION'S raw bytes, but the
-        # ROOT's sizeInBytes is scaled through Project/Filter by the basic
-        # stats visitor (a narrow projection over a wide scan can
-        # underestimate 10x and trigger a spurious repartition of an
-        # already well-split input) — so read the LEAF relation's own
-        # stats, which for a scan-rooted plan IS the file-index size the
-        # split planner sees.
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        size = sum(
-            int(leaves.apply(i).stats().sizeInBytes())
-            for i in range(leaves.size())
-        )
-        conf = df.sparkSession.conf
-
-        def _bytes(key: str, default: int) -> int:
-            raw = str(conf.get(key, str(default))).strip().lower()
-            for suf, mult in (("kb", 2**10), ("mb", 2**20), ("gb", 2**30),
-                              ("k", 2**10), ("m", 2**20), ("g", 2**30),
-                              ("b", 1)):
-                if raw.endswith(suf):
-                    return int(raw[: -len(suf)]) * mult
-            return int(raw)
-
-        max_split = min(
-            _bytes("spark.sql.files.maxPartitionBytes", 128 * 2**20),
-            max(_bytes("spark.sql.files.openCostInBytes", 4 * 2**20),
-                max(size // par, 1)),
-        )
-        est_parts = -(-size // max_split)
-    except Exception:  # noqa: BLE001 — stats missing on exotic relations
-        est_parts = df.rdd.getNumPartitions()
-        size = None
-    # Target partition count is sized to the DATA, capped by the core
-    # count (r15; guide §2.5 + the r14 driver's scaling block, which read
-    # 32-core anti-scaling ratios of 0.45-0.78 on the dd family). The r15
-    # adjudication, measured both in-process interleaved AND as separate
-    # 8-vs-32-core processes: the anti-scaling does NOT reproduce outside
-    # r14's contended window (current ratios 0.9-1.1), and capping the
-    # spread to >= 64 KB/task regresses the CPU-heavy consumers 2x at 32
-    # cores (txt4's Horner explode does ~200 window hashes per input KB —
-    # per-task CPU, not bytes, is what needs splitting). So the budget
-    # defaults to 16 KB/task: behavior at the measured corpus sizes is
-    # unchanged (594 KB documents → ceil = 37 ≥ par), while genuinely
-    # tiny inputs (a few KB) no longer pay a par-way shuffle for one
-    # task's worth of rows, and tgt<=1 skips the exchange entirely.
-    # Override via SPARK_GRAFT_SPREAD_BYTES for cluster tuning.
-    import os as _os
-
-    spread_bytes = int(_os.environ.get("SPARK_GRAFT_SPREAD_BYTES") or 16384)
-    tgt = par if size is None else min(par, max(1, -(-size // spread_bytes)))
-    if est_parts >= tgt or tgt <= 1:
-        return df
-    # HASH-partition on a deterministic synthetic key instead of the old
-    # keyless round-robin `repartition(tgt)`. Round-robin pays a local
-    # SORT of the map side first (spark.sql.execution.sortBeforeRepartition,
-    # needed so task retries reproduce the row→partition assignment —
-    # SPARK-23207) and that sort runs on the very under-partitioned input
-    # _spread exists to fix: measured 0.75 s vs 0.37 s for the same 600k-row
-    # one-partition redistribution (r14). xxhash64 over the whole row is
-    # deterministic under retries (guide §2.5: derive synthetic keys
-    # deterministically, never from rand()), and 100×tgt distinct values
-    # spread evenly across tgt partitions. Exact-duplicate rows co-locate,
-    # which every downstream here tolerates (their keyed exchanges re-hash).
-    par_key = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(100 * tgt))
-    return df.repartition(tgt, par_key)
-
-
-# Analyzed-plan node CLASSES that cannot introduce an exchange: for these
-# the `.rdd` partition probe is pure metadata even under AQE. Matched on
-# the JVM class simple name (getClass().getSimpleName()), not the plan's
-# string rendering — rendering drifts across Spark versions; class names
-# are the tree itself.
-_NARROW_CLASSES = frozenset(
-    {
-        "LogicalRelation",  # DataSource V1 scan (parquet here)
-        "DataSourceV2Relation",
-        "DataSourceV2ScanRelation",
-        "HiveTableRelation",
-        "LogicalRDD",
-        "LocalRelation",
-        "Range",
-        "Project",
-        "Filter",
-        "SubqueryAlias",
-        "Generate",
-        "GlobalLimit",
-        "LocalLimit",
-        "View",
-    }
-)
-
-
-def _walk_is_narrow(jplan) -> bool:
-    """Walk the analyzed LogicalPlan tree via py4j: every node's JVM class
-    simple name must be in _NARROW_CLASSES. Raises on py4j failures —
-    callers decide the safe default."""
-    stack = [jplan]
-    while stack:
-        node = stack.pop()
-        if node.getClass().getSimpleName() not in _NARROW_CLASSES:
-            return False
-        children = node.children()
-        for i in range(children.size()):
-            stack.append(children.apply(i))
-    return True
-
-
-_SCAN_ROOT_SELF_CHECKED = False
-
-
-def _is_scan_rooted(df: DataFrame) -> bool:
-    """True iff every node of the analyzed logical plan is narrow (no
-    join/aggregate/window/sort/repartition anywhere) — the condition under
-    which `.rdd.getNumPartitions()` runs no jobs. Unknown node classes and
-    probe failures default to False (treat as composed: skip the probe —
-    the safe direction, but see the self-check below).
-
-    SELF-CHECK (once per process): a silently-miscategorizing probe would
-    disable `_spread` for every scan input — a silent perf regression, not
-    a correctness bug — so on first use assert the walk classifies a plain
-    scan as narrow and an aggregate as composed; Spark-version drift in
-    the plan representation then fails LOUDLY instead of quietly."""
-    global _SCAN_ROOT_SELF_CHECKED
-    if not _SCAN_ROOT_SELF_CHECKED:
-        spark = df.sparkSession
-        scan_ok = _walk_is_narrow(spark.range(1)._jdf.queryExecution().analyzed())
-        agg_composed = not _walk_is_narrow(
-            spark.range(1).groupBy().count()._jdf.queryExecution().analyzed()
-        )
-        if not (scan_ok and agg_composed):
-            raise RuntimeError(
-                "_is_scan_rooted self-check failed on this Spark version: "
-                f"plain scan narrow={scan_ok}, aggregate composed={agg_composed}. "
-                "Update _NARROW_CLASSES for the new analyzed-plan node classes."
-            )
-        _SCAN_ROOT_SELF_CHECKED = True
-    try:
-        return _walk_is_narrow(df._jdf.queryExecution().analyzed())
-    except Exception:
-        return False
-
-
 def _shingles(docs: DataFrame, text_col: str, id_col: str, k: int = 3) -> DataFrame:
     """Word k-shingles per document (documents with < k tokens drop out —
     mirrored in the oracle). Duplicates are NOT removed: every consumer
     (min-aggregation) is duplicate-insensitive, so a distinct here would be
     a pure extra shuffle."""
-    toks = _spread(docs).select(id_col, F.split(F.col(text_col), " ").alias("t")).filter(
+    toks = spread(docs).select(id_col, F.split(F.col(text_col), " ").alias("t")).filter(
         F.size("t") >= k
     )
     # Spark SQL array indexing is 0-based: shingle i = tokens[i..i+k-1].
@@ -256,7 +85,7 @@ def minhash_signatures(
     k = shingle_k
     idx_terms = ", ".join(f"t[i+{j}]" for j in range(k))
     sh = (
-        _spread(docs)
+        spread(docs)
         .select(id_col, F.split(F.col(text_col), " ").alias("t"))
         .filter(F.size("t") >= k)
         .select(
@@ -615,7 +444,7 @@ def simhash_fingerprints(
     Single shuffle (groupBy doc, 16 map-side-combinable sums); near-dup
     search over the fingerprints is a bit_count(xor) self-join, optionally
     blocked on a fingerprint prefix."""
-    toks = _spread(docs).select(
+    toks = spread(docs).select(
         id_col, F.explode(F.split(F.col(text_col), " ")).alias("tok")
     ).withColumn("h", F.substring(F.md5(F.col("tok")), 1, hex_chars))
 
@@ -651,7 +480,7 @@ def ngram_jaccard_pairs(
     the same (block_cols, size-bucket) block, so cost is Σ block² not n² —
     the blocking key is the scale lever (tighter buckets at larger corpora).
     """
-    prepped = _spread(docs).select(
+    prepped = spread(docs).select(
         F.col(id_col),
         *[F.col(c) for c in block_cols],
         F.floor(F.col(size_bucket_col) / size_bucket_width).alias("size_bucket"),
@@ -774,14 +603,14 @@ def contamination_scores(
         .distinct()
         .agg(F.sort_array(F.collect_list("s")).alias("__bench"))
     )
-    # _spread: array_intersect rebuilds a hash set of the broadcast
+    # spread: array_intersect rebuilds a hash set of the broadcast
     # benchmark array PER ROW, so the corpus projection is the heavy-fold
     # class and a one-row-group fixture scans as ONE partition. Quiet-
     # window interleaved A/B: 1.32 → 0.46 s (a first A/B during a
     # co-tenant burst read the opposite and was adjudicated noise — the
     # same burst inflated the untouched g*/j* block 4-8×; r14).
     toks = (
-        _spread(docs).select(id_col, F.split(F.col(text_col), " ").alias("t"))
+        spread(docs).select(id_col, F.split(F.col(text_col), " ").alias("t"))
         .filter(F.size("t") >= k)
         .select(id_col, sh_arr.alias("__sh"))
     )
@@ -840,7 +669,7 @@ def passage_dedup(
             "doc·max_pos+pos first-occurrence encoding has no string form"
         )
     id_bound = ((1 << 63) - 1) // max_pos
-    toks = _spread(docs).select(
+    toks = spread(docs).select(
         F.col(id_col), F.split(F.col(text_col), " ").alias("t")
     )
     passages = toks.select(
@@ -1114,7 +943,7 @@ def _pair_shingle_intersection(
     k = shingle_k
     idx_terms = ", ".join(f"t[i+{j}]" for j in range(k))
     arrs = (
-        _spread(docs)
+        spread(docs)
         .select(id_col, F.split(F.col(text_col), " ").alias("t"))
         .join(cand_ids, id_col, "left_semi")
         .filter(F.size("t") >= k)
@@ -1214,7 +1043,7 @@ def contamination_passages(
     and the overlap verdict are then a single per-row projection over
     the token array — nested higher-order functions inside codegen, no
     explode (the per-doc verdict never leaves the row). The only
-    corpus movement is `_spread`'s CONDITIONAL repartition of the
+    corpus movement is `spread`'s CONDITIONAL repartition of the
     compact doc rows when the input arrives under-partitioned — a
     well-partitioned 100 TB corpus passes through with zero shuffle."""
     bench_arr = (
@@ -1240,13 +1069,13 @@ def contamination_passages(
     n_pass = F.size("ps").cast("long")
     n_cont = F.size("__hits").cast("long")
     return (
-        # _spread: the per-row shingle/overlap work is CPU-bound and a
+        # spread: the per-row shingle/overlap work is CPU-bound and a
         # one-file corpus arrives as one partition (same rationale as
         # _shingles); docs is a narrow scan/filter frame at call sites.
         # NULL text is filtered up front: split(NULL) would otherwise
         # propagate a NULL token array into a descending sequence(0, -1)
         # and emit a nonsense 2-passage row for the document.
-        _spread(docs.filter(F.col(text_col).isNotNull()))
+        spread(docs.filter(F.col(text_col).isNotNull()))
         .select(id_col, F.split(F.col(text_col), " ").alias("t"))
         .crossJoin(F.broadcast(bench_arr))
         .select(id_col, passages.alias("ps"), "__bench")
@@ -1333,7 +1162,7 @@ def _prefix_relation(
     k = shingle_k
     idx_terms = ", ".join(f"t[i+{j}]" for j in range(k))
     arrs = (
-        _spread(docs)
+        spread(docs)
         .select(id_col, F.split(F.col(text_col), " ").alias("t"))
         .filter(F.size("t") >= k)
         .select(
@@ -1754,7 +1583,7 @@ def duplicate_spans(
     dup_micro = n_dup*1e6 div n_windows exactly.
 
     Scale shape: windows explode row-locally inside the scan projection
-    (no shuffle; `_spread` first — the one-file-fixture guard); gram
+    (no shuffle; `spread` first — the one-file-fixture guard); gram
     ownership is ONE map-side-combinable count keyed on the gram's md5
     (uniform; hot keys are exactly the boilerplate being measured, and
     groupBy+join keeps partial aggregation on both sides where a
@@ -1773,7 +1602,7 @@ def duplicate_spans(
     the corpus's distinct k-gram set (~2^-64 per pair at these
     cardinalities; at 100 TB switch the key to xxhash64(gram)||length or
     the raw string if collision-freedom must be unconditional)."""
-    toks = _spread(docs).select(
+    toks = spread(docs).select(
         id_col, F.split(F.col(text_col), " ").alias("t")
     ).filter(F.size("t") >= k)
     wins = toks.select(
@@ -1907,7 +1736,7 @@ def longest_duplicate_substring(
     from pyspark.sql import Window
 
     rest_cap = max_depth - min_len
-    toks = _spread(docs).select(
+    toks = spread(docs).select(
         id_col, F.split(F.col(text_col), " ").alias("t")
     ).filter(F.size("t") >= min_len)
     # Suffix rows carry the seed and the capped extension as SPACE-
@@ -2070,7 +1899,7 @@ def substring_dedup_rewrite(
             "doc·max_pos+pos first-occurrence encoding has no string form"
         )
     id_bound = ((1 << 63) - 1) // max_pos
-    toks = _spread(docs).select(
+    toks = spread(docs).select(
         id_col, F.split(F.col(text_col), " ").alias("t")
     )
     wins = toks.filter(F.size("t") >= k).select(

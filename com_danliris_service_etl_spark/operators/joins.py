@@ -21,6 +21,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from com_danliris_service_etl_spark.operators.partitioning import spread
+
 
 def _is_plain_unsorted_column(c: Column) -> bool:
     """True only when ``c`` POSITIVELY has no SortOrder wrapper — i.e. it is
@@ -724,14 +726,12 @@ def fuzzy_blocked_join(
     # physical plan), so every extra reference is a full extra DP run
     # per candidate pair.
     lev = F.levenshtein(F.col("__l_text"), F.col("__r_text"), max_dist)
-    # _spread (dedup.py): the residual DP is CPU-bound and a small
+    # spread (partitioning.py): the residual DP is CPU-bound and a small
     # catalog arriving as one parquet file = one partition would probe
     # the broadcast relation single-threaded; a well-partitioned 100 TB
     # input passes through untouched.
-    from com_danliris_service_etl_spark.operators.dedup import _spread
-
     return (
-        _spread(lb).join(rb, "__blk")
+        spread(lb).join(rb, "__blk")
         .filter(len_ok)
         .withColumn("edit_dist", lev.cast("long"))
         .filter(F.col("edit_dist") >= 0)

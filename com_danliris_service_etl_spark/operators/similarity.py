@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from com_danliris_service_etl_spark.operators.partitioning import spread
+
 # Sequential left-fold dot product / norm in DOUBLE. The float32 source is
 # cast element-wise first: float arithmetic would differ between engines.
 _DOT = (
@@ -90,18 +92,16 @@ def brute_force_topk(
     At 100 TB replace the final window with per-partition top-k + re-reduce
     (TakeOrdered semantics) — expressed here via the rank window which AQE
     keeps partitioned by query id."""
-    from com_danliris_service_etl_spark.operators.dedup import _spread
-
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
         norm(vec_col).alias("q_norm"),
     )
-    # _spread: a one-file corpus scans as ONE partition and the |Q|x|C|
+    # spread: a one-file corpus scans as ONE partition and the |Q|x|C|
     # scoring fold would run single-threaded (measured: sim1 3.38x vs
     # oracle at derived sf1 before, 4 cores idle); conditional, so a
     # well-partitioned 100 TB corpus passes through untouched
-    c = _spread(embeddings).select(
+    c = spread(embeddings).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
         norm(vec_col).alias("c_norm"),
@@ -168,10 +168,8 @@ def multiprobe_lsh_topk(
     )
     # corpus scan projects only the sign tests; the norm fold moves
     # after the join (most rows match no probed bucket — see
-    # lsh_bucketed_topk), and _spread parallelizes a one-file corpus
-    from com_danliris_service_etl_spark.operators.dedup import _spread
-
-    c = _spread(embeddings).select(
+    # lsh_bucketed_topk), and spread parallelizes a one-file corpus
+    c = spread(embeddings).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
         signbit_bucket(vec_col, n_bits).alias("bucket"),
@@ -218,15 +216,13 @@ def filtered_topk(
     rows match few/no queries). A skewed filter value (one tenant owning
     the corpus) degrades to sim1's brute-force cost FOR THAT QUERY only;
     bucket that tenant through the LSH/IVF families instead."""
-    from com_danliris_service_etl_spark.operators.dedup import _spread
-
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
         norm(vec_col).alias("q_norm"),
         F.col(filter_col).alias("__f"),
     )
-    c = _spread(embeddings).select(
+    c = spread(embeddings).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
         F.col(filter_col).alias("__f"),
@@ -275,8 +271,6 @@ def filtered_multiprobe_topk(
     query, broadcast); the corpus scan projects only (id, vec, filter,
     8 sign tests) and is never exploded; norms are computed post-join on
     the ~|part|/2^n_bits matched rows (the sim2 lesson)."""
-    from com_danliris_service_etl_spark.operators.dedup import _spread
-
     probes = F.array(
         F.col("__b"), *[F.expr(f"__b ^ {1 << d}") for d in range(n_bits)]
     )
@@ -293,7 +287,7 @@ def filtered_multiprobe_topk(
             F.explode(probes).alias("__bkt"),
         )
     )
-    c = _spread(embeddings).select(
+    c = spread(embeddings).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
         F.col(filter_col).alias("__f"),
@@ -646,16 +640,14 @@ def ivf_assign_cells(
         "  (acc, s) -> CASE WHEN s.sim > acc.sim THEN s ELSE acc END"
         ").cid"
     )
-    from com_danliris_service_etl_spark.operators.dedup import _spread
-
-    # _spread: the O(C·d) per-row argmax fold is the operator's whole
+    # spread: the O(C·d) per-row argmax fold is the operator's whole
     # cost and a one-row-group corpus file scans as ONE partition
     # (quiet-window A/B 0.45 → 0.29 s; a first A/B during a co-tenant
     # burst read the opposite and was adjudicated noise — r14). Composed
     # (non-scan-rooted) callers — the k-means iteration loop — pass
     # through untouched.
     return (
-        _spread(vectors).withColumn("__v_norm", norm(vec_col))
+        spread(vectors).withColumn("__v_norm", norm(vec_col))
         .crossJoin(F.broadcast(cent_arr))
         .select(*vectors.columns, argmax.alias(cell_col))
     )
@@ -789,17 +781,15 @@ def lsh_bucketed_topk(
     match zero probed buckets and their norms would be pure waste
     (pre-norming pays off only when each row joins MANY pairs — the
     blocked self-join case `norm`'s docstring describes, which this
-    isn't). `_spread` first: a one-file corpus would otherwise run the
+    isn't). `spread` first: a one-file corpus would otherwise run the
     projection single-threaded."""
-    from com_danliris_service_etl_spark.operators.dedup import _spread
-
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
         norm(vec_col).alias("q_norm"),
         signbit_bucket(vec_col, n_bits).alias("bucket"),
     )
-    c = _spread(embeddings).select(
+    c = spread(embeddings).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
         signbit_bucket(vec_col, n_bits).alias("bucket"),
@@ -849,20 +839,6 @@ def _scale_sql(vec_col: str) -> str:
     return f"(CASE WHEN {m} = 0.0 THEN 1.0 ELSE {m} / 127.0 END)"
 
 
-def quantize_int8(vec_col: str, scale_col: str | None = None):
-    """(scale, int8 codes) for a float vector: scale = max|x|/127 (1.0 for
-    an all-zero vector so the division is total), codes = round(x/scale).
-    4x memory vs float32, 8x vs the double intermediates — the reason a
-    100 TB corpus's ANN index fits a cluster's RAM at all.
-
-    Pass ``scale_col`` (the name of a column already holding the scale) to
-    keep the codes transform O(d) per row; without it the scale expression
-    is inlined per element (O(d²) — fine for one-off use only)."""
-    s = _scale_sql(vec_col)
-    codes_s = scale_col if scale_col is not None else s
-    return F.expr(s), F.expr(_QUANT.format(v=vec_col, s=codes_s))
-
-
 def int8_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -882,8 +858,6 @@ def int8_topk(
 
     # Two-step projection so the scale lands in a column FIRST and the
     # codes lambda reads it as an outer reference — O(d), not O(d²), per row.
-    from com_danliris_service_etl_spark.operators.dedup import _spread
-
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
@@ -891,7 +865,7 @@ def int8_topk(
     ).withColumn("q_q", F.expr(_QUANT.format(v="q_vec", s="q_scale")))
     # same one-file-corpus guard as brute_force_topk (sim1 3.38x -> 0.62x
     # at sf1): quantize+score is the hot projection, keep it parallel
-    c = _spread(embeddings).select(
+    c = spread(embeddings).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
         F.expr(_scale_sql(vec_col)).alias("c_scale"),
@@ -1204,13 +1178,11 @@ def pq_topk(
         def _with_cb(df: DataFrame) -> DataFrame:
             return df.crossJoin(F.broadcast(cb_df))
 
-    # _spread (dedup.py's conditional repartition): encoding is CPU-bound
+    # spread (partitioning.py's conditional repartition): encoding is CPU-bound
     # per-row expression work, and a small corpus arriving as one parquet
     # file = one partition would score single-threaded; a well-partitioned
     # 100 TB corpus passes through untouched.
-    from com_danliris_service_etl_spark.operators.dedup import _spread
-
-    corpus = _with_cb(_spread(embeddings)).select(
+    corpus = _with_cb(spread(embeddings)).select(
         F.col(id_col).alias("neighbor_id"), codes_expr.alias("__codes")
     )
     qtab = _with_cb(queries).select(
@@ -1414,13 +1386,11 @@ def ivf_pq_topk(
         def _with_cb(df: DataFrame) -> DataFrame:
             return df.crossJoin(F.broadcast(cb_df))
 
-    from com_danliris_service_etl_spark.operators.dedup import _spread
-
     # ONE pass over the corpus: cell assignment + PQ encoding + the query
     # flag, materialized — this IS the persisted IVF-PQ index; the query
     # side filters it instead of re-quantizing.
     assigned = ivf_assign_cells(
-        _spread(embeddings).select(
+        spread(embeddings).select(
             F.col(id_col).alias("__id"),
             F.col(vec_col).alias("__vec"),
             query_filter.alias("__is_q"),
@@ -1586,7 +1556,7 @@ def truncated_recall_ablation(
     and recall needs NO joins: group the union of top-k rows by (query,
     neighbor) collecting the spaces that retrieved the pair, then count
     per query the pairs retrieved by both the full space and d. Three
-    shuffles total plus the conditional one-file-corpus `_spread`, two
+    shuffles total plus the conditional one-file-corpus `spread`, two
     of them on |Q|*k-bounded relations; the corpus is touched exactly
     once and only re-partitioned when a single-file scan would leave
     the scoring fold single-threaded (queries ride a broadcast).
@@ -1611,12 +1581,10 @@ def truncated_recall_ablation(
             cols.append(F.expr(_NORM.format(a=arr)).alias(f"{role}_n{lbl}"))
         return df.select(*cols)
 
-    from com_danliris_service_etl_spark.operators.dedup import _spread
-
     q = side(embeddings.filter(F.col(id_col) < n_queries), "q")
     # same one-file-corpus guard as brute_force_topk: the fused
     # three-space scoring is the hottest projection in the family
-    c = side(_spread(embeddings), "c")
+    c = side(spread(embeddings), "c")
 
     def space_struct(lbl: int, d: int | None):
         qa = "q_vec" if d is None else f"slice(q_vec, 1, {d})"

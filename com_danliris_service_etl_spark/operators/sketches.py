@@ -2,7 +2,7 @@
 structure a 100 TB corpus profile uses where an exact per-token groupBy
 would shuffle the full vocabulary.
 
-Complements sk1 (HLL / t-digest accuracy contract, plans/queries_olap.py)
+Complements sk1 (HLL / t-digest accuracy contract, plans/queries_sketches.py)
 with the frequency-sketch member of the family. The sketch is a
 ``depth × width`` grid of counters; build = one map-side-combinable
 groupBy of ``(row, bucket)`` — depth·width rows total, independent of

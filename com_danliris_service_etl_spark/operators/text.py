@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from com_danliris_service_etl_spark.operators.partitioning import spread
+
 # Per-language marker tokens for the n-gram/stopword language heuristic.
 # Deliberately tiny: the operator contract is "deterministic scoring +
 # argmax with alphabetical tiebreak", not linguistic accuracy.
@@ -188,9 +190,7 @@ def fingerprint(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     Documents shorter than one window emit no position rows; the left
     join re-attaches them with NULL sketch columns (the oracle's CASE
     WHEN semantics)."""
-    from com_danliris_service_etl_spark.operators.dedup import _spread
-
-    base = _spread(docs)
+    base = spread(docs)
     canon = F.concat_ws(
         " ", F.array_sort(F.array_distinct(F.split(F.col(text_col), " ")))
     )
@@ -225,14 +225,12 @@ def _tf_rows(docs: DataFrame, text_col: str, id_expr: F.Column) -> DataFrame:
     beats per-row array sorting, and the exchange ships only the
     map-side-combined (doc, term) partials, not raw tokens.
 
-    `_spread` first (r11): the explode AND the partial hash aggregation
+    `spread` first (r11): the explode AND the partial hash aggregation
     run in the scan's stage, so a one-file corpus executed the whole tf
     build on ONE partition (txt8 3.5x / txt9 3.4x vs oracle at derived
     sf1 before; the sim1 lesson) — conditional, pass-through on
     well-partitioned inputs."""
-    from com_danliris_service_etl_spark.operators.dedup import _spread
-
-    base = _spread(docs).select(
+    base = spread(docs).select(
         id_expr, F.explode(F.split(F.col(text_col), " ")).alias("term")
     )
     id_name = base.columns[0]
@@ -414,10 +412,8 @@ def bm25_topk(
     survive the semi-join before the window."""
     from pyspark.sql import Window
 
-    from com_danliris_service_etl_spark.operators.dedup import _spread
-
     tf = (
-        _spread(docs)
+        spread(docs)
         .select(
             F.col(id_col).alias("doc"),
             F.split(F.col(text_col), " ").alias("__t"),
@@ -555,16 +551,14 @@ def window_language_profile(
     rounded before the threshold compare."""
     from pyspark.sql import Window
 
-    from com_danliris_service_etl_spark.operators.dedup import _spread
-
     k = window_tokens
     langs = sorted(LANG_MARKERS)
 
-    # _spread: the per-window marker argmax below is the hot projection
+    # spread: the per-window marker argmax below is the hot projection
     # and a one-file corpus would run it on ONE partition (the sim1
     # lesson, r11); tokenize ONCE into a column — the previous inline
     # form re-split the text twice per row (size + slice operands)
-    wins = _spread(docs).select(
+    wins = spread(docs).select(
         F.col(id_col), F.split(F.col(text_col), " ").alias("t")
     ).select(
         F.col(id_col),
@@ -649,15 +643,13 @@ def boilerplate_ngram_stats(
     row-local base. The r10 form instead inner-joined the FULL exploded
     relation to the FULL count relation and re-counted totals from it —
     two fact-scale exchanges this shape never needed."""
-    from com_danliris_service_etl_spark.operators.dedup import _spread
-
     idx = ", ".join(f"t[i+{j}]" for j in range(k))
     sh_arr = F.expr(
         f"array_distinct(transform(sequence(0, size(t)-{k}),"
         f" i -> concat_ws(' ', {idx})))"
     )
     base = (
-        _spread(docs)
+        spread(docs)
         .select(id_col, F.split(F.col(text_col), " ").alias("t"))
         .filter(F.size("t") >= k)
         .select(id_col, sh_arr.alias("__sh"))
@@ -716,10 +708,8 @@ def pmi_bigrams(
     because the bigram side is already aggregated, one row per pair).
     All-integer counts; the single ln() at the output boundary is the
     only float, computed from the same integers in any engine."""
-    from com_danliris_service_etl_spark.operators.dedup import _spread
-
-    # _spread both corpus passes (r11, the sim1 one-partition lesson)
-    docs = _spread(docs)
+    # spread both corpus passes (r11, the sim1 one-partition lesson)
+    docs = spread(docs)
     toks = docs.select(F.split(F.col(text_col), " ").alias("t")).filter(
         F.size("t") >= 2
     )
@@ -992,12 +982,10 @@ def bigram_lm_scores(
     vocabulary-scale and does NOT broadcast (the fixture would allow it;
     the plan must not rely on it). Final per-doc mean is one more
     bounded aggregate. Returns (doc_id, n_bigrams, avg_nll)."""
-    from com_danliris_service_etl_spark.operators.dedup import _spread
-
-    # _spread: both corpus passes below (bigram explode, vocab explode)
+    # spread: both corpus passes below (bigram explode, vocab explode)
     # are hot scan projections that a one-file corpus would run on ONE
     # partition (the sim1 lesson, r11)
-    sd = _spread(docs)
+    sd = spread(docs)
     toks = sd.select(
         id_col, F.split(F.col(text_col), " ").alias("__t")
     ).filter(F.size("__t") >= 2)
@@ -1096,12 +1084,10 @@ def _bpe_steps(docs: DataFrame, iterations: int, text_col: str):
     One map-side-combinable corpus shuffle builds the (word, freq)
     vocabulary, lazily checkpointed and reused by every iteration; the
     driver collects exactly ONE argmax row per step."""
-    from com_danliris_service_etl_spark.operators.dedup import _spread
-
-    # _spread: the vocab build's explode + partial aggregation are the
+    # spread: the vocab build's explode + partial aggregation are the
     # corpus-pass cost of training, and a one-row-group fixture file
     # scans as ONE partition (r14, the txt5/sim1 one-partition class).
-    words = _spread(docs).select(
+    words = spread(docs).select(
         F.explode(F.split(F.col(text_col), " ")).alias("word")
     ).filter(F.length("word") >= 2)
     vocab = words.groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
@@ -1166,14 +1152,12 @@ def bpe_encode(
     folded into the expression — the corpus contract (whitespace-
     tokenized words) guarantees it; a corpus violating it fails loudly
     rather than generating a malformed expression."""
-    from com_danliris_service_etl_spark.operators.dedup import _spread
-
     tok_count = _bpe_token_count_expr(docs, iterations, text_col)
-    # _spread: the encode fold (char-split regex + chained replaces PER
+    # spread: the encode fold (char-split regex + chained replaces PER
     # WORD) is the most CPU-dense projection in the text family, and a
     # one-row-group fixture scans as ONE partition (r14).
     return (
-        _spread(docs).select(
+        spread(docs).select(
             id_col,
             F.expr(f"filter(split({text_col}, ' '), x -> x <> '')").alias("__ws"),
         )
@@ -1247,13 +1231,11 @@ def bpe_fertility(
     slice's denominators are sums over its non-empty docs; an
     (unfixtured) all-empty slice would vanish rather than divide by
     zero."""
-    from com_danliris_service_etl_spark.operators.dedup import _spread
-
     tok_count = _bpe_token_count_expr(docs, iterations, text_col)
-    # _spread: same encode kernel as bpe_encode — same one-partition
+    # spread: same encode kernel as bpe_encode — same one-partition
     # hazard (r14).
     per_doc = (
-        _spread(docs).select(
+        spread(docs).select(
             *group_cols,
             F.expr(f"filter(split({text_col}, ' '), x -> x <> '')").alias("__ws"),
         )
@@ -1292,7 +1274,7 @@ def bpe_fertility(
 def tv_distance_from_counts(st: DataFrame) -> DataFrame:
     """Finalize the per-source total-variation drift report from a
     (source, term, cnt_s) count relation — the shared tail of the batch
-    query (plans/queries_round9b.py::txt18_source_divergence, which
+    query (plans/queries_text.py::txt18_source_divergence, which
     builds the counts with one explode+groupBy pass) and the streaming
     monitor (streaming/jobs.py::run_streaming_source_divergence, which
     maintains the same counts as Structured Streaming state and

@@ -1,14 +1,24 @@
-"""Windowed event-time queries (engine extensions over the `events` fixture
-— SURVEY.md §2.12 notes the reference has no streaming runtime; these are
-the standard tumbling/sliding/session operators, in batch mode for the
-oracle gate. streaming/jobs.py runs the same tumbling aggregation as a real
-Structured Streaming query; tests assert stream ≡ batch."""
+"""Windowed event-time registry queries (st): tumbling, sliding and session
+windows, dedup, interval joins, gap fill, count-min, running distinct,
+stream-static enrichment, stateful top-k and attribution over the
+`events` fixture.
+
+SURVEY.md §2.12 notes the reference has no streaming runtime; these are
+the standard operators in batch mode for the oracle gate, and most are
+the batch twin of a Structured Streaming job in streaming/jobs.py (tests
+assert stream ≡ batch).
+"""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from com_danliris_service_etl_spark.operators.sketches import countmin_sketch, tokens_of
+from com_danliris_service_etl_spark.plans.queries_graph import (
+    _ATTR_SQL,
+    attributed_purchases,
+)
 from com_danliris_service_etl_spark.plans.registry import _events, _t, register
 
 
@@ -162,6 +172,337 @@ def st4_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# st5: exact-dedup monitoring stats (streaming pre-agg + batch finalize)
+# ---------------------------------------------------------------------------
+
+_ST5_SQL = """
+    WITH g AS (SELECT source, md5(text) AS h, count(*) AS n
+               FROM documents GROUP BY source, md5(text))
+    SELECT source,
+           CAST(sum(n) AS BIGINT) AS n_docs,
+           count(*) AS n_unique,
+           CAST(sum(n) - count(*) AS BIGINT) AS n_dup,
+           CAST(max(n) AS BIGINT) AS max_group
+    FROM g GROUP BY source
+"""
+
+
+@register("st5_dedup_stats", _ST5_SQL)
+def st5_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source exact-duplication monitoring: digest-grain pre-agg →
+    per-source finalize (docs, uniques, dups, largest dup group). This is
+    the BATCH twin of `streaming/jobs.py::run_streaming_dedup_stats`,
+    which maintains the same (source, digest) counts as Structured
+    Streaming state and finalizes per micro-batch — the live corpus-
+    ingest monitor; tests/test_streaming.py pins stream ≡ batch. Both
+    shuffles are map-side-combinable; the digest key is uniform by
+    construction."""
+    docs = _t(spark, sf_dir, "documents")
+    g = docs.groupBy("source", F.md5(F.col("text")).alias("h")).agg(
+        F.count(F.lit(1)).alias("n")
+    )
+    return g.groupBy("source").agg(
+        F.sum("n").cast("long").alias("n_docs"),
+        F.count(F.lit(1)).alias("n_unique"),
+        (F.sum("n") - F.count(F.lit(1))).cast("long").alias("n_dup"),
+        F.max("n").cast("long").alias("max_group"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# st6: view→purchase interval join (batch twin of the stream-stream join)
+# ---------------------------------------------------------------------------
+
+_ST6_SQL = """
+    SELECT v.event_id AS view_id, p.event_id AS purchase_id,
+           v.user_id, CAST(p.ts_us - v.ts_us AS BIGINT) AS lag_us
+    FROM (SELECT event_id, user_id, epoch_us(ts) AS ts_us
+          FROM events WHERE event_type = 'view') v
+    JOIN (SELECT event_id, user_id, epoch_us(ts) AS ts_us
+          FROM events WHERE event_type = 'purchase') p
+      ON v.user_id = p.user_id
+         AND p.ts_us > v.ts_us AND p.ts_us <= v.ts_us + 3600000000
+"""
+
+
+@register("st6_interval_join", _ST6_SQL)
+def st6_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """View→purchase attribution: every purchase joined to the views it
+    followed within one hour, per user — the interval join behind
+    conversion attribution. BATCH twin of
+    `streaming/jobs.py::run_streaming_interval_join` (a real
+    stream-stream join with watermarks on both sides; equivalence pinned
+    in tests/test_streaming.py). One equi-shuffle on user_id with the
+    time range as a residual predicate — never a time-cross-product; at
+    100 TB the watermark is what bounds the streaming state to one
+    hour's purchases per user."""
+    ev = _events(spark, sf_dir)
+    v = ev.filter(F.col("event_type") == "view").select(
+        F.col("event_id").alias("view_id"),
+        "user_id",
+        F.col("ts_us").alias("__v_ts"),
+    )
+    p = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"),
+        F.col("user_id").alias("__p_user"),
+        F.col("ts_us").alias("__p_ts"),
+    )
+    return (
+        v.join(
+            p,
+            (F.col("user_id") == F.col("__p_user"))
+            & (F.col("__p_ts") > F.col("__v_ts"))
+            & (F.col("__p_ts") <= F.col("__v_ts") + 3_600_000_000),
+        )
+        .select(
+            "view_id",
+            "purchase_id",
+            "user_id",
+            (F.col("__p_ts") - F.col("__v_ts")).cast("long").alias("lag_us"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# st7: dense-grid resample with gap fill (LOCF)
+# ---------------------------------------------------------------------------
+
+_ST7_SQL = """
+    WITH ev AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hb, value
+                FROM events),
+    hourly AS (SELECT event_type, hb, count(*) AS n,
+                      round(sum(value), 2) AS s, round(avg(value), 4) AS m
+               FROM ev GROUP BY event_type, hb),
+    bounds AS (SELECT min(hb) AS lo, max(hb) AS hi FROM ev),
+    grid AS (SELECT t.event_type, g.hb
+             FROM (SELECT DISTINCT event_type FROM ev) t,
+                  bounds b,
+                  LATERAL (SELECT unnest(range(b.lo, b.hi + 1)) AS hb) g)
+    SELECT g.event_type,
+           g.hb * 3600000000 AS bucket_start_us,
+           CAST(COALESCE(h.n, 0) AS BIGINT) AS n,
+           COALESCE(h.s, 0.0) AS sum_value,
+           last_value(h.m IGNORE NULLS)
+             OVER (PARTITION BY g.event_type ORDER BY g.hb
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+             AS ffill_mean,
+           (h.n IS NULL) AS is_gap
+    FROM grid g LEFT JOIN hourly h
+      ON h.event_type = g.event_type AND h.hb = g.hb
+"""
+
+
+@register("st7_gap_fill", _ST7_SQL)
+def st7_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dense hourly resample with gap fill
+    (`operators/rollup.py::resample_gap_fill`): every (event_type, hour)
+    bucket from corpus min to max exists — empty buckets carry zero
+    counts and a forward-filled mean (LOCF), flagged is_gap — the dense
+    grid every time-series consumer assumes. Events shuffle ONCE (the
+    map-side-combinable hourly aggregation); the grid derives from a
+    broadcast min/max row and stays grid-sized; the fill is one window
+    per group over grid rows. Means are rounded before the fill, so the
+    carried literal is identical cross-engine."""
+    from com_danliris_service_etl_spark.operators.rollup import resample_gap_fill
+
+    return resample_gap_fill(_events(spark, sf_dir))
+
+
+# ---------------------------------------------------------------------------
+# ST8 — the count-min grid itself (batch twin of the streaming fold)
+# ---------------------------------------------------------------------------
+
+_ST8_SQL = """
+WITH tok AS (
+  SELECT t.token
+  FROM documents, unnest(string_split(text, ' ')) AS t(token)
+  WHERE text IS NOT NULL AND t.token <> ''
+),
+cells AS (
+  SELECT r,
+         ('0x' || substring(md5(r::VARCHAR || ':' || token), 1, 8))::BIGINT % 256 AS bucket
+  FROM tok CROSS JOIN (SELECT unnest([0, 1]) AS r) rows_
+)
+SELECT r AS "row", bucket, count(*)::BIGINT AS cnt
+FROM cells GROUP BY r, bucket
+"""
+
+
+@register("st8_countmin_sketch", _ST8_SQL)
+def st8_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The count-min grid over the document token stream — the BATCH
+    twin of `streaming/jobs.py::run_streaming_countmin`, which maintains
+    the same grid as Structured Streaming state (at most depth×width
+    rows, constant in the corpus — the bounded-state property that makes
+    a live heavy-hitter monitor viable where exact counts grow with the
+    vocabulary). Cell sums are associative, so micro-batch folding lands
+    on this identical grid; tests/test_streaming.py pins stream ≡
+    batch, and integer counts make the oracle bit-exact.
+
+    Built in ROLLUP form (the sk3 lesson, promoted here in r10 after the
+    events-decade measurement caught the raw form at 9.8x the oracle):
+    aggregate exact per-token counts first — ONE map-side-combined fact
+    exchange that reduces the corpus to vocabulary grain — then md5-hash
+    only the vocabulary into cells. Identical grid by associativity of
+    cell sums; the corpus-scale double-md5 projection (2·|tokens| digest
+    calls, the measured bottleneck) becomes 2·|vocab|."""
+    docs = _t(spark, sf_dir, "documents")
+    tf = tokens_of(docs).groupBy("token").agg(F.count(F.lit(1)).alias("__tf"))
+    return countmin_sketch(tf, width=256, depth=2, counts_col="__tf")
+
+
+# ---------------------------------------------------------------------------
+# ST9 — watermark dedup (exactly-once admission under replay)
+# ---------------------------------------------------------------------------
+
+_ST9_SQL = """
+WITH replay AS (
+  SELECT * FROM events UNION ALL SELECT * FROM events
+),
+d AS (SELECT DISTINCT * FROM replay)
+SELECT event_type, count(*)::BIGINT AS n_events,
+       round(sum(value), 2) AS sum_value
+FROM d GROUP BY event_type
+"""
+
+
+@register("st9_watermark_dedup", _ST9_SQL)
+def st9_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch twin of `streaming/jobs.py::run_streaming_watermark_dedup`:
+    the event stream replayed twice (exact at-least-once redelivery),
+    admitted exactly once per event_id, then profiled per type.
+    Replayed rows are bit-identical, so the admission rule is plain
+    DISTINCT in both engines; the streaming form is
+    `dropDuplicatesWithinWatermark`, whose per-id state is evicted at
+    the watermark (the bounded-state property the batch twin cannot
+    show — tests/test_streaming.py pins stream ≡ batch on a
+    duplicate-injected fixture)."""
+    ev = _events(spark, sf_dir)
+    replay = ev.unionByName(ev)
+    return (
+        replay.dropDuplicates(["event_id"])
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 2).alias("sum_value"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# ST10 — incremental first-seen merge (streaming running-distinct twin)
+# ---------------------------------------------------------------------------
+
+_ST10_SQL = """
+WITH fs AS (
+  SELECT event_type, user_id,
+         min(epoch_us(ts) // 86400000000) AS d
+  FROM events GROUP BY 1, 2
+), nd AS (
+  SELECT event_type, d, count(*)::BIGINT AS new_entities FROM fs GROUP BY 1, 2
+)
+SELECT event_type, d, new_entities,
+       CAST(sum(new_entities) OVER (
+         PARTITION BY event_type ORDER BY d
+       ) AS BIGINT) AS cum_distinct
+FROM nd
+"""
+
+
+@register("st10_running_distinct", _ST10_SQL)
+def st10_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch twin of `streaming/jobs.py::run_streaming_running_distinct`:
+    the event history split into two "nightly" increments, each reduced
+    to its debut candidates, keep-min merged — the exact fold the
+    streaming job runs per micro-batch (`fold_first_seen`) — then
+    summarized with `running_distinct`. The oracle is the ONE-SHOT
+    computation (w9's SQL): the query pins merge ≡ one-shot, the
+    incremental-correctness law that lets the stream never reprocess
+    history. MIN-merge is idempotent and commutative, so increment
+    order and redelivery cannot change the state."""
+    from com_danliris_service_etl_spark.operators.windows import running_distinct
+
+    ev = _events(spark, sf_dir).select(
+        "event_id",
+        "event_type",
+        "user_id",
+        (F.col("ts_us") / F.lit(86400000000)).cast("long").alias("d"),
+    )
+
+    def debuts(df: DataFrame) -> DataFrame:
+        return df.groupBy("event_type", "user_id").agg(F.min("d").alias("d"))
+
+    inc1 = debuts(ev.filter(F.col("event_id") % 2 == 0))
+    inc2 = debuts(ev.filter(F.col("event_id") % 2 == 1))
+    state = (
+        inc1.unionByName(inc2)
+        .groupBy("event_type", "user_id")
+        .agg(F.min("d").alias("d"))
+    )
+    return running_distinct(state, ["event_type"], "user_id", "d")
+
+
+# ---------------------------------------------------------------------------
+# ST11 — LEFT OUTER interval join (unconverted views kept)
+# ---------------------------------------------------------------------------
+
+_ST11_SQL = """
+WITH v AS (
+  SELECT event_id AS view_id, user_id, epoch_us(ts) AS vts
+  FROM events WHERE event_type = 'view'
+), p AS (
+  SELECT event_id AS purchase_id, user_id, epoch_us(ts) AS pts
+  FROM events WHERE event_type = 'purchase'
+)
+SELECT v.view_id, p.purchase_id, v.user_id,
+       CAST(p.pts - v.vts AS BIGINT) AS lag_us
+FROM v LEFT JOIN p
+  ON p.user_id = v.user_id
+ AND p.pts > v.vts
+ AND p.pts <= v.vts + 3600000000
+"""
+
+
+@register("st11_outer_interval_join", _ST11_SQL)
+def st11_outer_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LEFT OUTER view→purchase attribution: st6's inner interval join
+    plus the rows conversion analysis actually needs — views that did
+    NOT convert within the hour (NULL purchase). Batch twin of
+    `streaming/jobs.py::run_streaming_interval_join_outer`, whose
+    streaming form can only emit an unmatched view after the watermark
+    passes its eviction point (the emission-semantics contract
+    tests/test_streaming.py pins on the emittable region). Same single
+    equi-shuffle on user_id with the time band as residual; the outer
+    side adds no shuffle."""
+    ev = _events(spark, sf_dir)
+    v = ev.filter(F.col("event_type") == "view").select(
+        F.col("event_id").alias("view_id"),
+        "user_id",
+        F.col("ts_us").alias("__v_ts"),
+    )
+    p = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"),
+        F.col("user_id").alias("__p_user"),
+        F.col("ts_us").alias("__p_ts"),
+    )
+    return (
+        v.join(
+            p,
+            (F.col("user_id") == F.col("__p_user"))
+            & (F.col("__p_ts") > F.col("__v_ts"))
+            & (F.col("__p_ts") <= F.col("__v_ts") + 3_600_000_000),
+            "left",
+        )
+        .select(
+            "view_id",
+            "purchase_id",
+            "user_id",
+            (F.col("__p_ts") - F.col("__v_ts")).cast("long").alias("lag_us"),
+        )
+    )
+
+
 @register(
     "st12_stream_static_enrich",
     """
@@ -236,3 +577,16 @@ def st13_stateful_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rank") <= 3)
         .select("event_type", "rank", "user_id", "n_events")
     )
+
+
+@register("st14_stream_attribution", _ATTR_SQL)
+def st14_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch twin of the streaming last-touch attribution operator
+    (streaming/jobs.py::_attribution_fn / run_streaming_attribution — the
+    third custom applyInPandasWithState op): one row per purchase with
+    its credited channel. The streaming form keeps ONE row of keyed
+    state per user (the latest touch), so its memory is O(|users|) on an
+    unbounded clickstream; the batch form pays the bounded-relation
+    union-sort window instead. Stream ≡ batch is pinned in
+    tests/test_round9b_ops.py."""
+    return attributed_purchases(spark, sf_dir)

@@ -2,7 +2,17 @@
 
 Each entry pairs a Spark query function (spark, sf_dir) -> DataFrame with a
 DuckDB oracle SQL string (or None for non-SQL-expressible ops, which get the
-driver's weaker rows-only check).
+driver's weaker rows-only check). Every query lives in the family module
+named for its name prefix (`queries_<family>.py`); `load_all` imports
+them all.
+
+Conventions (the correctness gate hashes values with columns sorted by
+name — BASELINE.md):
+- every computed column is aliased identically in Spark and SQL;
+- double *aggregates* are rounded (sum→2dp, avg→4-6dp) because summation
+  order differs across engines; raw IEEE arithmetic (products, subtractions)
+  is bit-deterministic and left unrounded;
+- every window/first-match/top-k has a total-order tiebreak (SURVEY §7.4).
 """
 
 from __future__ import annotations
@@ -84,26 +94,20 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def load_all() -> dict[str, tuple[QueryFn, str | None]]:
     """Import every query-family module (side effect: registration)."""
     from com_danliris_service_etl_spark.plans import (  # noqa: F401
-        queries,
-        queries_gaps,
+        queries_aggregates,
+        queries_dedup,
+        queries_graph,
+        queries_joins,
         queries_llm,
-        queries_olap,
-        queries_pipeline,
-        queries_round3,
-        queries_round4,
-        queries_round6,
-        queries_round7,
-        queries_round7b,
-        queries_round7c,
-        queries_round7d,
-        queries_round7e,
-        queries_round8,
-        queries_round9,
-        queries_round9b,
-        queries_round10,
-        queries_round11,
+        queries_quality,
+        queries_relational,
         queries_scalars,
+        queries_similarity,
+        queries_sketches,
         queries_streaming,
+        queries_text,
+        queries_warehouse,
+        queries_windows,
     )
 
     return REGISTRY

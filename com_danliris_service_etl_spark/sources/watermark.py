@@ -12,11 +12,12 @@ idempotent re-runs when paired with the MERGE sink.
 from __future__ import annotations
 
 import datetime as dt
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from com_danliris_service_etl_spark.sources import fsutil
 
 EPOCH = dt.datetime(1970, 1, 1)
 
@@ -38,50 +39,17 @@ class WatermarkStore:
         self.path = path
 
     def _log(self) -> DataFrame:
-        # Existence must be probed THROUGH Spark, not the driver's local
-        # filesystem: os.path.exists is always False for hdfs://, s3a://,
-        # abfss:// paths, which would make every nightly read EPOCH and
-        # silently degrade the incremental protocol to full re-extracts.
-        from pyspark.errors import AnalysisException
-
-        try:
-            return self.spark.read.parquet(self.path)
-        except AnalysisException as exc:
-            # Missing-path is distinguished by the structured ERROR CLASS,
-            # not message text (which varies across Spark versions,
-            # connectors, and locales). getCondition() is the 4.x name,
-            # getErrorClass() the 3.x one; the message substring is only a
-            # last-resort fallback for builds that expose neither.
-            cond = None
-            for probe in ("getCondition", "getErrorClass"):
-                fn = getattr(exc, probe, None)
-                if fn is not None:
-                    try:
-                        cond = fn()
-                    except Exception:
-                        cond = None
-                    if cond:
-                        break
-            # UNABLE_TO_INFER_SCHEMA is the "directory exists but holds no
-            # committed parquet" shape — the aftermath of a kill during
-            # the very FIRST commit_run (a `_temporary`-only dir) or a
-            # pre-created empty dir. Treating it as a missing log returns
-            # the EPOCH fallback, whose failure direction is SAFE: the
-            # job re-extracts from epoch and the idempotent MERGE absorbs
-            # it — where re-raising would crash every job's watermark
-            # read until someone manually deleted the directory.
-            _missing_conds = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-            missing = (
-                cond in _missing_conds
-                if cond
-                else (
-                    "Path does not exist" in str(exc)
-                    or any(c in str(exc) for c in _missing_conds)
-                )
-            )
-            if missing:
-                return self.spark.createDataFrame([], LOG_SCHEMA)
-            raise
+        # Existence is probed THROUGH Hadoop (fsutil), not the driver's
+        # local filesystem: os.path.exists is always False for hdfs://,
+        # s3a://, abfss:// paths, which would make every nightly read
+        # EPOCH and silently degrade the incremental protocol to full
+        # re-extracts. The explicit schema skips the inference job, and a
+        # directory holding only `_temporary` (a kill during the very
+        # first commit_run) reads as zero rows, so the watermark falls
+        # back to EPOCH and the idempotent MERGE absorbs the re-extract.
+        if not fsutil.exists(self.spark, self.path):
+            return self.spark.createDataFrame([], LOG_SCHEMA)
+        return self.spark.read.schema(LOG_SCHEMA).parquet(self.path)
 
     def read_watermark(self, job: str) -> dt.datetime:
         """Last successful run's `start` for the job; epoch when absent.
@@ -123,6 +91,3 @@ class WatermarkStore:
         wm = F.lit(self.read_watermark(job))
         return df.filter(F.col(ts_col) >= wm if inclusive else F.col(ts_col) > wm)
 
-
-def run_id() -> str:
-    return uuid.uuid4().hex

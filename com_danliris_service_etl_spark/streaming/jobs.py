@@ -485,7 +485,7 @@ def run_streaming_dedup_stats(
     stream. The complete-mode drain is the bounded-replay form (see
     `run_streaming_windowed_counts`); an unbounded deployment emits
     per-window digest counts in append mode so the watermark can evict.
-    Batch twin: `plans/queries_round4.py::st5_dedup_stats`;
+    Batch twin: `plans/queries_streaming.py::st5_dedup_stats`;
     tests/test_streaming.py pins stream ≡ batch.
 
     (Chained streaming aggregations are unsupported, which is why the
@@ -527,7 +527,7 @@ def run_streaming_countmin(
     whole reason a production ingest monitor runs the sketch. Cell sums
     are associative, so the streaming fold over micro-batches lands on
     the IDENTICAL grid as the batch build — the registry batch twin is
-    `plans/queries_round6.py::st8_countmin_sketch`, and
+    `plans/queries_streaming.py::st8_countmin_sketch`, and
     tests/test_streaming.py pins stream ≡ batch. The complete-mode
     memory drain is the bounded-replay form (see
     `run_streaming_windowed_counts`); estimates for any candidate set
@@ -559,7 +559,7 @@ def run_streaming_interval_join(
     watermark — the state-cleanup contract that makes a stream-stream
     join viable on an unbounded stream (without the time bound, state
     grows forever). Batch twin:
-    `plans/queries_round4.py::st6_interval_join`; tests pin stream ≡
+    `plans/queries_streaming.py::st6_interval_join`; tests pin stream ≡
     batch over the fixture."""
     joined = _interval_join_frame(spark, sf_dir)
     q = (
@@ -661,7 +661,7 @@ def run_streaming_watermark_dedup(
     of their first occurrence are dropped; a re-arrival after the
     watermark passes the id is re-admitted — the delay is the declared
     redelivery bound, and state stays bounded by it. Batch twin:
-    `plans/queries_round7.py::st9_watermark_dedup` (replayed rows are
+    `plans/queries_streaming.py::st9_watermark_dedup` (replayed rows are
     bit-identical, so batch DISTINCT is the same admission rule);
     tests/test_streaming.py pins stream ≡ batch on a
     duplicate-injected fixture with the delay spanning the replay."""
@@ -776,7 +776,7 @@ def run_streaming_interval_join_outer(
     test therefore compares the EMITTABLE region (v_ts ≤ max event time
     − watermark − interval) and checks the matched subset equals the
     inner join everywhere; the batch twin
-    (`plans/queries_round7d.py::st11_outer_interval_join`) computes the
+    (`plans/queries_streaming.py::st11_outer_interval_join`) computes the
     full left outer, which is what a drained production stream
     converges to."""
     v = (

@@ -421,6 +421,31 @@ def test_watermark_store_survives_empty_or_inflight_log_dir(spark, tmp_path):
     t1 = dt.datetime(2024, 3, 1)
     store.commit_run("Fact X", t1, t1, "Successful", 10)
     assert store.read_watermark("Fact X") == t1
+    # a LATER commit_run killed mid-write leaves an in-flight part file
+    # beside the committed log; the read must still see the last commit
+    inflight = log / "_temporary" / "0"
+    inflight.mkdir(parents=True, exist_ok=True)
+    (inflight / "part-x.parquet").write_bytes(b"junk")
+    assert store.read_watermark("Fact X") == t1
+
+
+def test_read_watermark_runs_at_most_two_spark_jobs(spark, tmp_path):
+    """The log is read with its declared schema, so a watermark read over a
+    populated log launches no schema-inference job — only the lookup."""
+    store = WatermarkStore(spark, str(tmp_path / "log"))
+    t1, t2 = dt.datetime(2024, 3, 1), dt.datetime(2024, 3, 2)
+    store.commit_run("Fact X", t1, t1, "Successful", 10)
+    store.commit_run("Fact X", t2, t2, "Successful", 5)
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()  # noqa: SLF001
+
+    def job_ids() -> set[int]:
+        bus.waitUntilEmpty()  # job-start events reach the tracker async
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    before = job_ids()
+    assert store.read_watermark("Fact X") == t2
+    assert len(job_ids() - before) <= 2
 
 
 def test_fsutil_store_path_containing_temporary_substring(spark, tmp_path):

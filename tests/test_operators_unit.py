@@ -1409,14 +1409,14 @@ def test_minute_diff_subsecond_exact(spark):
 
 
 def test_spread_skips_probe_on_composed_frames(spark):
-    """ADVICE r5: `_spread`'s `.rdd.getNumPartitions()` probe materializes
+    """ADVICE r5: `spread`'s `.rdd.getNumPartitions()` probe materializes
     upstream AQE query stages when the plan contains exchanges. The guard
     must pass composed frames (join/agg/window upstream) through untouched
     — public operators (`fuzzy_blocked_join`, `pq_topk`) accept arbitrary
     caller frames — while still spreading narrow scan-rooted inputs."""
-    from com_danliris_service_etl_spark.operators.dedup import (
+    from com_danliris_service_etl_spark.operators.partitioning import (
         _is_scan_rooted,
-        _spread,
+        spread,
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -1433,10 +1433,10 @@ def test_spread_skips_probe_on_composed_frames(spark):
     assert not _is_scan_rooted(joined)
     assert not _is_scan_rooted(docs.repartition(4))
     # composed → identity (no probe, no repartition)
-    assert _spread(agg) is agg
-    assert _spread(joined) is joined
+    assert spread(agg) is agg
+    assert spread(joined) is joined
     # scan-rooted single-file input → spread to full parallelism
-    out = _spread(docs)
+    out = spread(docs)
     assert out is not docs
     assert (
         out.rdd.getNumPartitions()
@@ -1453,7 +1453,7 @@ def test_spread_probe_uses_leaf_not_projected_stats(spark, tmp_path):
     so the narrow select of a big input passes through untouched."""
     import pandas as pd
 
-    from com_danliris_service_etl_spark.operators.dedup import _spread
+    from com_danliris_service_etl_spark.operators.partitioning import spread
 
     # one wide file: a fat payload column plus a tiny key column; sized so
     # leaf-bytes/split >= parallelism but (key-only root stats)/split < it
@@ -1480,7 +1480,7 @@ def test_spread_probe_uses_leaf_not_projected_stats(spark, tmp_path):
     try:
         spark.conf.set("spark.sql.files.openCostInBytes", str(oc))
         assert -(-root_size // oc) < par  # fixture really distinguishes
-        assert _spread(narrow) is narrow
+        assert spread(narrow) is narrow
     finally:
         spark.conf.set("spark.sql.files.openCostInBytes", old_oc)
 
@@ -1488,15 +1488,15 @@ def test_spread_probe_uses_leaf_not_projected_stats(spark, tmp_path):
 def test_is_scan_rooted_self_check_fails_loudly_on_drift(spark, monkeypatch):
     """ADVICE r6: a Spark version whose analyzed-plan node classes drift
     out of _NARROW_CLASSES must fail the one-time self-check LOUDLY, not
-    silently classify every frame as composed (disabling _spread)."""
-    from com_danliris_service_etl_spark.operators import dedup
+    silently classify every frame as composed (disabling spread)."""
+    from com_danliris_service_etl_spark.operators import partitioning
 
     # simulate drift: no class is recognized as narrow
-    monkeypatch.setattr(dedup, "_NARROW_CLASSES", frozenset())
-    monkeypatch.setattr(dedup, "_SCAN_ROOT_SELF_CHECKED", False)
+    monkeypatch.setattr(partitioning, "_NARROW_CLASSES", frozenset())
+    monkeypatch.setattr(partitioning, "_SCAN_ROOT_SELF_CHECKED", False)
     docs = spark.range(3).toDF("doc_id")
     with pytest.raises(RuntimeError, match="self-check failed"):
-        dedup._is_scan_rooted(docs)
+        partitioning._is_scan_rooted(docs)
 
 
 def test_grouped_running_sum_distributed_equals_window(spark):

@@ -27,7 +27,7 @@ SF = "/root/testdata/sf0.001"
 def test_minhash_signatures_single_exchange(spark):
     """The fused MinHash signature is one per-row projection: the ONLY
     exchange in the plan is the deliberate parallelism repartition
-    (_spread) — no aggregation shuffle of shingle rows."""
+    (spread) — no aggregation shuffle of shingle rows."""
     from com_danliris_service_etl_spark.operators.dedup import minhash_signatures
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -134,7 +134,7 @@ def test_filtered_multiprobe_corpus_not_exploded(spark):
 def test_rollup_is_one_expand_one_exchange(spark):
     """g1: all rollup grains come from a single Expand + hash aggregate —
     one shuffle for every grain, never one query per grain."""
-    from com_danliris_service_etl_spark.plans.queries_olap import g1_rollup_corpus
+    from com_danliris_service_etl_spark.plans.queries_graph import g1_rollup_corpus
 
     plan = _plan(g1_rollup_corpus(spark, SF))
     assert plan.count("Expand (") == 1, plan
@@ -144,7 +144,7 @@ def test_rollup_is_one_expand_one_exchange(spark):
 def test_pivot_crosstab_single_exchange(spark):
     """g2: the declared-values crosstab is ONE conditional hash aggregate
     (pivot()'s two-aggregate PivotFirst shape is deliberately avoided)."""
-    from com_danliris_service_etl_spark.plans.queries_olap import (
+    from com_danliris_service_etl_spark.plans.queries_graph import (
         g2_pivot_status_matrix,
     )
 
@@ -155,7 +155,7 @@ def test_pivot_crosstab_single_exchange(spark):
 def test_moving_avg_one_window_one_exchange(spark):
     """w4: both frames (3-row moving avg + running total) share one
     Window operator over one partition-key shuffle and one sort."""
-    from com_danliris_service_etl_spark.plans.queries_olap import w4_moving_avg
+    from com_danliris_service_etl_spark.plans.queries_windows import w4_moving_avg
 
     plan = _plan(w4_moving_avg(spark, SF))
     assert plan.count("Exchange (") == 1, plan
@@ -176,7 +176,7 @@ def test_ivf_assign_cells_shuffle_free(spark):
     assert "Window (" not in plan, plan
     # the only shuffle exchanges are the single-row centroid-array
     # aggregate and (r14, one-file fixtures only) the conditional
-    # `_spread` repartition below the argmax fold — the corpus is never
+    # `spread` repartition below the argmax fold — the corpus is never
     # shuffled BY KEY or sorted to pick its cell (the broadcast of the
     # centroid row is counted separately: "BroadcastExchange (" also
     # contains "Exchange (")
@@ -222,7 +222,7 @@ def test_funnel_states_single_data_exchange(spark):
     groupBy both reuse hashpartitioning(user_id). The cap itself must
     survive as a rank limit so skewed accounts never reach the fold
     uncapped."""
-    from com_danliris_service_etl_spark.plans.queries_round3 import _funnel_states
+    from com_danliris_service_etl_spark.plans.queries_graph import _funnel_states
     from com_danliris_service_etl_spark.plans.registry import _events
 
     ev = _events(spark, SF)
@@ -247,7 +247,7 @@ def test_funnel_states_bounded_heavy_user(spark):
     truncation is exact here."""
     from pyspark.sql import Row
 
-    from com_danliris_service_etl_spark.plans.queries_round3 import _funnel_states
+    from com_danliris_service_etl_spark.plans.queries_graph import _funnel_states
 
     heavy = spark.range(100_000).select(
         F.lit(7).alias("user_id"),
@@ -331,7 +331,7 @@ def test_pq_adc_join_broadcasts_distance_table(spark):
     (BroadcastNestedLoopJoin over the BROADCAST query batch — the loop
     is |corpus|·|queries|, exactly the ADC candidate set, not a corpus
     cross-product). Data exchanges: the final top-k window's, plus
-    `_spread`'s CONDITIONAL round-robin of the compact corpus rows
+    `spread`'s CONDITIONAL round-robin of the compact corpus rows
     (present here because the one-file fixture arrives as a single
     partition; absent on a well-partitioned input). Since the r5 literal
     codebook there is NO BroadcastExchange for the codebook — only the

@@ -35,10 +35,16 @@ REGISTRY = load_all()
 
 
 def test_every_query_has_an_audit_baseline():
+    # Set EQUALITY, not REGISTRY ⊆ BASELINE: a family module dropped from
+    # load_all() leaves baselines without a query and must fail here.
     missing = sorted(set(REGISTRY) - set(BASELINE))
+    unregistered = sorted(set(BASELINE) - set(REGISTRY))
     assert not missing, (
         f"queries without a PLAN_AUDIT.json baseline: {missing} — "
         "run python tools/plan_audit.py"
+    )
+    assert not unregistered, (
+        f"PLAN_AUDIT.json baselines with no registered query: {unregistered}"
     )
 
 

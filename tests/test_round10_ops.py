@@ -46,7 +46,7 @@ def test_llm21_flags_a_constructed_repetitive_doc(spark):
         [(1, "spam " * 19 + "spam"), (2, " ".join(f"w{i}" for i in range(20)))],
         "doc_id long, text string",
     )
-    import com_danliris_service_etl_spark.plans.queries_round10 as r10
+    import com_danliris_service_etl_spark.plans.queries_llm as r10
 
     # drive the same projection through the registry function by writing
     # a temp parquet the function can read
@@ -141,7 +141,7 @@ def test_llm21_matches_python_recompute(spark, docs):
     """Random small-alphabet corpora (engineered for heavy repetition and
     ties) must match an independent Python recompute exactly — integers
     everywhere, so no tolerance."""
-    import com_danliris_service_etl_spark.plans.queries_round10 as r10
+    import com_danliris_service_etl_spark.plans.queries_llm as r10
 
     rows = [(i, " ".join(toks)) for i, toks in enumerate(docs)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -509,7 +509,7 @@ def test_txt21_encode_is_shuffle_minimal(spark):
     assert "SortMergeJoin" not in plan
     assert "Window" not in plan
     # the encode is row-local; the slice aggregate is the only KEYED
-    # exchange. r14 adds the conditional `_spread` repartition below the
+    # exchange. r14 adds the conditional `spread` repartition below the
     # encode fold (one-file fixtures scan as one partition; pass-through
     # on well-split inputs), so the bound is 2 on fixture-sized inputs —
     # still no doc-grain join/window/sort anywhere.

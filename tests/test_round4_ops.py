@@ -88,7 +88,7 @@ def test_funnel_verify_rejects_sub_threshold_candidates(spark):
 
 
 def test_streaming_dedup_stats_matches_batch(spark, tmp_path):
-    from com_danliris_service_etl_spark.plans.queries_round4 import st5_dedup_stats
+    from com_danliris_service_etl_spark.plans.queries_streaming import st5_dedup_stats
     from com_danliris_service_etl_spark.streaming.jobs import (
         run_streaming_dedup_stats,
     )

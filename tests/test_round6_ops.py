@@ -398,7 +398,7 @@ def test_centrality_keeper_beats_min_id_on_path_cluster(spark, tmp_path):
     a has the lowest id."""
     import math
 
-    from com_danliris_service_etl_spark.plans.queries_round6 import (
+    from com_danliris_service_etl_spark.plans.queries_llm import (
         llm12_centrality_keeper,
     )
 

@@ -245,7 +245,7 @@ def test_keyset_pages_chain_without_gaps_or_overlap(spark):
 def test_grouping_sets_subtotals_are_consistent(spark):
     """Each granularity's n_orders must sum to the grand total, and
     grouping() flags must match the NULL pattern of the key columns."""
-    from com_danliris_service_etl_spark.plans.queries_round7b import (
+    from com_danliris_service_etl_spark.plans.queries_graph import (
         g12_grouping_sets,
     )
     from tests.conftest import SF_DIR

@@ -125,7 +125,7 @@ def test_txt18_matches_exact_fraction_arithmetic(spark):
         ],
         "doc_id string, text string, lang string, source string, n_chars int",
     )
-    from com_danliris_service_etl_spark.plans import queries_round9b as r9b
+    from com_danliris_service_etl_spark.plans import queries_text as r9b
     from com_danliris_service_etl_spark.plans.registry import _TABLE_CACHE
 
     # run the registered query against an injected in-memory 'documents'

@@ -401,7 +401,7 @@ def test_streaming_countmin_matches_batch(spark):
     """The streaming-folded count-min grid ≡ the batch sketch: cell sums
     are associative, so micro-batch folding lands on the identical
     depth×width grid (bounded state — the monitor's whole point)."""
-    from com_danliris_service_etl_spark.plans.queries_round6 import (
+    from com_danliris_service_etl_spark.plans.queries_streaming import (
         st8_countmin_sketch,
     )
     from com_danliris_service_etl_spark.streaming.jobs import run_streaming_countmin
