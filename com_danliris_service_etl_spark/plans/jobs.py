@@ -15,8 +15,10 @@ from __future__ import annotations
 
 import datetime as dt
 from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from com_danliris_service_etl_spark.sources.catalog import Catalog
@@ -57,7 +59,18 @@ class JobSpec:
     (``order_col``, ``replace_group``) — lets an extra load declare the
     same winner-picking / group-grain semantics the main target gets, so
     a duplicate-key extra batch is never silently resolved by an
-    arbitrary ``dropDuplicates`` winner."""
+    arbitrary ``dropDuplicates`` winner.
+
+    Every target must be distinct (compared without trailing slashes):
+    `run_job` loads them concurrently, and two loads into one path would
+    race the MERGE's swap."""
+
+    def __post_init__(self):
+        seen = {self.target.rstrip("/")}
+        for t in self.extra_targets:
+            if t.rstrip("/") in seen:
+                raise ValueError(f"{self.name}: duplicate load target {t!r}")
+            seen.add(t.rstrip("/"))
 
 
 @dataclass
@@ -69,6 +82,35 @@ class JobResult:
     finished: dt.datetime
 
 
+def _load(
+    spark: SparkSession,
+    catalog: Catalog,
+    wm: dt.datetime,
+    target: str,
+    build: BuildFn,
+    keys: Sequence[str],
+    opts: dict,
+    count: bool,
+) -> int | None:
+    """build → persist → (count) → MERGE for one target; returns the row
+    count when ``count`` is set.
+
+    Persist the increment across the telemetry count and the MERGE:
+    without it the whole extract+join+transform plan re-executes for each
+    action (the count, then the merge's reads — the parquet merge alone
+    references the batch twice: anti-join keys + the union write). The
+    increment is watermark-bounded — one night's delta, not the fact — so
+    MEMORY_AND_DISK is safe at any corpus size. unpersist in finally: a
+    raising MERGE must not leak the cache for the rest of the session."""
+    df = build(spark, catalog, wm).persist()
+    try:
+        rows = df.count() if count else None
+        merge_upsert(spark, target, df, keys, **opts)
+        return rows
+    finally:
+        df.unpersist()
+
+
 def run_job(
     spark: SparkSession,
     spec: JobSpec,
@@ -78,7 +120,23 @@ def run_job(
 ) -> JobResult:
     """Execute one pipeline run. Failures are recorded in the run log and
     re-raised; the watermark does not advance, so the next run re-extracts
-    the same window and the MERGE keeps the fact consistent."""
+    the same window and the MERGE keeps the fact consistent.
+
+    Each target (the main one and every ``extra_targets`` entry) is one
+    load, and the loads run concurrently on a thread pool: no load reads
+    another's output, and `JobSpec` rejects duplicate targets, so no two
+    loads race one swap. Worker threads inherit the caller's Spark local
+    properties (job group, description) and session tags. The run waits
+    for EVERY load to return before it writes its log row; the first
+    failure in target order is re-raised, so a Failed row is never
+    written while a load is still writing, and Successful only after every
+    target committed.
+
+    Partial commits: when the main load fails, an extra target may
+    already have committed, just as the main target may have committed
+    when an extra load fails. Either way the watermark stays put, so the
+    next run re-extracts the same window into every target and the
+    idempotent MERGE heals it."""
     started = now()
     try:
         wm = store.read_watermark(spec.name)
@@ -97,40 +155,18 @@ def run_job(
             all_targets = [spec.target, *spec.extra_targets]
             if any(not _target_has_data(spark, t) for t in all_targets):
                 wm = EPOCH
-        # Persist the increment across the telemetry count and the MERGE:
-        # without it the whole extract+join+transform plan re-executes for
-        # each action (the count, then the merge's reads). The increment
-        # is watermark-bounded — one night's delta, not the fact — so
-        # MEMORY_AND_DISK is safe at any corpus size.
-        df = spec.build(spark, catalog, wm).persist()
-        # unpersist in finally: if the MERGE raises, the exception handler
-        # below re-raises — without the finally the MEMORY_AND_DISK cache
-        # would leak for the rest of the session, and a scheduler that
-        # continues with later layers accumulates leaked caches.
-        try:
-            rows = df.count()
-            merge_upsert(
-                spark,
-                spec.target,
-                df,
-                spec.merge_keys,
-                order_col=spec.order_col,
-                replace_group=(spec.grain == "group"),
-            )
-        finally:
-            df.unpersist()
-        for target, extra_spec in spec.extra_targets.items():
-            build_fn, keys, *rest = extra_spec
-            opts = dict(rest[0]) if rest else {}
-            # Same persist rationale as the main df: the parquet merge
-            # references the batch at least twice (anti-join keys + the
-            # union write) — without the cache the extra extract/join
-            # re-executes per reference.
-            extra = build_fn(spark, catalog, wm).persist()
-            try:
-                merge_upsert(spark, target, extra, keys, **opts)
-            finally:
-                extra.unpersist()
+        main_opts = {"order_col": spec.order_col, "replace_group": spec.grain == "group"}
+        loads = [(spec.target, spec.build, spec.merge_keys, main_opts, True)]
+        for target, (build_fn, keys, *rest) in spec.extra_targets.items():
+            loads.append((target, build_fn, keys, dict(rest[0]) if rest else {}, False))
+        with ThreadPoolExecutor(max_workers=len(loads)) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(_load), spark, catalog, wm, *load)
+                for load in loads
+            ]
+        # Leaving the pool joined every load; result() re-raises the first
+        # failure in target order.
+        rows = [f.result() for f in futures][0]
         finished = now()
         store.commit_run(spec.name, started, finished, "Successful", rows)
         return JobResult(spec.name, rows, "Successful", started, finished)

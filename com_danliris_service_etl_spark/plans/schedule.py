@@ -4,19 +4,20 @@ The reference staggers its timers every 10 minutes from 22:00 to 01:20
 (`PembelianTimer/function.json:5` et al., SURVEY.md §3.2) with NO
 dependency enforcement — ordering is implicit in the clock. Here the
 ordering is explicit: a run layer only starts after the previous layer
-committed, and jobs inside a layer are independent (the scheduler may run
-them concurrently — locally sequential, on a cluster as parallel
-applications or pool-scheduled jobs).
+committed, and jobs inside a layer are independent (a scheduler may run
+them concurrently — on a cluster as parallel applications or
+pool-scheduled jobs). `run_nightly` runs layers, and the jobs inside a
+layer, one after another; only a job's own targets load concurrently
+(`run_job`: its main and extra targets, each on its own thread).
 
 Within-layer concurrency REQUIRES distinct targets: two jobs merging
 into the same fact path race the parquet emulation's read→rewrite→swap
 (and a Delta MERGE would still interleave), so jobs sharing a target are
 placed in SEPARATE layers below (the three sales-contract jobs — one
 shared dl_fact_sales_contract — mirror the reference's separate 10-min
-timer slots). Concurrent jobs also append to one WatermarkStore path;
-parquet appends create distinct files, but a parallelizing scheduler
-should point each pool at its own store path or a Delta table to avoid
-committer _temporary collisions on some filesystems.
+timer slots). Concurrent jobs may share one WatermarkStore path: each
+log append is its own uniquely named file, renamed into place (see
+`sources/watermark.py`).
 """
 
 from __future__ import annotations

@@ -1,8 +1,9 @@
 """Hadoop FileSystem helpers for storage probes and swaps.
 
 Self-managed parquet stores (the streaming folds in `streaming/jobs.py`,
-the maintenance compactors) need existence probes, directory listings and
-renames against the SAME filesystem Spark reads — which is NOT the
+the maintenance compactors, the migration log in `sources/watermark.py`)
+need existence probes, directory listings, renames and whole-file byte
+reads/writes against the SAME filesystem Spark reads — which is NOT the
 driver's local filesystem once paths are `hdfs://`, `s3a://` or
 `abfss://`. Driver-local `os.path` calls silently return False there (the
 failure class `sources/watermark.py` documents for its read path), so
@@ -20,6 +21,7 @@ does when available.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 
@@ -41,12 +43,52 @@ def is_dir(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p) and fs.getFileStatus(p).isDirectory())
 
 
+def _not_found(exc: Py4JJavaError) -> bool:
+    """True iff a Hadoop call failed because its path does not exist."""
+    return exc.java_exception.getClass().getName() == "java.io.FileNotFoundException"
+
+
 def child_names(spark: SparkSession, path: str) -> list[str]:
-    """Immediate child names of a directory ([] when absent)."""
+    """Immediate child names of a directory ([] when absent). One
+    listing call: absence is the listing's FileNotFoundException, not a
+    separate `exists` probe."""
     fs, p = _fs(spark, path)
-    if not fs.exists(p):
-        return []
-    return [st.getPath().getName() for st in fs.listStatus(p)]
+    try:
+        return [st.getPath().getName() for st in fs.listStatus(p)]
+    except Py4JJavaError as exc:
+        if _not_found(exc):
+            return []
+        raise
+
+
+def read_bytes(spark: SparkSession, path: str) -> bytes:
+    """Whole content of the file at ``path``; FileNotFoundError when it
+    does not exist (e.g. deleted between a listing and this read). py4j
+    moves the bytes at ~0.4 µs each (57 ms for 150 KB): fine for control
+    files, not for data."""
+    fs, p = _fs(spark, path)
+    try:
+        stream = fs.open(p)
+    except Py4JJavaError as exc:
+        if _not_found(exc):
+            raise FileNotFoundError(path) from exc
+        raise
+    try:
+        return bytes(stream.readAllBytes())
+    finally:
+        stream.close()
+
+
+def write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
+    """Create the file ``path`` (and missing parents) holding ``data``;
+    raises if it already exists. Not atomic — write under a hidden name
+    and :func:`rename` it into place to publish."""
+    fs, p = _fs(spark, path)
+    out = fs.create(p, False)
+    try:
+        out.write(bytearray(data))
+    finally:
+        out.close()
 
 
 def _in_temporary(base, f) -> bool:
@@ -101,7 +143,7 @@ def parquet_file_sizes(spark: SparkSession, path: str) -> list[int]:
 
 
 def rename(spark: SparkSession, src: str, dst: str) -> None:
-    """Directory move (atomic on local/HDFS/ABFS — see module docstring).
+    """File or directory move (atomic on local/HDFS/ABFS — see module docstring).
     Raises OSError on any failure — Hadoop signals them inconsistently
     (silent False on some stores, FileNotFoundException on others)."""
     fs, s = _fs(spark, src)

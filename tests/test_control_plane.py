@@ -5,12 +5,13 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from com_danliris_service_etl_spark.sources.sinks import date_dimension, merge_upsert
-from com_danliris_service_etl_spark.sources.watermark import EPOCH, WatermarkStore
+from com_danliris_service_etl_spark.sources.watermark import EPOCH, LOG_SCHEMA, WatermarkStore
 
 
 def test_watermark_protocol(spark, tmp_path):
@@ -429,23 +430,46 @@ def test_watermark_store_survives_empty_or_inflight_log_dir(spark, tmp_path):
     assert store.read_watermark("Fact X") == t1
 
 
-def test_read_watermark_runs_at_most_two_spark_jobs(spark, tmp_path):
-    """The log is read with its declared schema, so a watermark read over a
-    populated log launches no schema-inference job — only the lookup."""
-    store = WatermarkStore(spark, str(tmp_path / "log"))
-    t1, t2 = dt.datetime(2024, 3, 1), dt.datetime(2024, 3, 2)
-    store.commit_run("Fact X", t1, t1, "Successful", 10)
-    store.commit_run("Fact X", t2, t2, "Successful", 5)
+def _spark_job_counter(spark):
+    """Callable returning how many Spark jobs ran since the counter was
+    made (read from the status tracker after draining the listener bus,
+    since job-start events reach it asynchronously)."""
     sc = spark.sparkContext
     bus = sc._jsc.sc().listenerBus()  # noqa: SLF001
 
     def job_ids() -> set[int]:
-        bus.waitUntilEmpty()  # job-start events reach the tracker async
+        bus.waitUntilEmpty()
         return set(sc.statusTracker().getJobIdsForGroup(None))
 
     before = job_ids()
-    assert store.read_watermark("Fact X") == t2
-    assert len(job_ids() - before) <= 2
+    return lambda: len(job_ids() - before)
+
+
+def _log_parts(log) -> list[str]:
+    """Committed log files (the local FileSystem adds `.crc` siblings)."""
+    return sorted(n for n in os.listdir(log) if n.startswith("part-"))
+
+
+def test_read_watermark_runs_at_most_two_spark_jobs(spark, tmp_path):
+    """The migration log lives on the driver: appending a row (pyarrow
+    encode + Hadoop FileSystem write, and the fold once the log holds more
+    than COMPACT_AT files) and reading the watermark (one listing +
+    pyarrow decode) launch NO Spark job."""
+    from com_danliris_service_etl_spark.sources.watermark import COMPACT_AT
+
+    store = WatermarkStore(spark, str(tmp_path / "log"))
+    t0 = dt.datetime(2024, 3, 1)
+    days = [t0 + dt.timedelta(days=i) for i in range(COMPACT_AT + 1)]
+    jobs = _spark_job_counter(spark)
+    for i, t in enumerate(days):
+        store.commit_run("Fact X", t, t, "Successful", i)
+    assert jobs() == 0
+    assert len(_log_parts(tmp_path / "log")) == 1, "the last append folded the log"
+    assert store.read_watermark("Fact X") == days[-1]
+    assert jobs() == 0
+    # the counter does see Spark jobs (guards against a vacuous pass)
+    spark.range(3).count()
+    assert jobs() >= 1
 
 
 def test_fsutil_store_path_containing_temporary_substring(spark, tmp_path):
@@ -585,7 +609,10 @@ def test_nightly_crash_recovery_converges(spark, tmp_path, monkeypatch):
     assert store.read_watermark(victim) == dt.datetime(2024, 1, 5)
     assert store.read_watermark(bystander) == dt.datetime(2024, 1, 15)
     # the migration log carries the Failed telemetry row
-    log = store._log().filter(F.col("description") == victim).collect()
+    log = (
+        spark.read.schema(LOG_SCHEMA).parquet(store.path)
+        .filter(F.col("description") == victim).collect()
+    )
     assert any(row.status.startswith("Failed") for row in log)
     # wreckage on disk: target gone, backup holds night-1 state, staged
     # tmp copy orphaned
@@ -611,3 +638,332 @@ def test_nightly_crash_recovery_converges(spark, tmp_path, monkeypatch):
     brows = sorted(map(tuple, spark.read.parquet(bt).collect()))
     assert vrows == brows
     assert {(r[0], r[1]) for r in vrows} == {(1, "a"), (2, "b2"), (3, "c")}
+
+
+@pytest.fixture()
+def local_zone(monkeypatch):
+    """Run with a non-UTC, DST-observing process zone, so the naive
+    local-time conversion on both sides of the log is exercised."""
+    import time
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_watermark_log_mixed_writers_compat(spark, tmp_path, local_zone):
+    """A log that mixes rows appended by Spark (INT96 timestamps, the
+    historical writer), rows from the driver-side `commit_run` (micros,
+    UTC-adjusted) and in-flight leftovers must read identically through
+    `read_watermark`, Spark and DuckDB."""
+    import duckdb
+
+    log = str(tmp_path / "log")
+    a, b = "Fact A", "Fact B"
+    summer = dt.datetime(2024, 7, 1, 22, 0, 5, 123456)
+    winter = dt.datetime(2024, 1, 2, 22, 0, 0, 654321)
+    old_rows = [
+        (a, winter, winter + dt.timedelta(minutes=5), "5.00 minutes", "Successful", 10),
+        (a, summer, summer + dt.timedelta(minutes=1), "1.00 minutes", "Failed: boom", None),
+        (b, summer, summer + dt.timedelta(seconds=1), "0.02 minutes", "Successful", 3),
+    ]
+    spark.createDataFrame(old_rows, LOG_SCHEMA).write.mode("append").parquet(log)
+
+    def old_read(job):  # the Spark-side reader the log used before
+        return (
+            spark.read.schema(LOG_SCHEMA).parquet(log)
+            .filter((F.col("description") == job) & (F.col("status") == "Successful"))
+            .agg(F.max_by("start", "finish").alias("wm"))
+            .collect()[0]["wm"]
+        ) or EPOCH
+
+    store = WatermarkStore(spark, log)
+    for job, want in ((a, winter), (b, summer), ("Fact C", EPOCH)):
+        got = store.read_watermark(job)
+        assert got == old_read(job) == want
+        assert got.tzinfo is None and got.microsecond == want.microsecond
+
+    # (not inside the DST fold: a naive time there is ambiguous, for
+    # createDataFrame as much as for commit_run)
+    later = dt.datetime(2024, 11, 4, 1, 30, 0, 7)
+    store.commit_run(a, later, later + dt.timedelta(minutes=2), "Successful", 4)
+    store.commit_run(b, later, later, "Failed: injected", None)
+    new_rows = [
+        (a, later, later + dt.timedelta(minutes=2), "2.00 minutes", "Successful", 4),
+        (b, later, later, "0.00 minutes", "Failed: injected", None),
+    ]
+    # leftovers no reader may see, each holding a LATER Successful row:
+    # a hidden append that never got renamed, and a crashed Spark append
+    ghost_store = WatermarkStore(spark, str(tmp_path / "ghost"))
+    ghost_store.commit_run(a, dt.datetime(2030, 1, 1), dt.datetime(2030, 1, 1))
+    (ghost,) = [p for p in (tmp_path / "ghost").iterdir() if p.name.startswith("part-")]
+    (tmp_path / "log" / "_temporary" / "0").mkdir(parents=True)
+    shutil.copy(ghost, tmp_path / "log" / ".part-x.parquet")
+    shutil.copy(ghost, tmp_path / "log" / "_temporary" / "0" / "part-x.parquet")
+    (tmp_path / "log" / "_SUCCESS").write_bytes(b"")
+
+    def readers_agree():
+        for job, want in ((a, later), (b, summer)):
+            got = store.read_watermark(job)
+            assert got == old_read(job) == want
+            assert got.microsecond == want.microsecond
+
+        committed = sorted(old_rows + new_rows, key=repr)
+        via_spark = [tuple(r) for r in spark.read.schema(LOG_SCHEMA).parquet(log).collect()]
+        assert sorted(via_spark, key=repr) == committed
+
+        # DuckDB unifies the INT96 (TIMESTAMP) and micros (TIMESTAMPTZ) files
+        # through its session zone; pinned to UTC, both name the same instants.
+        def utc(t):
+            us = LOG_SCHEMA["start"].dataType.toInternal(t)
+            return EPOCH + dt.timedelta(microseconds=us)
+
+        con = duckdb.connect()
+        con.execute("SET TimeZone='UTC'")
+        via_duckdb = con.execute(
+            "SELECT description, CAST(start AS TIMESTAMP), CAST(finish AS TIMESTAMP),"
+            " executionTime, status, rowCount"
+            f" FROM read_parquet('{log}/[!._]*.parquet')"
+        ).fetchall()
+        con.close()
+        assert sorted(via_duckdb, key=repr) == sorted(
+            [(d, utc(s), utc(f), e, st, n) for d, s, f, e, st, n in committed], key=repr
+        )
+
+    readers_agree()
+    # folding the mixed log re-encodes its INT96 rows as micros, value for
+    # value, and leaves the leftovers alone
+    store.compact()
+    assert {".part-x.parquet", "_SUCCESS", "_temporary"} <= set(os.listdir(log))
+    assert len(_log_parts(log)) == 1
+    readers_agree()
+
+
+def test_watermark_log_compaction(spark, tmp_path, monkeypatch):
+    """The log stays at most COMPACT_AT files: the append past it folds
+    every committed file into one. Rows a crashed fold left visible twice
+    are folded back to one copy, and a read racing a fold (its listed
+    files deleted under it) lists again and returns the right watermark."""
+    from com_danliris_service_etl_spark.sources import fsutil
+    from com_danliris_service_etl_spark.sources.watermark import COMPACT_AT
+
+    log = tmp_path / "log"
+    store = WatermarkStore(spark, str(log))
+    t0 = dt.datetime(2024, 5, 1, 22, 0, 0, 1)
+    runs = [(f"Fact {i % 3}", t0 + dt.timedelta(days=i)) for i in range(COMPACT_AT + 1)]
+    expected = {}
+    for i, (job, t) in enumerate(runs):
+        store.commit_run(job, t, t + dt.timedelta(minutes=1), "Successful", i)
+        expected[job] = t
+        assert len(_log_parts(log)) == (i + 1 if i < COMPACT_AT else 1)
+    (folded,) = _log_parts(log)
+    store.commit_run("Fact 0", t0 + dt.timedelta(days=99), t0, "Failed: boom", None)
+
+    def log_rows():
+        rows = spark.read.schema(LOG_SCHEMA).parquet(str(log)).collect()
+        return sorted(map(tuple, rows), key=repr)
+
+    rows = log_rows()
+    assert len(rows) == COMPACT_AT + 2
+    for job, t in expected.items():
+        assert store.read_watermark(job) == t
+
+    # a fold killed between publishing its file and deleting the inputs
+    shutil.copy(log / folded, log / "part-crashed-fold.parquet")
+    assert len(log_rows()) == 2 * (COMPACT_AT + 1) + 1
+    assert store.read_watermark("Fact 1") == expected["Fact 1"]
+    store.compact()
+    assert len(_log_parts(log)) == 1
+    assert log_rows() == rows
+
+    # a read whose listed files another writer folds away before it
+    # opens them retries from a fresh listing
+    for i in range(3):
+        t = t0 + dt.timedelta(days=200 + i)
+        store.commit_run("Fact 2", t, t, "Successful", i)
+        expected["Fact 2"] = t
+    real_read = fsutil.read_bytes
+    raced = []
+
+    def racing_read(sp, path):
+        if not raced:
+            raced.append(path)
+            WatermarkStore(spark, str(log)).compact()
+        return real_read(sp, path)
+
+    monkeypatch.setattr(fsutil, "read_bytes", racing_read)
+    assert store.read_watermark("Fact 2") == expected["Fact 2"]
+    monkeypatch.undo()
+    assert not os.path.exists(raced[0]), "the read did race a fold"
+    assert len(_log_parts(log)) == 1
+    assert log_rows() == sorted(rows + [
+        ("Fact 2", t0 + dt.timedelta(days=200 + i), t0 + dt.timedelta(days=200 + i),
+         "0.00 minutes", "Successful", i) for i in range(3)
+    ], key=repr)
+
+
+def _two_target_job(spark, tmp_path, monkeypatch, name, base):
+    """A toy job loading two targets from one source: a row-grain main
+    fact keyed on id, and an extra fact of (id, upper(v))."""
+    from com_danliris_service_etl_spark.jobs import ALL_SPECS
+    from com_danliris_service_etl_spark.plans.jobs import JobSpec
+    from com_danliris_service_etl_spark.sources.catalog import Catalog
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(1, "a", dt.datetime(2024, 1, 1)), (2, "b", dt.datetime(2024, 1, 2))],
+        "id long, v string, lastmodifiedutc timestamp",
+    ).write.mode("overwrite").parquet(src)
+    cat = Catalog(spark=spark, tables={"src": src})
+
+    def build(sp, catalog, wm):
+        return catalog.read("src").filter(F.col("lastmodifiedutc") > F.lit(wm))
+
+    def build_extra(sp, catalog, wm):
+        return build(sp, catalog, wm).select("id", F.upper("v").alias("v_up"))
+
+    def spec(root):
+        return JobSpec(
+            name, build, ["id"], f"{root}/main", order_col="lastmodifiedutc",
+            extra_targets={f"{root}/extra": (build_extra, ["id"])},
+        )
+
+    monkeypatch.setitem(ALL_SPECS, name, spec(base))
+
+    def add_rows(rows):
+        spark.createDataFrame(rows, "id long, v string, lastmodifiedutc timestamp").write.mode(
+            "append"
+        ).parquet(src)
+
+    return cat, spec, add_rows
+
+
+@pytest.mark.parametrize("failing", ["main", "extra"])
+def test_run_job_concurrent_loads_injected_failure(spark, tmp_path, monkeypatch, failing):
+    """One target's MERGE fails while the other load is still writing.
+    The job is Failed in its JobResult and its log row, the row is written
+    only after BOTH loads returned, the watermark stays put, no cache
+    leaks, and the next clean night converges both facts to a full
+    recompute."""
+    import threading
+
+    from com_danliris_service_etl_spark.plans import jobs as plans_jobs
+    from com_danliris_service_etl_spark.plans.jobs import run_job
+    from com_danliris_service_etl_spark.plans.schedule import run_nightly
+
+    name = "Fact Two Target Failure Test"
+    dwh = str(tmp_path / "dwh")
+    cat, spec, add_rows = _two_target_job(spark, tmp_path, monkeypatch, name, dwh)
+    store = WatermarkStore(spark, str(tmp_path / "log"))
+    night = lambda day: run_nightly(  # noqa: E731
+        spark, cat, store, layers=[[name]], now=lambda: dt.datetime(2024, 1, day)
+    )
+    assert [r.status for r in night(5)] == ["Successful"]
+    add_rows([(2, "b2", dt.datetime(2024, 1, 10)), (3, "c", dt.datetime(2024, 1, 10))])
+
+    events: list[str] = []
+    other_started, failed = threading.Event(), threading.Event()
+    real_merge, real_commit = plans_jobs.merge_upsert, store.commit_run
+    fail_target = f"{dwh}/{failing}"
+
+    def merge(sp, target, df, keys, **kw):
+        # the other load is mid-merge when the failure is raised, and
+        # commits only after it
+        if target == fail_target:
+            assert other_started.wait(60), "loads did not overlap"
+            events.append("failed")
+            failed.set()
+            raise RuntimeError("injected merge failure")
+        other_started.set()
+        assert failed.wait(60), "the failing load never ran"
+        real_merge(sp, target, df, keys, **kw)
+        events.append("other committed")
+
+    def commit(job, start, finish, status="Successful", row_count=None):
+        events.append(f"log {status.split(':')[0]}")
+        real_commit(job, start, finish, status, row_count)
+
+    monkeypatch.setattr(plans_jobs, "merge_upsert", merge)
+    monkeypatch.setattr(store, "commit_run", commit)
+    # compared as id sets, not sizes: the ContextCleaner may unpersist an
+    # earlier test's cache at any moment, which a size check reads as a leak
+    cached = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keySet())  # noqa: E731, SLF001
+    before = cached()
+    (r2,) = night(15)
+    assert r2.status.startswith("Failed") and "injected merge failure" in r2.status
+    assert events == ["failed", "other committed", "log Failed"]
+    assert cached() <= before, "a load leaked its persisted increment"
+    assert store.read_watermark(name) == dt.datetime(2024, 1, 5)
+    log = spark.read.schema(LOG_SCHEMA).parquet(store.path).filter(F.col("description") == name)
+    assert log.orderBy(F.col("finish").desc()).first()["status"].startswith("Failed")
+
+    monkeypatch.setattr(plans_jobs, "merge_upsert", real_merge)
+    assert [r.status for r in night(20)] == ["Successful"]
+    assert store.read_watermark(name) == dt.datetime(2024, 1, 20)
+    ref = str(tmp_path / "ref")
+    run_job(spark, spec(ref), cat, WatermarkStore(spark, str(tmp_path / "ref_log")))
+    for t in ("main", "extra"):
+        got = sorted(map(tuple, spark.read.parquet(f"{dwh}/{t}").collect()))
+        assert got == sorted(map(tuple, spark.read.parquet(f"{ref}/{t}").collect())), t
+    assert len(got) == 3
+
+
+def test_jobspec_rejects_duplicate_targets():
+    import dataclasses
+
+    from com_danliris_service_etl_spark.jobs import ALL_SPECS
+    from com_danliris_service_etl_spark.plans.jobs import JobSpec
+
+    def b(sp, cat, wm):
+        return None
+
+    with pytest.raises(ValueError, match="duplicate load target"):
+        JobSpec("j", b, ["id"], "dwh/fact/", extra_targets={"dwh/fact": (b, ["id"])})
+    with pytest.raises(ValueError, match="duplicate load target"):
+        JobSpec(
+            "j", b, ["id"], "dwh/a", extra_targets={"dwh/x": (b, ["id"]), "dwh/x/": (b, ["id"])}
+        )
+    JobSpec("j", b, ["id"], "dwh/fact", extra_targets={"dwh/fact_x": (b, ["id"])})
+    # every shipped spec passes the check (replace re-runs __post_init__)
+    assert len(ALL_SPECS) == 23
+    for spec in ALL_SPECS.values():
+        dataclasses.replace(spec)
+
+
+# Spark jobs launched by one night of the toy two-target job, measured
+# with the driver-side migration log (a Spark-written log, one job per
+# append and two per watermark read, launched 21 and 10).
+UPSERT_NIGHT_SPARK_JOBS = 18
+QUIET_NIGHT_SPARK_JOBS = 7
+
+
+def test_spark_jobs_per_night_pinned(spark, tmp_path, monkeypatch):
+    """The nightly control-plane floor in Spark jobs: one upsert night and
+    one quiet night of a two-target job through `run_nightly` may not
+    launch more Spark jobs than pinned above."""
+    from com_danliris_service_etl_spark.plans.schedule import run_nightly
+
+    name = "Fact Two Target Job Count Test"
+    cat, _, add_rows = _two_target_job(spark, tmp_path, monkeypatch, name, str(tmp_path / "dwh"))
+    store = WatermarkStore(spark, str(tmp_path / "log"))
+
+    def night(day):
+        jobs = _spark_job_counter(spark)
+        results = run_nightly(
+            spark, cat, store, layers=[[name]], now=lambda: dt.datetime(2024, 1, day)
+        )
+        assert [r.status for r in results] == ["Successful"]
+        return results[0].rows, jobs()
+
+    night(5)  # bootstrap: fresh facts
+    add_rows([(2, "b2", dt.datetime(2024, 1, 10)), (3, "c", dt.datetime(2024, 1, 10))])
+    rows, upsert_jobs = night(15)
+    assert rows == 2
+    rows, quiet_jobs = night(20)
+    assert rows == 0
+    # > 0: the counter sees only ungrouped jobs, so a night whose jobs
+    # moved into a job group must fail here rather than pass vacuously
+    assert 0 < upsert_jobs <= UPSERT_NIGHT_SPARK_JOBS, upsert_jobs
+    assert 0 < quiet_jobs <= QUIET_NIGHT_SPARK_JOBS, quiet_jobs

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from com_danliris_service_etl_spark.plans.http_trigger import make_server
 from com_danliris_service_etl_spark.plans.jobs import JobSpec
 from com_danliris_service_etl_spark.sources.catalog import Catalog
-from com_danliris_service_etl_spark.sources.watermark import WatermarkStore
+from com_danliris_service_etl_spark.sources.watermark import LOG_SCHEMA, WatermarkStore
 
 
 @pytest.fixture()
@@ -151,7 +151,10 @@ def test_http_trigger_failure_is_500_and_logged(served):
     # run_job's catch appended the Failed telemetry row (reference
     # behavior: the error lands in the migration log) and the watermark
     # did NOT advance
-    log = store._log().filter(F.col("description") == "Fact Boom").collect()
+    log = (
+        store.spark.read.schema(LOG_SCHEMA).parquet(store.path)
+        .filter(F.col("description") == "Fact Boom").collect()
+    )
     assert len(log) == 1 and log[0]["status"].startswith("Failed")
     from com_danliris_service_etl_spark.sources.watermark import EPOCH
 
