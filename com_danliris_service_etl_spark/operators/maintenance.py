@@ -12,8 +12,6 @@ operators keep the layout healthy with Spark-native building blocks.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -54,42 +52,30 @@ def compact_small_files(
     columns so each output directory is written by few tasks (no
     N-files-per-partition-per-task explosion).
 
-    The rewrite lands in a temp dir and swaps in with a recovery copy at
-    every step (same protocol as merge_upsert's fallback): old data is
-    renamed aside, new data moved into place, backup removed last — a
-    crash leaves either the old or the new layout intact. On Delta/
-    Iceberg deployments this whole operator is `OPTIMIZE`; this is the
-    plain-parquet equivalent. Returns {before, after} layout stats.
+    The rewrite replaces the fact crash-safely (`fsutil.replace_store`,
+    whose docstring states the protocol: a crash leaves either the old or
+    the new layout intact; one writer per fact at a time, which the
+    nightly DAG's per-fact serialization already gives). On Delta/Iceberg
+    deployments this whole operator is `OPTIMIZE`; this is the
+    plain-parquet equivalent. Returns {before, after} layout stats."""
+    report = {}
 
-    SINGLE WRITER PER TARGET: the swap protocol (and its crash recovery,
-    which GCs every `<path>.tmp*` sibling) assumes one writer owns the
-    target at a time — a concurrent merge/compaction on the SAME path
-    races the rename and can have its in-flight temp dir GC'd. Serialize
-    per-fact maintenance in the scheduler (the nightly DAG already does)."""
-    path = path.rstrip("/")
-    # restore a half-swapped layout / GC stale temp dirs from a crashed
-    # prior compaction before reading anything (shared swap protocol)
-    fsutil.recover_interrupted_swap(spark, path)
-    before = fact_layout_stats(spark, path)
-    n_parts = max(1, -(-before["total_bytes"] // target_file_bytes))
+    def write(committed: bool, tmp: str) -> bool:
+        # stats are taken after replace_store's crash recovery, so a
+        # half-swapped layout is measured as restored
+        report["before"] = before = fact_layout_stats(spark, path)
+        n_parts = max(1, -(-before["total_bytes"] // target_file_bytes))
+        # no partition columns: a round-robin repartition
+        df = spark.read.parquet(path).repartition(n_parts, *[F.col(c) for c in partition_by])
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(tmp)
+        return True
 
-    df = spark.read.parquet(path)
-    if partition_by:
-        df = df.repartition(n_parts, *[F.col(c) for c in partition_by])
-    else:
-        df = df.repartition(n_parts)
-
-    # Sibling temp dir (same filesystem — rename must not cross schemes),
-    # uniquified against concurrent compactions; swap is Hadoop-FS rename
-    # (atomic on local/HDFS/ABFS; on S3A use table-format OPTIMIZE).
-    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-
-    fsutil.swap_with_backup(spark, tmp, path)
-    return {"before": before, "after": fact_layout_stats(spark, path)}
+    fsutil.replace_store(spark, path, write)
+    report["after"] = fact_layout_stats(spark, path)
+    return report
 
 
 def write_partitioned_fact(

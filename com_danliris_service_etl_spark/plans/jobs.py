@@ -22,21 +22,10 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from com_danliris_service_etl_spark.sources.catalog import Catalog
-from com_danliris_service_etl_spark.sources.sinks import merge_upsert
+from com_danliris_service_etl_spark.sources.sinks import has_committed_data, merge_upsert
 from com_danliris_service_etl_spark.sources.watermark import EPOCH, WatermarkStore
 
 BuildFn = Callable[[SparkSession, Catalog, dt.datetime], DataFrame]
-
-
-def _target_has_data(spark: SparkSession, target: str) -> bool:
-    """Committed data present at the fact target (parquet files or a Delta
-    log) — the probe behind the empty-fact ⇒ full-extract invariant."""
-    from com_danliris_service_etl_spark.sources import fsutil
-
-    target = target.rstrip("/")
-    return fsutil.exists(spark, f"{target}/_delta_log") or fsutil.has_committed_parquet(
-        spark, target
-    )
 
 
 @dataclass
@@ -153,7 +142,7 @@ def run_job(
         # share the one per-job watermark.
         if wm != EPOCH:
             all_targets = [spec.target, *spec.extra_targets]
-            if any(not _target_has_data(spark, t) for t in all_targets):
+            if any(not has_committed_data(spark, t) for t in all_targets):
                 wm = EPOCH
         main_opts = {"order_col": spec.order_col, "replace_group": spec.grain == "group"}
         loads = [(spec.target, spec.build, spec.merge_keys, main_opts, True)]

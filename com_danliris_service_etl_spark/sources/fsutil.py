@@ -1,25 +1,54 @@
-"""Hadoop FileSystem helpers for storage probes and swaps.
+"""Hadoop FileSystem helpers, and the one crash-safe replace every
+self-managed parquet store uses.
 
-Self-managed parquet stores (the streaming folds in `streaming/jobs.py`,
-the maintenance compactors, the migration log in `sources/watermark.py`)
-need existence probes, directory listings, renames and whole-file byte
+Self-managed parquet stores (the parquet fact in `sinks.merge_upsert`,
+`maintenance.compact_small_files`, the streaming folds in
+`streaming/jobs.py`, the migration log in `sources/watermark.py`) need
+existence probes, directory listings, renames and whole-file byte
 reads/writes against the SAME filesystem Spark reads — which is NOT the
 driver's local filesystem once paths are `hdfs://`, `s3a://` or
-`abfss://`. Driver-local `os.path` calls silently return False there (the
-failure class `sources/watermark.py` documents for its read path), so
+`abfss://`. Driver-local `os.path` calls silently return False there, so
 every probe here goes through `org.apache.hadoop.fs.FileSystem` resolved
 from the path's own scheme + the session's Hadoop configuration. Local
 paths resolve to `RawLocalFileSystem` and behave exactly as before.
 
-Atomicity note: `rename` maps to `FileSystem.rename`, which is atomic on
-POSIX-like stores (local, HDFS, ABFS). On S3A it is a COPY+DELETE — any
-swap protocol built on these helpers is only crash-atomic on an
-atomic-rename store; object-store deployments should use a transactional
-table format (Delta/Iceberg) instead, as `sinks.merge_upsert` already
-does when available.
+The replace protocol (:func:`replace_store`) rewrites a store whose new
+contents are computed from its old ones, so it can never overwrite the
+path it reads:
+
+- Recovery before probe. A kill between the swap's two renames leaves the
+  store missing and ``<store>.old`` holding the only copy; it is restored
+  (and stale ``<store>.tmp*`` siblings deleted) before anything asks
+  whether the store holds data — or a "fresh store" branch would rebuild
+  it from one batch and the next swap would delete the backup.
+- Committed data is what Spark's reader sees. A bare directory appears
+  as soon as a write STARTS, so "fresh" means no visible parquet file,
+  where a file is hidden if any path component below the store is hidden
+  by Spark's rule (`HadoopFSUtils.shouldFilterOutPathName`: a name
+  starting with ``.``, or with ``_`` and holding no ``=``). In-flight
+  ``_temporary`` output and a nested ``.tmp`` dir are hidden; a
+  ``__p_date=…`` partition dir is not.
+- Sibling temp. The new contents land in ``<store>.tmp-<uuid8>`` beside
+  the store (same filesystem: rename must not cross schemes; never a
+  child, which a trailing slash on the path would make it), and
+  :func:`swap_with_backup` installs them with a recovery copy at every
+  step.
+- Single writer per store. Recovery deletes every ``<store>.tmp*``
+  sibling, so two writers on one store (a merge racing a compaction)
+  can GC each other's temp dir and race the swap; the nightly DAG and
+  the streaming query each serialize their own store.
+
+Crash-atomicity rests on `FileSystem.rename`, which is atomic on
+POSIX-like stores (local, HDFS, ABFS). On S3A it is a COPY+DELETE, so the
+protocol is only crash-atomic on an atomic-rename store; object-store
+deployments should use a transactional table format (Delta/Iceberg)
+instead, as `sinks.merge_upsert` does when available.
 """
 
 from __future__ import annotations
+
+import uuid
+from collections.abc import Callable, Iterator
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
@@ -38,14 +67,20 @@ def exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p))
 
 
-def is_dir(spark: SparkSession, path: str) -> bool:
-    fs, p = _fs(spark, path)
-    return bool(fs.exists(p) and fs.getFileStatus(p).isDirectory())
-
-
 def _not_found(exc: Py4JJavaError) -> bool:
     """True iff a Hadoop call failed because its path does not exist."""
     return exc.java_exception.getClass().getName() == "java.io.FileNotFoundException"
+
+
+def is_dir(spark: SparkSession, path: str) -> bool:
+    """One status call: absence is its FileNotFoundException."""
+    fs, p = _fs(spark, path)
+    try:
+        return bool(fs.getFileStatus(p).isDirectory())
+    except Py4JJavaError as exc:
+        if _not_found(exc):
+            return False
+        raise
 
 
 def child_names(spark: SparkSession, path: str) -> list[str]:
@@ -91,55 +126,47 @@ def write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
         out.close()
 
 
-def _in_temporary(base, f) -> bool:
-    """True iff file ``f`` sits under a ``_temporary`` PATH COMPONENT
-    inside ``base``. A substring test over the whole URI would also hit
-    stores whose own path merely CONTAINS the text (e.g.
-    `/data/etl_temporary/sig_store`) and misclassify every committed
-    file as in-flight — so walk the parent components instead."""
-    p = f.getParent()
-    stop = base.toString()
-    while p is not None and p.toString() != stop:
-        if p.getName() == "_temporary":
-            return True
-        p = p.getParent()
-    return False
+def _hidden(name: str) -> bool:
+    """Spark's reader rule for a path component it skips
+    (`HadoopFSUtils.shouldFilterOutPathName`)."""
+    if name.startswith(("_metadata", "_common_metadata")):
+        return False
+    hidden_prefix = name.startswith(".") or (name.startswith("_") and "=" not in name)
+    return hidden_prefix or name.endswith("._COPYING_")
+
+
+def _visible_parquet(spark: SparkSession, path: str) -> Iterator:
+    """FileStatus of every parquet file under ``path`` that Spark's reader
+    would see (recursive; nothing when the path is absent). Only the
+    components BELOW ``path`` are tested, so a store that itself lives
+    under a hidden-looking directory still counts its files."""
+    fs, p = _fs(spark, path)
+    base = fs.makeQualified(p).toUri().getPath()
+    try:
+        it = fs.listFiles(p, True)  # recursive RemoteIterator
+    except Py4JJavaError as exc:
+        if _not_found(exc):
+            return
+        raise
+    while it.hasNext():
+        st = it.next()
+        f = st.getPath().toUri().getPath()
+        if f.endswith(".parquet") and not any(map(_hidden, f[len(base) :].split("/"))):
+            yield st
 
 
 def has_committed_parquet(spark: SparkSession, path: str) -> bool:
-    """True iff ``path`` contains at least one COMMITTED parquet file
-    (ignoring in-flight ``_temporary`` output) — the existence test every
-    crash-retried reader of a self-managed parquet store needs, since a
-    bare directory appears as soon as a write STARTS."""
-    fs, p = _fs(spark, path)
-    if not fs.exists(p):
-        return False
-    it = fs.listFiles(p, True)  # recursive RemoteIterator
-    while it.hasNext():
-        f = it.next().getPath()
-        if _in_temporary(p, f):
-            continue
-        if f.getName().endswith(".parquet"):
-            return True
-    return False
+    """True iff ``path`` holds at least one parquet file Spark's reader
+    sees — the "fresh store" test, since a bare directory appears as
+    soon as a write STARTS (module docstring)."""
+    return next(_visible_parquet(spark, path), None) is not None
 
 
 def parquet_file_sizes(spark: SparkSession, path: str) -> list[int]:
-    """Byte sizes of every committed parquet file under ``path``
-    (recursive, `_temporary` excluded); [] when the path is absent.
-    Metadata-only listing — never reads data."""
-    fs, p = _fs(spark, path)
-    if not fs.exists(p):
-        return []
-    sizes: list[int] = []
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        st = it.next()
-        f = st.getPath()
-        if _in_temporary(p, f) or not f.getName().endswith(".parquet"):
-            continue
-        sizes.append(int(st.getLen()))
-    return sizes
+    """Byte sizes of every parquet file Spark's reader sees under
+    ``path``; [] when the path is absent. Metadata-only listing — never
+    reads data."""
+    return [int(st.getLen()) for st in _visible_parquet(spark, path)]
 
 
 def rename(spark: SparkSession, src: str, dst: str) -> None:
@@ -157,10 +184,9 @@ def rename(spark: SparkSession, src: str, dst: str) -> None:
 
 
 def delete(spark: SparkSession, path: str) -> None:
-    """Recursive delete; no-op when absent."""
+    """Recursive delete; no-op when absent (Hadoop's delete returns False)."""
     fs, p = _fs(spark, path)
-    if fs.exists(p):
-        fs.delete(p, True)
+    fs.delete(p, True)
 
 
 def touch(spark: SparkSession, path: str) -> None:
@@ -171,18 +197,14 @@ def touch(spark: SparkSession, path: str) -> None:
 
 def recover_interrupted_swap(spark: SparkSession, target: str) -> None:
     """Repair the aftermath of a crashed :func:`swap_with_backup` before
-    touching ``target`` again, and garbage-collect stale temp siblings.
+    touching ``target`` again (module docstring: recovery before probe).
 
-    - A kill between the swap's two renames leaves ``target`` missing and
-      ``<target>.old`` holding the only copy — restore it FIRST, or a
-      fresh-target branch would silently rebuild the store from one batch
-      and a later successful swap would delete the backup (data loss).
-    - A kill during a temp write leaves a full-size ``<target>.tmp*``
-      sibling that no later run overwrites (uuid-suffixed names) — each
-      crash-retry cycle would otherwise add another complete copy next to
-      a 100 TB fact. Single-writer-per-target is already the module's
-      protocol (two concurrent merges into one fact race the swap
-      itself), so deleting this target's temp siblings here is safe."""
+    - ``target`` missing and ``<target>.old`` present: a kill between the
+      swap's two renames — restore the backup, the only copy.
+    - ``<target>.tmp*`` siblings: a kill during a temp write leaves a
+      full-size copy that no later run overwrites (uuid-suffixed names);
+      each crash-retry cycle would add another next to a 100 TB fact, so
+      delete them (safe under the single-writer rule)."""
     target = target.rstrip("/")
     backup = target + ".old"
     if not exists(spark, target) and exists(spark, backup):
@@ -208,8 +230,7 @@ def swap_with_backup(spark: SparkSession, tmp: str, target: str) -> None:
     the backup removed — a crash at any point leaves either the old or
     the new store intact on disk (as ``<target>.old`` if the final rename
     didn't run; :func:`recover_interrupted_swap` restores it). A missing
-    target (first install) skips the backup step. Crash-atomicity rests
-    on atomic rename — local/HDFS/ABFS, NOT S3A (module docstring)."""
+    target (first install) skips the backup step."""
     target = target.rstrip("/")
     backup = target + ".old"
     delete(spark, backup)
@@ -217,3 +238,21 @@ def swap_with_backup(spark: SparkSession, tmp: str, target: str) -> None:
         rename(spark, target, backup)
     rename(spark, tmp, target)
     delete(spark, backup)
+
+
+def replace_store(spark: SparkSession, path: str, write: Callable[[bool, str], bool]) -> None:
+    """Replace the parquet store at ``path`` by the module's protocol:
+    recover a crashed swap, probe for committed data, let ``write``
+    produce the new contents in a sibling temp dir, swap them in.
+
+    ``write(committed, tmp)`` gets whether the store holds data Spark
+    can read (so it knows whether to read the old contents, which it
+    does itself — nothing here reads data) and the temp path to write;
+    it returns True to install ``tmp`` or False to leave the store as it
+    is. Nothing is cleaned up when ``write`` or the swap raises: the next
+    call's recovery does that."""
+    path = path.rstrip("/")
+    recover_interrupted_swap(spark, path)
+    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+    if write(has_committed_parquet(spark, path), tmp):
+        swap_with_backup(spark, tmp, path)

@@ -5,13 +5,13 @@ transaction, then runs an opaque `DL_UPSERT_FACT_*` stored proc
 (`Pembelian/run.js:299-360`). The engine's contract is the defensible
 reading of that proc: key-based upsert (update-or-insert on the fact's
 natural key). Delta Lake's `MERGE INTO` is the production target; this
-module also provides a pure-parquet emulation (anti-join + union +
-atomic-rename) because the test image has no Delta jars.
+module also provides a pure-parquet emulation (anti-join + union, then
+`fsutil.replace_store`, whose docstring states the crash-safe replace
+protocol) because the test image has no Delta jars.
 """
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,6 +41,16 @@ def _delta_available(spark: SparkSession) -> bool:
         return False
 
 
+def has_committed_data(spark: SparkSession, target: str) -> bool:
+    """Committed data at a fact target: a Delta log, or parquet files
+    Spark's reader sees (a killed first write leaves a directory with
+    none) — the probe behind `run_job`'s empty-fact ⇒ full-extract rule."""
+    target = target.rstrip("/")
+    return fsutil.exists(spark, f"{target}/_delta_log") or fsutil.has_committed_parquet(
+        spark, target
+    )
+
+
 def merge_upsert(
     spark: SparkSession,
     target_path: str,
@@ -67,11 +77,18 @@ def merge_upsert(
 
     On Delta: compiles to ``MERGE INTO`` (row grain) or MERGE-delete +
     append (group grain). On plain parquet (test image): target anti-join
-    updates, union, write to temp dir, swap-with-backup. The swap is the
-    only non-scalable piece — a full rewrite of the fact — and exists
-    solely because the local image lacks Delta; on a real cluster the
-    Delta branch runs and touches only matching files (data-skipping on
-    merge keys).
+    updates, union, and a crash-safe replace of the whole fact
+    (`fsutil.replace_store`). That full rewrite is the only non-scalable
+    piece and exists solely because the local image lacks Delta; on a
+    real cluster the Delta branch runs and touches only matching files
+    (data-skipping on merge keys).
+
+    An EMPTY batch into a fact holding committed data is a no-op by
+    definition (the anti-join keeps every row, the union adds none), so
+    it returns before reading the fact: one limit-1 job on the caller's
+    already-persisted increment (r13, PIPELINE_BENCH.json). A first-night
+    empty extract still CREATES the fact, or the empty-fact ⇒
+    full-extract rule would re-extract every night.
     """
     key_list = list(keys)
     # Kept BEFORE the dedupe rewrite: the quiet-night emptiness probe
@@ -91,68 +108,25 @@ def merge_upsert(
         else:
             updates = updates.dropDuplicates(key_list)
 
-    # Crash recovery first (fsutil.recover_interrupted_swap): restore a
-    # `<target>.old` left by a kill between the swap's two renames — the
-    # fresh-target branch would otherwise silently rebuild the fact from
-    # this batch alone — and garbage-collect stale `.tmp-*` siblings from
-    # crashed temp writes (each would otherwise hold a full copy of the
-    # fact forever). merge_upsert is idempotent, so re-running the
-    # interrupted batch after the restore is safe. All probes and the
-    # swap route through the Hadoop FileSystem of the target's scheme
-    # (fsutil) — driver-local os.path is always False on hdfs://s3a://
-    # paths. The swap's crash-atomicity needs atomic rename
-    # (local/HDFS/ABFS); on S3A use the Delta branch instead (fsutil
-    # module docstring).
     target_path = target_path.rstrip("/")
-    fsutil.recover_interrupted_swap(spark, target_path)
-
-    # "Fresh" means NO COMMITTED DATA — not "directory absent": a kill
-    # during the very first write leaves a `_temporary`-only directory
-    # that a bare existence probe mistakes for a live fact, wedging every
-    # retry on an unreadable target. Probe for committed parquet or a
-    # Delta log instead, and clear the wreckage before the fresh write.
-    has_delta_log = fsutil.exists(spark, f"{target_path}/_delta_log")
-    if not has_delta_log and not fsutil.has_committed_parquet(spark, target_path):
-        fsutil.delete(spark, target_path)
-        # Fresh fact: create it in Delta format when Delta is available,
-        # or every subsequent merge would miss the `_delta_log` check and
-        # run the non-scalable full-rewrite parquet emulation forever.
-        if _delta_available(spark):
-            updates.write.format("delta").mode("overwrite").save(target_path)
-        else:
-            updates.write.mode("overwrite").parquet(target_path)
-        return
-
-    if has_delta_log and not _delta_available(spark):
-        # HARD STOP, not a fallback: spark.read.parquet over a Delta dir
-        # ignores the transaction log and reads every data file ever
-        # written — logically-removed rows resurrect — and the parquet
-        # swap would then delete `_delta_log`, irreversibly converting
-        # the fact to parquet with corrupted contents. A missing pip
-        # `delta-spark` (or missing jars) on a Delta fact is an
-        # environment error, never a reason to rewrite the fact.
-        raise RuntimeError(
-            f"Delta fact at {target_path} (_delta_log present) but the "
-            "delta-spark python package/jars are unavailable in this "
-            "session; refusing the parquet fallback, which would read "
-            "logically-removed files and destroy the transaction log. "
-            "Install delta-spark + jars, or restore the environment."
-        )
-
-    # Quiet-night short-circuit (r13, measured in PIPELINE_BENCH.json):
-    # an EMPTY batch into an EXISTING committed fact is a no-op by
-    # definition — the anti-join keeps every row and the union adds none
-    # — yet the parquet emulation would still pay a full fact
-    # read→rewrite→swap (and Delta a merge transaction) for it. Skipping
-    # is exact; it runs only past the fresh-target branch above, so a
-    # first-night empty extract still CREATES the fact (otherwise the
-    # empty-fact⇒full-extract fallback would re-extract every night).
-    # The probe is one limit-1 job on the caller's already-persisted
-    # increment (pre-dedupe — no exchange under the limit).
-    if raw_updates.isEmpty():
-        return
-
-    if has_delta_log:
+    if fsutil.exists(spark, f"{target_path}/_delta_log"):
+        if not _delta_available(spark):
+            # HARD STOP, not a fallback: spark.read.parquet over a Delta
+            # dir ignores the transaction log and reads every data file
+            # ever written — logically-removed rows resurrect — and the
+            # parquet swap would then delete `_delta_log`, irreversibly
+            # converting the fact to parquet with corrupted contents. A
+            # missing pip `delta-spark` (or missing jars) on a Delta fact
+            # is an environment error, never a reason to rewrite the fact.
+            raise RuntimeError(
+                f"Delta fact at {target_path} (_delta_log present) but the "
+                "delta-spark python package/jars are unavailable in this "
+                "session; refusing the parquet fallback, which would read "
+                "logically-removed files and destroy the transaction log. "
+                "Install delta-spark + jars, or restore the environment."
+            )
+        if raw_updates.isEmpty():
+            return
         from delta.tables import DeltaTable  # type: ignore
 
         tgt = DeltaTable.forPath(spark, target_path)
@@ -184,30 +158,38 @@ def merge_upsert(
         )
         return
 
-    target = spark.read.parquet(target_path)
-    # Null-safe key equality (<=>): merge keys can legitimately be NULL
-    # (e.g. a kanban with no steps), and a plain equi-anti-join would never
-    # match those rows — re-runs would duplicate them. This mirrors the
-    # Delta branch's `t.k <=> s.k` condition.
-    upd_keys = updates.select(*key_list).distinct()
-    for k in key_list:
-        upd_keys = upd_keys.withColumnRenamed(k, f"__u_{k}")
-    cond = None
-    for k in key_list:
-        eq = F.col(k).eqNullSafe(F.col(f"__u_{k}"))
-        cond = eq if cond is None else (cond & eq)
-    kept = target.join(upd_keys, cond, "left_anti")
-    merged = kept.unionByName(updates.select(*target.columns))
-    # Temp dir is a SIBLING of the target (same filesystem — rename must
-    # not cross schemes), uniquified so concurrent merges to different
-    # targets never collide.
-    tmp = f"{target_path}.tmp-{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    # Swap with a recovery copy at every step (fsutil.swap_with_backup —
-    # shared with compact_small_files and the streaming folds): a crash
-    # at any point leaves either the old or the new fact intact on disk,
-    # and recover_interrupted_swap above restores/GCs on the next run.
-    fsutil.swap_with_backup(spark, tmp, target_path)
+    def write(committed: bool, tmp: str) -> bool:
+        if not committed:
+            if _delta_available(spark):
+                # Fresh fact: create it in Delta format, or every later
+                # merge would miss the `_delta_log` check and run the
+                # full-rewrite parquet emulation forever. Delta's own log
+                # commits it in place, so nothing is swapped; the delete
+                # clears a killed first write's wreckage.
+                fsutil.delete(spark, target_path)
+                updates.write.format("delta").mode("overwrite").save(target_path)
+                return False
+            updates.write.mode("overwrite").parquet(tmp)
+            return True
+        if raw_updates.isEmpty():
+            return False
+        target = spark.read.parquet(target_path)
+        # Null-safe key equality (<=>): merge keys can legitimately be
+        # NULL (e.g. a kanban with no steps), and a plain equi-anti-join
+        # would never match those rows — re-runs would duplicate them.
+        # This mirrors the Delta branch's `t.k <=> s.k` condition.
+        upd_keys = updates.select(*key_list).distinct()
+        for k in key_list:
+            upd_keys = upd_keys.withColumnRenamed(k, f"__u_{k}")
+        cond = None
+        for k in key_list:
+            eq = F.col(k).eqNullSafe(F.col(f"__u_{k}"))
+            cond = eq if cond is None else (cond & eq)
+        kept = target.join(upd_keys, cond, "left_anti")
+        kept.unionByName(updates.select(*target.columns)).write.mode("overwrite").parquet(tmp)
+        return True
+
+    fsutil.replace_store(spark, target_path, write)
 
 
 def write_fact(

@@ -254,12 +254,6 @@ def run_incremental_merge(
     q.awaitTermination()
 
 
-# Committed-parquet existence probe — Hadoop-FS-routed (sources/fsutil.py)
-# so the folds work against hdfs://s3a://abfss:// stores, not only the
-# driver's local disk. Signature: _has_committed_parquet(spark, path).
-_has_committed_parquet = fsutil.has_committed_parquet
-
-
 def fold_incremental_lsh(
     batch_df: DataFrame,
     sig_store_path: str,
@@ -301,7 +295,7 @@ def fold_incremental_lsh(
         if fsutil.exists(sess, f"{sig_dst}/_SUCCESS"):
             return  # batch already fully folded — redelivery is a no-op
 
-    if _has_committed_parquet(sess, sig_store_path):
+    if fsutil.has_committed_parquet(sess, sig_store_path):
         store = sess.read.parquet(sig_store_path)
         pairs = incremental_minhash_lsh_pairs(store, batch_df)
     else:
@@ -360,57 +354,44 @@ def fold_rollup(
     so tests can drive crash/redelivery scenarios through the EXACT
     production fold (the `fold_incremental_lsh` discipline).
 
-    Idempotency & crash safety (delivery is at-least-once): the swapped-
-    in state directory carries an ``_applied_<batch_id>`` marker file
-    written into the temp dir BEFORE the atomic swap, so "state updated"
-    and "batch recorded" are installed together — a redelivered batch
-    whose marker is already live is a no-op. An interrupted swap (state
-    missing, ``.old`` backup present) is restored before anything else
-    runs, and first-batch detection looks for COMMITTED parquet, not the
-    bare directory.
-
-    Every probe and the swap itself route through the Hadoop FileSystem
-    of the state path's scheme (`sources/fsutil.py`): the protocol's
-    crash-atomicity rests on atomic directory rename, which local, HDFS
-    and ABFS provide. On a rename-by-copy object store (S3A) the swap is
-    not atomic — deploy the rollup state on a transactional table format
-    there instead (fsutil module docstring)."""
+    Idempotency & crash safety (delivery is at-least-once): the state
+    is replaced by `fsutil.replace_store` (its docstring states the
+    protocol: interrupted-swap recovery first, committed-parquet
+    first-batch probe, sibling temp dir, swap with backup; atomic only on
+    an atomic-rename store — not S3A). The new state directory carries an
+    ``_applied_<batch_id>`` marker file written into the temp dir BEFORE
+    the swap, so "state updated" and "batch recorded" are installed
+    together — a redelivered batch whose marker is already live is a
+    no-op. The marker check runs inside the replace, after recovery, so
+    a batch applied just before a torn swap is seen in the restored
+    state."""
     from com_danliris_service_etl_spark.operators.rollup import (
         bucket_aggregate,
         merge_rollup,
     )
 
     sess = batch_df.sparkSession
-    # crash recovery (fsutil.recover_interrupted_swap): a kill between
-    # the two renames of a prior fold leaves the state missing and the
-    # backup holding the only copy — restore it or the "first batch"
-    # branch below would silently rebuild the rollup from one batch's
-    # delta; stale temp dirs from killed writes are GC'd with it.
-    fsutil.recover_interrupted_swap(sess, state_path)
-    if batch_id is not None and fsutil.exists(
-        sess, f"{state_path.rstrip('/')}/_applied_{batch_id}"
-    ):
-        return  # redelivered batch already folded into the live state
-    delta = bucket_aggregate(batch_df, "ts_us", bucket_us, ["event_type"], "value")
-    if _has_committed_parquet(sess, state_path):
-        state = sess.read.parquet(state_path)
-        merged = merge_rollup(state, delta, ["bucket_us", "event_type"])
-    else:
-        merged = delta
-    # the merged plan READS state_path, so it lands in a temp dir and
-    # swaps in with a recovery copy (same protocol as merge_upsert /
-    # compact_small_files) — never overwrite a path being read.
-    tmp = state_path + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    # markers: carry every previously applied batch id forward, add this
-    # one — underscore-prefixed files are invisible to parquet readers
-    # and a few bytes per batch.
-    for f in fsutil.child_names(sess, state_path):
-        if f.startswith("_applied_"):
+
+    def write(committed: bool, tmp: str) -> bool:
+        live = fsutil.child_names(sess, state_path)
+        if batch_id is not None and f"_applied_{batch_id}" in live:
+            return False  # redelivered batch already folded into the live state
+        delta = bucket_aggregate(batch_df, "ts_us", bucket_us, ["event_type"], "value")
+        if committed:
+            state = sess.read.parquet(state_path)
+            delta = merge_rollup(state, delta, ["bucket_us", "event_type"])
+        delta.write.mode("overwrite").parquet(tmp)
+        # markers: carry every previously applied batch id forward, add
+        # this one — underscore-prefixed files are invisible to parquet
+        # readers and a few bytes per batch.
+        markers = [f for f in live if f.startswith("_applied_")]
+        if batch_id is not None:
+            markers.append(f"_applied_{batch_id}")
+        for f in markers:
             fsutil.touch(sess, f"{tmp}/{f}")
-    if batch_id is not None:
-        fsutil.touch(sess, f"{tmp}/_applied_{batch_id}")
-    fsutil.swap_with_backup(sess, tmp, state_path)
+        return True
+
+    fsutil.replace_store(sess, state_path, write)
 
 
 def run_streaming_rollup(
@@ -702,27 +683,26 @@ def fold_first_seen(
     stored state, atomic swap (the `fold_rollup` protocol). Unlike the
     rollup's count/sum combine, MIN-merge is IDEMPOTENT — a redelivered
     batch re-merges to the identical state — so no ``_applied_<id>``
-    marker is needed; crash recovery (interrupted-swap restore,
-    committed-parquet first-batch probe) still applies because the swap
-    itself can be interrupted. State size is bounded by |distinct
-    (group, entity)| — the dimension a distinct-count must hold anyway;
-    at 100 TB the same fold runs per-partition-parallel (groupBy merge),
-    never a driver funnel."""
+    marker is needed; the crash-safe replace (`fsutil.replace_store`)
+    still applies because the swap itself can be interrupted. State size
+    is bounded by |distinct (group, entity)| — the dimension a
+    distinct-count must hold anyway; at 100 TB the same fold runs
+    per-partition-parallel (groupBy merge), never a driver funnel."""
     sess = batch_df.sparkSession
-    fsutil.recover_interrupted_swap(sess, state_path)
-    delta = batch_df.groupBy("event_type", "user_id").agg(F.min("d").alias("d"))
-    if _has_committed_parquet(sess, state_path):
-        state = sess.read.parquet(state_path)
-        merged = (
-            state.unionByName(delta)
-            .groupBy("event_type", "user_id")
-            .agg(F.min("d").alias("d"))
-        )
-    else:
-        merged = delta
-    tmp = state_path + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    fsutil.swap_with_backup(sess, tmp, state_path)
+
+    def write(committed: bool, tmp: str) -> bool:
+        debuts = batch_df.groupBy("event_type", "user_id").agg(F.min("d").alias("d"))
+        if committed:
+            debuts = (
+                sess.read.parquet(state_path)
+                .unionByName(debuts)
+                .groupBy("event_type", "user_id")
+                .agg(F.min("d").alias("d"))
+            )
+        debuts.write.mode("overwrite").parquet(tmp)
+        return True
+
+    fsutil.replace_store(sess, state_path, write)
 
 
 def run_streaming_running_distinct(
