@@ -56,7 +56,6 @@ def merge_upsert(
     target_path: str,
     updates: DataFrame,
     keys: Sequence[str],
-    dedupe_updates: bool = True,
     order_col: str | None = None,
     replace_group: bool = False,
 ) -> None:
@@ -96,9 +95,7 @@ def merge_upsert(
     # and never empties a non-empty batch) and skips the dropDuplicates
     # exchange the deduped frame would pay just to answer limit-1 (r14).
     raw_updates = updates
-    if replace_group:
-        dedupe_updates = False
-    if dedupe_updates:
+    if not replace_group:
         if order_col:
             updates = (
                 updates.groupBy(*key_list)

@@ -1,19 +1,125 @@
-"""Structured Streaming jobs over the events table.
+"""Structured Streaming jobs over the events and documents tables.
 
-Pattern: file source → event-time watermark → windowed aggregation →
-sink. Locally the parquet fixture drives the stream to completion with
-`availableNow` + `processAllAvailable()` (the Trigger.AvailableNow shape a
-nightly incremental job uses in production — SURVEY.md §2.12); on a real
-cluster the same plan runs against Kafka/Delta CDC unchanged.
+Pattern: file source → event-time watermark → stateful operator → sink.
+Every job is BOUNDED: `Trigger.AvailableNow` drains whatever the source
+holds and stops — the shape a nightly incremental job uses in production
+(SURVEY.md §2.12); on a real cluster the same plans run against
+Kafka/Delta CDC unchanged. Two drains serve every job:
+
+- `_drain(df, mode, query_name)` runs the stream into an in-memory sink
+  and returns that sink as a batch table. The output mode per job:
+  - ``complete`` for the aggregations (windowed counts, dedup stats,
+    count-min, source divergence, stream-static enrichment). Complete
+    mode is the BOUNDED-REPLAY form: append mode would hold back every
+    window the watermark has not passed when the source runs dry,
+    including the final ones, and break stream ≡ batch. Complete mode
+    never evicts state; an unbounded deployment runs the same
+    aggregations in append mode, where the watermark evicts.
+  - ``append`` for the interval joins and the watermark dedup, whose
+    rows are final when emitted.
+  - ``update`` for the `applyInPandasWithState` operators
+    (`_stateful`). The memory sink RETAINS every batch's emissions, so
+    a job whose operator re-emits a key keeps each key's latest
+    emission (`_latest_emission`).
+- `_drain_batches(df, fn, checkpoint_dir)` hands each micro-batch to
+  ``fn(batch_df, batch_id)`` (foreachBatch). Delivery is AT-LEAST-ONCE:
+  a batch can re-run after its writes landed, so every fold is
+  idempotent by itself — a key MERGE, per-batch_id partitions, an
+  applied-batch high-water mark, or a MIN merge.
+
+Each job's batch twin is in `plans/queries_streaming.py`;
+tests/test_streaming.py pins stream ≡ batch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import hashlib
+from collections.abc import Callable, Sequence
+
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.group import GroupedData
+from pyspark.sql.streaming.state import GroupStateTimeout
 
+from com_danliris_service_etl_spark.operators.dedup import (
+    incremental_minhash_lsh_pairs,
+    minhash_lsh_pairs,
+    minhash_signatures,
+)
+from com_danliris_service_etl_spark.operators.rollup import bucket_aggregate, merge_rollup
+from com_danliris_service_etl_spark.operators.sketches import countmin_sketch, tokens_of
+from com_danliris_service_etl_spark.operators.text import tv_distance_from_counts
+from com_danliris_service_etl_spark.operators.windows import running_distinct
 from com_danliris_service_etl_spark.sources import fsutil
+from com_danliris_service_etl_spark.sources.events_meta import (
+    configure_session_for_events,
+    events_spark_ts_type,
+    events_ts_kind,
+    events_ts_us_expr,
+)
+from com_danliris_service_etl_spark.sources.sinks import merge_upsert
+
+
+def _drain(df: DataFrame, mode: str, query_name: str) -> DataFrame:
+    """Run the streaming ``df`` to completion into the in-memory sink
+    ``query_name`` and return the sink as a batch table."""
+    (
+        df.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(query_name)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return df.sparkSession.table(query_name)
+
+
+def _drain_batches(
+    df: DataFrame, fn: Callable[[DataFrame, int], None], checkpoint_dir: str
+) -> None:
+    """Run the streaming ``df`` to completion through
+    ``foreachBatch(fn)``, checkpointed at ``checkpoint_dir``."""
+    (
+        df.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _stateful(
+    grouped: GroupedData, fn: Callable, out_schema: str, state_schema: str
+) -> DataFrame:
+    """``applyInPandasWithState`` as every operator here runs it: each
+    invocation emits the key's current rows (update mode), and no key
+    times out — a bounded drain ends with its source."""
+    return grouped.applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _latest_emission(sink: DataFrame, keys: Sequence[str], monotone: str) -> DataFrame:
+    """Each key's latest emission from an update-mode memory sink.
+
+    ``monotone`` never decreases across a key's emissions, so the latest
+    emission carries the key's max; every row of it is kept (top-k and
+    quota emit K rows per key). A row re-emitted unchanged — a closed
+    session re-sent in the batch whose gap closes it — ties on the max
+    and comes out once."""
+    return (
+        sink.withColumn("__latest", F.max(monotone).over(Window.partitionBy(*keys)))
+        .filter(F.col(monotone) == F.col("__latest"))
+        .drop("__latest")
+        .dropDuplicates()
+    )
+
 
 def events_schema(sf_dir: str) -> T.StructType:
     """Explicit readStream schema for the events fixture, with the `ts`
@@ -22,11 +128,6 @@ def events_schema(sf_dir: str) -> T.StructType:
     a hardcoded type would fail at runtime with a parquet schema mismatch
     on a regenerated fixture. Batch (`plans/registry.py::_events`) and
     streaming share the same dispatch helper."""
-    from com_danliris_service_etl_spark.sources.events_meta import (
-        events_spark_ts_type,
-        events_ts_kind,
-    )
-
     return T.StructType(
         [
             T.StructField("event_id", T.LongType()),
@@ -55,8 +156,6 @@ def _stream_table(
     `os.path.isdir` is always False for hdfs://s3a://abfss:// fixtures,
     which would misroute the directory form to the glob-filter fallback
     and silently stream zero rows."""
-    from com_danliris_service_etl_spark.sources import fsutil
-
     path = f"{sf_dir.rstrip('/')}/{table}.parquet"
     reader = spark.readStream.schema(schema)
     if fsutil.is_dir(spark, path):
@@ -67,11 +166,6 @@ def _stream_table(
 def streaming_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events fixture with event-time normalized to a
     micros TimestampType (same footer-driven dispatch as the batch path)."""
-    from com_danliris_service_etl_spark.sources.events_meta import (
-        configure_session_for_events,
-        events_ts_us_expr,
-    )
-
     kind = configure_session_for_events(spark, sf_dir)
     raw = _stream_table(spark, events_schema(sf_dir), sf_dir, "events")
     return raw.withColumn("ts_us", events_ts_us_expr(kind)).withColumn(
@@ -85,8 +179,8 @@ def windowed_counts(events: DataFrame, window: str = "1 hour", watermark: str = 
     in the production form — `outputMode("append")`, each window emitted
     once the watermark passes its end — the watermark also EVICTS state,
     which is what makes this viable on an unbounded 100 TB/day stream.
-    (The bounded-fixture driver below drains in complete mode, where
-    Spark keeps all state; see its docstring.)"""
+    (The bounded drain below uses complete mode; see the module
+    docstring.)"""
     return (
         events.withWatermark("ts_utc", watermark)
         .groupBy(F.window("ts_utc", window), "event_type")
@@ -105,23 +199,8 @@ def run_streaming_windowed_counts(
     spark: SparkSession, sf_dir: str, query_name: str = "stream_out"
 ) -> DataFrame:
     """Drive the streaming aggregation to completion over the fixture via
-    the in-memory sink; returns the result as a (batch) DataFrame.
-
-    Complete mode is the BOUNDED-REPLAY drain: append mode would hold
-    back every window the watermark hasn't passed when the fixture runs
-    dry (including the final ones), breaking the stream≡batch
-    equivalence test. An unbounded deployment uses append mode, where
-    the watermark evicts state — complete mode never evicts."""
-    agg = windowed_counts(streaming_events(spark, sf_dir))
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    the in-memory sink; returns the result as a (batch) DataFrame."""
+    return _drain(windowed_counts(streaming_events(spark, sf_dir)), "complete", query_name)
 
 
 # ---------------------------------------------------------------------------
@@ -151,8 +230,6 @@ def _sessionize_fn(key, pdf_iter, state):
     group is therefore bounded by the user's rows IN THIS MICRO-BATCH —
     the same bound the sort itself needs.
     """
-    import pandas as pd
-
     if state.exists:
         session_id, last_ts, start_ts, n = state.get
     else:
@@ -187,36 +264,15 @@ def run_streaming_sessionize(
     stateful operator surface (SURVEY.md §2.12 extension). State is one
     small tuple per user (bounded by the active-user set, not the event
     volume); Arrow batches carry the rows, so the Python crossing is
-    columnar."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    ev = streaming_events(spark, sf_dir).select(
-        "user_id", "event_id", "ts_us"
+    columnar. A session that stays open across micro-batches is emitted
+    once per batch it grew in; n_events only grows, so its latest
+    emission is the batch sessionizer's row."""
+    ev = streaming_events(spark, sf_dir).select("user_id", "event_id", "ts_us")
+    sessions = _stateful(
+        ev.groupBy("user_id"), _sessionize_fn, SESSION_OUT_SCHEMA, SESSION_STATE_SCHEMA
     )
-    sessions = ev.groupBy("user_id").applyInPandasWithState(
-        _sessionize_fn,
-        outputStructType=SESSION_OUT_SCHEMA,
-        stateStructType=SESSION_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    q = (
-        sessions.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # The update-mode memory sink RETAINS every batch's emissions: a
-    # session that stays open across micro-batches appears once per batch
-    # it grew in. Keep only each session's LATEST emission (n_events only
-    # ever grows) so a multi-batch drain equals the batch sessionizer.
-    t = spark.table(query_name)
-    return (
-        t.groupBy("user_id", "session_id")
-        .agg(F.max_by(F.struct(*t.columns), "n_events").alias("__s"))
-        .select("__s.*")
+    return _latest_emission(
+        _drain(sessions, "update", query_name), ["user_id", "session_id"], "n_events"
     )
 
 
@@ -233,11 +289,8 @@ def run_incremental_merge(
 ) -> None:
     """`readStream → foreachBatch(merge_upsert)`: the Structured-Streaming
     form of the reference's watermark→extract→MERGE nightly loop (S4/S6).
-    `Trigger.AvailableNow` drains whatever arrived since the last checkpoint
-    and stops — exactly-once per batch via the checkpoint + idempotent MERGE
-    (re-delivered rows upsert to the same keys)."""
-    from com_danliris_service_etl_spark.sources.sinks import merge_upsert
-
+    Each run drains whatever arrived since the last checkpoint; a
+    re-delivered row upserts to the same key, so redelivery is a no-op."""
     ev = streaming_events(spark, sf_dir).select(
         "event_id", "user_id", "event_type", "value", "ts_us"
     )
@@ -245,13 +298,7 @@ def run_incremental_merge(
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         merge_upsert(batch_df.sparkSession, target_path, batch_df, keys=["event_id"])
 
-    q = (
-        ev.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_batches(ev, _merge, checkpoint_dir)
 
 
 def fold_incremental_lsh(
@@ -268,24 +315,18 @@ def fold_incremental_lsh(
     deployment keeps. Factored out of the foreachBatch closure so tests
     drive multiple batches through the EXACT production fold.
 
-    IDEMPOTENCY: foreachBatch is at-least-once — a retried micro-batch
-    re-runs this fold after its writes may already have landed, and blind
-    appends would double both outputs (duplicate store signatures then
-    compound: they emit self-pairs and duplicate pairs on every later
-    batch). With ``batch_id`` given (the streaming path always passes
-    it), each output lands in a ``batch_id=N`` partition subdirectory
-    written with mode=overwrite — a redelivery replaces its own
-    partition instead of appending — and a batch whose signature
-    partition already committed (its ``_SUCCESS`` marker exists; the
-    signatures are written LAST, so that marker proves the pairs landed
-    too) is skipped outright. ``batch_id=None`` keeps the plain append
-    contract for non-streaming callers that manage delivery themselves."""
-    from com_danliris_service_etl_spark.operators.dedup import (
-        incremental_minhash_lsh_pairs,
-        minhash_lsh_pairs,
-        minhash_signatures,
-    )
-
+    IDEMPOTENCY: a retried micro-batch re-runs this fold after its writes
+    may already have landed, and blind appends would double both outputs
+    (duplicate store signatures then compound: they emit self-pairs and
+    duplicate pairs on every later batch). With ``batch_id`` given (the
+    streaming path always passes it), each output lands in a
+    ``batch_id=N`` partition subdirectory written with mode=overwrite — a
+    redelivery replaces its own partition instead of appending — and a
+    batch whose signature partition already committed (its ``_SUCCESS``
+    marker exists; the signatures are written LAST, so that marker proves
+    the pairs landed too) is skipped outright. ``batch_id=None`` keeps
+    the plain append contract for non-streaming callers that manage
+    delivery themselves."""
     sess = batch_df.sparkSession
     sig_dst, pairs_dst, mode = sig_store_path, pairs_out_path, "append"
     if batch_id is not None:
@@ -318,14 +359,11 @@ def run_streaming_incremental_lsh(
     checkpoint_dir: str,
 ) -> None:
     """The nightly near-dup loop as a stream: `readStream(documents) →
-    foreachBatch(fold_incremental_lsh)`. Delivery is AT-LEAST-ONCE per
-    batch (the foreachBatch contract); end-to-end effectively-once comes
-    from the fold's idempotent per-batch_id partition writes — a
-    redelivered batch overwrites its own partition or no-ops if it
-    already committed (see `fold_incremental_lsh`). Across batches the
-    emitted pair set equals the full-corpus `minhash_lsh_pairs` (each
-    pair appears in the batch where its LATER document arrives — pinned
-    by `test_streaming_incremental_lsh_folds_to_full`)."""
+    foreachBatch(fold_incremental_lsh)`, effectively-once through the
+    fold's per-batch_id partitions. Across batches the emitted pair set
+    equals the full-corpus `minhash_lsh_pairs` (each pair appears in the
+    batch where its LATER document arrives — pinned by
+    `test_streaming_incremental_lsh_folds_to_full`)."""
     docs = _stream_table(spark, documents_schema(), sf_dir, "documents")
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -333,13 +371,10 @@ def run_streaming_incremental_lsh(
             batch_df, sig_store_path, pairs_out_path, batch_id=batch_id
         )
 
-    q = (
-        docs.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_batches(docs, _fold, checkpoint_dir)
+
+
+_APPLIED = "_applied_"
 
 
 def fold_rollup(
@@ -354,41 +389,45 @@ def fold_rollup(
     so tests can drive crash/redelivery scenarios through the EXACT
     production fold (the `fold_incremental_lsh` discipline).
 
-    Idempotency & crash safety (delivery is at-least-once): the state
-    is replaced by `fsutil.replace_store` (its docstring states the
-    protocol: interrupted-swap recovery first, committed-parquet
-    first-batch probe, sibling temp dir, swap with backup; atomic only on
-    an atomic-rename store — not S3A). The new state directory carries an
-    ``_applied_<batch_id>`` marker file written into the temp dir BEFORE
-    the swap, so "state updated" and "batch recorded" are installed
-    together — a redelivered batch whose marker is already live is a
-    no-op. The marker check runs inside the replace, after recovery, so
-    a batch applied just before a torn swap is seen in the restored
-    state."""
-    from com_danliris_service_etl_spark.operators.rollup import (
-        bucket_aggregate,
-        merge_rollup,
-    )
-
+    Idempotency & crash safety: the state is replaced by
+    `fsutil.replace_store` (its docstring states the protocol:
+    interrupted-swap recovery first, committed-parquet first-batch probe,
+    sibling temp dir, swap with backup; atomic only on an atomic-rename
+    store — not S3A). The count/sum combine is NOT idempotent, so the
+    state directory carries ONE ``_applied_<max_id>`` marker, the highest
+    batch id folded into it, written into the temp dir BEFORE the swap:
+    "state updated" and "batch recorded" are installed together. A batch
+    whose id is at or below the live mark is a no-op. That high-water
+    mark equals the set of applied ids because foreachBatch ids run
+    contiguously from 0 within one checkpoint, and batch N+1 starts only
+    after batch N's fold returned — a redelivery is always of an id at or
+    below the mark. The mark is the max over every ``_applied_*`` name,
+    so a state dir that holds one marker per batch reads the same. The
+    check runs inside the replace, after recovery, so a batch applied
+    just before a torn swap is seen in the restored state."""
     sess = batch_df.sparkSession
 
     def write(committed: bool, tmp: str) -> bool:
-        live = fsutil.child_names(sess, state_path)
-        if batch_id is not None and f"_applied_{batch_id}" in live:
-            return False  # redelivered batch already folded into the live state
+        mark = max(
+            (
+                int(name[len(_APPLIED):])
+                for name in fsutil.child_names(sess, state_path)
+                if name.startswith(_APPLIED)
+            ),
+            default=-1,
+        )
+        if batch_id is not None:
+            if batch_id <= mark:
+                return False  # redelivered batch already folded into the live state
+            mark = batch_id
         delta = bucket_aggregate(batch_df, "ts_us", bucket_us, ["event_type"], "value")
         if committed:
             state = sess.read.parquet(state_path)
             delta = merge_rollup(state, delta, ["bucket_us", "event_type"])
         delta.write.mode("overwrite").parquet(tmp)
-        # markers: carry every previously applied batch id forward, add
-        # this one — underscore-prefixed files are invisible to parquet
-        # readers and a few bytes per batch.
-        markers = [f for f in live if f.startswith("_applied_")]
-        if batch_id is not None:
-            markers.append(f"_applied_{batch_id}")
-        for f in markers:
-            fsutil.touch(sess, f"{tmp}/{f}")
+        # underscore-prefixed files are invisible to parquet readers
+        if mark >= 0:
+            fsutil.touch(sess, f"{tmp}/{_APPLIED}{mark}")
         return True
 
     fsutil.replace_store(sess, state_path, write)
@@ -403,35 +442,18 @@ def run_streaming_rollup(
 ) -> None:
     """Continuous aggregate maintained BY the stream: each micro-batch
     folds its mergeable partials into the stored rollup state via
-    `foreachBatch(merge_rollup)` — the Structured-Streaming form of the
+    `foreachBatch(fold_rollup)` — the Structured-Streaming form of the
     hypertable rollup (`operators/rollup.py`). Per batch the work is one
     map-side-combinable aggregation of the batch plus an
     O(touched-buckets) combine with the state; raw history is never
-    rescanned. Delivery is AT-LEAST-ONCE (the foreachBatch contract) and
-    the combine is NOT idempotent by itself (a re-applied batch would
-    double every count), so the fold carries its own idempotency: each
-    swapped-in state directory contains an ``_applied_<batch_id>``
-    marker file written BEFORE the atomic swap — a redelivered batch
-    whose marker is already in the live state is a no-op, and because
-    the marker travels inside the directory the swap installs, "state
-    updated" and "batch recorded" can never be observed apart. An
-    interrupted swap (target missing, ``.old`` backup present) is
-    restored before anything else runs. Read-side consumers see
-    (bucket, group) → count/sum/min/max and derive avg at query time."""
-    ev = streaming_events(spark, sf_dir).select(
-        "event_type", "value", "ts_us"
-    )
+    rescanned. Read-side consumers see (bucket, group) →
+    count/sum/min/max and derive avg at query time."""
+    ev = streaming_events(spark, sf_dir).select("event_type", "value", "ts_us")
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         fold_rollup(batch_df, state_path, bucket_us=bucket_us, batch_id=batch_id)
 
-    q = (
-        ev.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_batches(ev, _fold, checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -463,11 +485,7 @@ def run_streaming_dedup_stats(
     map-side-combinable stateful aggregation — state is one row per
     distinct (source, digest), the minimum any exact-dedup monitor can
     hold — and the finalize runs over the compact state, never the raw
-    stream. The complete-mode drain is the bounded-replay form (see
-    `run_streaming_windowed_counts`); an unbounded deployment emits
-    per-window digest counts in append mode so the watermark can evict.
-    Batch twin: `plans/queries_streaming.py::st5_dedup_stats`;
-    tests/test_streaming.py pins stream ≡ batch.
+    stream. Batch twin: `plans/queries_streaming.py::st5_dedup_stats`.
 
     (Chained streaming aggregations are unsupported, which is why the
     per-source finalize is a batch query over the in-memory sink — on a
@@ -476,15 +494,7 @@ def run_streaming_dedup_stats(
     g = raw.groupBy("source", F.md5(F.col("text")).alias("h")).agg(
         F.count(F.lit(1)).alias("n")
     )
-    q = (
-        g.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    state = spark.table(query_name)
+    state = _drain(g, "complete", query_name)
     return state.groupBy("source").agg(
         F.sum("n").cast("long").alias("n_docs"),
         F.count(F.lit(1)).alias("n_unique"),
@@ -507,89 +517,60 @@ def run_streaming_countmin(
     grows with the vocabulary; that bounded-vs-unbounded trade is the
     whole reason a production ingest monitor runs the sketch. Cell sums
     are associative, so the streaming fold over micro-batches lands on
-    the IDENTICAL grid as the batch build — the registry batch twin is
-    `plans/queries_streaming.py::st8_countmin_sketch`, and
-    tests/test_streaming.py pins stream ≡ batch. The complete-mode
-    memory drain is the bounded-replay form (see
-    `run_streaming_windowed_counts`); estimates for any candidate set
-    come from `countmin_estimate` over the drained grid."""
-    from com_danliris_service_etl_spark.operators.sketches import (
-        countmin_sketch,
-        tokens_of,
-    )
-
+    the IDENTICAL grid as the batch build (batch twin
+    `plans/queries_streaming.py::st8_countmin_sketch`); estimates for any
+    candidate set come from `countmin_estimate` over the drained grid."""
     raw = _stream_table(spark, documents_schema(), sf_dir, "documents")
     grid = countmin_sketch(tokens_of(raw), width=width, depth=depth)
-    q = (
-        grid.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _drain(grid, "complete", query_name)
 
 
 def run_streaming_interval_join(
     spark: SparkSession, sf_dir: str, query_name: str = "interval_join_stream"
 ) -> DataFrame:
-    """Stream-stream view→purchase attribution: both event streams carry
-    watermarks and the join condition bounds purchase time to (view,
-    view+1h], so Spark can expire view state older than the interval +
-    watermark — the state-cleanup contract that makes a stream-stream
-    join viable on an unbounded stream (without the time bound, state
-    grows forever). Batch twin:
-    `plans/queries_streaming.py::st6_interval_join`; tests pin stream ≡
-    batch over the fixture."""
-    joined = _interval_join_frame(spark, sf_dir)
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    """Stream-stream view→purchase attribution (`_interval_join_frame`).
+    Batch twin: `plans/queries_streaming.py::st6_interval_join`."""
+    return _drain(_interval_join_frame(spark, sf_dir), "append", query_name)
 
 
-def _interval_join_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _interval_join_frame(spark: SparkSession, sf_dir: str, how: str = "inner") -> DataFrame:
     """The watermarked stream-stream interval join plan shared by the
-    memory-sink driver (stream≡batch tests) and the MERGE sink
-    (production shape)."""
-    v = (
-        streaming_events(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .withWatermark("ts_utc", "2 hours")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id"),
-            F.col("ts_utc").alias("v_ts"),
-            F.col("ts_us").alias("v_ts_us"),
+    inner memory drain, its MERGE sink and the left-outer drain. Both
+    event streams carry watermarks and the join condition bounds
+    purchase time to (view, view+1h], so Spark can expire view state
+    older than the interval + watermark — the state-cleanup contract that
+    makes a stream-stream join viable on an unbounded stream (without
+    the time bound, state grows forever).
+
+    The inner columns are the MERGE target's schema; the outer form adds
+    the view's event time, which places an unmatched view against the
+    final watermark."""
+
+    def side(event_type: str, prefix: str) -> DataFrame:
+        return (
+            streaming_events(spark, sf_dir)
+            .filter(F.col("event_type") == event_type)
+            .withWatermark("ts_utc", "2 hours")
+            .select(
+                F.col("event_id").alias(f"{event_type}_id"),
+                F.col("user_id").alias(f"{prefix}_user"),
+                F.col("ts_utc").alias(f"{prefix}_ts"),
+                F.col("ts_us").alias(f"{prefix}_ts_us"),
+            )
         )
-    )
-    p = (
-        streaming_events(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .withWatermark("ts_utc", "2 hours")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts_utc").alias("p_ts"),
-            F.col("ts_us").alias("p_ts_us"),
-        )
-    )
-    return v.join(
-        p,
-        (F.col("user_id") == F.col("p_user"))
+
+    return side("view", "v").join(
+        side("purchase", "p"),
+        (F.col("v_user") == F.col("p_user"))
         & (F.col("p_ts") > F.col("v_ts"))
         & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 1 HOUR")),
+        how,
     ).select(
         "view_id",
         "purchase_id",
-        "user_id",
+        F.col("v_user").alias("user_id"),
         (F.col("p_ts_us") - F.col("v_ts_us")).cast("long").alias("lag_us"),
+        *([] if how == "inner" else ["v_ts_us"]),
     )
 
 
@@ -597,16 +578,12 @@ def run_streaming_interval_join_merge(
     spark: SparkSession, sf_dir: str, target_path: str, checkpoint_dir: str
 ) -> None:
     """The interval join's PRODUCTION sink: `foreachBatch(merge_upsert)`
-    keyed on the join identity (view_id, purchase_id). foreachBatch is
-    at-least-once, so a crash-replayed micro-batch re-delivers rows the
-    sink already holds — the key MERGE makes redelivery a no-op
-    (upsert-to-same-key), giving end-to-end effectively-once: the same
-    S6 story the batch jobs rely on, now at the stream boundary.
-    Idempotence under full replay is pinned by
+    keyed on the join identity (view_id, purchase_id). A crash-replayed
+    micro-batch re-delivers rows the sink already holds, and the key
+    MERGE makes that a no-op (upsert-to-same-key), giving end-to-end
+    effectively-once: the same S6 story the batch jobs rely on, now at
+    the stream boundary. Idempotence under full replay is pinned by
     `test_interval_join_merge_sink_replay_idempotent`."""
-    from com_danliris_service_etl_spark.sources.sinks import merge_upsert
-
-    joined = _interval_join_frame(spark, sf_dir)
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         merge_upsert(
@@ -616,13 +593,7 @@ def run_streaming_interval_join_merge(
             keys=["view_id", "purchase_id"],
         )
 
-    q = (
-        joined.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_batches(_interval_join_frame(spark, sf_dir), _merge, checkpoint_dir)
 
 
 def run_streaming_watermark_dedup(
@@ -653,15 +624,7 @@ def run_streaming_watermark_dedup(
     deduped = raw.withWatermark("ts_utc", watermark).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sink = spark.table(query_name)
+    sink = _drain(deduped, "append", query_name)
     return sink.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("sum_value"),
@@ -720,8 +683,6 @@ def run_streaming_running_distinct(
     `operators/windows.py::running_distinct` over the state — identical
     output to the one-shot batch form (`w9_running_distinct`) once the
     stream has drained, which tests/test_streaming.py pins."""
-    from com_danliris_service_etl_spark.operators.windows import running_distinct
-
     ev = streaming_events(spark, sf_dir).select(
         "event_type",
         "user_id",
@@ -731,13 +692,7 @@ def run_streaming_running_distinct(
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         fold_first_seen(batch_df, state_path, batch_id=batch_id)
 
-    q = (
-        ev.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_batches(ev, _fold, checkpoint_dir)
     state = spark.read.parquet(state_path)
     return running_distinct(state, ["event_type"], "user_id", "d")
 
@@ -759,50 +714,7 @@ def run_streaming_interval_join_outer(
     (`plans/queries_streaming.py::st11_outer_interval_join`) computes the
     full left outer, which is what a drained production stream
     converges to."""
-    v = (
-        streaming_events(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .withWatermark("ts_utc", "2 hours")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id"),
-            F.col("ts_utc").alias("v_ts"),
-            F.col("ts_us").alias("v_ts_us"),
-        )
-    )
-    p = (
-        streaming_events(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .withWatermark("ts_utc", "2 hours")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts_utc").alias("p_ts"),
-            F.col("ts_us").alias("p_ts_us"),
-        )
-    )
-    joined = v.join(
-        p,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("p_ts") > F.col("v_ts"))
-        & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 1 HOUR")),
-        "leftOuter",
-    ).select(
-        "view_id",
-        "purchase_id",
-        "user_id",
-        (F.col("p_ts_us") - F.col("v_ts_us")).cast("long").alias("lag_us"),
-        "v_ts_us",
-    )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _drain(_interval_join_frame(spark, sf_dir, "leftOuter"), "append", query_name)
 
 
 # ---------------------------------------------------------------------------
@@ -821,10 +733,9 @@ def run_streaming_static_enrich(
     the broadcast dim build and emits immediately — no watermark, no
     join state store, nothing to evict. The static side is resolved per
     microbatch, which on a live deployment is exactly how dimension
-    updates become visible mid-stream without a restart. Complete-mode
-    drain for the bounded-replay fixture (the aggregation state is
-    bounded by |segments| x |event types|, so complete mode holds a
-    dimension-sized result, never the stream)."""
+    updates become visible mid-stream without a restart. The aggregation
+    state is bounded by |segments| x |event types|, so the complete-mode
+    drain holds a dimension-sized result, never the stream."""
     ev = streaming_events(spark, sf_dir).select("user_id", "event_type", "value")
     dim = spark.read.parquet(f"{sf_dir.rstrip('/')}/customer.parquet").select(
         "c_custkey", "c_mktsegment"
@@ -837,15 +748,7 @@ def run_streaming_static_enrich(
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _drain(agg, "complete", query_name)
 
 
 # ---------------------------------------------------------------------------
@@ -874,9 +777,7 @@ def _topk_fn(key, pdf_iter, state):
     Emits the current top-K (total-order tiebreak: count desc, user_id
     asc) plus the type's running event total — monotone, so a bounded
     multi-batch replay keeps each type's LATEST emission by max total
-    (the st3 retention pattern for update-mode memory sinks)."""
-    import pandas as pd
-
+    (`_latest_emission`)."""
     if state.exists:
         users, counts, total = state.get
         tally = dict(zip(users, counts))
@@ -906,36 +807,11 @@ def run_streaming_topk(
     """Drive the exact running top-K as a real stream and drain it;
     returns (event_type, rank, user_id, n_events) for the final state of
     each type (latest emission by the monotone type_total)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     ev = streaming_events(spark, sf_dir).select("event_type", "user_id")
-    top = ev.groupBy("event_type").applyInPandasWithState(
-        _topk_fn,
-        outputStructType=TOPK_OUT_SCHEMA,
-        stateStructType=TOPK_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    q = (
-        top.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    t = spark.table(query_name)
-    latest = t.groupBy(F.col("event_type").alias("__et")).agg(
-        F.max("type_total").alias("__mx")
-    )
-    return (
-        t.join(
-            latest,
-            (F.col("event_type") == F.col("__et"))
-            & (F.col("type_total") == F.col("__mx")),
-        )
-        .select("event_type", "rank", "user_id", "n_events")
-    )
+    top = _stateful(ev.groupBy("event_type"), _topk_fn, TOPK_OUT_SCHEMA, TOPK_STATE_SCHEMA)
+    return _latest_emission(
+        _drain(top, "update", query_name), ["event_type"], "type_total"
+    ).select("event_type", "rank", "user_id", "n_events")
 
 
 # ---------------------------------------------------------------------------
@@ -968,8 +844,6 @@ def _attribution_fn(key, pdf_iter, state):
     than crediting the future touch (degraded, never actively wrong).
     Purchases emit exactly one attribution row each in the batch that
     processes them."""
-    import pandas as pd
-
     if state.exists:
         s_ts, s_eid, s_channel = state.get
     else:
@@ -1009,33 +883,18 @@ def run_streaming_attribution(
     spark: SparkSession, sf_dir: str, query_name: str = "stream_attr"
 ) -> DataFrame:
     """Drive last-touch attribution as a real stream and drain it; returns
-    one row per purchase (event_id, ts_us, value, channel). Update-mode
-    memory sink: each purchase is emitted exactly once (in the batch that
-    processes it), so the drained table IS the answer — no retention
-    dedup needed for exactly-once file-source replay; an at-least-once
-    production sink would key on event_id (the run_incremental_merge
-    pattern)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
+    one row per purchase (event_id, ts_us, value, channel). Each purchase
+    is emitted exactly once (in the batch that processes it), so the
+    drained update-mode table IS the answer — no retention dedup needed
+    for exactly-once file-source replay; an at-least-once production sink
+    would key on event_id (the run_incremental_merge pattern)."""
     ev = streaming_events(spark, sf_dir).select(
         "event_id", "user_id", "ts_us", "event_type", "value"
     )
-    attr = ev.groupBy("user_id").applyInPandasWithState(
-        _attribution_fn,
-        outputStructType=ATTR_OUT_SCHEMA,
-        stateStructType=ATTR_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    attr = _stateful(
+        ev.groupBy("user_id"), _attribution_fn, ATTR_OUT_SCHEMA, ATTR_STATE_SCHEMA
     )
-    q = (
-        attr.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _drain(attr, "update", query_name)
 
 
 def run_streaming_source_divergence(
@@ -1061,19 +920,7 @@ def run_streaming_source_divergence(
         .groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("cnt_s"))
     )
-    q = (
-        st.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from com_danliris_service_etl_spark.operators.text import (
-        tv_distance_from_counts,
-    )
-
-    return tv_distance_from_counts(spark.table(query_name))
+    return tv_distance_from_counts(_drain(st, "complete", query_name))
 
 
 # ---------------------------------------------------------------------------
@@ -1101,17 +948,12 @@ def _quota_sample_fn_factory(cap: int):
     doc_id is idempotent (same hash, deduped on id).
 
     Each invocation emits the stratum's CURRENT sample tagged with the
-    monotone `seen` counter; the update-mode memory sink retains every
-    batch's emissions, so the drain keeps each stratum's max-seen rows —
-    the documented retention-dedup pattern (a displaced doc from an
-    earlier batch disappears from later emissions, which an append-mode
-    sink could not express)."""
+    monotone `seen` counter, and the drain keeps each stratum's latest
+    emission (`_latest_emission`): a displaced doc from an earlier batch
+    disappears from later emissions, which an append-mode sink could not
+    express."""
 
     def fn(key, pdf_iter, state):
-        import hashlib
-
-        import pandas as pd
-
         if state.exists:
             seen, hashes, ids = state.get
             pool = dict(zip(ids, hashes))
@@ -1148,41 +990,16 @@ def run_streaming_quota_sample(
     """Drive the bounded-state quota sampler over the document stream and
     drain the FINAL sample: (doc_id, lang, source, sample_rank) — the
     same columns ops/sampling.py::quota_per_group emits, pinned equal in
-    tests. Drain takes each stratum's max-`seen` emission (the monotone
-    retention-dedup pattern; `seen` strictly increases per invocation,
-    and a stratum absent from a batch emits nothing)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
+    tests. `seen` strictly increases per invocation and a stratum absent
+    from a batch emits nothing, so the max-`seen` emission is the final
+    one."""
     raw = _stream_table(spark, documents_schema(), sf_dir, "documents")
-    sampled = (
-        raw.select("lang", "source", "doc_id")
-        .groupBy("lang", "source")
-        .applyInPandasWithState(
-            _quota_sample_fn_factory(cap),
-            outputStructType=QUOTA_OUT_SCHEMA,
-            stateStructType=QUOTA_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    sampled = _stateful(
+        raw.select("lang", "source", "doc_id").groupBy("lang", "source"),
+        _quota_sample_fn_factory(cap),
+        QUOTA_OUT_SCHEMA,
+        QUOTA_STATE_SCHEMA,
     )
-    q = (
-        sampled.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    drained = spark.table(query_name)
-    latest = drained.groupBy(
-        F.col("lang").alias("__l"), F.col("source").alias("__s")
-    ).agg(F.max("seen").alias("__max_seen"))
-    return (
-        drained.join(
-            latest,
-            (F.col("lang") == F.col("__l"))
-            & (F.col("source") == F.col("__s"))
-            & (F.col("seen") == F.col("__max_seen")),
-        )
-        .select("doc_id", "lang", "source", "sample_rank")
-    )
+    return _latest_emission(
+        _drain(sampled, "update", query_name), ["lang", "source"], "seen"
+    ).select("doc_id", "lang", "source", "sample_rank")

@@ -789,3 +789,146 @@ def test_windowed_counts_append_mode_evicts_and_drops_late(spark, tmp_path):
         for so in p["stateOperators"]
     )
     assert dropped == 1, [p["stateOperators"] for p in q.recentProgress]
+
+
+def test_fold_rollup_keeps_one_high_water_marker(spark, tmp_path, monkeypatch):
+    """fold_rollup records applied batches as ONE `_applied_<max_id>`
+    marker: each fold makes at most one marker create and the state dir
+    never holds more than one marker, however many batches folded. A
+    redelivered batch at or below the mark is a no-op, and a state dir
+    holding one marker per batch reads as its max."""
+    import os
+
+    from com_danliris_service_etl_spark.sources import fsutil
+    from com_danliris_service_etl_spark.streaming.jobs import fold_rollup
+
+    touched = []
+    real_touch = fsutil.touch
+
+    def counting_touch(sess, path):
+        touched.append(path)
+        real_touch(sess, path)
+
+    monkeypatch.setattr(fsutil, "touch", counting_touch)
+
+    def batch(i):
+        return spark.createDataFrame(
+            [("a", float(i), 100 * (i % 3))], "event_type string, value double, ts_us long"
+        )
+
+    def markers(path):
+        return sorted(n for n in os.listdir(path) if n.startswith("_applied_"))
+
+    def state(path):
+        return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+    def n_folded(path):
+        return spark.read.parquet(path).agg(F.sum("n")).first()[0]
+
+    path = str(tmp_path / "rollup")
+    for i in range(12):
+        before = len(touched)
+        fold_rollup(batch(i), path, bucket_us=1000, batch_id=i)
+        assert len(touched) - before <= 1, touched[before:]
+        assert markers(path) == [f"_applied_{i}"]
+    folded = state(path)
+    assert n_folded(path) == 12  # each batch folded once
+
+    before = len(touched)
+    fold_rollup(batch(11), path, bucket_us=1000, batch_id=11)  # redelivered latest
+    assert state(path) == folded and len(touched) == before
+    assert markers(path) == ["_applied_11"]
+
+    # a state dir written with one marker per batch: ids 0..5 applied
+    legacy = str(tmp_path / "legacy")
+    six = batch(0)
+    for i in range(1, 6):
+        six = six.unionByName(batch(i))
+    fold_rollup(six, legacy, bucket_us=1000)
+    for i in range(6):
+        real_touch(spark, f"{legacy}/_applied_{i}")
+    applied = state(legacy)
+    fold_rollup(batch(3), legacy, bucket_us=1000, batch_id=3)  # redelivered
+    assert state(legacy) == applied
+    fold_rollup(batch(6), legacy, bucket_us=1000, batch_id=6)
+    assert n_folded(legacy) == 7
+    assert markers(legacy) == ["_applied_6"]
+
+
+def test_latest_emission_keeps_each_keys_last_emission(spark):
+    """The update-mode retention rule on hand-built sink tables with
+    several batches' emissions (the stream ≡ batch tests drain their
+    fixture in one micro-batch, so they never see a re-emission)."""
+    from com_danliris_service_etl_spark.streaming.jobs import _latest_emission
+
+    # sessions: user 1's session 1 is emitted open in batch 0 and again,
+    # unchanged, in batch 1 when the gap that closes it arrives; user 2's
+    # session 1 grows from 2 to 5 events
+    sessions = spark.createDataFrame(
+        [
+            (1, 1, 3, 0, 200),
+            (2, 1, 2, 0, 50),
+            (1, 1, 3, 0, 200),
+            (1, 2, 1, 9000, 9000),
+            (2, 1, 5, 0, 90),
+        ],
+        "user_id long, session_id long, n_events long,"
+        " session_start_us long, session_end_us long",
+    )
+    got = _latest_emission(sessions, ["user_id", "session_id"], "n_events").collect()
+    assert sorted(map(tuple, got)) == [
+        (1, 1, 3, 0, 200),
+        (1, 2, 1, 9000, 9000),
+        (2, 1, 5, 0, 90),
+    ]
+
+    # top-k: every row of the latest K-row emission survives
+    topk = spark.createDataFrame(
+        [
+            ("click", 1, 1, 2, 4),
+            ("click", 2, 2, 1, 4),
+            ("click", 3, 3, 1, 4),
+            ("view", 1, 7, 1, 2),
+            ("view", 2, 8, 1, 2),
+            ("click", 1, 3, 4, 8),
+            ("click", 2, 1, 2, 8),
+            ("click", 3, 2, 2, 8),
+        ],
+        "event_type string, rank int, user_id long, n_events long, type_total long",
+    )
+    got = _latest_emission(topk, ["event_type"], "type_total").collect()
+    assert sorted(map(tuple, got)) == [
+        ("click", 1, 3, 4, 8),
+        ("click", 2, 1, 2, 8),
+        ("click", 3, 2, 2, 8),
+        ("view", 1, 7, 1, 2),
+        ("view", 2, 8, 1, 2),
+    ]
+
+
+def test_streaming_jobs_share_one_drain_of_each_kind():
+    """Layout guard: every streaming job drains through the module's one
+    memory-sink start site, one foreachBatch start site and one
+    applyInPandasWithState call."""
+    import ast
+    import inspect
+
+    from com_danliris_service_etl_spark.streaming import jobs
+
+    calls = [
+        node
+        for node in ast.walk(ast.parse(inspect.getsource(jobs)))
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+    ]
+
+    def count(attr, arg=None):
+        return sum(
+            1
+            for c in calls
+            if c.func.attr == attr
+            and (arg is None or any(isinstance(a, ast.Constant) and a.value == arg for a in c.args))
+        )
+
+    assert count("format", "memory") == 1
+    assert count("foreachBatch") == 1
+    assert count("applyInPandasWithState") == 1
