@@ -82,7 +82,8 @@ def _load(
     count: bool,
 ) -> int | None:
     """build → persist → (count) → MERGE for one target; returns the row
-    count when ``count`` is set.
+    count when ``count`` is set, and hands it to the MERGE, whose
+    empty-batch test then takes no Spark action of its own.
 
     Persist the increment across the telemetry count and the MERGE:
     without it the whole extract+join+transform plan re-executes for each
@@ -94,7 +95,7 @@ def _load(
     df = build(spark, catalog, wm).persist()
     try:
         rows = df.count() if count else None
-        merge_upsert(spark, target, df, keys, **opts)
+        merge_upsert(spark, target, df, keys, rows=rows, **opts)
         return rows
     finally:
         df.unpersist()

@@ -13,6 +13,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from com_danliris_service_etl_spark.sources import fsutil
+
 
 @dataclass
 class JdbcSource:
@@ -94,7 +96,15 @@ class MongoSource:
 
 @dataclass
 class Catalog:
-    """name → parquet path (test/bench) or JdbcSource (production shape)."""
+    """name → parquet path (test/bench) or JdbcSource (production shape).
+
+    A parquet read is pinned: its schema comes from
+    `fsutil.parquet_schema` — the footer of the first file Spark's reader
+    sees under the path, in path order, which is the file Spark's own
+    inference reads with ``mergeSchema`` off — and is handed to
+    ``spark.read.schema(...)``, so reading a table launches no Spark job.
+    A path holding no such file raises FileNotFoundError. JDBC and Mongo
+    reads are unchanged."""
 
     spark: SparkSession
     base_dir: str | None = None
@@ -112,8 +122,6 @@ class Catalog:
         cat = cls(spark=spark, base_dir=d)
         # Existence probe through the Hadoop FS of the dir's own scheme
         # (fsutil) so a hdfs://s3a:// fixture dir registers its tables.
-        from com_danliris_service_etl_spark.sources import fsutil
-
         for t in cls.STANDARD_TABLES:
             p = f"{d.rstrip('/')}/{t}.parquet"
             if fsutil.exists(spark, p):
@@ -168,7 +176,7 @@ class Catalog:
                         f"underlying error: {exc}"
                     ) from exc
                 raise
-        return self.spark.read.parquet(src)
+        return self.spark.read.schema(fsutil.parquet_schema(self.spark, src)).parquet(src)
 
     def register_views(self) -> None:
         """Expose every table as a temp view for the SQL front-end."""

@@ -43,21 +43,60 @@ POSIX-like stores (local, HDFS, ABFS). On S3A it is a COPY+DELETE, so the
 protocol is only crash-atomic on an atomic-rename store; object-store
 deployments should use a transactional table format (Delta/Iceberg)
 instead, as `sinks.merge_upsert` does when available.
+
+Pinned reads (:func:`parquet_schema`): ``spark.read.parquet(store)``
+infers the store's schema with a Spark job, one per table read and per
+MERGE target read (9 of the 27 jobs of a one-job upsert night). With
+``spark.sql.parquet.mergeSchema`` off, Spark's inference reads ONE
+footer — the first file Spark's reader sees, in path order — so the
+driver reads that footer itself and converts it with Spark's own
+converter under the session's SQLConf; the read then takes the schema as
+given and launches no job.
+
+Every JVM class (and static member) used here is resolved once per py4j
+gateway (:func:`_java`): ``jvm.org.apache.…`` attribute access costs one
+round trip per package segment on every call.
 """
 
 from __future__ import annotations
 
+import json
 import uuid
+import weakref
 from collections.abc import Callable, Iterator
 
+from py4j.java_gateway import JavaClass
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
+
+_PARQUET = "org.apache.spark.sql.execution.datasources.parquet."
+
+# gateway client -> {name: JavaClass | static member}; weak, so a stopped
+# gateway's entries go with it.
+_RESOLVED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _java(spark: SparkSession, fqn: str, member: str | None = None):
+    """The JVM class ``fqn``, or its static ``member`` (method or field),
+    resolved once per py4j gateway. A class costs no round trip (its
+    constructor call names it); a member costs one lookup, then none.
+    Threads may race to fill an entry; both resolve the same object."""
+    client = spark._jvm._gateway_client  # noqa: SLF001 — py4j gateway is the only route to the JVM
+    cache = _RESOLVED.setdefault(client, {})
+    key = fqn if member is None else f"{fqn}#{member}"
+    obj = cache.get(key)
+    if obj is None:
+        obj = JavaClass(fqn, client)
+        if member is not None:
+            obj = getattr(obj, member)
+        cache[key] = obj
+    return obj
 
 
 def _fs(spark: SparkSession, path: str):
     """(FileSystem, Path) for ``path``, resolved by the path's scheme."""
-    jvm = spark._jvm  # noqa: SLF001 — py4j gateway is the only route to Hadoop FS
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    hpath = _java(spark, "org.apache.hadoop.fs.Path")(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
     return fs, hpath
 
@@ -135,11 +174,11 @@ def _hidden(name: str) -> bool:
     return hidden_prefix or name.endswith("._COPYING_")
 
 
-def _visible_parquet(spark: SparkSession, path: str) -> Iterator:
-    """FileStatus of every parquet file under ``path`` that Spark's reader
-    would see (recursive; nothing when the path is absent). Only the
-    components BELOW ``path`` are tested, so a store that itself lives
-    under a hidden-looking directory still counts its files."""
+def _visible_parquet(spark: SparkSession, path: str) -> Iterator[tuple]:
+    """(path string, FileStatus) of every parquet file under ``path`` that
+    Spark's reader would see (recursive; nothing when the path is absent).
+    Only the components BELOW ``path`` are tested, so a store that itself
+    lives under a hidden-looking directory still counts its files."""
     fs, p = _fs(spark, path)
     base = fs.makeQualified(p).toUri().getPath()
     try:
@@ -152,7 +191,7 @@ def _visible_parquet(spark: SparkSession, path: str) -> Iterator:
         st = it.next()
         f = st.getPath().toUri().getPath()
         if f.endswith(".parquet") and not any(map(_hidden, f[len(base) :].split("/"))):
-            yield st
+            yield f, st
 
 
 def has_committed_parquet(spark: SparkSession, path: str) -> bool:
@@ -166,7 +205,41 @@ def parquet_file_sizes(spark: SparkSession, path: str) -> list[int]:
     """Byte sizes of every parquet file Spark's reader sees under
     ``path``; [] when the path is absent. Metadata-only listing — never
     reads data."""
-    return [int(st.getLen()) for st in _visible_parquet(spark, path)]
+    return [int(st.getLen()) for _, st in _visible_parquet(spark, path)]
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, read on the driver
+    from one footer; pass it to ``spark.read.schema(...)`` and the read
+    launches no Spark job (module docstring: pinned reads).
+
+    The footer is that of the first file Spark's reader sees under
+    ``path`` in path order — Spark's own rule with ``mergeSchema`` off,
+    which assumes every file of a store shares its schema. It is converted
+    by Spark's ``ParquetFileFormat.readSchemaFromFooter`` (the Spark
+    schema a Spark writer stored, else the parquet schema) with a
+    ``ParquetToSparkSchemaConverter`` built from the session's SQLConf,
+    and made nullable as every file-source read is. Partition columns are
+    not in it: the read appends them from the directory names, as it does
+    for an inferred schema. Raises FileNotFoundError when ``path`` holds
+    no such file."""
+    first = min(_visible_parquet(spark, path), key=lambda f: f[0], default=None)
+    if first is None:
+        raise FileNotFoundError(f"no parquet file Spark's reader sees under {path}")
+    st = first[1]
+    meta = _java(spark, "org.apache.parquet.hadoop.ParquetFileReader", "readFooter")(
+        spark._jsc.hadoopConfiguration(),  # noqa: SLF001
+        st,
+        _java(spark, "org.apache.parquet.format.converter.ParquetMetadataConverter",
+              "SKIP_ROW_GROUPS"),
+    )
+    footer = _java(spark, "org.apache.parquet.hadoop.Footer")(st.getPath(), meta)
+    conf = spark._jsparkSession.sessionState().conf()  # noqa: SLF001
+    converter = _java(spark, _PARQUET + "ParquetToSparkSchemaConverter")(conf)
+    schema = _java(spark, _PARQUET + "ParquetFileFormat", "readSchemaFromFooter")(
+        footer, converter
+    )
+    return StructType.fromJson(json.loads(schema.asNullable().json()))
 
 
 def rename(spark: SparkSession, src: str, dst: str) -> None:

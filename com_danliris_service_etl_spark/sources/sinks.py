@@ -58,6 +58,7 @@ def merge_upsert(
     keys: Sequence[str],
     order_col: str | None = None,
     replace_group: bool = False,
+    rows: int | None = None,
 ) -> None:
     """S6 — upsert ``updates`` into the fact at ``target_path`` on ``keys``.
 
@@ -84,10 +85,16 @@ def merge_upsert(
 
     An EMPTY batch into a fact holding committed data is a no-op by
     definition (the anti-join keeps every row, the union adds none), so
-    it returns before reading the fact: one limit-1 job on the caller's
-    already-persisted increment (r13, PIPELINE_BENCH.json). A first-night
-    empty extract still CREATES the fact, or the empty-fact ⇒
-    full-extract rule would re-extract every night.
+    it returns before reading the fact. ``rows``, the batch's row count
+    when the caller already took one (`plans.jobs._load` counts the main
+    target), answers that test; without it the test is one limit-1 job
+    on the caller's already-persisted increment (r13,
+    PIPELINE_BENCH.json). A first-night empty extract still CREATES the
+    fact, or the empty-fact ⇒ full-extract rule would re-extract every
+    night.
+
+    The parquet branch reads the fact with its schema pinned from one
+    footer (`fsutil.parquet_schema`), so reading it launches no Spark job.
     """
     key_list = list(keys)
     # Kept BEFORE the dedupe rewrite: the quiet-night emptiness probe
@@ -95,6 +102,10 @@ def merge_upsert(
     # and never empties a non-empty batch) and skips the dropDuplicates
     # exchange the deduped frame would pay just to answer limit-1 (r14).
     raw_updates = updates
+
+    def empty_batch() -> bool:
+        return rows == 0 if rows is not None else raw_updates.isEmpty()
+
     if not replace_group:
         if order_col:
             updates = (
@@ -122,7 +133,7 @@ def merge_upsert(
                 "logically-removed files and destroy the transaction log. "
                 "Install delta-spark + jars, or restore the environment."
             )
-        if raw_updates.isEmpty():
+        if empty_batch():
             return
         from delta.tables import DeltaTable  # type: ignore
 
@@ -168,14 +179,17 @@ def merge_upsert(
                 return False
             updates.write.mode("overwrite").parquet(tmp)
             return True
-        if raw_updates.isEmpty():
+        if empty_batch():
             return False
-        target = spark.read.parquet(target_path)
+        target = spark.read.schema(fsutil.parquet_schema(spark, target_path)).parquet(target_path)
         # Null-safe key equality (<=>): merge keys can legitimately be
         # NULL (e.g. a kanban with no steps), and a plain equi-anti-join
         # would never match those rows — re-runs would duplicate them.
-        # This mirrors the Delta branch's `t.k <=> s.k` condition.
-        upd_keys = updates.select(*key_list).distinct()
+        # This mirrors the Delta branch's `t.k <=> s.k` condition. No
+        # distinct on the keys: a left-anti join keeps a fact row iff ANY
+        # batch key matches it, so duplicate keys (group grain) change
+        # nothing, and a distinct would cost a shuffle stage per MERGE.
+        upd_keys = updates.select(*key_list)
         for k in key_list:
             upd_keys = upd_keys.withColumnRenamed(k, f"__u_{k}")
         cond = None

@@ -28,6 +28,26 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def spark_jobs(spark):
+    """Factory of counters: each call returns a callable giving how many
+    Spark jobs ran since that call (read from the status tracker after
+    draining the listener bus, since job-start events reach it
+    asynchronously)."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()  # noqa: SLF001
+
+    def job_ids() -> set[int]:
+        bus.waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    def counter():
+        before = job_ids()
+        return lambda: len(job_ids() - before)
+
+    return counter
+
+
 @pytest.fixture(scope="session")
 def oracle():
     con = duckdb.connect()

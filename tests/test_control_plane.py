@@ -108,6 +108,46 @@ def test_merge_upsert_replace_group_detail_grain(spark, tmp_path):
     assert got == [("A", "p1", 6.0), ("A", "p3", 2.0), ("B", "p9", 1.0)]
 
 
+def test_merge_upsert_replace_group_fanout_and_null_keys(spark, tmp_path):
+    """The parquet MERGE anti-joins the fact against the batch's keys as
+    they come, duplicates included: a group-grain batch that fans out to
+    several rows per key, NULL keys among them, replaces exactly the fact
+    rows of its keys (null-safe), keeps every other row, and inserts every
+    batch row; re-running it changes nothing."""
+    target = str(tmp_path / "fact_fanout")
+    schema = "note string, line long, qty double"
+    fact = [("A", 1, 1.0), ("A", 2, 2.0), ("B", 1, 3.0), (None, 1, 4.0), (None, 2, 5.0),
+            ("C", None, 6.0)]
+    merge_upsert(spark, target, spark.createDataFrame(fact, schema), keys=["note"],
+                 replace_group=True)
+    batch = [("A", 7, 1.5), ("A", 7, 1.5), ("A", 8, 2.5), (None, 9, 9.0), (None, 9, 9.0),
+             ("D", 1, 1.0), ("D", 1, 1.0)]
+    want = sorted(
+        [r for r in fact if r[0] not in {b[0] for b in batch}] + batch, key=repr
+    )
+    for _ in range(2):
+        merge_upsert(spark, target, spark.createDataFrame(batch, schema), keys=["note"],
+                     replace_group=True)
+        got = sorted(map(tuple, spark.read.parquet(target).collect()), key=repr)
+        assert got == want
+
+
+def test_merge_upsert_empty_batch_by_callers_count(spark, spark_jobs, tmp_path):
+    """A caller's row count answers the empty-batch test: a counted empty
+    first-night batch still creates the fact, and a counted empty batch
+    into a committed fact is a no-op that launches no Spark job."""
+    target = str(tmp_path / "fact_counted")
+    empty = spark.createDataFrame([], "id long, v string")
+    merge_upsert(spark, target, empty, keys=["id"], rows=0)
+    assert spark.read.parquet(target).count() == 0
+    merge_upsert(spark, target, spark.createDataFrame([(1, "a")], "id long, v string"),
+                 keys=["id"], rows=1)
+    jobs = spark_jobs()
+    merge_upsert(spark, target, empty, keys=["id"], rows=0)
+    assert jobs() == 0
+    assert [(r.id, r.v) for r in spark.read.parquet(target).collect()] == [(1, "a")]
+
+
 def test_merge_upsert_delta_branch_contract(spark, tmp_path):
     """S6's PRODUCTION branch: with Delta jars on the classpath,
     merge_upsert creates the fact in Delta format and compiles to `MERGE
@@ -430,27 +470,12 @@ def test_watermark_store_survives_empty_or_inflight_log_dir(spark, tmp_path):
     assert store.read_watermark("Fact X") == t1
 
 
-def _spark_job_counter(spark):
-    """Callable returning how many Spark jobs ran since the counter was
-    made (read from the status tracker after draining the listener bus,
-    since job-start events reach it asynchronously)."""
-    sc = spark.sparkContext
-    bus = sc._jsc.sc().listenerBus()  # noqa: SLF001
-
-    def job_ids() -> set[int]:
-        bus.waitUntilEmpty()
-        return set(sc.statusTracker().getJobIdsForGroup(None))
-
-    before = job_ids()
-    return lambda: len(job_ids() - before)
-
-
 def _log_parts(log) -> list[str]:
     """Committed log files (the local FileSystem adds `.crc` siblings)."""
     return sorted(n for n in os.listdir(log) if n.startswith("part-"))
 
 
-def test_read_watermark_runs_at_most_two_spark_jobs(spark, tmp_path):
+def test_read_watermark_runs_at_most_two_spark_jobs(spark, spark_jobs, tmp_path):
     """The migration log lives on the driver: appending a row (pyarrow
     encode + Hadoop FileSystem write, and the fold once the log holds more
     than COMPACT_AT files) and reading the watermark (one listing +
@@ -460,7 +485,7 @@ def test_read_watermark_runs_at_most_two_spark_jobs(spark, tmp_path):
     store = WatermarkStore(spark, str(tmp_path / "log"))
     t0 = dt.datetime(2024, 3, 1)
     days = [t0 + dt.timedelta(days=i) for i in range(COMPACT_AT + 1)]
-    jobs = _spark_job_counter(spark)
+    jobs = spark_jobs()
     for i, t in enumerate(days):
         store.commit_run("Fact X", t, t, "Successful", i)
     assert jobs() == 0
@@ -933,13 +958,16 @@ def test_jobspec_rejects_duplicate_targets():
 
 
 # Spark jobs launched by one night of the toy two-target job, measured
-# with the driver-side migration log (a Spark-written log, one job per
-# append and two per watermark read, launched 21 and 10).
-UPSERT_NIGHT_SPARK_JOBS = 18
-QUIET_NIGHT_SPARK_JOBS = 7
+# with the driver-side migration log, footer-pinned parquet reads (an
+# inferred schema costs one job per table read and per MERGE target
+# read), a MERGE anti-join without a distinct, and the main target's
+# count answering the MERGE's empty-batch test. A Spark-written log
+# launched 21 and 10; inferred reads, 18 and 7.
+UPSERT_NIGHT_SPARK_JOBS = 12
+QUIET_NIGHT_SPARK_JOBS = 4
 
 
-def test_spark_jobs_per_night_pinned(spark, tmp_path, monkeypatch):
+def test_spark_jobs_per_night_pinned(spark, spark_jobs, tmp_path, monkeypatch):
     """The nightly control-plane floor in Spark jobs: one upsert night and
     one quiet night of a two-target job through `run_nightly` may not
     launch more Spark jobs than pinned above."""
@@ -950,7 +978,7 @@ def test_spark_jobs_per_night_pinned(spark, tmp_path, monkeypatch):
     store = WatermarkStore(spark, str(tmp_path / "log"))
 
     def night(day):
-        jobs = _spark_job_counter(spark)
+        jobs = spark_jobs()
         results = run_nightly(
             spark, cat, store, layers=[[name]], now=lambda: dt.datetime(2024, 1, day)
         )
