@@ -7,8 +7,9 @@ Reference sites are cited per function.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 ColumnOrName = Column | str
 
@@ -78,6 +79,30 @@ def epoch_millis_time_of_day(ms: ColumnOrName) -> Column:
     Reference: `MonitoringEvent/run.js:226,239-240` (timeInMilisStart).
     """
     return F.date_format(F.timestamp_millis(_c(ms).cast("long")), "HH:mm:ss")
+
+
+def epoch_micros(frame: DataFrame, col: str = "ts") -> Column:
+    """``frame[col]`` → epoch-MICROS BIGINT, picked by the column's own
+    Spark type — the representation Spark and DuckDB agree on exactly
+    (oracle side: ``epoch_us(ts)``) for every timestamp a parquet file
+    can hold:
+
+    - ``LongType``: a TIMESTAMP(NANOS) column, which Spark reads as raw
+      nanos under the ``nanosAsLong`` conf `session.get_session` sets;
+    - ``TimestampNTZType``: TIMESTAMP(MICROS, isAdjustedToUTC=false),
+      converted against an NTZ epoch literal so the session timezone
+      never enters;
+    - ``TimestampType``: TIMESTAMP(MICROS, isAdjustedToUTC=true).
+    """
+    dtype = frame.schema[col].dataType
+    if isinstance(dtype, T.LongType):
+        return F.expr(f"`{col}` div 1000")
+    if isinstance(dtype, T.TimestampNTZType):
+        return F.expr(
+            "timestampdiff(MICROSECOND,"
+            f" CAST('1970-01-01 00:00:00' AS TIMESTAMP_NTZ), `{col}`)"
+        )
+    return F.unix_micros(F.col(col))
 
 
 def reconstruct_timestamp(date_part: ColumnOrName, ms_time_part: ColumnOrName) -> Column:

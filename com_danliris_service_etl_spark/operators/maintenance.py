@@ -26,7 +26,10 @@ def fact_layout_stats(spark: SparkSession, path: str) -> dict:
     any scheme — `sources/fsutil.py`) — the signal `compact_small_files`
     acts on, and the number an
     operator alerts on (mean_bytes far below the target ⇒ compact)."""
-    sizes = fsutil.parquet_file_sizes(spark, path)
+    return _layout(fsutil.parquet_file_sizes(spark, path))
+
+
+def _layout(sizes: list[int]) -> dict:
     return {
         "n_files": len(sizes),
         "total_bytes": sum(sizes),
@@ -60,13 +63,14 @@ def compact_small_files(
     plain-parquet equivalent. Returns {before, after} layout stats."""
     report = {}
 
-    def write(committed: bool, tmp: str) -> bool:
-        # stats are taken after replace_store's crash recovery, so a
-        # half-swapped layout is measured as restored
-        report["before"] = before = fact_layout_stats(spark, path)
+    def write(files: list, tmp: str) -> bool:
+        # stats come from replace_store's listing, taken after its crash
+        # recovery, so a half-swapped layout is measured as restored
+        report["before"] = before = _layout([int(st.getLen()) for _, st in files])
         n_parts = max(1, -(-before["total_bytes"] // target_file_bytes))
         # no partition columns: a round-robin repartition
-        df = spark.read.parquet(path).repartition(n_parts, *[F.col(c) for c in partition_by])
+        df = fsutil.read_parquet(spark, path, files)
+        df = df.repartition(n_parts, *[F.col(c) for c in partition_by])
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)

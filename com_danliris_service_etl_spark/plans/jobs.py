@@ -79,11 +79,10 @@ def _load(
     build: BuildFn,
     keys: Sequence[str],
     opts: dict,
-    count: bool,
-) -> int | None:
-    """build → persist → (count) → MERGE for one target; returns the row
-    count when ``count`` is set, and hands it to the MERGE, whose
-    empty-batch test then takes no Spark action of its own.
+) -> int:
+    """build → persist → count → MERGE for one target; returns the row
+    count and hands it to the MERGE, whose empty-batch test then takes no
+    Spark action of its own.
 
     Persist the increment across the telemetry count and the MERGE:
     without it the whole extract+join+transform plan re-executes for each
@@ -94,7 +93,10 @@ def _load(
     raising MERGE must not leak the cache for the rest of the session."""
     df = build(spark, catalog, wm).persist()
     try:
-        rows = df.count() if count else None
+        # The JVM RDD's count: one Spark job. `df.count()` launches two or
+        # three under AQE (its aggregate's shuffle stage is a job of its
+        # own).
+        rows = df._jdf.rdd().count()  # noqa: SLF001 — no public one-job count
         merge_upsert(spark, target, df, keys, rows=rows, **opts)
         return rows
     finally:
@@ -146,9 +148,9 @@ def run_job(
             if any(not has_committed_data(spark, t) for t in all_targets):
                 wm = EPOCH
         main_opts = {"order_col": spec.order_col, "replace_group": spec.grain == "group"}
-        loads = [(spec.target, spec.build, spec.merge_keys, main_opts, True)]
+        loads = [(spec.target, spec.build, spec.merge_keys, main_opts)]
         for target, (build_fn, keys, *rest) in spec.extra_targets.items():
-            loads.append((target, build_fn, keys, dict(rest[0]) if rest else {}, False))
+            loads.append((target, build_fn, keys, dict(rest[0]) if rest else {}))
         with ThreadPoolExecutor(max_workers=len(loads)) as pool:
             futures = [
                 pool.submit(inheritable_thread_target(spark)(_load), spark, catalog, wm, *load)

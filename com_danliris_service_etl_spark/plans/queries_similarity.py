@@ -387,8 +387,8 @@ _SIM8_CB: dict[str, tuple] = {}
 
 def _sim8_codebook(spark: SparkSession, sf_dir: str) -> tuple:
     """Collected (flat slices, K) codebook per fixture dir. Fixtures are
-    immutable within a round (the events_meta convention), so the cache
-    key is the directory path."""
+    immutable within a round (as `registry._TABLE_CACHE` assumes), so
+    the cache key is the directory path."""
     from com_danliris_service_etl_spark.operators import similarity as sim
 
     if sf_dir not in _SIM8_CB:

@@ -22,6 +22,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from com_danliris_service_etl_spark.functions.dates import epoch_micros
+from com_danliris_service_etl_spark.sources import fsutil
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {}
@@ -35,11 +38,12 @@ def register(name: str, oracle: str | None):
     return deco
 
 
-# Table-handle cache: one schema/footer resolution per (session, dir,
-# table) — what a metastore gives a real deployment. DataFrames are
-# immutable plans, so reuse is safe; keyed on a stable session identity
-# (applicationId + startTime) so a fresh session (tests) never sees stale
-# handles and a recycled CPython object id can never collide.
+# Table-handle cache: one pinned read (`fsutil.read_parquet`) per
+# (session, dir, table) — what a metastore gives a real deployment.
+# DataFrames are immutable plans, so reuse is safe; keyed on a stable
+# session identity (applicationId + startTime) so a fresh session (tests)
+# never sees stale handles and a recycled CPython object id can never
+# collide.
 _TABLE_CACHE: dict[tuple[str, int, str, str], DataFrame] = {}
 
 
@@ -57,16 +61,7 @@ def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         # LIVE session's (dir, table) working set, not process history.
         for k in [k for k in _TABLE_CACHE if k[:2] != (app_id, start)]:
             del _TABLE_CACHE[k]
-        if table == "events":
-            # Footer-driven dispatch (sources/events_meta.py): only a
-            # legacy TIMESTAMP(NANOS) fixture needs the nanosAsLong conf;
-            # the common micros path leaves the caller's session untouched.
-            from com_danliris_service_etl_spark.sources.events_meta import (
-                configure_session_for_events,
-            )
-
-            configure_session_for_events(spark, sf_dir)
-        df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+        df = fsutil.read_parquet(spark, f"{sf_dir}/{table}.parquet")
         _TABLE_CACHE[key] = df
     return df
 
@@ -75,17 +70,11 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events with `ts` replaced by `ts_us` (epoch MICROS long) and `ts_utc`
     (micros TimestampType) — epoch-micros is the representation Spark and
     DuckDB agree on exactly (oracle side: ``epoch_us(ts)``), whatever the
-    parquet generation's physical type. The per-generation dispatch lives
-    in sources/events_meta.py, shared with the streaming read path."""
-    from com_danliris_service_etl_spark.sources.events_meta import (
-        events_ts_kind,
-        events_ts_us_expr,
-    )
-
+    parquet generation's physical type (`functions.dates.epoch_micros`
+    dispatches on the pinned `ts` type, as the streaming read does)."""
     ev = _t(spark, sf_dir, "events")
-    ts_us = events_ts_us_expr(events_ts_kind(sf_dir))
     return (
-        ev.withColumn("ts_us", ts_us)
+        ev.withColumn("ts_us", epoch_micros(ev))
         .withColumn("ts_utc", F.timestamp_micros(F.col("ts_us")))
         .drop("ts")
     )

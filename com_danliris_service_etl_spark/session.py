@@ -53,10 +53,12 @@ def get_session(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # Older events.parquet generations carried TIMESTAMP(NANOS); Spark
-        # has no nanos timestamp, so read those as raw nanos longs. No-op
-        # for the current MICROS fixtures — plans/registry.py:_events
-        # adapts to whichever physical type it finds.
+        # The engine's only nanos rule. Older events.parquet generations
+        # carried TIMESTAMP(NANOS); Spark has no nanos timestamp, so read
+        # those as raw nanos longs. The pinned schema (fsutil.parquet_schema
+        # converts footers under this conf) then says LongType, and
+        # functions.dates.epoch_micros picks its expression from that type.
+        # No-op for MICROS files.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")

@@ -98,13 +98,12 @@ class MongoSource:
 class Catalog:
     """name → parquet path (test/bench) or JdbcSource (production shape).
 
-    A parquet read is pinned: its schema comes from
-    `fsutil.parquet_schema` — the footer of the first file Spark's reader
-    sees under the path, in path order, which is the file Spark's own
-    inference reads with ``mergeSchema`` off — and is handed to
-    ``spark.read.schema(...)``, so reading a table launches no Spark job.
-    A path holding no such file raises FileNotFoundError. JDBC and Mongo
-    reads are unchanged."""
+    A parquet read is pinned (`fsutil.read_parquet`): its schema is the
+    footer of the first file Spark's reader sees under the path, in path
+    order, which is the file Spark's own inference reads with
+    ``mergeSchema`` off, so reading a table launches no Spark job. A path
+    holding no such file raises FileNotFoundError. JDBC and Mongo reads
+    are unchanged."""
 
     spark: SparkSession
     base_dir: str | None = None
@@ -176,7 +175,7 @@ class Catalog:
                         f"underlying error: {exc}"
                     ) from exc
                 raise
-        return self.spark.read.schema(fsutil.parquet_schema(self.spark, src)).parquet(src)
+        return fsutil.read_parquet(self.spark, src)
 
     def register_views(self) -> None:
         """Expose every table as a temp view for the SQL front-end."""

@@ -16,7 +16,7 @@ The replace protocol (:func:`replace_store`) rewrites a store whose new
 contents are computed from its old ones, so it can never overwrite the
 path it reads:
 
-- Recovery before probe. A kill between the swap's two renames leaves the
+- Recovery before listing. A kill between the swap's two renames leaves the
   store missing and ``<store>.old`` holding the only copy; it is restored
   (and stale ``<store>.tmp*`` siblings deleted) before anything asks
   whether the store holds data — or a "fresh store" branch would rebuild
@@ -44,14 +44,16 @@ protocol is only crash-atomic on an atomic-rename store; object-store
 deployments should use a transactional table format (Delta/Iceberg)
 instead, as `sinks.merge_upsert` does when available.
 
-Pinned reads (:func:`parquet_schema`): ``spark.read.parquet(store)``
-infers the store's schema with a Spark job, one per table read and per
-MERGE target read (9 of the 27 jobs of a one-job upsert night). With
-``spark.sql.parquet.mergeSchema`` off, Spark's inference reads ONE
-footer — the first file Spark's reader sees, in path order — so the
+Pinned reads (:func:`read_parquet`): every engine parquet read — catalog
+tables, registry tables, MERGE targets, compaction, streaming state and
+stream sources — is ``spark.read.schema(parquet_schema(...)).parquet(...)``.
+``spark.read.parquet(store)`` would infer the schema with a Spark job per
+read. With ``spark.sql.parquet.mergeSchema`` off, Spark's inference reads
+ONE footer — the first file Spark's reader sees, in path order — so the
 driver reads that footer itself and converts it with Spark's own
-converter under the session's SQLConf; the read then takes the schema as
-given and launches no job.
+converter under the session's SQLConf (``nanosAsLong`` included); the
+read then takes the schema as given and launches no job. This module is
+the only place the engine decides a parquet store's schema.
 
 Every JVM class (and static member) used here is resolved once per py4j
 gateway (:func:`_java`): ``jvm.org.apache.…`` attribute access costs one
@@ -67,7 +69,7 @@ from collections.abc import Callable, Iterator
 
 from py4j.java_gateway import JavaClass
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 _PARQUET = "org.apache.spark.sql.execution.datasources.parquet."
@@ -208,22 +210,26 @@ def parquet_file_sizes(spark: SparkSession, path: str) -> list[int]:
     return [int(st.getLen()) for _, st in _visible_parquet(spark, path)]
 
 
-def parquet_schema(spark: SparkSession, path: str) -> StructType:
+def parquet_schema(spark: SparkSession, path: str, files: list | None = None) -> StructType:
     """The schema ``spark.read.parquet(path)`` infers, read on the driver
-    from one footer; pass it to ``spark.read.schema(...)`` and the read
-    launches no Spark job (module docstring: pinned reads).
+    from one footer (module docstring: pinned reads).
 
     The footer is that of the first file Spark's reader sees under
     ``path`` in path order — Spark's own rule with ``mergeSchema`` off,
-    which assumes every file of a store shares its schema. It is converted
-    by Spark's ``ParquetFileFormat.readSchemaFromFooter`` (the Spark
-    schema a Spark writer stored, else the parquet schema) with a
+    which assumes every file of a store shares its schema. ``files`` is
+    the store's visible listing when the caller already holds one
+    (:func:`replace_store` passes it to its writer); otherwise the store
+    is listed here. The footer is converted by Spark's
+    ``ParquetFileFormat.readSchemaFromFooter`` (the Spark schema a Spark
+    writer stored, else the parquet schema) with a
     ``ParquetToSparkSchemaConverter`` built from the session's SQLConf,
     and made nullable as every file-source read is. Partition columns are
     not in it: the read appends them from the directory names, as it does
     for an inferred schema. Raises FileNotFoundError when ``path`` holds
     no such file."""
-    first = min(_visible_parquet(spark, path), key=lambda f: f[0], default=None)
+    if files is None:
+        files = _visible_parquet(spark, path)
+    first = min(files, key=lambda f: f[0], default=None)
     if first is None:
         raise FileNotFoundError(f"no parquet file Spark's reader sees under {path}")
     st = first[1]
@@ -240,6 +246,14 @@ def parquet_schema(spark: SparkSession, path: str) -> StructType:
         footer, converter
     )
     return StructType.fromJson(json.loads(schema.asNullable().json()))
+
+
+def read_parquet(spark: SparkSession, path: str, files: list | None = None) -> DataFrame:
+    """The parquet store at ``path`` as a DataFrame whose schema is pinned
+    by :func:`parquet_schema` (``files`` as there), so the read launches
+    no Spark job. Raises FileNotFoundError when ``path`` holds no parquet
+    file Spark's reader sees."""
+    return spark.read.schema(parquet_schema(spark, path, files)).parquet(path)
 
 
 def rename(spark: SparkSession, src: str, dst: str) -> None:
@@ -313,19 +327,21 @@ def swap_with_backup(spark: SparkSession, tmp: str, target: str) -> None:
     delete(spark, backup)
 
 
-def replace_store(spark: SparkSession, path: str, write: Callable[[bool, str], bool]) -> None:
+def replace_store(spark: SparkSession, path: str, write: Callable[[list, str], bool]) -> None:
     """Replace the parquet store at ``path`` by the module's protocol:
-    recover a crashed swap, probe for committed data, let ``write``
+    recover a crashed swap, list the committed data, let ``write``
     produce the new contents in a sibling temp dir, swap them in.
 
-    ``write(committed, tmp)`` gets whether the store holds data Spark
-    can read (so it knows whether to read the old contents, which it
-    does itself — nothing here reads data) and the temp path to write;
-    it returns True to install ``tmp`` or False to leave the store as it
-    is. Nothing is cleaned up when ``write`` or the swap raises: the next
-    call's recovery does that."""
+    ``write(files, tmp)`` gets the store's one listing — the (path,
+    FileStatus) pairs of every parquet file Spark's reader sees, in path
+    order; empty for a fresh store — and the temp path to write. It reads
+    the old contents itself when it needs them (nothing here reads data),
+    passing ``files`` on to :func:`read_parquet` so the store is listed
+    once per replace. It returns True to install ``tmp`` or False to
+    leave the store as it is. Nothing is cleaned up when ``write`` or the
+    swap raises: the next call's recovery does that."""
     path = path.rstrip("/")
     recover_interrupted_swap(spark, path)
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    if write(has_committed_parquet(spark, path), tmp):
+    if write(sorted(_visible_parquet(spark, path), key=lambda f: f[0]), tmp):
         swap_with_backup(spark, tmp, path)

@@ -86,15 +86,16 @@ def merge_upsert(
     An EMPTY batch into a fact holding committed data is a no-op by
     definition (the anti-join keeps every row, the union adds none), so
     it returns before reading the fact. ``rows``, the batch's row count
-    when the caller already took one (`plans.jobs._load` counts the main
+    when the caller already took one (`plans.jobs._load` counts every
     target), answers that test; without it the test is one limit-1 job
     on the caller's already-persisted increment (r13,
     PIPELINE_BENCH.json). A first-night empty extract still CREATES the
     fact, or the empty-fact ⇒ full-extract rule would re-extract every
     night.
 
-    The parquet branch reads the fact with its schema pinned from one
-    footer (`fsutil.parquet_schema`), so reading it launches no Spark job.
+    The parquet branch reads the fact through `fsutil.read_parquet` over
+    `replace_store`'s listing: the fact is listed once per MERGE and its
+    read launches no Spark job.
     """
     key_list = list(keys)
     # Kept BEFORE the dedupe rewrite: the quiet-night emptiness probe
@@ -166,8 +167,8 @@ def merge_upsert(
         )
         return
 
-    def write(committed: bool, tmp: str) -> bool:
-        if not committed:
+    def write(files: list, tmp: str) -> bool:
+        if not files:
             if _delta_available(spark):
                 # Fresh fact: create it in Delta format, or every later
                 # merge would miss the `_delta_log` check and run the
@@ -181,7 +182,7 @@ def merge_upsert(
             return True
         if empty_batch():
             return False
-        target = spark.read.schema(fsutil.parquet_schema(spark, target_path)).parquet(target_path)
+        target = fsutil.read_parquet(spark, target_path, files)
         # Null-safe key equality (<=>): merge keys can legitimately be
         # NULL (e.g. a kanban with no steps), and a plain equi-anti-join
         # would never match those rows — re-runs would duplicate them.

@@ -39,10 +39,10 @@ from collections.abc import Callable, Sequence
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.group import GroupedData
 from pyspark.sql.streaming.state import GroupStateTimeout
 
+from com_danliris_service_etl_spark.functions.dates import epoch_micros
 from com_danliris_service_etl_spark.operators.dedup import (
     incremental_minhash_lsh_pairs,
     minhash_lsh_pairs,
@@ -53,12 +53,6 @@ from com_danliris_service_etl_spark.operators.sketches import countmin_sketch, t
 from com_danliris_service_etl_spark.operators.text import tv_distance_from_counts
 from com_danliris_service_etl_spark.operators.windows import running_distinct
 from com_danliris_service_etl_spark.sources import fsutil
-from com_danliris_service_etl_spark.sources.events_meta import (
-    configure_session_for_events,
-    events_spark_ts_type,
-    events_ts_kind,
-    events_ts_us_expr,
-)
 from com_danliris_service_etl_spark.sources.sinks import merge_upsert
 
 
@@ -121,35 +115,17 @@ def _latest_emission(sink: DataFrame, keys: Sequence[str], monotone: str) -> Dat
     )
 
 
-def events_schema(sf_dir: str) -> T.StructType:
-    """Explicit readStream schema for the events fixture, with the `ts`
-    field type resolved from the parquet FOOTER (sources/events_meta.py) —
-    the fixture's physical timestamp type has flipped between rounds, and
-    a hardcoded type would fail at runtime with a parquet schema mismatch
-    on a regenerated fixture. Batch (`plans/registry.py::_events`) and
-    streaming share the same dispatch helper."""
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", events_spark_ts_type(events_ts_kind(sf_dir))),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
-
-def _stream_table(
-    spark: SparkSession, schema: T.StructType, sf_dir: str, table: str
-) -> DataFrame:
-    """File-source readStream for one fixture table, robust to BOTH
-    physical forms the generator has produced: `<table>.parquet` as a
-    directory of part files (streamed directly — the source's basePath
-    must be a directory) and as a single file (streamed via the parent
-    dir + a pathGlobFilter, which matches leaf FILE names; using the
-    filter against the directory form would silently stream zero rows,
-    and streaming a file path directly fails the basePath check).
+def _stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """File-source readStream for one fixture table. Its schema is the
+    table's footer schema (`fsutil.parquet_schema`, the batch reads'
+    rule), so a regenerated fixture's types are followed, never assumed.
+    It is robust to BOTH physical forms the generator has produced:
+    `<table>.parquet` as a directory of part files (streamed directly —
+    the source's basePath must be a directory) and as a single file
+    (streamed via the parent dir + a pathGlobFilter, which matches leaf
+    FILE names; using the filter against the directory form would
+    silently stream zero rows, and streaming a file path directly fails
+    the basePath check).
 
     The directory probe goes through the Hadoop FileSystem resolved from
     the path's own scheme (`sources/fsutil.py`) — a driver-local
@@ -157,18 +133,18 @@ def _stream_table(
     which would misroute the directory form to the glob-filter fallback
     and silently stream zero rows."""
     path = f"{sf_dir.rstrip('/')}/{table}.parquet"
-    reader = spark.readStream.schema(schema)
+    reader = spark.readStream.schema(fsutil.parquet_schema(spark, path))
     if fsutil.is_dir(spark, path):
         return reader.parquet(path)
     return reader.option("pathGlobFilter", f"{table}.parquet").parquet(sf_dir)
 
 
 def streaming_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events fixture with event-time normalized to a
-    micros TimestampType (same footer-driven dispatch as the batch path)."""
-    kind = configure_session_for_events(spark, sf_dir)
-    raw = _stream_table(spark, events_schema(sf_dir), sf_dir, "events")
-    return raw.withColumn("ts_us", events_ts_us_expr(kind)).withColumn(
+    """readStream over the events fixture with event-time normalized to
+    epoch micros and a micros TimestampType (`functions.dates.epoch_micros`
+    on the pinned `ts` type, as the batch `_events` does)."""
+    raw = _stream_table(spark, sf_dir, "events")
+    return raw.withColumn("ts_us", epoch_micros(raw)).withColumn(
         "ts_utc", F.timestamp_micros(F.col("ts_us"))
     )
 
@@ -336,17 +312,18 @@ def fold_incremental_lsh(
         if fsutil.exists(sess, f"{sig_dst}/_SUCCESS"):
             return  # batch already fully folded — redelivery is a no-op
 
-    if fsutil.has_committed_parquet(sess, sig_store_path):
-        store = sess.read.parquet(sig_store_path)
-        pairs = incremental_minhash_lsh_pairs(store, batch_df)
-    else:
+    try:
+        store = fsutil.read_parquet(sess, sig_store_path)
+    except FileNotFoundError:
         # first batch: no prior corpus — all pairs are batch-internal.
-        # The check is for COMMITTED files, not the bare directory: a
-        # crash mid-way through the first batch's signature write leaves
-        # the root dir with only _temporary content, and a bare exists()
+        # "No store" means no COMMITTED file, not no directory: a crash
+        # mid-way through the first batch's signature write leaves the
+        # root dir with only _temporary content, and a bare exists()
         # would send the retry down the incremental path into an
         # unreadable empty store — wedging the stream.
         pairs = minhash_lsh_pairs(batch_df)
+    else:
+        pairs = incremental_minhash_lsh_pairs(store, batch_df)
     pairs.write.mode(mode).parquet(pairs_dst)
     minhash_signatures(batch_df).write.mode(mode).parquet(sig_dst)
 
@@ -364,7 +341,7 @@ def run_streaming_incremental_lsh(
     equals the full-corpus `minhash_lsh_pairs` (each pair appears in the
     batch where its LATER document arrives — pinned by
     `test_streaming_incremental_lsh_folds_to_full`)."""
-    docs = _stream_table(spark, documents_schema(), sf_dir, "documents")
+    docs = _stream_table(spark, sf_dir, "documents")
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         fold_incremental_lsh(
@@ -391,11 +368,12 @@ def fold_rollup(
 
     Idempotency & crash safety: the state is replaced by
     `fsutil.replace_store` (its docstring states the protocol:
-    interrupted-swap recovery first, committed-parquet first-batch probe,
-    sibling temp dir, swap with backup; atomic only on an atomic-rename
-    store — not S3A). The count/sum combine is NOT idempotent, so the
-    state directory carries ONE ``_applied_<max_id>`` marker, the highest
-    batch id folded into it, written into the temp dir BEFORE the swap:
+    interrupted-swap recovery first, one listing of the state (empty on
+    the first batch), sibling temp dir, swap with backup; atomic only on
+    an atomic-rename store — not S3A). The count/sum combine is NOT
+    idempotent, so the state directory carries ONE ``_applied_<max_id>``
+    marker, the highest batch id folded into it, written into the temp
+    dir BEFORE the swap:
     "state updated" and "batch recorded" are installed together. A batch
     whose id is at or below the live mark is a no-op. That high-water
     mark equals the set of applied ids because foreachBatch ids run
@@ -407,7 +385,7 @@ def fold_rollup(
     just before a torn swap is seen in the restored state."""
     sess = batch_df.sparkSession
 
-    def write(committed: bool, tmp: str) -> bool:
+    def write(files: list, tmp: str) -> bool:
         mark = max(
             (
                 int(name[len(_APPLIED):])
@@ -421,8 +399,8 @@ def fold_rollup(
                 return False  # redelivered batch already folded into the live state
             mark = batch_id
         delta = bucket_aggregate(batch_df, "ts_us", bucket_us, ["event_type"], "value")
-        if committed:
-            state = sess.read.parquet(state_path)
+        if files:
+            state = fsutil.read_parquet(sess, state_path, files)
             delta = merge_rollup(state, delta, ["bucket_us", "event_type"])
         delta.write.mode("overwrite").parquet(tmp)
         # underscore-prefixed files are invisible to parquet readers
@@ -461,20 +439,6 @@ def run_streaming_rollup(
 # ---------------------------------------------------------------------------
 
 
-def documents_schema() -> T.StructType:
-    """Explicit readStream schema for the documents fixture (its physical
-    layout has been stable across generations — unlike events' ts)."""
-    return T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    )
-
-
 def run_streaming_dedup_stats(
     spark: SparkSession, sf_dir: str, query_name: str = "dedup_stats_stream"
 ) -> DataFrame:
@@ -490,7 +454,7 @@ def run_streaming_dedup_stats(
     (Chained streaming aggregations are unsupported, which is why the
     per-source finalize is a batch query over the in-memory sink — on a
     cluster the same finalize reads the state-backed compacted sink.)"""
-    raw = _stream_table(spark, documents_schema(), sf_dir, "documents")
+    raw = _stream_table(spark, sf_dir, "documents")
     g = raw.groupBy("source", F.md5(F.col("text")).alias("h")).agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -520,7 +484,7 @@ def run_streaming_countmin(
     the IDENTICAL grid as the batch build (batch twin
     `plans/queries_streaming.py::st8_countmin_sketch`); estimates for any
     candidate set come from `countmin_estimate` over the drained grid."""
-    raw = _stream_table(spark, documents_schema(), sf_dir, "documents")
+    raw = _stream_table(spark, sf_dir, "documents")
     grid = countmin_sketch(tokens_of(raw), width=width, depth=depth)
     return _drain(grid, "complete", query_name)
 
@@ -653,11 +617,11 @@ def fold_first_seen(
     per-partition-parallel (groupBy merge), never a driver funnel."""
     sess = batch_df.sparkSession
 
-    def write(committed: bool, tmp: str) -> bool:
+    def write(files: list, tmp: str) -> bool:
         debuts = batch_df.groupBy("event_type", "user_id").agg(F.min("d").alias("d"))
-        if committed:
+        if files:
             debuts = (
-                sess.read.parquet(state_path)
+                fsutil.read_parquet(sess, state_path, files)
                 .unionByName(debuts)
                 .groupBy("event_type", "user_id")
                 .agg(F.min("d").alias("d"))
@@ -693,7 +657,7 @@ def run_streaming_running_distinct(
         fold_first_seen(batch_df, state_path, batch_id=batch_id)
 
     _drain_batches(ev, _fold, checkpoint_dir)
-    state = spark.read.parquet(state_path)
+    state = fsutil.read_parquet(spark, state_path)
     return running_distinct(state, ["event_type"], "user_id", "d")
 
 
@@ -737,7 +701,7 @@ def run_streaming_static_enrich(
     state is bounded by |segments| x |event types|, so the complete-mode
     drain holds a dimension-sized result, never the stream."""
     ev = streaming_events(spark, sf_dir).select("user_id", "event_type", "value")
-    dim = spark.read.parquet(f"{sf_dir.rstrip('/')}/customer.parquet").select(
+    dim = fsutil.read_parquet(spark, f"{sf_dir.rstrip('/')}/customer.parquet").select(
         "c_custkey", "c_mktsegment"
     )
     agg = (
@@ -914,7 +878,7 @@ def run_streaming_source_divergence(
     dedup-monitor split: chained streaming aggregations are unsupported,
     and over the vocab-sized state the batch finalize is the correct
     shape, not a workaround)."""
-    raw = _stream_table(spark, documents_schema(), sf_dir, "documents")
+    raw = _stream_table(spark, sf_dir, "documents")
     st = (
         raw.select("source", F.explode(F.split("text", " ")).alias("term"))
         .groupBy("source", "term")
@@ -993,7 +957,7 @@ def run_streaming_quota_sample(
     tests. `seen` strictly increases per invocation and a stratum absent
     from a batch emits nothing, so the max-`seen` emission is the final
     one."""
-    raw = _stream_table(spark, documents_schema(), sf_dir, "documents")
+    raw = _stream_table(spark, sf_dir, "documents")
     sampled = _stateful(
         raw.select("lang", "source", "doc_id").groupBy("lang", "source"),
         _quota_sample_fn_factory(cap),

@@ -957,14 +957,38 @@ def test_jobspec_rejects_duplicate_targets():
         dataclasses.replace(spec)
 
 
+
+def test_nightly_layers_share_no_target():
+    """Within one `NIGHTLY_LAYERS` layer no two jobs share a target (main
+    or extra, compared without trailing slashes): the precondition for
+    running a layer's jobs side by side (plans/schedule.py docstring)."""
+    from com_danliris_service_etl_spark.jobs import ALL_SPECS
+    from com_danliris_service_etl_spark.plans.schedule import NIGHTLY_LAYERS
+
+    layered = [name for layer in NIGHTLY_LAYERS for name in layer]
+    assert sorted(layered) == sorted(ALL_SPECS)
+    for layer in NIGHTLY_LAYERS:
+        owner = {}
+        for name in layer:
+            spec = ALL_SPECS[name]
+            for target in (spec.target, *spec.extra_targets):
+                t = target.rstrip("/")
+                assert t not in owner, (t, owner.get(t), name)
+                owner[t] = name
+    # not vacuous: jobs sharing a target exist, in separate layers
+    shared = {ALL_SPECS[n].target.rstrip("/") for n in layered if "Sales Contract" in n}
+    assert len(shared) == 1
+
+
 # Spark jobs launched by one night of the toy two-target job, measured
 # with the driver-side migration log, footer-pinned parquet reads (an
 # inferred schema costs one job per table read and per MERGE target
-# read), a MERGE anti-join without a distinct, and the main target's
-# count answering the MERGE's empty-batch test. A Spark-written log
-# launched 21 and 10; inferred reads, 18 and 7.
-UPSERT_NIGHT_SPARK_JOBS = 12
-QUIET_NIGHT_SPARK_JOBS = 4
+# read), a MERGE anti-join without a distinct, and every target's
+# one-job count answering the MERGE's empty-batch test. A Spark-written
+# log launched 21 and 10; inferred reads, 18 and 7; a DataFrame count of
+# the main target plus a limit-1 probe of the extra one, 12 and 4.
+UPSERT_NIGHT_SPARK_JOBS = 10
+QUIET_NIGHT_SPARK_JOBS = 2
 
 
 def test_spark_jobs_per_night_pinned(spark, spark_jobs, tmp_path, monkeypatch):

@@ -1,11 +1,9 @@
-"""Footer-driven events-timestamp dispatch (sources/events_meta.py).
-
-The driver's events.parquet has shipped with three physical types for
-`ts` across rounds (legacy NANOS, MICROS-NTZ, MICROS-UTC); a hardcoded
-schema fails at read time on a regenerated fixture. These tests build a
-tiny fixture of EACH generation with pyarrow and pin that batch
-(`_events`) and streaming (`events_schema`) read paths both resolve the
-kind from the footer and produce identical epoch-micros values.
+"""The events `ts` column across its three parquet generations (legacy
+NANOS, MICROS-NTZ, MICROS-UTC): the pinned schema (`fsutil.parquet_schema`)
+decides its Spark type, and the batch (`_events`) and streaming
+(`streaming_events`) reads both turn it into the same epoch micros
+(`functions.dates.epoch_micros`). Each test builds a tiny fixture of EACH
+generation with pyarrow.
 """
 
 from __future__ import annotations
@@ -13,11 +11,9 @@ from __future__ import annotations
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import types as T
 
-from com_danliris_service_etl_spark.sources.events_meta import (
-    events_spark_ts_type,
-    events_ts_kind,
-)
+from com_danliris_service_etl_spark.sources import fsutil
 
 # one known instant: 2024-03-01 12:30:45.123456 UTC
 _EPOCH_US = 1_709_296_245_123_456
@@ -46,14 +42,23 @@ _GENERATIONS = {
 }
 
 
-@pytest.mark.parametrize("kind", sorted(_GENERATIONS))
-def test_kind_detected_from_footer(tmp_path, kind):
-    sf_dir = _write_events(tmp_path, _GENERATIONS[kind])
-    assert events_ts_kind(sf_dir) == kind
-    # the streaming schema's ts field follows the kind
-    from com_danliris_service_etl_spark.streaming.jobs import events_schema
+# the Spark type each generation's `ts` reads as (nanos: raw nanos longs
+# under the session's nanosAsLong conf)
+_TS_TYPES = {"nanos": T.LongType(), "ntz": T.TimestampNTZType(), "micros": T.TimestampType()}
 
-    assert events_schema(sf_dir)["ts"].dataType == events_spark_ts_type(kind)
+
+@pytest.mark.parametrize("kind", sorted(_GENERATIONS))
+def test_kind_detected_from_footer(spark, tmp_path, kind):
+    sf_dir = _write_events(tmp_path, _GENERATIONS[kind])
+    path = f"{sf_dir}/events.parquet"
+    pinned = fsutil.parquet_schema(spark, path)
+    assert pinned["ts"].dataType == _TS_TYPES[kind]
+    # the pinned schema is Spark's own inference, field for field
+    assert pinned == spark.read.parquet(path).schema
+    # the stream source reads with the same schema
+    from com_danliris_service_etl_spark.streaming.jobs import _stream_table
+
+    assert _stream_table(spark, sf_dir, "events").schema == pinned
 
 
 @pytest.mark.parametrize("kind", sorted(_GENERATIONS))

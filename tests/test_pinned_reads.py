@@ -1,14 +1,19 @@
-"""Pinned parquet reads (`fsutil.parquet_schema`): the schema read from
-one footer on the driver equals Spark's own inference, so `Catalog.read`
-and the MERGE's target read launch no Spark job; and the engine session
-builds plans without PySpark's per-call DataFrame debugging capture."""
+"""Pinned parquet reads (`fsutil.read_parquet`): the schema read from
+one footer on the driver equals Spark's own inference, so no engine
+parquet read (catalog and registry tables, MERGE targets, streaming
+state and stream sources) launches a Spark job to learn its schema, and
+no engine module outside `fsutil` decides a parquet schema; and the
+engine session builds plans without PySpark's per-call DataFrame
+debugging capture."""
 
 from __future__ import annotations
 
+import ast
 import datetime as dt
 import decimal
 import importlib.util
 import os
+import pathlib
 from functools import reduce
 
 import pyarrow as pa
@@ -17,9 +22,12 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+import com_danliris_service_etl_spark
 from com_danliris_service_etl_spark.jobs import ALL_SPECS
 from com_danliris_service_etl_spark.sources import fsutil
 from com_danliris_service_etl_spark.sources.catalog import Catalog
+from tests.conftest import SF_DIR
+from tests.test_events_meta import _GENERATIONS, _write_events
 
 PERFBENCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
 WM = dt.datetime(1970, 1, 1)
@@ -120,13 +128,18 @@ def _fingerprints(frames: dict) -> dict:
 
 
 def test_parquet_schema_equals_spark_inference(spark, fixture_dir, tmp_path):
-    """For every fixture table, every datagen sf0.1 table and every shape
-    of Spark-written store, the pinned read has the inferred read's schema
-    and reads the same rows."""
+    """For every fixture table, every datagen sf0.1 table, every shape
+    of Spark-written store, each events `ts` generation and the
+    documents fixture, the pinned read has the inferred read's schema and
+    reads the same rows."""
     stores = {f"fixture/{k}": v for k, v in fixture_dir.items()}
     stores.update({f"datagen/{k}": v for k, v in _datagen(0.1, 42, str(tmp_path / "sf")).items()})
     stores.update(_spark_written(spark, tmp_path))
-    assert len(stores) == len(fixture_dir) + 10 + 6
+    for kind, ts in _GENERATIONS.items():
+        (tmp_path / kind).mkdir()
+        stores[f"events/{kind}"] = _write_events(tmp_path / kind, ts) + "/events.parquet"
+    stores["documents"] = f"{SF_DIR}/documents.parquet"
+    assert len(stores) == len(fixture_dir) + 10 + 6 + 4
 
     pinned, inferred = {}, {}
     for name, path in stores.items():
@@ -181,3 +194,118 @@ def test_engine_session_builds_without_dataframe_debugging(spark):
 
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     assert not is_debugging_enabled()
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+
+
+def test_reads_learn_their_schema_without_a_spark_job(spark, spark_jobs, tmp_path, monkeypatch):
+    """A registry table, the events view over it, a stream source and a
+    fold's state read take their schema from a footer: 0 Spark jobs each
+    (an inferred schema costs one)."""
+    from com_danliris_service_etl_spark.plans.registry import _events, _t
+    from com_danliris_service_etl_spark.streaming import jobs as stream_jobs
+
+    sf_dir = _write_events(tmp_path, _GENERATIONS["ntz"])
+    for read in (
+        lambda: _t(spark, sf_dir, "events"),
+        lambda: _events(spark, sf_dir),
+        lambda: stream_jobs.streaming_events(spark, sf_dir),
+    ):
+        count = spark_jobs()
+        read()
+        assert count() == 0
+
+    state = str(tmp_path / "state")
+    batch = spark.createDataFrame([("click", 1.5, 10)], "event_type string, value double, ts_us long")
+    stream_jobs.fold_rollup(batch, state, batch_id=0)
+    state_reads = []
+    read_parquet = fsutil.read_parquet
+
+    def counted(*args, **kwargs):
+        count = spark_jobs()
+        df = read_parquet(*args, **kwargs)
+        state_reads.append(count())
+        return df
+
+    monkeypatch.setattr(fsutil, "read_parquet", counted)
+    stream_jobs.fold_rollup(batch, state, batch_id=1)
+    assert state_reads == [0]
+
+
+ENGINE = pathlib.Path(com_danliris_service_etl_spark.__file__).parent
+# A local warehouse cache with its own adopt protocol, outside the rule.
+SCHEMA_RULE_EXEMPT = {"sources/fsutil.py", "operators/bucketing.py"}
+
+
+def _chain(node: ast.AST) -> list[ast.Call]:
+    """The method calls of a chain, outermost first (``a.b(x).c(y)`` →
+    ``[c(y), b(x)]``)."""
+    calls = []
+    while isinstance(node, (ast.Call, ast.Attribute)):
+        if isinstance(node, ast.Call):
+            if isinstance(node.func, ast.Attribute):
+                calls.append(node)
+            node = node.func
+        else:
+            node = node.value
+    return calls
+
+
+def _attrs(node: ast.AST) -> set[str]:
+    return {n.attr for n in ast.walk(node) if isinstance(n, ast.Attribute)}
+
+
+def _registered_bodies(tree: ast.Module) -> set[ast.AST]:
+    """Nodes inside registry query bodies (``@register``-decorated)."""
+    return {
+        n
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        and any(isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+                for d in fn.decorator_list)
+        for n in ast.walk(fn)
+    }
+
+
+def _is_parquet_read(call: ast.Call) -> bool:
+    """``….parquet(…)`` or ``….format("parquet")….load(…)``."""
+    if call.func.attr == "parquet":
+        return True
+    return call.func.attr == "load" and any(
+        c.func.attr == "format" and any(isinstance(a, ast.Constant) and a.value == "parquet"
+                                        for a in c.args)
+        for c in _chain(call)
+    )
+
+
+def test_only_fsutil_decides_a_parquet_schema():
+    """Layout guard: outside `fsutil`, no engine module reads parquet
+    through a reader without a schema (``.read.parquet(``: Spark's
+    inference, one job per read) or hands a reader a schema that is not
+    `fsutil.parquet_schema`'s. Bucketing and registry query bodies are
+    exempt."""
+    offences, pinned = [], 0
+    for path in sorted(ENGINE.rglob("*.py")):
+        rel = path.relative_to(ENGINE).as_posix()
+        if rel in SCHEMA_RULE_EXEMPT:
+            continue
+        tree = ast.parse(path.read_text())
+        exempt = _registered_bodies(tree)
+        for node in ast.walk(tree):
+            if node in exempt or not isinstance(node, ast.Call):
+                continue
+            if not isinstance(node.func, ast.Attribute):
+                continue
+            if not _attrs(node.func.value) & {"read", "readStream"}:
+                continue  # not a reader
+            chain = _chain(node)
+            if node.func.attr == "schema":
+                arg = node.args[0] if node.args else None
+                if isinstance(arg, ast.Call) and "parquet_schema" in _attrs(arg.func):
+                    pinned += 1
+                else:
+                    offences.append(f"{rel}:{node.lineno}: reader schema of its own")
+            elif _is_parquet_read(node) and not any(c.func.attr == "schema" for c in chain):
+                offences.append(f"{rel}:{node.lineno}: inferred parquet read")
+    assert offences == []
+    # the stream source's pinned reader is seen, so the rule is not vacuous
+    assert pinned >= 1

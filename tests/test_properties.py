@@ -7,10 +7,12 @@ bucketing and conversion scalars over arbitrary inputs.
 from __future__ import annotations
 
 import datetime as dt
+from functools import reduce
 
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from com_danliris_service_etl_spark.functions import (
@@ -393,13 +395,18 @@ def test_asof_join_matches_bruteforce_model(spark, left, right, direction, exact
             ("segmented", {"segment_width": 1}),
             ("segmented", {"segment_width": 3}),
         ]
-    for strategy, extra in strategies:
-        out = asof_join(
+    # every strategy's output, tagged, in one Spark action
+    outs = [
+        asof_join(
             ldf, rdf, "lt", "rt", by=[("k", "k")],
             direction=direction, tiebreak="val",
             allow_exact_match=exact, strategy=strategy, **extra,
-        )
-        got = {r["id"]: r["val"] for r in out.collect()}
+        ).select(F.lit(tag).alias("tag"), "id", "val")
+        for tag, (strategy, extra) in enumerate(strategies)
+    ]
+    rows = reduce(DataFrame.unionByName, outs).collect()
+    for tag, (strategy, extra) in enumerate(strategies):
+        got = {r["id"]: r["val"] for r in rows if r["tag"] == tag}
         assert got == want, (strategy, extra, direction, exact)
 
 
@@ -723,8 +730,17 @@ def test_interval_overlap_stats_model(spark, ivs):
     )
     # Both paths: with identity columns (same-identity rows never pair)
     # and tiebreak=() (every row is its own identity — the path the r13
-    # ADVICE caught miscounting empty intervals).
-    for use_id in (True, False):
+    # ADVICE caught miscounting empty intervals), tagged, in one Spark
+    # action.
+    paths = (True, False)
+    outs = [
+        interval_overlap_stats(
+            df, "lo", "hi", ["g"], tiebreak=["ida", "idb"] if use_id else (),
+        ).select(F.lit(use_id).alias("use_id"), "g", "n_pairs", "overlap_days")
+        for use_id in paths
+    ]
+    out = reduce(DataFrame.unionByName, outs).collect()
+    for use_id in paths:
         want: dict = {}
         for i, x in enumerate(rows):
             for y in rows[i + 1:]:
@@ -738,13 +754,7 @@ def test_interval_overlap_stats_model(spark, ivs):
                         n + 1, d + min(x[2], y[2]) - max(x[1], y[1])
                     )
         want = {k: v for k, v in want.items() if v[0] > 0}
-        got = {
-            r.g: (r.n_pairs, r.overlap_days)
-            for r in interval_overlap_stats(
-                df, "lo", "hi", ["g"],
-                tiebreak=["ida", "idb"] if use_id else (),
-            ).collect()
-        }
+        got = {r.g: (r.n_pairs, r.overlap_days) for r in out if r.use_id == use_id}
         assert got == want, (use_id, got, want, rows)
 
 

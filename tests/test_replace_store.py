@@ -169,3 +169,29 @@ def test_is_dir_and_delete_on_absent_and_file_paths(spark, tmp_path):
     fsutil.delete(spark, str(tmp_path / "absent"))
     fsutil.delete(spark, str(f))
     assert not f.exists()
+
+
+@pytest.mark.parametrize("writer", list(WRITERS))
+def test_one_listing_per_replace(spark, tmp_path, monkeypatch, writer):
+    """`replace_store` lists the store once and hands that listing to the
+    writer, whose pinned read (and the compaction's size stats) use it:
+    one `_visible_parquet` walk per replace, fresh store or not. The
+    compaction's report of its new layout lists once more, after the
+    swap."""
+    seed, call = WRITERS[writer]
+    path = str(tmp_path / "store")
+    if seed:
+        seed(spark, path)
+    walked = []
+    walk = fsutil._visible_parquet
+
+    def counted(sess, p):
+        walked.append(p)
+        return walk(sess, p)
+
+    monkeypatch.setattr(fsutil, "_visible_parquet", counted)
+    after_report = 1 if writer == "compact_small_files" else 0
+    for i in range(2):
+        walked.clear()
+        call(spark, path, i)
+        assert walked == [path] * (1 + after_report), (writer, i)
