@@ -26,7 +26,6 @@ from com_danliris_service_etl_spark.functions.conditional import (  # noqa: F401
     bucket_days_week,
     category_bahan_baku,
     category_garment,
-    money_amount,
     nan_guard,
     null_guard,
     on_time_status,

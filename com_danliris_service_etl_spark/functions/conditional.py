@@ -16,14 +16,6 @@ def _c(col: ColumnOrName) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def money_amount(qty: ColumnOrName, price: ColumnOrName, rate: ColumnOrName) -> Column:
-    """M1 — qty × pricePerUnit × currencyRate.
-
-    Reference: `Pembelian/run.js:256`, `TotalHutang/run.js:170`.
-    """
-    return _c(qty) * _c(price) * _c(rate)
-
-
 def uom_to_meter(qty: ColumnOrName, uom: ColumnOrName) -> Column:
     """M2 — yard/yds → metre (×0.9144); other units pass through.
 

@@ -171,25 +171,9 @@ def asof_join(
         raise ValueError(
             f"strategy must be sort|broadcast|segmented, got {strategy!r}"
         )
-    pairs = list(by or [])
-
-    # Rename right columns that collide with left ones.
-    rename: dict[str, str] = {}
-    for c in right.columns:
-        if c in left.columns:
-            rename[c] = f"__r_{c}"
-    r = right
-    for old, new in rename.items():
-        r = r.withColumnRenamed(old, new)
-    r_on = rename.get(right_on, right_on)
-    r_tiebreak = rename.get(tiebreak, tiebreak) if tiebreak else None
-    r_keys = [rename.get(rk, rk) for _, rk in pairs]
-    l_keys = [lk for lk, _ in pairs]
-    r_vals = [c for c in r.columns if c not in r_keys]
-
-    # Rows whose event time is NULL can never match (SQL comparison with
-    # NULL is never true); drop them from the right, mask them on the left.
-    r = r.filter(F.col(r_on).isNotNull())
+    r, r_on, r_tiebreak, l_keys, r_keys, r_vals = _asof_right(
+        left, right, right_on, by, tiebreak
+    )
 
     if strategy == "broadcast":
         return _asof_broadcast(
@@ -218,7 +202,38 @@ def asof_join(
     )
 
 
-def _asof_union_sort(
+def _asof_right(
+    left: DataFrame,
+    right: DataFrame,
+    right_on: str,
+    by: Sequence[tuple[str, str]] | None,
+    tiebreak: str | None,
+) -> tuple[DataFrame, str, str | None, list[str], list[str], list[str]]:
+    """The right side as every as-of strategy takes it: columns that
+    collide with left ones renamed ``__r_<name>``, rows with a NULL time
+    dropped (a NULL comparison is never true; left rows with a NULL time
+    are masked instead). Returns ``(r, r_on, r_tiebreak, l_keys, r_keys,
+    r_vals)``, the last being the right payload columns."""
+    pairs = list(by or [])
+    rename = {c: f"__r_{c}" for c in right.columns if c in left.columns}
+    r = right
+    for old, new in rename.items():
+        r = r.withColumnRenamed(old, new)
+    r_on = rename.get(right_on, right_on)
+    r_tiebreak = rename.get(tiebreak, tiebreak) if tiebreak else None
+    r_keys = [rename.get(rk, rk) for _, rk in pairs]
+    r_vals = [c for c in r.columns if c not in r_keys]
+    return (
+        r.filter(F.col(r_on).isNotNull()),
+        r_on,
+        r_tiebreak,
+        [lk for lk, _ in pairs],
+        r_keys,
+        r_vals,
+    )
+
+
+def _asof_tagged_union(
     left: DataFrame,
     r: DataFrame,
     left_on: str,
@@ -227,16 +242,14 @@ def _asof_union_sort(
     r_keys: list[str],
     r_vals: list[str],
     r_tiebreak: str | None,
-    direction: str,
     allow_exact_match: bool,
-) -> DataFrame:
-    """Linear as-of: tag + union + one running-``last`` window.
-
-    Ordering contract per key: ascending time (descending for forward), with
-    right rows sorted BEFORE left rows at equal time when exact matches are
-    allowed (after, when excluded), and equal-time right rows in ascending
-    tiebreak order so the running ``last`` keeps the highest tiebreak.
-    """
+) -> tuple[DataFrame, list[str], int, int, Column]:
+    """The tagged union every window-based as-of (sort, segmented,
+    `asof_nearest`) scans:
+    left and right rows on shared ``__asof_k*`` keys and ``__asof_ts``
+    time, a side tag, the right tiebreak, and each side's payload struct
+    (NULL on the other side's rows). Returns ``(union, keys, l_tag,
+    r_tag, mask)``; ``mask`` is true where a left row may match at all."""
     from pyspark.sql import types as T
 
     l_struct_t = T.StructType([left.schema[c] for c in left.columns])
@@ -264,14 +277,6 @@ def _asof_union_sort(
         F.lit(None).cast(l_struct_t).alias("__asof_l"),
         F.struct(*[F.col(c) for c in r_vals]).alias("__asof_r"),
     )
-    u = lu.unionByName(ru)
-
-    ts_order = F.col("__asof_ts").asc() if direction == "backward" else F.col("__asof_ts").desc()
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(ts_order, F.col("__asof_tag").asc(), F.col("__asof_tb").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
     # Equi-join NULL semantics: a NULL by-key matches NOTHING. The window
     # partitioner groups NULL keys together (SQL GROUP BY semantics), so
     # without this mask a NULL-key left row would pick up NULL-key right
@@ -280,6 +285,37 @@ def _asof_union_sort(
     cond = F.col("__asof_ts").isNotNull()
     for k in keys:
         cond = cond & F.col(k).isNotNull()
+    return lu.unionByName(ru), keys, l_tag, r_tag, cond
+
+
+def _asof_union_sort(
+    left: DataFrame,
+    r: DataFrame,
+    left_on: str,
+    r_on: str,
+    l_keys: list[str],
+    r_keys: list[str],
+    r_vals: list[str],
+    r_tiebreak: str | None,
+    direction: str,
+    allow_exact_match: bool,
+) -> DataFrame:
+    """Linear as-of: tag + union + one running-``last`` window.
+
+    Ordering contract per key: ascending time (descending for forward), with
+    right rows sorted BEFORE left rows at equal time when exact matches are
+    allowed (after, when excluded), and equal-time right rows in ascending
+    tiebreak order so the running ``last`` keeps the highest tiebreak.
+    """
+    u, keys, l_tag, _r_tag, cond = _asof_tagged_union(
+        left, r, left_on, r_on, l_keys, r_keys, r_vals, r_tiebreak, allow_exact_match
+    )
+    ts_order = F.col("__asof_ts").asc() if direction == "backward" else F.col("__asof_ts").desc()
+    w = (
+        Window.partitionBy(*keys)
+        .orderBy(ts_order, F.col("__asof_tag").asc(), F.col("__asof_tb").asc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
     matched = F.when(cond, F.last("__asof_r", ignorenulls=True).over(w))
     return (
         u.withColumn("__asof_m", matched)
@@ -321,32 +357,12 @@ def _asof_segmented(
     axis: every right row of an earlier segment precedes every row of a
     later one, so cross-segment visibility is unconditional and the
     exact-match/tag ordering only ever decides WITHIN a segment."""
-    from pyspark.sql import types as T
-
-    l_struct_t = T.StructType([left.schema[c] for c in left.columns])
-    r_struct_t = T.StructType([r.schema[c] for c in r_vals])
-    tb_t = r.schema[r_tiebreak].dataType if r_tiebreak else T.IntegerType()
-    r_tag, l_tag = (0, 1) if allow_exact_match else (1, 0)
-
-    seg = F.floor(F.col("__asof_ts") / F.lit(segment_width)).cast("long")
-    keys = [f"__asof_k{i}" for i in range(len(l_keys))]
-    lu = left.select(
-        *[F.col(lk).alias(k) for lk, k in zip(l_keys, keys)],
-        F.col(left_on).alias("__asof_ts"),
-        F.lit(l_tag).alias("__asof_tag"),
-        F.lit(None).cast(tb_t).alias("__asof_tb"),
-        F.struct(*[F.col(c) for c in left.columns]).alias("__asof_l"),
-        F.lit(None).cast(r_struct_t).alias("__asof_r"),
+    u, keys, l_tag, r_tag, cond = _asof_tagged_union(
+        left, r, left_on, r_on, l_keys, r_keys, r_vals, r_tiebreak, allow_exact_match
     )
-    ru = r.select(
-        *[F.col(rk).alias(k) for rk, k in zip(r_keys, keys)],
-        F.col(r_on).alias("__asof_ts"),
-        F.lit(r_tag).alias("__asof_tag"),
-        (F.col(r_tiebreak) if r_tiebreak else F.lit(0)).cast(tb_t).alias("__asof_tb"),
-        F.lit(None).cast(l_struct_t).alias("__asof_l"),
-        F.struct(*[F.col(c) for c in r_vals]).alias("__asof_r"),
+    u = u.withColumn(
+        "__asof_seg", F.floor(F.col("__asof_ts") / F.lit(segment_width)).cast("long")
     )
-    u = lu.unionByName(ru).withColumn("__asof_seg", seg)
 
     w_seg = (
         Window.partitionBy(*keys, "__asof_seg")
@@ -357,9 +373,6 @@ def _asof_segmented(
         )
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    cond = F.col("__asof_ts").isNotNull()
-    for k in keys:
-        cond = cond & F.col(k).isNotNull()
     within = u.withColumn(
         "__asof_w", F.last("__asof_r", ignorenulls=True).over(w_seg)
     )
@@ -486,47 +499,15 @@ def asof_nearest(
     two frames — no second sort, no per-left-row candidate blowup on hot
     keys. Struct-max/min (order-insensitive) rather than last()/first()
     keeps full-duplicate rows deterministic."""
-    from pyspark.sql import types as T
-
-    pairs = list(by or [])
-    rename = {c: f"__r_{c}" for c in right.columns if c in left.columns}
-    r = right
-    for old, new in rename.items():
-        r = r.withColumnRenamed(old, new)
-    r_on = rename.get(right_on, right_on)
-    r_tb = rename.get(tiebreak, tiebreak) if tiebreak else None
-    r_keys = [rename.get(rk, rk) for _, rk in pairs]
-    l_keys = [lk for lk, _ in pairs]
-    r_vals = [c for c in r.columns if c not in r_keys]
-    r = r.filter(F.col(r_on).isNotNull())
-
-    l_struct_t = T.StructType([left.schema[c] for c in left.columns])
-    r_struct_t = T.StructType([r.schema[c] for c in r_vals])
-    tb_t = r.schema[r_tb].dataType if r_tb else T.IntegerType()
-
-    keys = [f"__nst_k{i}" for i in range(len(l_keys))]
-    lu = left.select(
-        *[F.col(lk).alias(k) for lk, k in zip(l_keys, keys)],
-        F.col(left_on).alias("__nst_ts"),
-        F.lit(1).alias("__nst_tag"),
-        F.lit(None).cast(tb_t).alias("__nst_tb"),
-        F.struct(*[F.col(c) for c in left.columns]).alias("__nst_l"),
-        F.lit(None).cast(r_struct_t).alias("__nst_r"),
+    r, r_on, r_tb, l_keys, r_keys, r_vals = _asof_right(left, right, right_on, by, tiebreak)
+    u, keys, l_tag, r_tag, valid = _asof_tagged_union(
+        left, r, left_on, r_on, l_keys, r_keys, r_vals, r_tb, allow_exact_match=True
     )
-    ru = r.select(
-        *[F.col(rk).alias(k) for rk, k in zip(r_keys, keys)],
-        F.col(r_on).alias("__nst_ts"),
-        F.lit(0).alias("__nst_tag"),
-        (F.col(r_tb) if r_tb else F.lit(0)).cast(tb_t).alias("__nst_tb"),
-        F.lit(None).cast(l_struct_t).alias("__nst_l"),
-        F.struct(*[F.col(c) for c in r_vals]).alias("__nst_r"),
-    )
-    u = lu.unionByName(ru)
 
-    # Right rows sort BEFORE left rows at equal time (tag 0 < 1), so the
+    # Right rows sort BEFORE left rows at equal time (r_tag < l_tag), so the
     # preceding frame sees exact matches and the following frame starts
     # strictly after them.
-    order = [F.col("__nst_ts").asc(), F.col("__nst_tag").asc(), F.col("__nst_tb").asc()]
+    order = [F.col("__asof_ts").asc(), F.col("__asof_tag").asc(), F.col("__asof_tb").asc()]
     wb = (
         Window.partitionBy(*keys)
         .orderBy(*order)
@@ -537,14 +518,14 @@ def asof_nearest(
         .orderBy(*order)
         .rowsBetween(Window.currentRow, Window.unboundedFollowing)
     )
-    is_r = F.col("__nst_tag") == 0
+    is_r = F.col("__asof_tag") == r_tag
     back = F.max(
         F.when(
             is_r,
             F.struct(
-                F.col("__nst_ts").alias("ts"),
-                F.col("__nst_tb").alias("tb"),
-                F.col("__nst_r").alias("v"),
+                F.col("__asof_ts").alias("ts"),
+                F.col("__asof_tb").alias("tb"),
+                F.col("__asof_r").alias("v"),
             ),
         )
     ).over(wb)
@@ -552,31 +533,25 @@ def asof_nearest(
         F.when(
             is_r,
             F.struct(
-                F.col("__nst_ts").alias("ts"),
-                (-F.col("__nst_tb")).alias("ntb"),
-                F.col("__nst_r").alias("v"),
+                F.col("__asof_ts").alias("ts"),
+                (-F.col("__asof_tb")).alias("ntb"),
+                F.col("__asof_r").alias("v"),
             ),
         )
     ).over(wf)
 
-    # NULL by-keys / NULL left time match nothing (equi-join semantics —
-    # same mask as _asof_union_sort).
-    valid = F.col("__nst_ts").isNotNull()
-    for k in keys:
-        valid = valid & F.col(k).isNotNull()
-
-    lts = F.col("__nst_ts")
-    b, f = F.col("__nst_b"), F.col("__nst_f")
+    lts = F.col("__asof_ts")
+    b, f = F.col("__asof_b"), F.col("__asof_f")
     choose_back = b.isNotNull() & (
         f.isNull() | ((lts - b["ts"]) <= (f["ts"] - lts))
     )
     chosen = F.when(choose_back, b["v"]).otherwise(f["v"])
     return (
-        u.withColumn("__nst_b", back)
-        .withColumn("__nst_f", fwd)
-        .withColumn("__nst_m", F.when(valid, chosen))
-        .filter(F.col("__nst_tag") == 1)
-        .select(F.col("__nst_l.*"), F.col("__nst_m.*"))
+        u.withColumn("__asof_b", back)
+        .withColumn("__asof_f", fwd)
+        .withColumn("__asof_m", F.when(valid, chosen))
+        .filter(F.col("__asof_tag") == l_tag)
+        .select(F.col("__asof_l.*"), F.col("__asof_m.*"))
     )
 
 

@@ -952,7 +952,7 @@ def pq_codebook(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Collapse the PQ codebook source vectors into ONE cid-sorted array
-    row (the broadcast codebook both `pq_encode` passes probe). Real
+    row, the input `pq_codebook_flat` slices per subspace. Real
     deployments train per-subspace centroids with k-means offline; the
     operator contract is encode + ADC, so any deterministic vector
     sample serves as codebook (the IVF convention, `ivf_assign_cells`)."""
@@ -962,21 +962,6 @@ def pq_codebook(
             F.expr(f"transform({vec_col}, x -> cast(x AS DOUBLE))").alias("cvec"),
         ).alias("c")
     ).agg(F.sort_array(F.collect_list("c")).alias("__cb"))
-
-
-def _pq_subdist(vec_col: str, mi_expr: str, sub: int, cvec: str = "c.cvec") -> str:
-    """SQL expr: scaled-BIGINT L2² between subspace ``mi`` slices of the
-    row's vector and the codebook entry vector ``cvec`` in scope (default:
-    a lambda variable `c` over `__cb`). Fixed fold order (dim 1..sub) —
-    mirrored exactly by the oracle's list_reduce."""
-    return (
-        "cast(round(aggregate("
-        f"  zip_with(slice({vec_col}, ({mi_expr}) * {sub} + 1, {sub}),"
-        f"           slice({cvec}, ({mi_expr}) * {sub} + 1, {sub}),"
-        "            (x, y) -> (cast(x AS DOUBLE) - y) * (cast(x AS DOUBLE) - y)),"
-        "  cast(0.0 AS DOUBLE), (acc, v) -> acc + v"
-        f") * {PQ_SCALE}) AS BIGINT)"
-    )
 
 
 def pq_codebook_flat(
@@ -1004,45 +989,14 @@ def pq_codebook_flat(
 
 def _pq_subdist_flat(a: str, b: str) -> str:
     """SQL expr: scaled-BIGINT L2² between two PRE-SLICED sub-vectors.
-    Same fixed fold order (element 1..sub) and rounding as `_pq_subdist`
-    — bit-identical distances, minus all slicing work."""
+    Fixed fold order (element 1..sub), then one round to the scaled
+    integer — mirrored exactly by the oracle's list_reduce."""
     return (
         "cast(round(aggregate("
         f"  zip_with({a}, {b},"
         "            (x, y) -> (cast(x AS DOUBLE) - y) * (cast(x AS DOUBLE) - y)),"
         "  cast(0.0 AS DOUBLE), (acc, v) -> acc + v"
         f") * {PQ_SCALE}) AS BIGINT)"
-    )
-
-
-def pq_encode(
-    vectors: DataFrame,
-    cb_arr: DataFrame,
-    m: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """PQ encoding: per vector, per subspace, the id of the nearest
-    codebook entry for that subspace's slice — 64 floats become ``m``
-    small codes (the 32×
-    compression that lets a billion-vector index live in RAM). The
-    argmin is a per-row `array_min` over (scaled distance, cid) structs
-    — lexicographic, so ties break to the smallest cid — entirely
-    inside codegen against the broadcast codebook row: ZERO shuffle of
-    the corpus, O(n·K·d) scan work. Emits (id, mi, code) rows — the
-    relational form of the PQ code matrix, i.e. the persisted index."""
-    sub = dim // m
-    code_structs = F.expr(
-        f"transform(sequence(0, {m - 1}), mi -> struct("
-        "  mi AS mi,"
-        f"  array_min(transform(__cb, c -> struct({_pq_subdist(vec_col, 'mi', sub)} AS sd,"
-        "                                         c.cid AS cid))).cid AS code))"
-    )
-    return (
-        vectors.crossJoin(F.broadcast(cb_arr))
-        .select(F.col(id_col), F.explode(code_structs).alias("mc"))
-        .select(id_col, F.col("mc.mi").alias("mi"), F.col("mc.code").alias("code"))
     )
 
 
@@ -1067,9 +1021,11 @@ def pq_codebook_collect(
 
 
 def _pq_codes_expr(vec_col: str, m: int, sub: int, n_cb: int):
-    """Code POSITIONS into the cid-sorted flat codebook: same argmin and
-    tiebreak as pq_encode (position order == cid order; identical sd
-    rounding). Shared by pq_topk and ivf_pq_topk."""
+    """PQ encoding: per subspace, the POSITION of the nearest entry in
+    the cid-sorted flat codebook (position order == cid order). The
+    argmin is an `array_min` over (scaled distance, position) structs —
+    lexicographic, so ties break to the smallest cid. Shared by pq_topk
+    and ivf_pq_topk."""
     return F.expr(
         f"transform(sequence(0, {m - 1}), mi ->"
         f"  transform(array(slice({vec_col}, mi * {sub} + 1, {sub})), vs ->"
@@ -1107,10 +1063,9 @@ def pq_topk(
 
     Scale shape: each query's D table is an m×K BIGINT ARRAY (position-
     aligned with the cid-sorted codebook) carried on its row; the corpus
-    row carries its m code POSITIONS (`pq_encode`'s codes, as positions
-    into the same sorted codebook — the identical argmin, identical
-    tiebreak). Scoring is then a broadcast of the query batch onto the
-    code matrix and a row-local integer fold `Σ_m D[mi][code_mi]` —
+    row carries its m code POSITIONS into the same sorted codebook
+    (`_pq_codes_expr`). Scoring is then a broadcast of the query batch
+    onto the code matrix and a row-local integer fold `Σ_m D[mi][code_mi]` —
     ZERO shuffle before the final top-k window, where the earlier
     relational form (explode codes → equi-join D rows → re-aggregate)
     paid an extra exchange over m× the rows for the same sum. All

@@ -1273,12 +1273,12 @@ def bpe_fertility(
 
 def tv_distance_from_counts(st: DataFrame) -> DataFrame:
     """Finalize the per-source total-variation drift report from a
-    (source, term, cnt_s) count relation — the shared tail of the batch
-    query (plans/queries_text.py::txt18_source_divergence, which
-    builds the counts with one explode+groupBy pass) and the streaming
+    (source, term, cnt_s) count relation (`streaming/jobs.py::
+    source_term_counts`) — the shared tail of the batch query
+    (plans/queries_text.py::txt18_source_divergence) and the streaming
     monitor (streaming/jobs.py::run_streaming_source_divergence, which
-    maintains the same counts as Structured Streaming state and
-    finalizes over the compact state table).
+    keeps the counts as Structured Streaming state and finalizes over
+    the drained state table).
 
     Exactness: integer sufficient statistics combined in DECIMAL(38,0)
     (summation-order-proof); one double division at finalize, then the

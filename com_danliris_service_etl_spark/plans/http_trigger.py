@@ -8,7 +8,7 @@ nightly schedule (SURVEY §2.1 S10's prescribed mapping); this module adds
 the HTTP twin so an operator of the reference keeps the "poke one job
 over HTTP" workflow:
 
-    POST/GET /run/<job name>   →  run_job(ALL_SPECS[<job name>])
+    POST     /run/<job name>   →  run_job(ALL_SPECS[<job name>])
     GET      /jobs             →  the registered job names
 
 Responses mirror the reference's contract: the job runs synchronously in
@@ -21,10 +21,10 @@ does too, inside `run_job`), 404 for an unknown job name.
 Auth: the reference's function host gated invocation behind function
 keys (`function.json` authLevel); the twin's equivalent is a shared
 secret — pass ``token=...`` and every ``/run/<job>`` request must carry
-it in an ``X-Job-Key`` header (401 otherwise). ``/run`` also only
-accepts POST by default (GET mutates state — it runs jobs and advances
-watermarks; 405 with an Allow header otherwise); the reference bound
-GET too, so ``allow_get_run=True`` restores that for parity setups.
+it in an ``X-Job-Key`` header (401 otherwise). ``/run`` accepts
+POST only: a request there runs a job and advances its watermark, so a
+GET gets 405 with an Allow header, although the reference bound GET
+too.
 ``serve()`` binds loopback by default and refuses a non-loopback bind
 without a token.
 
@@ -58,14 +58,11 @@ def make_server(
     host: str = "127.0.0.1",
     port: int = 0,
     token: str | None = None,
-    allow_get_run: bool = False,
 ) -> ThreadingHTTPServer:
     """Build (not start) the trigger server; ``port=0`` binds an ephemeral
     port (tests). Call ``serve_forever()`` / ``shutdown()`` to run/stop.
 
-    ``token`` gates ``/run/<job>`` behind an ``X-Job-Key`` header;
-    ``allow_get_run`` re-enables GET on the mutating route (reference
-    parity — `Pembelian/function.json` bound GET and POST). A
+    ``token`` gates ``/run/<job>`` behind an ``X-Job-Key`` header. A
     non-loopback bind without a token is refused HERE, where the socket
     is bound — /run mutates state (runs jobs, advances watermarks) and
     must never be open to arbitrary network peers, whichever entry
@@ -93,7 +90,7 @@ def make_server(
             if not path.startswith("/run/"):
                 self._respond(404, {"error": f"no route {path}"})
                 return
-            if self.command == "GET" and not allow_get_run:
+            if self.command == "GET":
                 self.send_response(405)
                 self.send_header("Allow", "POST")
                 self.end_headers()
@@ -143,16 +140,12 @@ def serve(
     host: str = "127.0.0.1",
     port: int = 7071,
     token: str | None = None,
-    allow_get_run: bool = False,
 ) -> None:
     """Blocking entry point (the Azure Functions host's default port was
     7071 locally). Ctrl-C stops cleanly. Binds loopback by default; a
     non-loopback bind without a shared-secret ``token`` is refused (the
     guard lives in ``make_server``, where the socket is bound)."""
-    srv = make_server(
-        spark, specs, catalog, store, host, port,
-        token=token, allow_get_run=allow_get_run,
-    )
+    srv = make_server(spark, specs, catalog, store, host, port, token=token)
     try:
         srv.serve_forever()
     finally:

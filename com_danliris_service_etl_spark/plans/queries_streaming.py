@@ -5,8 +5,14 @@ stream-static enrichment, stateful top-k and attribution over the
 
 SURVEY.md §2.12 notes the reference has no streaming runtime; these are
 the standard operators in batch mode for the oracle gate, and most are
-the batch twin of a Structured Streaming job in streaming/jobs.py (tests
-assert stream ≡ batch).
+the batch twin of a Structured Streaming job in streaming/jobs.py.
+Where the two compute the same thing they run the same code: the query
+passes its batch frame to the builder the job passes its stream to
+(st1, st5, st6, st9, st10, st11, st12; the module docstring of
+streaming/jobs.py lists the builders). The twins of the
+applyInPandasWithState jobs (st3, st13, st14) and of the count-min fold
+(st8) compute the same answer another way. tests/test_streaming.py pins
+stream ≡ batch for every pair.
 """
 
 from __future__ import annotations
@@ -20,6 +26,16 @@ from com_danliris_service_etl_spark.plans.queries_graph import (
     attributed_purchases,
 )
 from com_danliris_service_etl_spark.plans.registry import _events, _t, register
+from com_danliris_service_etl_spark.streaming.jobs import (
+    _interval_join_frame,
+    admission_profile,
+    debut_days,
+    dedup_profile,
+    digest_counts,
+    keep_min_debuts,
+    segment_enrich,
+    windowed_counts,
+)
 
 
 @register(
@@ -34,18 +50,7 @@ from com_danliris_service_etl_spark.plans.registry import _events, _t, register
 )
 def st1_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour windows: count + sum per (window, event_type)."""
-    ev = _events(spark, sf_dir)
-    return (
-        ev.groupBy(F.window("ts_utc", "1 hour"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.unix_micros(F.col("window.start")).alias("window_start_us"),
-            F.unix_micros(F.col("window.end")).alias("window_end_us"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
+    return windowed_counts(_events(spark, sf_dir))
 
 
 @register(
@@ -191,27 +196,13 @@ _ST5_SQL = """
 @register("st5_dedup_stats", _ST5_SQL)
 def st5_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source exact-duplication monitoring: digest-grain pre-agg →
-    per-source finalize (docs, uniques, dups, largest dup group). This is
-    the BATCH twin of `streaming/jobs.py::run_streaming_dedup_stats`,
-    which maintains the same (source, digest) counts as Structured
-    Streaming state and finalizes per micro-batch — the live corpus-
-    ingest monitor; tests/test_streaming.py pins stream ≡ batch. Both
-    shuffles are map-side-combinable; the digest key is uniform by
-    construction."""
-    docs = _t(spark, sf_dir, "documents")
-    g = docs.groupBy("source", F.md5(F.col("text")).alias("h")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    return g.groupBy("source").agg(
-        F.sum("n").cast("long").alias("n_docs"),
-        F.count(F.lit(1)).alias("n_unique"),
-        (F.sum("n") - F.count(F.lit(1))).cast("long").alias("n_dup"),
-        F.max("n").cast("long").alias("max_group"),
-    )
+    per-source finalize (docs, uniques, dups, largest dup group). Both
+    shuffles are map-side-combinable."""
+    return dedup_profile(digest_counts(_t(spark, sf_dir, "documents")))
 
 
 # ---------------------------------------------------------------------------
-# st6: view→purchase interval join (batch twin of the stream-stream join)
+# st6: view→purchase interval join
 # ---------------------------------------------------------------------------
 
 _ST6_SQL = """
@@ -230,38 +221,9 @@ _ST6_SQL = """
 def st6_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """View→purchase attribution: every purchase joined to the views it
     followed within one hour, per user — the interval join behind
-    conversion attribution. BATCH twin of
-    `streaming/jobs.py::run_streaming_interval_join` (a real
-    stream-stream join with watermarks on both sides; equivalence pinned
-    in tests/test_streaming.py). One equi-shuffle on user_id with the
-    time range as a residual predicate — never a time-cross-product; at
-    100 TB the watermark is what bounds the streaming state to one
-    hour's purchases per user."""
-    ev = _events(spark, sf_dir)
-    v = ev.filter(F.col("event_type") == "view").select(
-        F.col("event_id").alias("view_id"),
-        "user_id",
-        F.col("ts_us").alias("__v_ts"),
-    )
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("__p_user"),
-        F.col("ts_us").alias("__p_ts"),
-    )
-    return (
-        v.join(
-            p,
-            (F.col("user_id") == F.col("__p_user"))
-            & (F.col("__p_ts") > F.col("__v_ts"))
-            & (F.col("__p_ts") <= F.col("__v_ts") + 3_600_000_000),
-        )
-        .select(
-            "view_id",
-            "purchase_id",
-            "user_id",
-            (F.col("__p_ts") - F.col("__v_ts")).cast("long").alias("lag_us"),
-        )
-    )
+    conversion attribution. At 100 TB the streaming job's watermark is
+    what bounds the join state to one hour's purchases per user."""
+    return _interval_join_frame(_events(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -310,7 +272,7 @@ def st7_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ST8 — the count-min grid itself (batch twin of the streaming fold)
+# ST8 — the count-min grid itself
 # ---------------------------------------------------------------------------
 
 _ST8_SQL = """
@@ -331,14 +293,12 @@ FROM cells GROUP BY r, bucket
 
 @register("st8_countmin_sketch", _ST8_SQL)
 def st8_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The count-min grid over the document token stream — the BATCH
-    twin of `streaming/jobs.py::run_streaming_countmin`, which maintains
-    the same grid as Structured Streaming state (at most depth×width
-    rows, constant in the corpus — the bounded-state property that makes
-    a live heavy-hitter monitor viable where exact counts grow with the
+    """The count-min grid over the document token stream, which the
+    streaming job maintains as state (at most depth×width rows, constant
+    in the corpus — the bounded-state property that makes a live
+    heavy-hitter monitor viable where exact counts grow with the
     vocabulary). Cell sums are associative, so micro-batch folding lands
-    on this identical grid; tests/test_streaming.py pins stream ≡
-    batch, and integer counts make the oracle bit-exact.
+    on this identical grid, and integer counts make the oracle bit-exact.
 
     Built in ROLLUP form (the sk3 lesson, promoted here in r10 after the
     events-decade measurement caught the raw form at 9.8x the oracle):
@@ -369,25 +329,15 @@ FROM d GROUP BY event_type
 
 @register("st9_watermark_dedup", _ST9_SQL)
 def st9_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of `streaming/jobs.py::run_streaming_watermark_dedup`:
-    the event stream replayed twice (exact at-least-once redelivery),
+    """The event stream replayed twice (exact at-least-once redelivery),
     admitted exactly once per event_id, then profiled per type.
     Replayed rows are bit-identical, so the admission rule is plain
     DISTINCT in both engines; the streaming form is
     `dropDuplicatesWithinWatermark`, whose per-id state is evicted at
-    the watermark (the bounded-state property the batch twin cannot
-    show — tests/test_streaming.py pins stream ≡ batch on a
-    duplicate-injected fixture)."""
+    the watermark (the bounded-state property a batch query cannot
+    show)."""
     ev = _events(spark, sf_dir)
-    replay = ev.unionByName(ev)
-    return (
-        replay.dropDuplicates(["event_id"])
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-    )
+    return admission_profile(ev.unionByName(ev).dropDuplicates(["event_id"]))
 
 
 # ---------------------------------------------------------------------------
@@ -412,35 +362,24 @@ FROM nd
 
 @register("st10_running_distinct", _ST10_SQL)
 def st10_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of `streaming/jobs.py::run_streaming_running_distinct`:
-    the event history split into two "nightly" increments, each reduced
-    to its debut candidates, keep-min merged — the exact fold the
-    streaming job runs per micro-batch (`fold_first_seen`) — then
-    summarized with `running_distinct`. The oracle is the ONE-SHOT
+    """The event history split into two "nightly" increments, each reduced
+    to its debut candidates, keep-min merged — the fold the streaming
+    job runs per micro-batch (`fold_first_seen`) — then summarized with
+    `running_distinct`. The oracle is the ONE-SHOT
     computation (w9's SQL): the query pins merge ≡ one-shot, the
     incremental-correctness law that lets the stream never reprocess
     history. MIN-merge is idempotent and commutative, so increment
     order and redelivery cannot change the state."""
     from com_danliris_service_etl_spark.operators.windows import running_distinct
 
-    ev = _events(spark, sf_dir).select(
-        "event_id",
-        "event_type",
-        "user_id",
-        (F.col("ts_us") / F.lit(86400000000)).cast("long").alias("d"),
+    ev = _events(spark, sf_dir)
+    inc1, inc2 = (
+        keep_min_debuts(debut_days(ev.filter(F.col("event_id") % 2 == half)))
+        for half in (0, 1)
     )
-
-    def debuts(df: DataFrame) -> DataFrame:
-        return df.groupBy("event_type", "user_id").agg(F.min("d").alias("d"))
-
-    inc1 = debuts(ev.filter(F.col("event_id") % 2 == 0))
-    inc2 = debuts(ev.filter(F.col("event_id") % 2 == 1))
-    state = (
-        inc1.unionByName(inc2)
-        .groupBy("event_type", "user_id")
-        .agg(F.min("d").alias("d"))
+    return running_distinct(
+        keep_min_debuts(inc1.unionByName(inc2)), ["event_type"], "user_id", "d"
     )
-    return running_distinct(state, ["event_type"], "user_id", "d")
 
 
 # ---------------------------------------------------------------------------
@@ -468,38 +407,13 @@ FROM v LEFT JOIN p
 def st11_outer_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER view→purchase attribution: st6's inner interval join
     plus the rows conversion analysis actually needs — views that did
-    NOT convert within the hour (NULL purchase). Batch twin of
-    `streaming/jobs.py::run_streaming_interval_join_outer`, whose
-    streaming form can only emit an unmatched view after the watermark
-    passes its eviction point (the emission-semantics contract
-    tests/test_streaming.py pins on the emittable region). Same single
-    equi-shuffle on user_id with the time band as residual; the outer
-    side adds no shuffle."""
-    ev = _events(spark, sf_dir)
-    v = ev.filter(F.col("event_type") == "view").select(
-        F.col("event_id").alias("view_id"),
-        "user_id",
-        F.col("ts_us").alias("__v_ts"),
-    )
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("__p_user"),
-        F.col("ts_us").alias("__p_ts"),
-    )
-    return (
-        v.join(
-            p,
-            (F.col("user_id") == F.col("__p_user"))
-            & (F.col("__p_ts") > F.col("__v_ts"))
-            & (F.col("__p_ts") <= F.col("__v_ts") + 3_600_000_000),
-            "left",
-        )
-        .select(
-            "view_id",
-            "purchase_id",
-            "user_id",
-            (F.col("__p_ts") - F.col("__v_ts")).cast("long").alias("lag_us"),
-        )
+    NOT convert within the hour (NULL purchase). The streaming form can
+    only emit an unmatched view after the watermark passes its eviction
+    point (the emission-semantics contract tests/test_streaming.py pins
+    on the emittable region). Same single equi-shuffle on user_id with
+    the time band as residual; the outer side adds no shuffle."""
+    return _interval_join_frame(_events(spark, sf_dir), "leftOuter").select(
+        "view_id", "purchase_id", "user_id", "lag_us"
     )
 
 
@@ -516,29 +430,12 @@ def st11_outer_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st12_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static dimension enrichment — the deployment shape where an
     unbounded event stream joins a slowly-changing dimension snapshot
-    (here: events → customer segment) before aggregating. This batch
-    twin IS the per-microbatch plan Structured Streaming executes for a
-    stream-static inner join (stateless — no watermark, no join state;
-    the static side is re-resolvable per microbatch, which is how dim
-    updates become visible mid-stream). streaming/jobs.py
-    `run_streaming_static_enrich` runs the same plan as a real
-    readStream; tests assert stream ≡ batch ≡ oracle.
-
-    Scale shape: the dimension broadcasts under every microbatch (one
-    build, reused across the batch's tasks); the aggregate is bounded by
-    |segments| × |event types|. Events' raw `ts` is never touched — the
-    join key and payload are timestamp-free, so the query is immune to
-    the fixture's ts physical-type drift."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "value")
-    dim = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    return (
-        ev.join(F.broadcast(dim), ev["user_id"] == dim["c_custkey"])
-        .groupBy("c_mktsegment", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-    )
+    (here: events → customer segment) before aggregating. This IS the
+    per-microbatch plan Structured Streaming executes for a stream-static
+    inner join (stateless — no watermark, no join state; the static side
+    is re-resolvable per microbatch, which is how dim updates become
+    visible mid-stream)."""
+    return segment_enrich(_t(spark, sf_dir, "events"), _t(spark, sf_dir, "customer"))
 
 
 @register(
@@ -554,9 +451,8 @@ def st12_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def st13_stateful_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the exact running top-3 heavy users per event type
-    (streaming/jobs.py::run_streaming_topk, the second custom
-    applyInPandasWithState operator): one map-side-combinable
+    """The exact top-3 heavy users per event type (the streaming job keeps
+    a running top-3 with applyInPandasWithState): one map-side-combinable
     (type, user) count shuffle, then a bounded per-type window. The
     streaming form keeps the full (type, user) count map as keyed state
     — exact top-k is not mergeable, so the exact operator pays state
@@ -581,10 +477,9 @@ def st13_stateful_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("st14_stream_attribution", _ATTR_SQL)
 def st14_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the streaming last-touch attribution operator
-    (streaming/jobs.py::_attribution_fn / run_streaming_attribution — the
-    third custom applyInPandasWithState op): one row per purchase with
-    its credited channel. The streaming form keeps ONE row of keyed
+    """Last-touch attribution (the streaming job's `_attribution_fn` runs
+    it with applyInPandasWithState): one row per purchase with its
+    credited channel. The streaming form keeps ONE row of keyed
     state per user (the latest touch), so its memory is O(|users|) on an
     unbounded clickstream; the batch form pays the bounded-relation
     union-sort window instead. Stream ≡ batch is pinned in

@@ -707,22 +707,18 @@ def txt18_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: integer sufficient statistics combined in DECIMAL(38,0) —
     summation order cannot matter (the sim9 discipline) — and the single
     double division at finalize is correctly rounded from exact operands
-    in both engines before the 6dp round. The finalize tail
-    (ops/text.py::tv_distance_from_counts) is shared with the streaming
-    monitor, which maintains the same (source, term) counts as keyed
-    streaming state (streaming/jobs.py::run_streaming_source_divergence,
-    stream ≡ batch pinned in tests)."""
+    in both engines before the 6dp round. The counts and the finalize
+    tail (ops/text.py::tv_distance_from_counts) are the streaming
+    monitor's own (streaming/jobs.py::run_streaming_source_divergence)."""
     from com_danliris_service_etl_spark.operators.text import tv_distance_from_counts
+    from com_danliris_service_etl_spark.streaming.jobs import source_term_counts
 
-    docs = _t(spark, sf_dir, "documents")
     # NOT spread: the explode+count fact pass is this whole query, and
     # an up-front repartition of the fat text column measured strictly
     # slower in the fresh-plan protocol (sf10 decade: 2.06 -> 2.73 s) —
     # the wire cost of moving the corpus exceeds the map-parallelism
     # gain; the 15-split scan keeps the cores busy enough.
-    toks = docs.select("source", F.explode(F.split("text", " ")).alias("term"))
-    st = toks.groupBy("source", "term").agg(F.count(F.lit(1)).alias("cnt_s"))
-    return tv_distance_from_counts(st)
+    return tv_distance_from_counts(source_term_counts(_t(spark, sf_dir, "documents")))
 
 
 # ---------------------------------------------------------------------------

@@ -106,26 +106,7 @@ class Catalog:
     are unchanged."""
 
     spark: SparkSession
-    base_dir: str | None = None
     tables: dict[str, str | JdbcSource] = field(default_factory=dict)
-
-    STANDARD_TABLES = (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    )
-
-    @classmethod
-    def for_dir(cls, spark: SparkSession, sf_dir: str | None = None) -> "Catalog":
-        """Catalog over a testdata scale-factor directory."""
-        d = sf_dir or os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-        cat = cls(spark=spark, base_dir=d)
-        # Existence probe through the Hadoop FS of the dir's own scheme
-        # (fsutil) so a hdfs://s3a:// fixture dir registers its tables.
-        for t in cls.STANDARD_TABLES:
-            p = f"{d.rstrip('/')}/{t}.parquet"
-            if fsutil.exists(spark, p):
-                cat.tables[t] = p
-        return cat
 
     def read(self, name: str) -> DataFrame:
         src = self.tables[name]
@@ -177,11 +158,6 @@ class Catalog:
                 raise
         return fsutil.read_parquet(self.spark, src)
 
-    def register_views(self) -> None:
-        """Expose every table as a temp view for the SQL front-end."""
-        for name in self.tables:
-            self.read(name).createOrReplaceTempView(name)
-
 
 @dataclass
 class MemoryCatalog(Catalog):
@@ -193,8 +169,3 @@ class MemoryCatalog(Catalog):
         if name in self.frames:
             return self.frames[name]
         return super().read(name)
-
-    def register_views(self) -> None:
-        for name, df in self.frames.items():
-            df.createOrReplaceTempView(name)
-        super().register_views()

@@ -72,8 +72,7 @@ import uuid
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from com_danliris_service_etl_spark.sources import fsutil
@@ -209,12 +208,3 @@ class WatermarkStore:
         self._publish(_conform(rows.group_by(rows.column_names, use_threads=False).aggregate([])))
         for name in names:
             fsutil.delete(self.spark, self._file(name))
-
-    def incremental(
-        self, df: DataFrame, job: str, ts_col: str = "lastmodifiedutc", inclusive: bool = False
-    ) -> DataFrame:
-        """S4/P2 — filter rows after the watermark. The per-job `>` vs `>=`
-        choice in the reference (`Pembelian/run.js:166` vs
-        `GarmentPembelian/run.js:91`) maps to ``inclusive``."""
-        wm = F.lit(self.read_watermark(job))
-        return df.filter(F.col(ts_col) >= wm if inclusive else F.col(ts_col) > wm)

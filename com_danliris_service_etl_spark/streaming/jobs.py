@@ -27,8 +27,19 @@ Kafka/Delta CDC unchanged. Two drains serve every job:
   idempotent by itself — a key MERGE, per-batch_id partitions, an
   applied-batch high-water mark, or a MIN merge.
 
-Each job's batch twin is in `plans/queries_streaming.py`;
-tests/test_streaming.py pins stream ≡ batch.
+One builder per computation: where a job and its registry query (the
+batch twin, `plans/queries_streaming.py` and txt18 in
+`plans/queries_text.py`) compute the same thing, the plan is built once,
+here, by a function that takes a batch or a streaming frame, and both
+call it. A streaming query is the batch plan run incrementally;
+`withWatermark` is a no-op on a batch frame. The builders:
+`windowed_counts` (st1), `digest_counts` + `dedup_profile` (st5),
+`_interval_join_frame` (st6, st11), `admission_profile` (st9),
+`debut_days` + `keep_min_debuts` (st10), `segment_enrich` (st12) and
+`source_term_counts` (txt18). The `applyInPandasWithState` operators
+(sessionize, top-k, attribution, quota) are incremental algorithms with
+no batch form; their twins compute the same answer another way.
+tests/test_streaming.py pins stream ≡ batch for every pair.
 """
 
 from __future__ import annotations
@@ -439,32 +450,38 @@ def run_streaming_rollup(
 # ---------------------------------------------------------------------------
 
 
-def run_streaming_dedup_stats(
-    spark: SparkSession, sf_dir: str, query_name: str = "dedup_stats_stream"
-) -> DataFrame:
-    """Live corpus-ingest duplication monitor: maintain (source, digest)
-    counts as Structured Streaming state over the document stream, then
-    finalize the per-source profile (docs / uniques / dups / max group)
-    in batch over the state table. The streaming stage is ONE
-    map-side-combinable stateful aggregation — state is one row per
+def digest_counts(docs: DataFrame) -> DataFrame:
+    """(source, md5(text)) → n: the exact-dedup state, one row per
     distinct (source, digest), the minimum any exact-dedup monitor can
-    hold — and the finalize runs over the compact state, never the raw
-    stream. Batch twin: `plans/queries_streaming.py::st5_dedup_stats`.
-
-    (Chained streaming aggregations are unsupported, which is why the
-    per-source finalize is a batch query over the in-memory sink — on a
-    cluster the same finalize reads the state-backed compacted sink.)"""
-    raw = _stream_table(spark, sf_dir, "documents")
-    g = raw.groupBy("source", F.md5(F.col("text")).alias("h")).agg(
+    hold. One map-side-combinable aggregation; the digest key is uniform
+    by construction."""
+    return docs.groupBy("source", F.md5(F.col("text")).alias("h")).agg(
         F.count(F.lit(1)).alias("n")
     )
-    state = _drain(g, "complete", query_name)
-    return state.groupBy("source").agg(
+
+
+def dedup_profile(counts: DataFrame) -> DataFrame:
+    """Per-source duplication profile over `digest_counts`: docs, uniques,
+    dups and the largest duplicate group."""
+    return counts.groupBy("source").agg(
         F.sum("n").cast("long").alias("n_docs"),
         F.count(F.lit(1)).alias("n_unique"),
         (F.sum("n") - F.count(F.lit(1))).cast("long").alias("n_dup"),
         F.max("n").cast("long").alias("max_group"),
     )
+
+
+def run_streaming_dedup_stats(
+    spark: SparkSession, sf_dir: str, query_name: str = "dedup_stats_stream"
+) -> DataFrame:
+    """Live corpus-ingest duplication monitor: `digest_counts` kept as
+    Structured Streaming state over the document stream, then
+    `dedup_profile` in batch over the drained state, never the raw
+    stream. Chained streaming aggregations are unsupported, which is why
+    the finalize is a batch query over the in-memory sink; on a cluster
+    it reads the state-backed compacted sink."""
+    raw = _stream_table(spark, sf_dir, "documents")
+    return dedup_profile(_drain(digest_counts(raw), "complete", query_name))
 
 
 def run_streaming_countmin(
@@ -492,19 +509,18 @@ def run_streaming_countmin(
 def run_streaming_interval_join(
     spark: SparkSession, sf_dir: str, query_name: str = "interval_join_stream"
 ) -> DataFrame:
-    """Stream-stream view→purchase attribution (`_interval_join_frame`).
-    Batch twin: `plans/queries_streaming.py::st6_interval_join`."""
-    return _drain(_interval_join_frame(spark, sf_dir), "append", query_name)
+    """Stream-stream view→purchase attribution (`_interval_join_frame`)."""
+    return _drain(_interval_join_frame(streaming_events(spark, sf_dir)), "append", query_name)
 
 
-def _interval_join_frame(spark: SparkSession, sf_dir: str, how: str = "inner") -> DataFrame:
-    """The watermarked stream-stream interval join plan shared by the
-    inner memory drain, its MERGE sink and the left-outer drain. Both
-    event streams carry watermarks and the join condition bounds
-    purchase time to (view, view+1h], so Spark can expire view state
-    older than the interval + watermark — the state-cleanup contract that
-    makes a stream-stream join viable on an unbounded stream (without
-    the time bound, state grows forever).
+def _interval_join_frame(events: DataFrame, how: str = "inner") -> DataFrame:
+    """View→purchase interval join: every purchase joined to the views of
+    the same user it followed within one hour, (view, view+1h]. One
+    equi-shuffle on user_id with the time band as a residual, never a
+    time cross-product. On a stream both sides carry watermarks, so
+    Spark expires view state older than the interval + watermark — the
+    state-cleanup contract that makes a stream-stream join viable on an
+    unbounded stream (without the time bound, state grows forever).
 
     The inner columns are the MERGE target's schema; the outer form adds
     the view's event time, which places an unmatched view against the
@@ -512,8 +528,7 @@ def _interval_join_frame(spark: SparkSession, sf_dir: str, how: str = "inner") -
 
     def side(event_type: str, prefix: str) -> DataFrame:
         return (
-            streaming_events(spark, sf_dir)
-            .filter(F.col("event_type") == event_type)
+            events.filter(F.col("event_type") == event_type)
             .withWatermark("ts_utc", "2 hours")
             .select(
                 F.col("event_id").alias(f"{event_type}_id"),
@@ -557,7 +572,7 @@ def run_streaming_interval_join_merge(
             keys=["view_id", "purchase_id"],
         )
 
-    _drain_batches(_interval_join_frame(spark, sf_dir), _merge, checkpoint_dir)
+    _drain_batches(_interval_join_frame(streaming_events(spark, sf_dir)), _merge, checkpoint_dir)
 
 
 def run_streaming_watermark_dedup(
@@ -576,11 +591,9 @@ def run_streaming_watermark_dedup(
     st5 way). Exactness contract: duplicates arriving WITHIN the delay
     of their first occurrence are dropped; a re-arrival after the
     watermark passes the id is re-admitted — the delay is the declared
-    redelivery bound, and state stays bounded by it. Batch twin:
-    `plans/queries_streaming.py::st9_watermark_dedup` (replayed rows are
-    bit-identical, so batch DISTINCT is the same admission rule);
-    tests/test_streaming.py pins stream ≡ batch on a
-    duplicate-injected fixture with the delay spanning the replay."""
+    redelivery bound, and state stays bounded by it. Replayed rows are
+    bit-identical, so the batch twin's DISTINCT is the same admission
+    rule."""
     # streaming_events normalizes event time to ts_utc (TimestampType
     # micros) — the raw fixture's TIMESTAMP_NTZ is not a valid
     # watermark column (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE)
@@ -588,8 +601,12 @@ def run_streaming_watermark_dedup(
     deduped = raw.withWatermark("ts_utc", watermark).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    sink = _drain(deduped, "append", query_name)
-    return sink.groupBy("event_type").agg(
+    return admission_profile(_drain(deduped, "append", query_name))
+
+
+def admission_profile(admitted: DataFrame) -> DataFrame:
+    """Per-type count and value sum of the admitted (deduplicated) events."""
+    return admitted.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("sum_value"),
     )
@@ -598,6 +615,24 @@ def run_streaming_watermark_dedup(
 # ---------------------------------------------------------------------------
 # Streaming running-distinct (w9's streaming twin): first-seen state
 # ---------------------------------------------------------------------------
+
+
+def debut_days(events: DataFrame) -> DataFrame:
+    """(event_type, user_id, d): each event's epoch day, the grain the
+    first-seen state keeps."""
+    return events.select(
+        "event_type",
+        "user_id",
+        (F.col("ts_us") / F.lit(86400000000)).cast("long").alias("d"),
+    )
+
+
+def keep_min_debuts(debuts: DataFrame) -> DataFrame:
+    """Keep-min merge of debut candidates: per (event_type, user_id) the
+    earliest day. MIN is idempotent and commutative, so merge order and
+    redelivery cannot change the result, and merging increments equals
+    the one-shot computation."""
+    return debuts.groupBy("event_type", "user_id").agg(F.min("d").alias("d"))
 
 
 def fold_first_seen(
@@ -618,14 +653,10 @@ def fold_first_seen(
     sess = batch_df.sparkSession
 
     def write(files: list, tmp: str) -> bool:
-        debuts = batch_df.groupBy("event_type", "user_id").agg(F.min("d").alias("d"))
+        debuts = keep_min_debuts(batch_df)
         if files:
-            debuts = (
-                fsutil.read_parquet(sess, state_path, files)
-                .unionByName(debuts)
-                .groupBy("event_type", "user_id")
-                .agg(F.min("d").alias("d"))
-            )
+            state = fsutil.read_parquet(sess, state_path, files)
+            debuts = keep_min_debuts(state.unionByName(debuts))
         debuts.write.mode("overwrite").parquet(tmp)
         return True
 
@@ -647,16 +678,10 @@ def run_streaming_running_distinct(
     `operators/windows.py::running_distinct` over the state — identical
     output to the one-shot batch form (`w9_running_distinct`) once the
     stream has drained, which tests/test_streaming.py pins."""
-    ev = streaming_events(spark, sf_dir).select(
-        "event_type",
-        "user_id",
-        (F.col("ts_us") / F.lit(86400000000)).cast("long").alias("d"),
-    )
-
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         fold_first_seen(batch_df, state_path, batch_id=batch_id)
 
-    _drain_batches(ev, _fold, checkpoint_dir)
+    _drain_batches(debut_days(streaming_events(spark, sf_dir)), _fold, checkpoint_dir)
     state = fsutil.read_parquet(spark, state_path)
     return running_distinct(state, ["event_type"], "user_id", "d")
 
@@ -674,11 +699,11 @@ def run_streaming_interval_join_outer(
     legitimately NOT emitted — they are still open. The stream≡batch
     test therefore compares the EMITTABLE region (v_ts ≤ max event time
     − watermark − interval) and checks the matched subset equals the
-    inner join everywhere; the batch twin
-    (`plans/queries_streaming.py::st11_outer_interval_join`) computes the
-    full left outer, which is what a drained production stream
-    converges to."""
-    return _drain(_interval_join_frame(spark, sf_dir, "leftOuter"), "append", query_name)
+    inner join everywhere; the batch twin computes the full left outer,
+    which is what a drained production stream converges to."""
+    return _drain(
+        _interval_join_frame(streaming_events(spark, sf_dir), "leftOuter"), "append", query_name
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -700,11 +725,20 @@ def run_streaming_static_enrich(
     updates become visible mid-stream without a restart. The aggregation
     state is bounded by |segments| x |event types|, so the complete-mode
     drain holds a dimension-sized result, never the stream."""
-    ev = streaming_events(spark, sf_dir).select("user_id", "event_type", "value")
-    dim = fsutil.read_parquet(spark, f"{sf_dir.rstrip('/')}/customer.parquet").select(
-        "c_custkey", "c_mktsegment"
-    )
-    agg = (
+    ev = _stream_table(spark, sf_dir, "events")
+    dim = fsutil.read_parquet(spark, f"{sf_dir.rstrip('/')}/customer.parquet")
+    return _drain(segment_enrich(ev, dim), "complete", query_name)
+
+
+def segment_enrich(events: DataFrame, customer: DataFrame) -> DataFrame:
+    """Events joined to their customer's market segment, then count and
+    value sum per (segment, event type). The dimension broadcasts (one
+    build per batch, reused across its tasks); the aggregate is bounded
+    by |segments| × |event types|. Only timestamp-free columns are read,
+    so the plan is immune to the fixture's `ts` physical-type drift."""
+    ev = events.select("user_id", "event_type", "value")
+    dim = customer.select("c_custkey", "c_mktsegment")
+    return (
         ev.join(F.broadcast(dim), ev["user_id"] == dim["c_custkey"])
         .groupBy("c_mktsegment", "event_type")
         .agg(
@@ -712,7 +746,6 @@ def run_streaming_static_enrich(
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
     )
-    return _drain(agg, "complete", query_name)
 
 
 # ---------------------------------------------------------------------------
@@ -864,27 +897,28 @@ def run_streaming_attribution(
 def run_streaming_source_divergence(
     spark: SparkSession, sf_dir: str, query_name: str = "source_div_stream"
 ) -> DataFrame:
-    """Live data-mixture drift monitor: maintain (source, term) token
-    counts as Structured Streaming state over the document stream, then
-    finalize each source's exact total-variation distance from the
-    corpus unigram distribution in batch over the compact state table
-    (ops/text.py::tv_distance_from_counts — the shared tail of the
-    txt18 batch twin; tests pin stream ≡ batch).
-
-    The streaming stage is ONE map-side-combinable stateful aggregation
-    — state is one row per distinct (source, term), the vocabulary
-    grain, which is also the minimum any exact distribution monitor can
-    hold — and the finalize never touches the raw stream (the st5
-    dedup-monitor split: chained streaming aggregations are unsupported,
-    and over the vocab-sized state the batch finalize is the correct
-    shape, not a workaround)."""
+    """Live data-mixture drift monitor: `source_term_counts` kept as
+    Structured Streaming state over the document stream, then each
+    source's exact total-variation distance from the corpus unigram
+    distribution (`operators/text.py::tv_distance_from_counts`) in batch
+    over the drained state. The finalize never touches the raw stream
+    (the st5 dedup-monitor split: chained streaming aggregations are
+    unsupported, and over the vocab-sized state the batch finalize is the
+    correct shape, not a workaround)."""
     raw = _stream_table(spark, sf_dir, "documents")
-    st = (
-        raw.select("source", F.explode(F.split("text", " ")).alias("term"))
+    return tv_distance_from_counts(_drain(source_term_counts(raw), "complete", query_name))
+
+
+def source_term_counts(docs: DataFrame) -> DataFrame:
+    """(source, term) → cnt_s over space-split document text: ONE
+    map-side-combinable aggregation whose result has one row per
+    distinct (source, term), the vocabulary grain and the minimum any
+    exact distribution monitor can hold."""
+    return (
+        docs.select("source", F.explode(F.split("text", " ")).alias("term"))
         .groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("cnt_s"))
     )
-    return tv_distance_from_counts(_drain(st, "complete", query_name))
 
 
 # ---------------------------------------------------------------------------

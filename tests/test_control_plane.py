@@ -32,20 +32,6 @@ def test_watermark_protocol(spark, tmp_path):
     assert store.read_watermark("Fact Kanban") == EPOCH
 
 
-def test_incremental_filter(spark, tmp_path):
-    store = WatermarkStore(spark, str(tmp_path / "log"))
-    job = "j"
-    t1 = dt.datetime(2024, 1, 2)
-    store.commit_run(job, t1, t1, "Successful")
-    df = spark.createDataFrame(
-        [(1, dt.datetime(2024, 1, 1)), (2, dt.datetime(2024, 1, 2)), (3, dt.datetime(2024, 1, 3))],
-        "id long, lastmodifiedutc timestamp",
-    )
-    # strict > (Pembelian flavor) vs >= (GarmentPembelian flavor)
-    assert [r.id for r in store.incremental(df, job).orderBy("id").collect()] == [3]
-    assert [r.id for r in store.incremental(df, job, inclusive=True).orderBy("id").collect()] == [2, 3]
-
-
 def test_merge_upsert_idempotent(spark, tmp_path):
     target = str(tmp_path / "fact")
     batch = spark.createDataFrame(

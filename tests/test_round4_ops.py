@@ -183,9 +183,11 @@ def test_snapshot_drift_flags_and_presence(spark):
 
 
 def test_pq_encode_exact_codebook_match(spark):
+    """A subspace slice equal to a codebook entry encodes to that entry
+    (the PQ encoder pq_topk and ivf_pq_topk scan with)."""
     from com_danliris_service_etl_spark.operators.similarity import (
-        pq_codebook,
-        pq_encode,
+        _pq_codes_expr,
+        pq_codebook_flat,
     )
 
     # 4-dim, m=2 (2-dim subspaces); codebook = two distinct vectors
@@ -194,12 +196,15 @@ def test_pq_encode_exact_codebook_match(spark):
     )
     # vec 10: first subspace matches cb1, second matches cb0
     vecs = spark.createDataFrame([(10, [1.0, 1.0, 0.0, 0.0])], _VEC_SCHEMA)
-    cb = pq_codebook(cbv)
-    codes = {
-        (r.vec_id, r.mi): r.code
-        for r in pq_encode(vecs, cb, m=2, dim=4).collect()
-    }
-    assert codes == {(10, 0): 1, (10, 1): 0}
+    cbf = pq_codebook_flat(cbv, m=2, dim=4)
+    codes = (
+        vecs.crossJoin(cbf)
+        .select(_pq_codes_expr("embedding", m=2, sub=2, n_cb=2).alias("codes"))
+        .first()
+        .codes
+    )
+    # positions into the cid-sorted book: position j is cid j here
+    assert codes == [1, 0]
 
 
 def test_pq_topk_identical_vector_ranks_first(spark):

@@ -932,3 +932,50 @@ def test_streaming_jobs_share_one_drain_of_each_kind():
     assert count("format", "memory") == 1
     assert count("foreachBatch") == 1
     assert count("applyInPandasWithState") == 1
+
+
+def test_stream_and_batch_twins_share_one_builder():
+    """Layout guard: each streaming job and its registry query call the
+    same plan builder in streaming/jobs.py, and the registry bodies hold
+    no groupBy or join of their own."""
+    import ast
+    import inspect
+
+    from com_danliris_service_etl_spark.plans import queries_streaming, queries_text
+    from com_danliris_service_etl_spark.streaming import jobs
+
+    def called(fn) -> set[str]:
+        tree = ast.parse(inspect.getsource(inspect.unwrap(fn)).lstrip())
+        return {
+            node.func.attr if isinstance(node.func, ast.Attribute) else node.func.id
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call) and isinstance(node.func, (ast.Attribute, ast.Name))
+        }
+
+    q, t = queries_streaming, queries_text
+    twins = [
+        ("windowed_counts", [q.st1_tumbling_window], [jobs.run_streaming_windowed_counts]),
+        ("digest_counts", [q.st5_dedup_stats], [jobs.run_streaming_dedup_stats]),
+        ("dedup_profile", [q.st5_dedup_stats], [jobs.run_streaming_dedup_stats]),
+        (
+            "_interval_join_frame",
+            [q.st6_interval_join, q.st11_outer_interval_join],
+            [jobs.run_streaming_interval_join, jobs.run_streaming_interval_join_outer],
+        ),
+        ("admission_profile", [q.st9_watermark_dedup], [jobs.run_streaming_watermark_dedup]),
+        ("debut_days", [q.st10_running_distinct], [jobs.run_streaming_running_distinct]),
+        ("keep_min_debuts", [q.st10_running_distinct], [jobs.fold_first_seen]),
+        ("segment_enrich", [q.st12_stream_static_enrich], [jobs.run_streaming_static_enrich]),
+        (
+            "source_term_counts",
+            [t.txt18_source_divergence],
+            [jobs.run_streaming_source_divergence],
+        ),
+    ]
+    for builder, queries, streams in twins:
+        assert callable(getattr(jobs, builder))
+        for fn in queries + streams:
+            assert builder in called(fn), f"{fn.__name__} does not call {builder}"
+        for fn in queries:
+            own = called(fn) & {"groupBy", "groupby", "join", "crossJoin"}
+            assert not own, f"{fn.__name__} builds its own {sorted(own)}"
