@@ -1,19 +1,59 @@
 """Deduplication operators for large-scale text corpora.
 
 Extensions beyond the reference surface (BASELINE.json north star): exact
-dedup, MinHash+LSH near-dup candidate generation, SimHash fingerprints, and
-blocked n-gram Jaccard. All are pure DataFrame compositions (no Python
+dedup, MinHash+LSH near-dup candidate generation, SimHash fingerprints,
+blocked n-gram Jaccard, exact verification, decontamination and
+exact-substring dedup. All are pure DataFrame compositions (no Python
 UDFs), so they scale: the only shuffles are the per-doc aggregations and
-the LSH band self-join, each keyed to spread uniformly.
+the LSH band grouping, each keyed to spread uniformly.
 
 Determinism contract: every hash is md5 of an explicitly-constructed string,
 so results are reproducible across engines (the DuckDB oracle mirrors the
 same expressions) and across cluster sizes.
+
+Shared stages, each built by ONE private helper that every operator calls:
+
+- ``_tokens``: the ' '-split token array per document, `spread` first (a
+  one-file corpus scans as one partition and everything downstream is
+  CPU-bound).
+- ``_shingle_sql`` / ``_shingle_arrays``: word k-shingle i = tokens
+  i..i+k-1 joined by ' '. Documents with < k tokens have no shingles and
+  drop out (mirrored in every oracle); ``array_distinct`` where a set is
+  needed. Row-local, no exchange.
+- ``_minhash``: the MinHash signature over a shingle array. ONE md5 base
+  hash per shingle, permutation p = (A_p·h + B_p) mod PRIME, the min per
+  permutation; A_p·h < 2^24·2^32 keeps the arithmetic inside int64. It is
+  one per-row projection inside whole-stage codegen: the explode +
+  groupBy(doc) form shuffled ~150× the corpus to reassemble what was
+  already row-local (~2× end-to-end on dd2). The min is duplicate-
+  insensitive, so the signature over the distinct shingle set equals the
+  one over the multiset. ``_sig`` packs mh0..mhN into the ``sig`` array.
+- ``_band_structs`` / ``_bucket_pairs`` / ``_lsh_pairs``: LSH banding.
+  Band b's key is md5 of its rows' mins. Members of a (band, hash) bucket
+  are collected sorted and truncated to their ``max_bucket`` smallest ids
+  (the worst-case cap: an adversarial corpus of near-identical documents
+  is ONE bucket with n²/2 pairs, and a bucket that large IS one duplicate
+  cluster whose capped members still pair with its keeper ids), then i<j
+  pairs are generated inside the bucket: one shuffle, no band self-join,
+  cost O(candidate pairs). A pair colliding in several bands is kept only
+  in its FIRST colliding band, decided row-locally from the carried
+  signatures instead of a global distinct over the pair set, and carries
+  est_jaccard = agreeing permutations / n_perms.
+- ``_pair_overlap``: exact verification. Each candidate pair joins its two
+  documents' distinct-shingle arrays and computes ``inter``/``na``/``nb``
+  row-locally, so no pair × shingle fan-out crosses a shuffle; keep
+  decisions are exact integer arithmetic (``_jaccard``), never a float.
+- ``_bench_array``: a benchmark corpus's distinct shingles as ONE sorted
+  array row, broadcast to the corpus (eval sets are MB-scale against a
+  100 TB corpus): decontamination never shuffles the corpus.
+- ``_window_hashes`` / ``_first_occurrence``: exact-substring dedup's
+  md5-keyed k-token windows, and the overflow-guarded ``doc·max_pos +
+  pos`` first-occurrence order (integral ids only).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from com_danliris_service_etl_spark.operators.partitioning import spread
@@ -34,22 +74,39 @@ def exact_dedup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "d
     )
 
 
+def _tokens(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, t): each document's ' '-split token array, spread first."""
+    return spread(docs).select(id_col, F.split(F.col(text_col), " ").alias("t"))
+
+
+def _shingle_sql(k: int, toks: str = "t") -> str:
+    """SQL for the word k-shingle array of token array ``toks`` (Spark SQL
+    indexing is 0-based: shingle i = toks[i..i+k-1])."""
+    idx_terms = ", ".join(f"{toks}[i+{j}]" for j in range(k))
+    return f"transform(sequence(0, size({toks})-{k}), i -> concat_ws(' ', {idx_terms}))"
+
+
+def _shingle_arrays(
+    toks: DataFrame, id_col: str, k: int, distinct: bool = True
+) -> DataFrame:
+    """(id, arr): each document's k-shingle array (a set when ``distinct``)
+    over a `_tokens` relation; documents with < k tokens drop out."""
+    arr = F.expr(_shingle_sql(k))
+    if distinct:
+        arr = F.array_distinct(arr)
+    return toks.filter(F.size("t") >= k).select(id_col, arr.alias("arr"))
+
+
 def _shingles(docs: DataFrame, text_col: str, id_col: str, k: int = 3) -> DataFrame:
-    """Word k-shingles per document (documents with < k tokens drop out —
-    mirrored in the oracle). Duplicates are NOT removed: every consumer
-    (min-aggregation) is duplicate-insensitive, so a distinct here would be
-    a pure extra shuffle."""
-    toks = spread(docs).select(id_col, F.split(F.col(text_col), " ").alias("t")).filter(
-        F.size("t") >= k
-    )
-    # Spark SQL array indexing is 0-based: shingle i = tokens[i..i+k-1].
-    idx_terms = ", ".join(f"t[i+{j}]" for j in range(k))
-    return toks.select(
-        id_col,
-        F.explode(
-            F.expr(f"transform(sequence(0, size(t)-{k}), i -> concat_ws(' ', {idx_terms}))")
-        ).alias("s"),
-    )
+    """Word k-shingles per document, one (id, s) row each. Duplicates are
+    NOT removed: every consumer (min-aggregation) is duplicate-insensitive,
+    so a distinct here would be a pure extra shuffle."""
+    # Explode the shingle expression itself, not a projected column: from
+    # an exploded ATTRIBUTE Spark infers size(arr) > 0 filters and pushes
+    # them below the size(t) >= k guard, where ANSI mode aborts on short
+    # token arrays (and the shingles would be built twice).
+    toks = _tokens(docs, text_col, id_col).filter(F.size("t") >= k)
+    return toks.select(id_col, F.explode(F.expr(_shingle_sql(k))).alias("s"))
 
 
 # Universal-hash permutation family over a single 32-bit base hash:
@@ -64,6 +121,29 @@ def _perm_consts(n_perms: int) -> list[tuple[int, int]]:
     return [(1_000_003 * p + 12_345, 7_919 * p + 104_729) for p in range(n_perms)]
 
 
+def _minhash(arrs: DataFrame, id_col: str, n_perms: int) -> DataFrame:
+    """(id, mh0..mhN) over a shingle-array relation (id, arr)."""
+    hs = arrs.select(
+        id_col,
+        # one md5 per shingle, shared by all permutations
+        F.expr(
+            "transform(arr, s -> cast(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT))"
+        ).alias("__hs"),
+    )
+    mins = [
+        F.array_min(
+            F.expr(f"transform(__hs, h -> (h * {a}L + {b}L) % {MINHASH_PRIME}L)")
+        ).alias(f"mh{p}")
+        for p, (a, b) in enumerate(_perm_consts(n_perms))
+    ]
+    return hs.select(id_col, *mins)
+
+
+def _sig(n_perms: int) -> Column:
+    """The mh0..mhN signature columns packed into one ``sig`` array."""
+    return F.array(*[F.col(f"mh{p}") for p in range(n_perms)]).alias("sig")
+
+
 def minhash_signatures(
     docs: DataFrame,
     text_col: str = "text",
@@ -71,43 +151,17 @@ def minhash_signatures(
     n_perms: int = DEFAULT_PERMS,
     shingle_k: int = 3,
 ) -> DataFrame:
-    """MinHash signature per document: for permutation p, the minimum of
-    (A_p·h(shingle)+B_p) mod PRIME over the doc's shingle set.
-
-    SHUFFLE-FREE: the whole signature is one per-row projection — shingle
-    array → one md5/shingle → array_min per permutation — entirely inside
-    whole-stage codegen. The naive explode + groupBy(doc) formulation
-    shuffles |shingles| rows (~150× the corpus) to reassemble what was
-    already row-local; fusing it removes that exchange AND the explode
-    materialization, which measured ~2× end-to-end on dd2. Documents are
-    never wider than one row's shingle array, so per-row state is bounded.
-    A_p·h < 2^24·2^32 = 2^56 keeps the arithmetic inside int64."""
-    k = shingle_k
-    idx_terms = ", ".join(f"t[i+{j}]" for j in range(k))
-    sh = (
-        spread(docs)
-        .select(id_col, F.split(F.col(text_col), " ").alias("t"))
-        .filter(F.size("t") >= k)
-        .select(
-            id_col,
-            F.expr(
-                # one md5 per shingle, shared by all permutations
-                f"transform(transform(sequence(0, size(t)-{k}),"
-                f"  i -> concat_ws(' ', {idx_terms})),"
-                "  s -> cast(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT))"
-            ).alias("hs"),
-        )
+    """MinHash signature per document, (id, mh0..mhN): for permutation p,
+    the minimum of (A_p·h(shingle)+B_p) mod PRIME over the doc's shingles.
+    Shuffle-free; documents are never wider than one row's shingle array,
+    so per-row state is bounded."""
+    arrs = _shingle_arrays(
+        _tokens(docs, text_col, id_col), id_col, shingle_k, distinct=False
     )
-    mins = [
-        F.array_min(
-            F.expr(f"transform(hs, h -> (h * {a}L + {b}L) % {MINHASH_PRIME}L)")
-        ).alias(f"mh{p}")
-        for p, (a, b) in enumerate(_perm_consts(n_perms))
-    ]
-    return sh.select(id_col, *mins)
+    return _minhash(arrs, id_col, n_perms)
 
 
-def _band_structs(n_perms: int, bands: int) -> F.Column:
+def _band_structs(n_perms: int, bands: int) -> Column:
     """array<struct<band_idx, band_hash>> over an in-scope `sig` array:
     band b's key is md5 of its rows' stringified mins joined with ':' —
     an unambiguous key both engines render identically."""
@@ -137,64 +191,16 @@ def _band_structs(n_perms: int, bands: int) -> F.Column:
     return F.array(*band_cols)
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_perms: int = DEFAULT_PERMS,
-    bands: int = DEFAULT_BANDS,
-    shingle_k: int = 3,
-    max_bucket: int = 1024,
+def _bucket_pairs(
+    banded: DataFrame, member: Column, max_bucket: int, tags: tuple[str, ...] = ()
 ) -> DataFrame:
-    """Near-duplicate candidate pairs via LSH banding over MinHash
-    signatures, with the estimated Jaccard (fraction of agreeing
-    permutations) attached.
-
-    Scale shape: signatures (1 row/doc) → explode to `bands` rows/doc →
-    self-join on (band_idx, band_hash). The join key is a hash, so skew only
-    arises from true duplicate clusters — exactly the rows we want colliding.
-    No O(n²) stage exists; cost is O(candidate pairs).
-
-    ``max_bucket`` is the in-code worst-case cap: an adversarial corpus of
-    near-identical documents collapses into ONE bucket, whose pair fanout is
-    n²/2 — enough to OOM an executor at corpus scale. Buckets are truncated
-    to their ``max_bucket`` smallest member ids (deterministic), bounding
-    any single bucket's output at max_bucket²/2 pairs. For dedup that loses
-    nothing of value: a bucket that large IS one duplicate cluster, and
-    capped members still pair with the cluster's keeper ids.
-
-    ORACLE CAVEAT: the dd2 DuckDB oracle does not mirror ``max_bucket``
-    (or its interaction with the first-colliding-band dedup below, which
-    drops a pair evicted from its first band's truncated bucket even if a
-    later band kept it). Cross-engine fixtures must therefore keep every
-    duplicate cluster below ``max_bucket`` members — true of all in-repo
-    fixtures by three orders of magnitude."""
-    sig = minhash_signatures(docs, text_col, id_col, n_perms, shingle_k).select(
-        id_col, F.array(*[F.col(f"mh{p}") for p in range(n_perms)]).alias("sig")
-    )
-
-    # Carry the full signature through the band explode so candidate pairs
-    # can be verified in the SAME join — one aggregation shuffle + one
-    # equi-join total, no signature re-join stages.
-    banded = sig.select(
-        F.col(id_col), F.col("sig"), F.explode(_band_structs(n_perms, bands)).alias("band")
-    ).select(id_col, "sig", "band.band_idx", "band.band_hash")
-
-    # Group members per (band, hash) bucket and generate the i<j pairs
-    # INSIDE the group (sorted members ⇒ doc_a < doc_b for free): one
-    # shuffle total, and the signature pipeline is computed once — a
-    # band-on-band self-join would re-run the whole upstream per side.
-    # Bucket sizes equal true duplicate-cluster sizes, so the collect_list
-    # state stays small in real corpora; slice() enforces the max_bucket
-    # cap so a degenerate all-identical corpus stays bounded (see above).
+    """(*tags, band_idx, m, n): every i<j pair of ``member`` values sharing
+    a (*tags, band_idx, band_hash) bucket, members sorted (so m < n) and
+    truncated to the bucket's ``max_bucket`` smallest."""
     grouped = (
-        banded.groupBy("band_idx", "band_hash")
+        banded.groupBy(*tags, "band_idx", "band_hash")
         .agg(
-            F.slice(
-                F.sort_array(F.collect_list(F.struct(F.col(id_col).alias("id"), "sig"))),
-                1,
-                max_bucket,
-            ).alias("ms")
+            F.slice(F.sort_array(F.collect_list(member)), 1, max_bucket).alias("ms")
         )
         .filter(F.size("ms") > 1)
     )
@@ -204,45 +210,77 @@ def minhash_lsh_pairs(
     # cost ~2.6 s on every fresh plan (the documented dd2 cold-floor
     # class); the chained form compiles in <0.1 s and runs identically
     # (r9 A/B: cold 3.32 -> 0.68 s, warm equal, identical rows).
-    pairs = (
-        grouped.select(
-            "band_idx", F.posexplode("ms").alias("i", "m"), F.col("ms")
-        )
-        .select("band_idx", "i", "m", F.posexplode("ms").alias("j", "n"))
+    keys = [*tags, "band_idx"]
+    return (
+        grouped.select(*keys, F.posexplode("ms").alias("i", "m"), "ms")
+        .select(*keys, "i", "m", F.posexplode("ms").alias("j", "n"))
         .filter(F.col("i") < F.col("j"))
-        .select(
-            "band_idx",
-            F.col("m.id").alias("doc_a"),
-            F.col("n.id").alias("doc_b"),
-            F.col("m.sig").alias("sig_a"),
-            F.col("n.sig").alias("sig_b"),
-        )
+        .select(*keys, "m", "n")
+    )
+
+
+def _lsh_pairs(
+    sigs: DataFrame,
+    id_col: str,
+    n_perms: int,
+    bands: int,
+    max_bucket: int,
+    keep: Column | None = None,
+) -> DataFrame:
+    """(doc_a, doc_b, est_jaccard) candidate pairs over a signature
+    relation (id, sig, ...): each bucket member is the struct of all of
+    the row's columns (id first, so m.id < n.id), and ``keep`` filters
+    on those (m.*, n.*) members."""
+    member = F.struct(
+        F.col(id_col).alias("id"), *[F.col(c) for c in sigs.columns if c != id_col]
+    )
+    banded = sigs.select(
+        member.alias("__m"), F.explode(_band_structs(n_perms, bands)).alias("band")
+    ).select("__m", "band.band_idx", "band.band_hash")
+    pairs = _bucket_pairs(banded, F.col("__m"), max_bucket)
+    # band b collides iff the raw b-th signature slices are equal
+    # (≡ band_hash equality, sans md5 collisions); with max_bucket
+    # truncation a pair evicted from its first band's bucket is dropped.
+    rpb = n_perms // bands
+    first_band = F.expr(
+        "band_idx = 0 OR NOT exists(sequence(0, band_idx - 1),"
+        f" b -> slice(m.sig, b * {rpb} + 1, {rpb})"
+        f" == slice(n.sig, b * {rpb} + 1, {rpb}))"
     )
     # CAST to DOUBLE: a bare float literal parses as DECIMAL, and a
     # decimal(17,6) column reaches pandas as object Decimals that
     # hash-compare unequal to the oracle's float64.
-    est = (
-        "aggregate(zip_with(sig_a, sig_b, (a, b) -> CASE WHEN a = b THEN 1 ELSE 0 END),"
+    est = F.expr(
+        "aggregate(zip_with(m.sig, n.sig, (a, b) -> CASE WHEN a = b THEN 1 ELSE 0 END),"
         f" 0, (acc, v) -> acc + v) / CAST({float(n_perms)} AS DOUBLE)"
     )
-    # SHUFFLE-FREE dedup of cross-band repeats: a pair colliding in k>1
-    # bands is kept only in its FIRST colliding band — detectable locally
-    # because the full signatures ride along: band b collides iff the raw
-    # b-th signature slices are equal (≡ band_hash equality, sans md5
-    # collisions). This replaces a global `.distinct()` — a full extra
-    # shuffle of the pair set, which at near-dup-heavy corpora is the
-    # largest intermediate in the job. (With max_bucket truncation a pair
-    # evicted from its first band's bucket is dropped entirely — the cap
-    # is already documented as lossy for degenerate mega-clusters.)
-    rpb = n_perms // bands
-    first_band = (
-        "band_idx = 0 OR NOT exists(sequence(0, band_idx - 1),"
-        f" b -> slice(sig_a, b * {rpb} + 1, {rpb})"
-        f" == slice(sig_b, b * {rpb} + 1, {rpb}))"
+    return pairs.filter(first_band if keep is None else keep & first_band).select(
+        F.col("m.id").alias("doc_a"), F.col("n.id").alias("doc_b"), est.alias("est_jaccard")
     )
-    return pairs.filter(F.expr(first_band)).select(
-        "doc_a", "doc_b", F.expr(est).alias("est_jaccard")
+
+
+def minhash_lsh_pairs(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n_perms: int = DEFAULT_PERMS,
+    bands: int = DEFAULT_BANDS,
+    shingle_k: int = 3,
+    max_bucket: int = 1024,
+) -> DataFrame:
+    """Near-duplicate candidate pairs (doc_a < doc_b, est_jaccard) via LSH
+    banding over MinHash signatures.
+
+    ORACLE CAVEAT: the dd2 DuckDB oracle does not mirror ``max_bucket``
+    (or its interaction with the first-colliding-band rule, which drops a
+    pair evicted from its first band's truncated bucket even if a later
+    band kept it). Cross-engine fixtures must therefore keep every
+    duplicate cluster below ``max_bucket`` members — true of all in-repo
+    fixtures by three orders of magnitude."""
+    sigs = minhash_signatures(docs, text_col, id_col, n_perms, shingle_k).select(
+        id_col, _sig(n_perms)
     )
+    return _lsh_pairs(sigs, id_col, n_perms, bands, max_bucket)
 
 
 def incremental_minhash_lsh_pairs(
@@ -262,176 +300,25 @@ def incremental_minhash_lsh_pairs(
     over the already-ingested corpus (id + mh0..mhN — ~n_perms longs per
     document, the compact state a 100 TB deployment persists and appends
     to). Only the new batch pays the shingle/md5 signature cost; both
-    sides band, bucket together, and pairs are kept only when at least
+    sides band and bucket together, and pairs are kept only when at least
     one member is new — old-old pairs were already emitted by previous
-    runs. Emitted (doc_a, doc_b, est_jaccard) rows are a superset
-    restriction of the full-corpus :func:`minhash_lsh_pairs` output:
-    exactly its pairs that involve a new document (pinned by
+    runs. The output is exactly the full-corpus :func:`minhash_lsh_pairs`
+    pairs that involve a new document (pinned by
     `test_incremental_lsh_matches_full_minus_old`). After the run, the
     store advances by appending the new batch's signatures.
 
     PRECONDITION: store and new-batch ids are disjoint (a re-ingested id
     is the caller's dedup-by-id problem, handled upstream by an anti-join
     against the store). Defensively, (id, id) self-pairs arising from an
-    overlap are filtered here — identically to the join form
-    (:func:`incremental_lsh_pairs_join`), so the two forms stay
-    set-identical even on overlapping inputs."""
+    overlap are filtered here."""
     new_sigs = minhash_signatures(new_docs, text_col, id_col, n_perms, shingle_k)
 
-    def prep(sigs: DataFrame, is_new: bool) -> DataFrame:
-        return sigs.select(
-            F.col(id_col),
-            F.array(*[F.col(f"mh{p}") for p in range(n_perms)]).alias("sig"),
-            F.lit(is_new).alias("is_new"),
-        )
+    def tagged(sigs: DataFrame, is_new: bool) -> DataFrame:
+        return sigs.select(id_col, _sig(n_perms), F.lit(is_new).alias("is_new"))
 
-    tagged = prep(corpus_sigs, False).unionByName(prep(new_sigs, True))
-    banded = tagged.select(
-        F.col(id_col),
-        "sig",
-        "is_new",
-        F.explode(_band_structs(n_perms, bands)).alias("band"),
-    ).select(id_col, "sig", "is_new", "band.band_idx", "band.band_hash")
-
-    grouped = (
-        banded.groupBy("band_idx", "band_hash")
-        .agg(
-            F.slice(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(F.col(id_col).alias("id"), "sig", "is_new")
-                    )
-                ),
-                1,
-                max_bucket,
-            ).alias("ms")
-        )
-        .filter(F.size("ms") > 1)
-    )
-    # chained-posexplode pair generation — see minhash_lsh_pairs for the
-    # measured codegen-compile rationale vs the nested-HOF form
-    pairs = (
-        grouped.select(
-            "band_idx", F.posexplode("ms").alias("i", "m"), F.col("ms")
-        )
-        .select("band_idx", "i", "m", F.posexplode("ms").alias("j", "n"))
-        .filter(F.col("i") < F.col("j"))
-        .select(
-            "band_idx",
-            F.col("m.id").alias("doc_a"),
-            F.col("n.id").alias("doc_b"),
-            (F.col("m.is_new") | F.col("n.is_new")).alias("keep"),
-            F.col("m.sig").alias("sig_a"),
-            F.col("n.sig").alias("sig_b"),
-        )
-    )
-    est = (
-        "aggregate(zip_with(sig_a, sig_b, (a, b) -> CASE WHEN a = b THEN 1 ELSE 0 END),"
-        f" 0, (acc, v) -> acc + v) / CAST({float(n_perms)} AS DOUBLE)"
-    )
-    # Same shuffle-free first-colliding-band dedup as minhash_lsh_pairs:
-    # cross-band repeats are filtered locally from the carried signatures
-    # instead of a global distinct over the pair set.
-    rpb = n_perms // bands
-    first_band = (
-        "band_idx = 0 OR NOT exists(sequence(0, band_idx - 1),"
-        f" b -> slice(sig_a, b * {rpb} + 1, {rpb})"
-        f" == slice(sig_b, b * {rpb} + 1, {rpb}))"
-    )
-    return (
-        pairs.filter(
-            F.col("keep")
-            & (F.col("doc_a") != F.col("doc_b"))
-            & F.expr(first_band)
-        )
-        .select("doc_a", "doc_b", F.expr(est).alias("est_jaccard"))
-    )
-
-
-def band_signatures(
-    sigs: DataFrame,
-    id_col: str = "doc_id",
-    n_perms: int = DEFAULT_PERMS,
-    bands: int = DEFAULT_BANDS,
-) -> DataFrame:
-    """Banded form of a signature store: one (band_idx, band_hash, id, sig)
-    row per band per document — the layout a 100 TB deployment PERSISTS
-    (bucketed/partitioned on (band_idx, band_hash)) so nightly dedup can
-    probe it without re-banding or re-shuffling history."""
-    s = sigs.select(
-        id_col, F.array(*[F.col(f"mh{p}") for p in range(n_perms)]).alias("sig")
-    )
-    return s.select(
-        F.col(id_col), "sig", F.explode(_band_structs(n_perms, bands)).alias("band")
-    ).select(id_col, "sig", "band.band_idx", "band.band_hash")
-
-
-def incremental_lsh_pairs_join(
-    store_banded: DataFrame,
-    new_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_perms: int = DEFAULT_PERMS,
-    bands: int = DEFAULT_BANDS,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """STORE-STREAMING incremental near-dup: the nightly shape where the
-    historical signature store never shuffles at all.
-
-    `incremental_minhash_lsh_pairs` unions old+new signatures and
-    re-bands + re-groups EVERYTHING — at 100 TB that re-shuffles the
-    entire store every night just to find the handful of buckets the new
-    batch touches. This form instead:
-
-    - bands only the NEW batch (tiny) and BROADCASTS it;
-    - probes the persisted banded store (`band_signatures` layout) with a
-      plain equi-join on (band_idx, band_hash) — the store side streams
-      through map tasks, zero exchange, and with the store bucketed on
-      the band key even the join-side partitioning is free;
-    - emits old×new pairs from the join and new×new pairs from the
-      in-batch `minhash_lsh_pairs`, each deduped to its first colliding
-      band locally (same `exists`-over-earlier-bands trick).
-
-    Output is set-identical to `incremental_minhash_lsh_pairs` on the
-    same inputs (pinned by `test_incremental_join_form_matches_group_form`)
-    — including id-overlapping inputs, since both forms drop (id, id)
-    self-pairs; disjoint store/batch ids remain the documented contract.
-    The group form's `max_bucket` safety cap has no equivalent here, so
-    degenerate mega-clusters should be capped upstream (keeper-only
-    store) or via salting."""
-    new_sigs = minhash_signatures(new_docs, text_col, id_col, n_perms, shingle_k)
-    new_banded = band_signatures(new_sigs, id_col, n_perms, bands).select(
-        F.col(id_col).alias("__new_id"),
-        F.col("sig").alias("__new_sig"),
-        "band_idx",
-        "band_hash",
-    )
-    rpb = n_perms // bands
-    est = (
-        "aggregate(zip_with(sig, __new_sig, (a, b) -> CASE WHEN a = b THEN 1 ELSE 0 END),"
-        f" 0, (acc, v) -> acc + v) / CAST({float(n_perms)} AS DOUBLE)"
-    )
-    first_band = (
-        "band_idx = 0 OR NOT exists(sequence(0, band_idx - 1),"
-        f" b -> slice(sig, b * {rpb} + 1, {rpb})"
-        f" == slice(__new_sig, b * {rpb} + 1, {rpb}))"
-    )
-    old_new = (
-        store_banded.join(
-            F.broadcast(new_banded), ["band_idx", "band_hash"]
-        )
-        .filter(F.col(id_col) != F.col("__new_id"))
-        .filter(F.expr(first_band))
-        .select(
-            F.least(F.col(id_col), F.col("__new_id")).alias("doc_a"),
-            F.greatest(F.col(id_col), F.col("__new_id")).alias("doc_b"),
-            F.expr(est).alias("est_jaccard"),
-        )
-    )
-    new_new = minhash_lsh_pairs(
-        new_docs, text_col, id_col, n_perms, bands, shingle_k
-    )
-    return old_new.unionByName(new_new)
+    both = tagged(corpus_sigs, False).unionByName(tagged(new_sigs, True))
+    keep = (F.col("m.is_new") | F.col("n.is_new")) & (F.col("m.id") != F.col("n.id"))
+    return _lsh_pairs(both, id_col, n_perms, bands, max_bucket, keep)
 
 
 def simhash_fingerprints(
@@ -571,6 +458,19 @@ def embedding_neardup_pairs(
     )
 
 
+def _bench_array(
+    benchmark: DataFrame, text_col: str, id_col: str, k: int
+) -> DataFrame:
+    """One row, ``__bench``: the benchmark corpus's distinct k-shingles
+    as a sorted array, for callers to broadcast against the corpus."""
+    return (
+        _shingles(benchmark, text_col, id_col, k)
+        .select("s")
+        .distinct()
+        .agg(F.sort_array(F.collect_list("s")).alias("__bench"))
+    )
+
+
 def contamination_scores(
     docs: DataFrame,
     benchmark: DataFrame,
@@ -583,39 +483,21 @@ def contamination_scores(
     (eval-set) corpus — the standard pre-training hygiene check that a
     training corpus doesn't contain the test set.
 
-    Scale shape: the benchmark's distinct shingles collapse to ONE
-    sorted-array row and broadcast (eval sets are tiny against a 100 TB
-    corpus — MMLU-sized benchmarks are a few MB of shingles), and each
-    corpus row scores itself with `array_intersect` against that array:
-    ZERO shuffle of the corpus, the whole check pipelined into the scan.
+    Scale shape: each corpus row scores itself with `array_intersect`
+    against the broadcast benchmark array (MMLU-sized benchmarks are a
+    few MB of shingles): ZERO shuffle of the corpus, the whole check
+    pipelined into the scan.
     A benchmark too large to broadcast would fall back to the exploded
-    shingle semi-join (one corpus shuffle). Documents with fewer than k
-    tokens drop out (no shingles — mirrored in the oracle). The score is
-    a double division of two exact ints, bit-identical across engines."""
-    idx_terms = ", ".join(f"t[i+{j}]" for j in range(k))
-    sh_arr = F.expr(
-        f"array_distinct(transform(sequence(0, size(t)-{k}),"
-        f" i -> concat_ws(' ', {idx_terms})))"
-    )
-    bench_arr = (
-        _shingles(benchmark, text_col, id_col, k)
-        .select("s")
-        .distinct()
-        .agg(F.sort_array(F.collect_list("s")).alias("__bench"))
-    )
-    # spread: array_intersect rebuilds a hash set of the broadcast
-    # benchmark array PER ROW, so the corpus projection is the heavy-fold
-    # class and a one-row-group fixture scans as ONE partition. Quiet-
-    # window interleaved A/B: 1.32 → 0.46 s (a first A/B during a
-    # co-tenant burst read the opposite and was adjudicated noise — the
-    # same burst inflated the untouched g*/j* block 4-8×; r14).
-    toks = (
-        spread(docs).select(id_col, F.split(F.col(text_col), " ").alias("t"))
-        .filter(F.size("t") >= k)
-        .select(id_col, sh_arr.alias("__sh"))
-    )
-    n_sh = F.size("__sh").cast("long")
-    n_hit = F.size(F.array_intersect(F.col("__sh"), F.col("__bench"))).cast("long")
+    shingle semi-join (one corpus shuffle). The score is a double division
+    of two exact ints, bit-identical across engines."""
+    bench_arr = _bench_array(benchmark, text_col, id_col, k)
+    # spread (in _tokens): array_intersect rebuilds a hash set of the
+    # broadcast benchmark array PER ROW, so the corpus projection is the
+    # heavy-fold class and a one-row-group fixture scans as ONE
+    # partition. Quiet-window interleaved A/B: 1.32 → 0.46 s.
+    toks = _shingle_arrays(_tokens(docs, text_col, id_col), id_col, k)
+    n_sh = F.size("arr").cast("long")
+    n_hit = F.size(F.array_intersect(F.col("arr"), F.col("__bench"))).cast("long")
     return toks.crossJoin(F.broadcast(bench_arr)).select(
         F.col(id_col),
         n_sh.alias("n_shingles"),
@@ -660,19 +542,8 @@ def passage_dedup(
     rejected for string ids (sibling `dedup_clusters` supports them via
     type dispatch; this encoding cannot) and row-guarded against the
     int64 overflow a snowflake-scale id would silently wrap into."""
-    from pyspark.sql.types import IntegralType
-
-    if not isinstance(docs.schema[id_col].dataType, IntegralType):
-        raise TypeError(
-            f"passage_dedup requires an integral {id_col!r} "
-            f"(got {docs.schema[id_col].dataType.simpleString()}); the "
-            "doc·max_pos+pos first-occurrence encoding has no string form"
-        )
-    id_bound = ((1 << 63) - 1) // max_pos
-    toks = spread(docs).select(
-        F.col(id_col), F.split(F.col(text_col), " ").alias("t")
-    )
-    passages = toks.select(
+    first = _first_occurrence(docs, id_col, max_pos, "passage_dedup")
+    passages = _tokens(docs, text_col, id_col).select(
         id_col,
         F.posexplode(
             F.expr(
@@ -686,20 +557,7 @@ def passage_dedup(
         "pos",
         "passage",
         F.md5(F.col("passage")).alias("__h"),
-        # assert_true keeps the overflow guard LIVE inside the __ord
-        # expression (a separate dropped column would be pruned away):
-        # it returns NULL when the bound holds and aborts with the
-        # message when a too-large id would wrap the encoding.
-        F.when(
-            F.assert_true(
-                F.col(id_col).between(0, id_bound),
-                F.lit(
-                    f"passage_dedup: {id_col} out of [0, {id_bound}] — "
-                    "doc*max_pos+pos would overflow BIGINT"
-                ),
-            ).isNull(),
-            F.col(id_col) * max_pos + F.col("pos"),
-        ).alias("__ord"),
+        first,
     # keyed feeds TWO different exchanges (the ownership aggregate and
     # the keep-flag join) — without a checkpoint the scan+explode+md5
     # pipeline runs once per reference (ReuseExchange can't fire across
@@ -822,6 +680,15 @@ def dedup_clusters(
         # round's first action, so it materializes the checkpoint as a
         # side effect — one job per round instead of an eager-checkpoint
         # job plus the probe's (A/B'd: same results, fewer jobs).
+        # The operator returns this checkpoint, and its size estimate is
+        # the pre-checkpoint plan's (60.9 MB for 45 label rows at
+        # sf0.001), above the 10 MB broadcast threshold: a consumer's
+        # join plans statically as a sort-merge join. llm10's final
+        # docs ⋈ labels left join (sampling.cluster_safe_split) relies on
+        # AQE to turn it back into a broadcast join once the labels'
+        # shuffle has measured the real size (1080 B at sf0.001); with
+        # AQE off it stays a sort-merge join, with one exchange on the
+        # docs side because the checkpoint keeps its hash(node) layout.
         new_labels = (
             labels.unionByName(contrib)
             .groupBy("node")
@@ -874,33 +741,29 @@ def exact_jaccard_verify(
     EXACT integer arithmetic — ``den·inter ≥ num·union`` — so no float
     ever decides a deletion (τ = thresh_num/thresh_den, default 0.95).
 
-    Scale shape: the expensive exact set intersection runs ONLY over the
-    candidate set, never all-pairs — shingles are first semi-joined down
-    to docs that appear in a candidate pair (at corpus scale the
-    candidate side is orders of magnitude smaller than the corpus), then
-    the intersection is one equi-join on (doc_b, shingle) against the
-    pair-fanned (doc_a, doc_b, shingle) rows and one (doc_a, doc_b)
-    count — every shuffle keyed on ids/hashes, skew bounded by the true
-    duplicate-cluster sizes the LSH stage already capped (max_bucket).
+    Scale shape: the exact set intersection runs ONLY over the candidate
+    set, never all-pairs (`_pair_shingle_intersection`).
 
     Emits (doc_a, doc_b, inter, union, exact_jaccard ROUNDED 6 for
     reporting, verified) — downstream clustering consumes ``verified``.
-
-    MATERIALIZATION: the candidate pair set is referenced four times below
-    (id extraction, fanout, intersection, final join) and its producer is
-    typically the whole MinHash+LSH pipeline — without a checkpoint that
-    pipeline would execute once PER REFERENCE. The pairs (2 ids + score)
-    and the candidate docs' distinct shingles (bounded by the candidate
-    set, not the corpus) are localCheckpointed — exactly what a
-    production run persists between its candidate and verify stages.
 
     PRECONDITION: every doc referenced by ``pairs`` must have at least
     ``shingle_k`` tokens — shorter docs have no shingle set, so their
     pairs are dropped by the size join (undefined Jaccard, not a 0).
     Candidates produced by `minhash_lsh_pairs` satisfy this by
     construction (signatures require ≥ shingle_k tokens)."""
+    return _jaccard(
+        _pair_shingle_intersection(docs, pairs, text_col, id_col, shingle_k),
+        thresh_num,
+        thresh_den,
+    )
+
+
+def _jaccard(overlap: DataFrame, thresh_num: int, thresh_den: int) -> DataFrame:
+    """(doc_a, doc_b, inter, union, exact_jaccard, verified) from a
+    `_pair_overlap` frame; ``verified`` is ``den·inter ≥ num·union``."""
     un = F.col("na") + F.col("nb") - F.col("inter")
-    return _pair_shingle_intersection(docs, pairs, text_col, id_col, shingle_k).select(
+    return overlap.select(
         "doc_a",
         "doc_b",
         F.col("inter").cast("long").alias("inter"),
@@ -910,56 +773,14 @@ def exact_jaccard_verify(
     )
 
 
-def _pair_shingle_intersection(
-    docs: DataFrame,
-    pairs: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_k: int,
-) -> DataFrame:
-    """Shared verify-funnel plumbing (exact_jaccard_verify /
-    exact_containment_verify): per candidate pair, the exact distinct-
-    shingle intersection size and both set sizes — (doc_a, doc_b, inter,
-    na, nb). Pairs and the candidate-sliced shingle relation are
-    localCheckpointed (each is referenced multiple times; the pair
-    producer is typically the whole LSH pipeline)."""
-    p = pairs.select("doc_a", "doc_b").localCheckpoint()
-    ids_a = p.select(F.col("doc_a").alias(id_col))
-    ids_b = p.select(F.col("doc_b").alias(id_col))
-    cand_ids = ids_a.union(ids_b).distinct()
-    # r14: ROW-LOCAL array form (the dd10 lesson applied to the verify
-    # funnel). The previous shape exploded candidate docs' shingles,
-    # paid a global .distinct() on the exploded relation (two exchanges
-    # for what array_distinct does inside the row), a sizes groupBy, and
-    # the fanned (pair x shingle) equi-join moving |candidates| x
-    # |shingles/doc| rows through two more exchanges. Here the candidate
-    # docs' DISTINCT shingle sets stay one ARRAY per doc (semi-join
-    # first, so the shingle build's CPU touches candidate docs only) and
-    # each pair computes inter/na/nb row-locally via array_intersect —
-    # the only shuffles left are the two id-keyed pair-to-array joins.
-    # Identical output: |array_intersect| == count of distinct shared
-    # shingles, sizes come free, zero-overlap pairs emit inter=0 from
-    # the empty intersection instead of the old left-join coalesce.
-    k = shingle_k
-    idx_terms = ", ".join(f"t[i+{j}]" for j in range(k))
-    arrs = (
-        spread(docs)
-        .select(id_col, F.split(F.col(text_col), " ").alias("t"))
-        .join(cand_ids, id_col, "left_semi")
-        .filter(F.size("t") >= k)
-        .select(
-            id_col,
-            F.array_distinct(
-                F.expr(
-                    f"transform(sequence(0, size(t)-{k}),"
-                    f" i -> concat_ws(' ', {idx_terms}))"
-                )
-            ).alias("arr"),
-        )
-        .localCheckpoint()  # referenced by both pair sides
-    )
+def _pair_overlap(pairs: DataFrame, arrs: DataFrame, id_col: str) -> DataFrame:
+    """(doc_a, doc_b, inter, na, nb): each (doc_a, doc_b) pair joined to
+    both documents' shingle arrays in ``arrs`` (id, arr), the distinct-
+    shingle intersection size and both set sizes computed row-locally
+    (|array_intersect| == count of distinct shared shingles; a
+    zero-overlap pair emits inter = 0)."""
     return (
-        p.join(
+        pairs.join(
             arrs.select(F.col(id_col).alias("doc_a"), F.col("arr").alias("__aa")),
             "doc_a",
         )
@@ -975,6 +796,31 @@ def _pair_shingle_intersection(
             F.size("__ab").alias("nb"),
         )
     )
+
+
+def _pair_shingle_intersection(
+    docs: DataFrame,
+    pairs: DataFrame,
+    text_col: str,
+    id_col: str,
+    shingle_k: int,
+) -> DataFrame:
+    """`_pair_overlap` over raw documents (exact_jaccard_verify /
+    exact_containment_verify). The shingle build is semi-joined down to
+    the documents that appear in a candidate pair, so its CPU touches
+    candidate docs only; the only shuffles left are the two id-keyed
+    pair-to-array joins. The pairs and the candidate docs' distinct
+    shingle arrays (bounded by the candidate set, not the corpus) are
+    localCheckpointed: each is referenced several times, and the pair
+    producer is typically the whole MinHash+LSH pipeline, which would
+    otherwise run once PER REFERENCE."""
+    p = pairs.select("doc_a", "doc_b").localCheckpoint()
+    ids_a = p.select(F.col("doc_a").alias(id_col))
+    ids_b = p.select(F.col("doc_b").alias(id_col))
+    cand_ids = ids_a.union(ids_b).distinct()
+    toks = _tokens(docs, text_col, id_col).join(cand_ids, id_col, "left_semi")
+    arrs = _shingle_arrays(toks, id_col, shingle_k).localCheckpoint()
+    return _pair_overlap(p, arrs, id_col)
 
 
 def exact_containment_verify(
@@ -996,11 +842,8 @@ def exact_containment_verify(
     default 0.9) is evaluated in exact integer arithmetic — no float
     decides a deletion — mirroring `exact_jaccard_verify`'s contract.
 
-    Same scale shape as the Jaccard funnel (shared
-    `_pair_shingle_intersection`): intersections run only over the
-    candidate set, every shuffle keyed on ids/shingles, skew bounded by
-    the LSH stage's max_bucket cap. Same PRECONDITION: docs in ``pairs``
-    must have ≥ shingle_k tokens."""
+    Same scale shape and PRECONDITION as `exact_jaccard_verify`: docs in
+    ``pairs`` must have ≥ shingle_k tokens."""
     return _pair_shingle_intersection(docs, pairs, text_col, id_col, shingle_k).select(
         "doc_a",
         "doc_b",
@@ -1037,30 +880,18 @@ def contamination_passages(
     no shingles and therefore cannot be contaminated — mirrored in the
     oracle.
 
-    Scale shape: the benchmark's distinct shingles collapse to ONE
-    sorted broadcast array (llm5's rationale: eval sets are MB-scale
-    against a 100 TB corpus); the passage split, per-passage shingles
-    and the overlap verdict are then a single per-row projection over
-    the token array — nested higher-order functions inside codegen, no
-    explode (the per-doc verdict never leaves the row). The only
-    corpus movement is `spread`'s CONDITIONAL repartition of the
-    compact doc rows when the input arrives under-partitioned — a
-    well-partitioned 100 TB corpus passes through with zero shuffle."""
-    bench_arr = (
-        _shingles(benchmark, text_col, id_col, k_shingle)
-        .select("s")
-        .distinct()
-        .agg(F.sort_array(F.collect_list("s")).alias("__bench"))
-    )
-    parts = ", ".join(f"ps[p][i+{j}]" for j in range(k_shingle))
-    shingles_of = (
-        f"transform(sequence(0, size(ps[p]) - {k_shingle}),"
-        f" i -> concat_ws(' ', {parts}))"
-    )
+    Scale shape: the broadcast benchmark array of llm5; the passage
+    split, per-passage shingles and the overlap verdict are then a
+    single per-row projection over the token array — nested higher-order
+    functions inside codegen, no explode (the per-doc verdict never
+    leaves the row). The only corpus movement is `spread`'s CONDITIONAL
+    repartition of the compact doc rows when the input arrives
+    under-partitioned."""
+    bench_arr = _bench_array(benchmark, text_col, id_col, k_shingle)
     hits_expr = F.expr(
         f"filter(sequence(0, size(ps) - 1),"
         f" p -> size(ps[p]) >= {k_shingle}"
-        f" AND arrays_overlap({shingles_of}, __bench))"
+        f" AND arrays_overlap({_shingle_sql(k_shingle, 'ps[p]')}, __bench))"
     )
     passages = F.expr(
         f"transform(sequence(0, cast(ceil(size(t) / {k_pass}.0) AS INT) - 1),"
@@ -1069,14 +900,10 @@ def contamination_passages(
     n_pass = F.size("ps").cast("long")
     n_cont = F.size("__hits").cast("long")
     return (
-        # spread: the per-row shingle/overlap work is CPU-bound and a
-        # one-file corpus arrives as one partition (same rationale as
-        # _shingles); docs is a narrow scan/filter frame at call sites.
         # NULL text is filtered up front: split(NULL) would otherwise
         # propagate a NULL token array into a descending sequence(0, -1)
         # and emit a nonsense 2-passage row for the document.
-        spread(docs.filter(F.col(text_col).isNotNull()))
-        .select(id_col, F.split(F.col(text_col), " ").alias("t"))
+        _tokens(docs.filter(F.col(text_col).isNotNull()), text_col, id_col)
         .crossJoin(F.broadcast(bench_arr))
         .select(id_col, passages.alias("ps"), "__bench")
         .select(id_col, "ps", hits_expr.alias("__hits"))
@@ -1114,9 +941,7 @@ def ngram_novelty(
     aggregate over the shingle hash — uniform keys); the eval side joins
     against it on the shingle string with a LEFT join, so membership is
     resolved in a single equi-join with no per-row set lookup; the final
-    per-doc aggregate is partial-combined. Documents with fewer than
-    ``shingle_k`` tokens have no shingle set and drop out (mirrored in
-    the oracle), same as every shingle operator here."""
+    per-doc aggregate is partial-combined."""
     train_sh = (
         _shingles(train_docs, text_col, id_col, k=shingle_k)
         .select("s")
@@ -1159,23 +984,9 @@ def _prefix_relation(
     guarantee."""
     from pyspark.sql import Window
 
-    k = shingle_k
-    idx_terms = ", ".join(f"t[i+{j}]" for j in range(k))
-    arrs = (
-        spread(docs)
-        .select(id_col, F.split(F.col(text_col), " ").alias("t"))
-        .filter(F.size("t") >= k)
-        .select(
-            id_col,
-            F.array_distinct(
-                F.expr(
-                    f"transform(sequence(0, size(t)-{k}),"
-                    f" i -> concat_ws(' ', {idx_terms}))"
-                )
-            ).alias("arr"),
-        )
-        .localCheckpoint(eager=False)  # feeds the exploded view AND verify
-    )
+    arrs = _shingle_arrays(
+        _tokens(docs, text_col, id_col), id_col, shingle_k
+    ).localCheckpoint(eager=False)  # feeds the exploded view AND verify
     sh = arrs.select(id_col, F.size("arr").alias("sz"), F.explode("arr").alias("s"))
     dfreq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     w_rank = Window.partitionBy(id_col).orderBy("df", "s")
@@ -1297,15 +1108,9 @@ def prefix_filter_join(
     generation + exact-Jaccard verification against the SAME
     (checkpointed) per-doc shingle-array relation — the standalone
     verify funnel (exact_jaccard_verify) would re-derive shingles from
-    the raw corpus, doubling the explode work. Verification joins each
-    candidate pair to the two docs' arrays and computes
-    ``size(array_intersect(...))`` ROW-LOCALLY: no (pair × shingle)
-    fan-out ever crosses a shuffle (the fanned form moves
-    |candidates| × |shingles/doc| rows through two exchanges; this form
-    moves |candidates| rows through the same two joins). Per-row memory
-    is two shingle arrays — the same doc-length bound the MinHash
-    signature projection carries. The keep decision is exact integer
-    arithmetic (den*inter >= num*union). Emits (doc_a, doc_b,
+    the raw corpus, doubling the explode work. Per-row memory of the
+    verify join is two shingle arrays — the same doc-length bound the
+    MinHash signature projection carries. Emits (doc_a, doc_b,
     exact_jaccard [6dp, reporting only])."""
     arrs, prefix = _prefix_relation(
         docs, thresh_num, thresh_den, shingle_k, text_col, id_col
@@ -1363,31 +1168,6 @@ def topk_similar_docs(
     )
 
 
-def _sig_from_arrs(arrs: DataFrame, id_col: str, n_perms: int) -> DataFrame:
-    """MinHash signature array derived from a precomputed per-doc DISTINCT
-    shingle-array relation ``(id, arr)`` (:func:`_prefix_relation`'s first
-    output) instead of a second raw-corpus scan. Values are IDENTICAL to
-    :func:`minhash_signatures` + array-pack: the per-shingle base hash is
-    the same md5 expression and ``array_min`` over the distinct set equals
-    the min over the multiset (min is duplicate-insensitive), while both
-    builders drop exactly the docs with < k tokens. Used where the caller
-    already pays for ``arrs`` (the dd12 ablation) so the corpus is scanned
-    and shingled ONCE for both the signature and the truth side."""
-    hs = F.expr(
-        "transform(arr, s -> cast(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT))"
-    )
-    mins = [
-        F.array_min(
-            F.expr(f"transform(__hs, h -> (h * {a}L + {b}L) % {MINHASH_PRIME}L)")
-        )
-        for a, b in _perm_consts(n_perms)
-    ]
-    return (
-        arrs.select(id_col, hs.alias("__hs"))
-        .select(id_col, F.array(*mins).alias("sig"))
-    )
-
-
 def _jaccard_verify(
     arrs: DataFrame,
     cands: DataFrame,
@@ -1395,27 +1175,12 @@ def _jaccard_verify(
     thresh_den: int,
     id_col: str,
 ) -> DataFrame:
-    """Exact-Jaccard verification of candidate pairs against the per-doc
-    shingle-array relation: join each pair to the two docs' arrays and
-    compute ``size(array_intersect(...))`` ROW-LOCALLY (no pair × shingle
-    fan-out crosses a shuffle), keep on exact integer arithmetic
-    ``den*inter >= num*union``. Shared by :func:`prefix_filter_join` and
-    :func:`lsh_band_ablation`."""
-    arr_a = arrs.select(F.col(id_col).alias("doc_a"), F.col("arr").alias("__aa"))
-    arr_b = arrs.select(F.col(id_col).alias("doc_b"), F.col("arr").alias("__ab"))
-    inter = F.size(F.array_intersect("__aa", "__ab"))
-    un = F.size("__aa") + F.size("__ab") - inter
+    """The verified (doc_a, doc_b, exact_jaccard) candidate pairs against
+    a precomputed shingle-array relation (id, arr)."""
     return (
-        cands.join(arr_a, "doc_a")
-        .join(arr_b, "doc_b")
-        .withColumn("__i", inter)
-        .withColumn("__u", un)
-        .filter(F.col("__i") * thresh_den >= F.col("__u") * thresh_num)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(F.col("__i") / F.col("__u"), 6).alias("exact_jaccard"),
-        )
+        _jaccard(_pair_overlap(cands, arrs, id_col), thresh_num, thresh_den)
+        .filter(F.col("verified"))
+        .select("doc_a", "doc_b", "exact_jaccard")
     )
 
 
@@ -1439,20 +1204,22 @@ def lsh_band_ablation(
     exact integer micro-units.
 
     Scale shape: this is a DIAGNOSTIC an operator runs on a corpus
-    sample, but nothing in the plan is sample-bound — signatures are
-    computed ONCE (a shuffle-free projection consumed exactly once by
-    the fused concat/explode below), each config's candidates come from
-    the same bounded-bucket group-and-pair shape as
-    :func:`minhash_lsh_pairs` (never |D|^2), the ground truth comes
-    from :func:`prefix_filter_join` (exact, candidates only), and the
-    scoring join + per-config rollup shuffle only pair ids. The one
-    scalar (|true pairs|) rides in via a broadcast 1-row aggregate.
+    sample, but nothing in the plan is sample-bound. The corpus is
+    scanned and shingled ONCE: the distinct shingle-array relation of
+    the prefix-filter truth side also feeds the signatures (the min over
+    the distinct set equals the min over the multiset, so they are
+    bit-identical to :func:`minhash_signatures`), and the md5 base hash
+    runs per DISTINCT shingle. Each config's candidates come from the
+    shared bounded-bucket group-and-pair stage (never |D|^2), the ground
+    truth is the :func:`prefix_filter_join` pair set (exact, candidates
+    only), and the scoring join + per-config rollup shuffle only pair
+    ids. The one scalar (|true pairs|) rides in via a broadcast 1-row
+    aggregate.
 
-    ORACLE CAVEAT (inherited from minhash_lsh_pairs, and sharper here):
-    ``max_bucket`` truncates each band bucket to its ``max_bucket``
-    smallest member ids, and the dd12 DuckDB oracle does NOT mirror the
-    cap (its cand CTE self-joins all bands uncapped). For dd2 a
-    truncated bucket merely loses redundant duplicate pairs; here the
+    ORACLE CAVEAT (sharper than dd2's): the dd12 DuckDB oracle does NOT
+    mirror the ``max_bucket`` cap (its cand CTE self-joins all bands
+    uncapped). For dd2 a truncated bucket merely loses redundant
+    duplicate pairs; here the
     truncated counts feed n_candidates/n_hit, so a >max_bucket bucket
     would bias precision/recall DIFFERENTLY per config and diverge from
     the oracle. Engines agree exactly iff every (config, band) bucket
@@ -1464,10 +1231,10 @@ def lsh_band_ablation(
     textbook curve.
 
     Cross-band duplicate candidates are removed with one distinct on
-    (bands, pair) — here the pair sets are the OUTPUT being measured,
-    so unlike minhash_lsh_pairs' first-colliding-band trick the dedup
-    must span configs anyway; one shuffle of the union is the cost of
-    scoring all configs in a single pass.
+    (bands, pair) — here the pair sets are the OUTPUT being measured, so
+    instead of the first-colliding-band rule the dedup must span configs
+    anyway; one shuffle of the union is the cost of scoring all configs
+    in a single pass.
 
     All configs' band keys are emitted from ONE explode and bucketed by
     ONE aggregation keyed (bands, band_idx, band_hash) — a per-config
@@ -1477,17 +1244,10 @@ def lsh_band_ablation(
     whole candidate side is scan → explode → one exchange. The query's
     residual cost is dominated by the TRUTH side, i.e. the dd10
     prefix-filter join it embeds (~2.3 of ~3.4 s at sf0.1)."""
-    # r14: ONE corpus scan + shingle build for BOTH sides. The signature
-    # side previously re-scanned and re-shingled the corpus via
-    # minhash_signatures while the truth side built the (checkpointed)
-    # distinct shingle-array relation; _sig_from_arrs derives the
-    # IDENTICAL signatures from that relation (min over the distinct set
-    # ≡ min over the multiset), so the split/concat_ws shingle pass runs
-    # once and the md5 base hash is computed per DISTINCT shingle.
     arrs, _prefix = _prefix_relation(
         docs, thresh_num, thresh_den, shingle_k, "text", "doc_id"
     )
-    sig = _sig_from_arrs(arrs, "doc_id", n_perms)
+    sig = _minhash(arrs, "doc_id", n_perms).select("doc_id", _sig(n_perms))
 
     # One source of truth for the band-key scheme: each config's structs
     # come from the SAME _band_structs the production LSH path (dd2/dd7/
@@ -1507,21 +1267,11 @@ def lsh_band_ablation(
         F.transform(_band_structs(n_perms, bands), _tag(bands))
         for bands in band_configs
     ]
-    grouped = (
-        sig.select("doc_id", F.explode(F.concat(*tagged)).alias("band"))
-        .select("doc_id", "band.bands", "band.band_idx", "band.band_hash")
-        .groupBy("bands", "band_idx", "band_hash")
-        .agg(
-            F.slice(
-                F.sort_array(F.collect_list("doc_id")), 1, max_bucket
-            ).alias("ms")
-        )
-        .filter(F.size("ms") > 1)
+    banded = sig.select("doc_id", F.explode(F.concat(*tagged)).alias("band")).select(
+        "doc_id", "band.bands", "band.band_idx", "band.band_hash"
     )
     cand = (
-        grouped.select("bands", F.posexplode("ms").alias("i", "m"), "ms")
-        .select("bands", "i", "m", F.posexplode("ms").alias("j", "n"))
-        .filter(F.col("i") < F.col("j"))
+        _bucket_pairs(banded, F.col("doc_id"), max_bucket, tags=("bands",))
         .select("bands", F.col("m").alias("doc_a"), F.col("n").alias("doc_b"))
         .distinct()
     )
@@ -1554,6 +1304,50 @@ def lsh_band_ablation(
             " ELSE (n_hit * 1000000) div n_true END"
         ).alias("recall_micro"),
     )
+
+
+def _window_hashes(toks: DataFrame, id_col: str, k: int) -> DataFrame:
+    """(id, pos, __h): md5 of every SLIDING k-token window of a `_tokens`
+    relation, exploded with its 0-based start; documents with < k tokens
+    have no windows."""
+    return toks.filter(F.size("t") >= k).select(
+        id_col,
+        F.posexplode(
+            F.expr(
+                f"transform(sequence(0, cast(size(t) AS INT) - {k}),"
+                f" i -> md5(concat_ws(' ', slice(t, i + 1, {k}))))"
+            )
+        ).alias("pos", "__h"),
+    )
+
+
+def _first_occurrence(docs: DataFrame, id_col: str, max_pos: int, op: str) -> Column:
+    """``__ord`` = doc·max_pos + pos, the single-BIGINT first-occurrence
+    order both engines min identically, over an in-scope ``pos``. Raises
+    TypeError at plan time for a non-integral ``id_col`` (the encoding
+    has no string form); assert_true keeps the overflow guard LIVE inside
+    the consumed expression (a separate dropped column would be pruned
+    away): it returns NULL when 0 <= id <= (2^63-1)/max_pos holds and
+    aborts when a too-large id would wrap the encoding."""
+    from pyspark.sql.types import IntegralType
+
+    if not isinstance(docs.schema[id_col].dataType, IntegralType):
+        raise TypeError(
+            f"{op} requires an integral {id_col!r} "
+            f"(got {docs.schema[id_col].dataType.simpleString()}); the "
+            "doc·max_pos+pos first-occurrence encoding has no string form"
+        )
+    id_bound = ((1 << 63) - 1) // max_pos
+    return F.when(
+        F.assert_true(
+            F.col(id_col).between(0, id_bound),
+            F.lit(
+                f"{op}: {id_col} out of [0, {id_bound}] — "
+                "doc*max_pos+pos would overflow BIGINT"
+            ),
+        ).isNull(),
+        F.col(id_col) * max_pos + F.col("pos"),
+    ).alias("__ord")
 
 
 def duplicate_spans(
@@ -1602,17 +1396,8 @@ def duplicate_spans(
     the corpus's distinct k-gram set (~2^-64 per pair at these
     cardinalities; at 100 TB switch the key to xxhash64(gram)||length or
     the raw string if collision-freedom must be unconditional)."""
-    toks = spread(docs).select(
-        id_col, F.split(F.col(text_col), " ").alias("t")
-    ).filter(F.size("t") >= k)
-    wins = toks.select(
-        id_col,
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, cast(size(t) AS INT) - {k}),"
-                f" i -> md5(concat_ws(' ', slice(t, i + 1, {k}))))"
-            )
-        ).alias("pos", "__h"),
+    wins = _window_hashes(
+        _tokens(docs, text_col, id_col), id_col, k
     ).localCheckpoint(eager=False)  # feeds the ownership aggregate, the
     # dup semi-join, AND the per-doc totals — different exchange children
     # defeat ReuseExchange, so without this the scan+explode+md5 pipeline
@@ -1736,9 +1521,7 @@ def longest_duplicate_substring(
     from pyspark.sql import Window
 
     rest_cap = max_depth - min_len
-    toks = spread(docs).select(
-        id_col, F.split(F.col(text_col), " ").alias("t")
-    ).filter(F.size("t") >= min_len)
+    toks = _tokens(docs, text_col, id_col).filter(F.size("t") >= min_len)
     # Suffix rows carry the seed and the capped extension as SPACE-
     # JOINED STRINGS, not token arrays: the in-bucket sort then compares
     # flat UTF8 bytes (memcmp-class) instead of invoking the per-element
@@ -1890,42 +1673,14 @@ def substring_dedup_rewrite(
     length, never a token-grain join). Same integral-id precondition
     and live overflow guard as :func:`passage_dedup`."""
     from pyspark.sql import Window
-    from pyspark.sql.types import IntegralType
 
-    if not isinstance(docs.schema[id_col].dataType, IntegralType):
-        raise TypeError(
-            f"substring_dedup_rewrite requires an integral {id_col!r} "
-            f"(got {docs.schema[id_col].dataType.simpleString()}); the "
-            "doc·max_pos+pos first-occurrence encoding has no string form"
-        )
-    id_bound = ((1 << 63) - 1) // max_pos
-    toks = spread(docs).select(
-        id_col, F.split(F.col(text_col), " ").alias("t")
+    first = _first_occurrence(docs, id_col, max_pos, "substring_dedup_rewrite")
+    toks = _tokens(docs, text_col, id_col)
+    wins = (
+        _window_hashes(toks, id_col, k)
+        .select(id_col, "pos", "__h", first)
+        .localCheckpoint(eager=False)  # feeds ownership AND the dup join
     )
-    wins = toks.filter(F.size("t") >= k).select(
-        id_col,
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, cast(size(t) AS INT) - {k}),"
-                f" i -> md5(concat_ws(' ', slice(t, i + 1, {k}))))"
-            )
-        ).alias("pos", "__h"),
-    ).select(
-        id_col,
-        "pos",
-        "__h",
-        # live overflow guard inside the consumed expression (dd8 pattern)
-        F.when(
-            F.assert_true(
-                F.col(id_col).between(0, id_bound),
-                F.lit(
-                    f"substring_dedup_rewrite: {id_col} out of "
-                    f"[0, {id_bound}] — doc*max_pos+pos would overflow"
-                ),
-            ).isNull(),
-            F.col(id_col) * max_pos + F.col("pos"),
-        ).alias("__ord"),
-    ).localCheckpoint(eager=False)  # feeds ownership AND the dup join
     owners = wins.groupBy("__h").agg(F.min("__ord").alias("__owner"))
     dup = (
         wins.join(owners, "__h")

@@ -643,23 +643,20 @@ def boilerplate_ngram_stats(
     row-local base. The r10 form instead inner-joined the FULL exploded
     relation to the FULL count relation and re-counted totals from it —
     two fact-scale exchanges this shape never needed."""
-    idx = ", ".join(f"t[i+{j}]" for j in range(k))
-    sh_arr = F.expr(
-        f"array_distinct(transform(sequence(0, size(t)-{k}),"
-        f" i -> concat_ws(' ', {idx})))"
+    from com_danliris_service_etl_spark.operators.dedup import (
+        _shingle_arrays,
+        _tokens,
     )
+
     base = (
-        spread(docs)
-        .select(id_col, F.split(F.col(text_col), " ").alias("t"))
-        .filter(F.size("t") >= k)
-        .select(id_col, sh_arr.alias("__sh"))
+        _shingle_arrays(_tokens(docs, text_col, id_col), id_col, k)
         # referenced twice (per-doc totals + the exploded stream) with
         # different exchange children, so ReuseExchange can't dedupe —
         # without this the scan+split+distinct pipeline runs twice
         # (dedup_clusters' pairs-input lesson)
         .localCheckpoint(eager=False)
     )
-    sh = base.select(id_col, F.explode("__sh").alias("s"))
+    sh = base.select(id_col, F.explode("arr").alias("s"))
     boiler_set = (
         sh.groupBy("s")
         .agg(F.count(F.lit(1)).alias("__nd"))
@@ -672,7 +669,7 @@ def boilerplate_ngram_stats(
         .agg(F.count(F.lit(1)).alias("__nb"))
     )
     return (
-        base.select(id_col, F.size("__sh").cast("long").alias("n_shingles"))
+        base.select(id_col, F.size("arr").cast("long").alias("n_shingles"))
         .join(boiler_per_doc, id_col, "left")
         .select(
             id_col,

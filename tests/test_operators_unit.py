@@ -1153,62 +1153,74 @@ def test_quality_checks_detect_violations(spark):
     ).collect()
     assert all(r.passed for r in ok)
 
-def test_incremental_join_form_matches_group_form(spark):
-    """The store-streaming join form (banded store probed by the broadcast
-    new batch — the layout where history never shuffles) must emit the
-    same pair set as the union+regroup incremental form."""
-    from com_danliris_service_etl_spark.operators.dedup import (
-        band_signatures,
-        incremental_lsh_pairs_join,
-        incremental_minhash_lsh_pairs,
-        minhash_signatures,
+def test_dedup_stages_live_once():
+    """Each near-dup stage is built by ONE function of operators/dedup.py
+    and operators/text.py, and every operator calls it: the k-shingle
+    array, the MinHash permutation mins, the band-bucket pair explode,
+    the est_jaccard expression and the first-colliding-band filter."""
+    import ast
+    import pathlib
+
+    ops = pathlib.Path(__file__).resolve().parents[1] / (
+        "com_danliris_service_etl_spark/operators"
     )
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    old = docs.filter(F.col("doc_id") < 250)
-    new = docs.filter(F.col("doc_id") >= 250)
-    store_sigs = minhash_signatures(old)
+    def code_strings(fn):
+        doc = fn.body[0] if isinstance(fn.body[0], ast.Expr) else None
+        return [
+            n.value
+            for n in ast.walk(fn)
+            if isinstance(n, ast.Constant) and isinstance(n.value, str)
+            and not (doc is not None and n is doc.value)
+        ]
 
-    want = {
-        (r.doc_a, r.doc_b): r.est_jaccard
-        for r in incremental_minhash_lsh_pairs(store_sigs, new).collect()
+    def calls(fn, name, first_arg=None):
+        for n in ast.walk(fn):
+            if not isinstance(n, ast.Call):
+                continue
+            f = n.func
+            called = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if called != name:
+                continue
+            if first_arg is None or (
+                n.args
+                and isinstance(n.args[0], ast.Constant)
+                and n.args[0].value == first_arg
+            ):
+                return True
+        return False
+
+    stages = {
+        # a shingle joins tokens i..i+k-1 (pmi_bigrams' struct pairs and
+        # the passage/window slices are other stages)
+        "shingles": lambda fn: any(
+            "transform(sequence(0, size(" in c for c in code_strings(fn)
+        )
+        and any("i -> concat_ws(' '" in c for c in code_strings(fn)),
+        "perm_mins": lambda fn: calls(fn, "_perm_consts"),
+        "bucket_pairs": lambda fn: calls(fn, "posexplode", "ms"),
+        "est_jaccard": lambda fn: any(
+            "CASE WHEN a = b THEN 1 ELSE 0 END" in c for c in code_strings(fn)
+        ),
+        "first_band": lambda fn: any(
+            "exists(sequence(0, band_idx - 1)" in c for c in code_strings(fn)
+        ),
     }
-    got = {
-        (r.doc_a, r.doc_b): r.est_jaccard
-        for r in incremental_lsh_pairs_join(band_signatures(store_sigs), new).collect()
+    builders = {k: set() for k in stages}
+    for module in ("dedup.py", "text.py"):
+        tree = ast.parse((ops / module).read_text())
+        for fn in tree.body:
+            if isinstance(fn, ast.FunctionDef):
+                for stage, builds in stages.items():
+                    if builds(fn):
+                        builders[stage].add(f"{module}:{fn.name}")
+    assert builders == {
+        "shingles": {"dedup.py:_shingle_sql"},
+        "perm_mins": {"dedup.py:_minhash"},
+        "bucket_pairs": {"dedup.py:_bucket_pairs"},
+        "est_jaccard": {"dedup.py:_lsh_pairs"},
+        "first_band": {"dedup.py:_lsh_pairs"},
     }
-    assert got == want
-    assert any(k[0] < 250 for k in got), "cross old-new pairs must appear"
-
-
-def test_incremental_join_form_store_side_never_shuffles(spark):
-    """Plan shape of the store probe: the only exchanges belong to the
-    (tiny) new-batch side — the banded store streams map-side through a
-    broadcast join."""
-    import contextlib
-    import io
-
-    from com_danliris_service_etl_spark.operators.dedup import (
-        band_signatures,
-        incremental_lsh_pairs_join,
-        minhash_signatures,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    old = docs.filter(F.col("doc_id") < 250)
-    new = docs.filter(F.col("doc_id") >= 250)
-    # the persisted store, as a materialized frame (stand-in for the
-    # bucketed table a deployment reads back)
-    store = band_signatures(minhash_signatures(old)).localCheckpoint()
-
-    # probe-only plan (old×new part): store ⋈ broadcast(new bands)
-    probe = incremental_lsh_pairs_join(store, new)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        probe.explain("formatted")
-    plan = buf.getvalue()
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
 
 
 def test_k_anon_fractional_band_width_still_suppresses(spark):

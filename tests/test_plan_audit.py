@@ -97,6 +97,13 @@ _GATED = [
     "llm21_repetition_stats",
     "sim11_rrf_hybrid",
     "sim12_truncated_recall",
+    # the dedup operators built on the shared near-dup stages that no
+    # entry above re-derives
+    "dd7_incremental_lsh",
+    "dd8_passage_dedup",
+    "dd9_containment",
+    "dd15_substring_rewrite",
+    "llm5_decontamination",
 ]
 
 

@@ -21,24 +21,27 @@ def _docs(spark):
 
 
 def test_sig_from_arrs_equals_minhash_signatures(spark):
-    """dd12's shared-scan rewrite: signatures derived from the DISTINCT
+    """dd12's shared-scan signatures: the MinHash stage over the DISTINCT
     shingle-array relation must be bit-identical to minhash_signatures
-    (array_min over the distinct set == min over the multiset)."""
+    over the multiset (array_min over the distinct set == min over the
+    multiset)."""
     from com_danliris_service_etl_spark.operators.dedup import (
         DEFAULT_PERMS,
-        _prefix_relation,
-        _sig_from_arrs,
+        _minhash,
+        _shingle_arrays,
+        _tokens,
         minhash_signatures,
     )
 
     docs = _docs(spark)
-    arrs, _pfx = _prefix_relation(docs, 3, 5, 3, "text", "doc_id")
+    arrs = _shingle_arrays(_tokens(docs, "text", "doc_id"), "doc_id", 3)
+    mh = [f"mh{p}" for p in range(DEFAULT_PERMS)]
     new = {
-        r.doc_id: r.sig
-        for r in _sig_from_arrs(arrs, "doc_id", DEFAULT_PERMS).collect()
+        r.doc_id: [r[c] for c in mh]
+        for r in _minhash(arrs, "doc_id", DEFAULT_PERMS).collect()
     }
     old = {
-        r.doc_id: [r[f"mh{p}"] for p in range(DEFAULT_PERMS)]
+        r.doc_id: [r[c] for c in mh]
         for r in minhash_signatures(docs).collect()
     }
     assert set(new) == set(old)  # same doc set (>= k tokens only)
@@ -47,20 +50,23 @@ def test_sig_from_arrs_equals_minhash_signatures(spark):
 
 
 def test_pair_shingle_intersection_array_form(spark):
-    """The verify funnel's row-local array rewrite: inter/na/nb must match
+    """The verify stage's row-local array form: inter/na/nb must match
     hand-computed distinct-shingle set arithmetic, including the
-    zero-overlap pair (previously the left-join coalesce-0 path)."""
+    zero-overlap pair."""
     from com_danliris_service_etl_spark.operators.dedup import (
-        _pair_shingle_intersection,
+        _pair_overlap,
+        _shingle_arrays,
+        _tokens,
     )
 
     docs = _docs(spark)
+    arrs = _shingle_arrays(_tokens(docs, "text", "doc_id"), "doc_id", 3)
     pairs = spark.createDataFrame(
         [(1, 2), (1, 3), (1, 4)], "doc_a long, doc_b long"
     )
     got = {
         (r.doc_a, r.doc_b): (r.inter, r.na, r.nb)
-        for r in _pair_shingle_intersection(docs, pairs, "text", "doc_id", 3).collect()
+        for r in _pair_overlap(pairs, arrs, "doc_id").collect()
     }
     # doc1/doc2: "a b c d e f" -> 4 distinct 3-shingles, all shared
     # doc3: "a b c x y z w" -> 5 shingles, shares only "a b c" with doc1
