@@ -56,7 +56,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from com_danliris_service_etl_spark.operators.partitioning import spread
+from com_danliris_service_etl_spark.operators.partitioning import conf_bytes, spread
 
 DEFAULT_PERMS = 16
 DEFAULT_BANDS = 4
@@ -328,10 +328,13 @@ def simhash_fingerprints(
     token-frequency-weighted bit votes; bit b of the fingerprint is 1 iff
     the sum of ±1 votes over all tokens is positive.
 
-    Single shuffle (groupBy doc, 16 map-side-combinable sums); near-dup
-    search over the fingerprints is a bit_count(xor) self-join, optionally
-    blocked on a fingerprint prefix."""
-    toks = spread(docs).select(
+    One shuffle: `spread` keyed on the doc id moves the (id, text) rows,
+    and the per-doc vote sums (16 map-side-combinable sums) then run in
+    that partitioning without an exchange of their own; on an input that
+    is already split (no spread), the groupBy's own doc-keyed exchange is
+    the one shuffle. Near-dup search over the fingerprints is a
+    bit_count(xor) self-join, optionally blocked on a fingerprint prefix."""
+    toks = spread(docs, id_col).select(
         id_col, F.explode(F.split(F.col(text_col), " ")).alias("tok")
     ).withColumn("h", F.substring(F.md5(F.col("tok")), 1, hex_chars))
 
@@ -617,7 +620,13 @@ def dedup_clusters(
     the operator dispatches ON THE ID TYPE: non-numeric ids use a
     changed-label count (one extra label⋈label join per round, still
     exact). Raises RuntimeError if max_iter rounds don't converge (a
-    diameter that large means the input is not a near-dup graph)."""
+    diameter that large means the input is not a near-dup graph).
+
+    The result carries a broadcast hint when its row count (read off the
+    round-1 probe; one count job on the non-numeric path) fits under the
+    broadcast threshold: consumers join it to the whole corpus
+    (cluster_safe_split, the keeper funnels) and would otherwise plan a
+    sort-merge join (`_broadcast_if_fits`)."""
     from pyspark.sql.types import NumericType
 
     # The symmetric edges union references `pairs` TWICE: without a
@@ -660,8 +669,9 @@ def dedup_clusters(
 
     def _sum_frame(frame: DataFrame, tag: int) -> DataFrame:
         return frame.agg(
-            F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
-        ).select(F.lit(tag).alias("t"), "s")
+            F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s"),
+            F.count(F.lit(1)).alias("n"),
+        ).select(F.lit(tag).alias("t"), "s", "n")
 
     # The convergence seed (sum over the init labels) is FUSED into round
     # 1's probe (r15): one collect returns BOTH sums — a union of the two
@@ -670,7 +680,7 @@ def dedup_clusters(
     # clusters). A diameter-≤2 graph still converges after a single loop
     # round. The non-numeric path needs no seed: it compares each round's
     # labels against the previous frame directly.
-    prev_sum = None
+    prev_sum = n_nodes = None
     first_probe_pending = numeric_ids
     for _ in range(max_iter):
         contrib = edges.join(labels, edges["b"] == labels["node"]).select(
@@ -680,15 +690,6 @@ def dedup_clusters(
         # round's first action, so it materializes the checkpoint as a
         # side effect — one job per round instead of an eager-checkpoint
         # job plus the probe's (A/B'd: same results, fewer jobs).
-        # The operator returns this checkpoint, and its size estimate is
-        # the pre-checkpoint plan's (60.9 MB for 45 label rows at
-        # sf0.001), above the 10 MB broadcast threshold: a consumer's
-        # join plans statically as a sort-merge join. llm10's final
-        # docs ⋈ labels left join (sampling.cluster_safe_split) relies on
-        # AQE to turn it back into a broadcast join once the labels'
-        # shuffle has measured the real size (1080 B at sf0.001); with
-        # AQE off it stays a sort-merge join, with one exchange on the
-        # docs side because the checkpoint keeps its hash(node) layout.
         new_labels = (
             labels.unionByName(contrib)
             .groupBy("node")
@@ -702,6 +703,9 @@ def dedup_clusters(
                 ).collect()
                 sums = {r["t"]: r["s"] for r in rows}
                 prev_sum, cur_sum = sums[0], sums[1]
+                # every round labels the same node set, so round 1's
+                # count is the result's row count
+                n_nodes = rows[0]["n"]
                 first_probe_pending = False
             else:
                 cur_sum = _label_sum(new_labels)
@@ -718,10 +722,29 @@ def dedup_clusters(
             )
         labels = new_labels
         if converged:
-            return labels.select(
+            out = labels.select(
                 F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id")
             )
+            return _broadcast_if_fits(out, n_nodes if numeric_ids else out.count())
     raise RuntimeError(f"dedup_clusters did not converge in {max_iter} rounds")
+
+
+def _broadcast_if_fits(df: DataFrame, n_rows: int) -> DataFrame:
+    """``df`` with a broadcast hint when ``n_rows`` rows of its schema fit
+    under spark.sql.autoBroadcastJoinThreshold, sized the way the planner
+    sizes a relation (8 bytes of row overhead plus each column's default
+    size); ``df`` unchanged otherwise, or when the threshold is off (-1).
+
+    For a localCheckpoint whose row count the caller has measured: the
+    checkpoint keeps the size estimate of the plan it replaced
+    (dedup_clusters' labels: 60.9 MB estimated for 45 rows at sf0.001),
+    so without the hint a consumer's join plans as a sort-merge join of
+    both sides and only AQE, after both shuffles, turns it into a
+    broadcast."""
+    threshold = conf_bytes(df.sparkSession, "spark.sql.autoBroadcastJoinThreshold", 10 * 2**20)
+    if threshold < 0 or n_rows * (8 + df._jdf.schema().defaultSize()) > threshold:
+        return df
+    return F.broadcast(df)
 
 
 def exact_jaccard_verify(

@@ -3,7 +3,8 @@
 A one-file parquet fixture scans as ONE partition, so any CPU-bound
 per-row projection over it (hashing, shingling, vector scoring) runs
 single-threaded. `spread` redistributes such inputs across the cluster
-and passes well-partitioned or composed plans through untouched.
+(on a whole-row hash, or on caller keys such as a document id) and
+passes well-partitioned or composed plans through untouched.
 """
 
 from __future__ import annotations
@@ -15,15 +16,55 @@ from pyspark.sql import functions as F
 SPREAD_BYTES = 16384
 
 
-def spread(df: DataFrame) -> DataFrame:
-    """Small corpora often arrive as one parquet file = one partition; the
-    per-token/shingle hashing downstream is CPU-bound, so spread rows across
-    the cluster first (one cheap shuffle of the compact doc rows buys full
-    parallelism for the expensive explode+hash stages). CONDITIONAL: a
-    well-partitioned input (≥ the cluster's parallelism) is passed through
-    untouched — an unconditional repartition(defaultParallelism) would
-    DOWN-partition a 100 TB input into a handful of giant partitions, the
-    opposite of its purpose.
+def conf_bytes(spark, key: str, default: int) -> int:
+    """A byte-size session conf ("10485760", "10m", "64KB", "-1") as an int."""
+    raw = str(spark.conf.get(key, str(default))).strip().lower()
+    for suf, mult in (("kb", 2**10), ("mb", 2**20), ("gb", 2**30),
+                      ("k", 2**10), ("m", 2**20), ("g", 2**30),
+                      ("b", 1)):
+        if raw.endswith(suf):
+            return int(raw[: -len(suf)]) * mult
+    return int(raw)
+
+
+def spread(df: DataFrame, *keys: str) -> DataFrame:
+    """Spread an under-partitioned scan across the cluster before its
+    CPU-bound per-row work.
+
+    Small corpora often arrive as one parquet file = one partition, and
+    the per-token/shingle hashing downstream is CPU-bound: one cheap
+    shuffle of the compact rows buys full parallelism for the expensive
+    stages. Two forms:
+
+    - ``spread(df)``: hash-partition on a synthetic key over the WHOLE
+      row. For row-local work with no per-key consumer downstream, or
+      when the caller needs every column of the input anyway.
+    - ``spread(df, *keys)``: hash-partition on ``keys``
+      (``repartition(tgt, *keys)``). Key on the id when the pipeline is
+      per-document (or per-entity): a downstream ``groupBy(doc_id, ...)``
+      or doc-id join is already satisfied by this partitioning, so it
+      adds no exchange of its own (simhash's per-doc vote sums, the
+      (doc, token) counts of repetition_stats); and because the exchange
+      references only the key, columns the pipeline does not use are
+      pruned below it, so the shuffle moves (id, text), not the whole
+      row. The whole-row hash references every column and so blocks that
+      pruning. Keys with few distinct values (or one hot value) make
+      skewed partitions: key only on a near-unique id.
+
+    Both forms are deterministic under task retries: a row's partition
+    is a hash of its own values, never of its position or of rand(), so
+    a recomputed map task sends every row where the first attempt did.
+
+    CONDITIONAL, in both forms: the input passes through untouched when
+    (1) its plan is not scan-rooted (`_is_scan_rooted`: a join,
+    aggregate, window or sort upstream already partitioned it to
+    `spark.sql.shuffle.partitions`, and a caller wanting a different
+    layout repartitions explicitly), (2) it is tiny (the target
+    partition count, one per SPREAD_BYTES of input capped at the core
+    count, is <= 1), or (3) the scan already splits into at least the
+    target count. An unconditional repartition(defaultParallelism) would
+    DOWN-partition a 100 TB input into a handful of giant partitions,
+    the opposite of its purpose.
 
     The probe REPLAYS Spark's own split planning over the analyzed plan's
     size statistic instead of converting to an RDD:
@@ -35,16 +76,12 @@ def spread(df: DataFrame) -> DataFrame:
     maxSplit = min(maxPartitionBytes, max(openCostInBytes, size/par)),
     estParts = ceil(size/maxSplit); for big inputs Spark targets `par`
     splits by construction so the estimate saturates exactly when the
-    real planner does, and for one-small-file inputs both give 1. The
-    probe is still GUARDED by `_is_scan_rooted`: a composed plan
-    (join/aggregate/window/sort upstream) is passed through untouched —
-    its exchange already partitioned it to `spark.sql.shuffle.partitions`,
-    and a caller wanting different layout repartitions explicitly. Any
+    real planner does, and for one-small-file inputs both give 1. Any
     stats failure falls back to the exact RDD probe."""
-    sc = df.sparkSession.sparkContext
+    spark = df.sparkSession
     if not _is_scan_rooted(df):
         return df
-    par = sc.defaultParallelism
+    par = spark.sparkContext.defaultParallelism
     try:
         # FilePartition planning splits the RELATION'S raw bytes, but the
         # ROOT's sizeInBytes is scaled through Project/Filter by the basic
@@ -58,20 +95,9 @@ def spread(df: DataFrame) -> DataFrame:
             int(leaves.apply(i).stats().sizeInBytes())
             for i in range(leaves.size())
         )
-        conf = df.sparkSession.conf
-
-        def _bytes(key: str, default: int) -> int:
-            raw = str(conf.get(key, str(default))).strip().lower()
-            for suf, mult in (("kb", 2**10), ("mb", 2**20), ("gb", 2**30),
-                              ("k", 2**10), ("m", 2**20), ("g", 2**30),
-                              ("b", 1)):
-                if raw.endswith(suf):
-                    return int(raw[: -len(suf)]) * mult
-            return int(raw)
-
         max_split = min(
-            _bytes("spark.sql.files.maxPartitionBytes", 128 * 2**20),
-            max(_bytes("spark.sql.files.openCostInBytes", 4 * 2**20),
+            conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 * 2**20),
+            max(conf_bytes(spark, "spark.sql.files.openCostInBytes", 4 * 2**20),
                 max(size // par, 1)),
         )
         est_parts = -(-size // max_split)
@@ -94,17 +120,18 @@ def spread(df: DataFrame) -> DataFrame:
     tgt = par if size is None else min(par, max(1, -(-size // SPREAD_BYTES)))
     if est_parts >= tgt or tgt <= 1:
         return df
+    if keys:
+        return df.repartition(tgt, *keys)
     # HASH-partition on a deterministic synthetic key instead of the old
     # keyless round-robin `repartition(tgt)`. Round-robin pays a local
     # SORT of the map side first (spark.sql.execution.sortBeforeRepartition,
     # needed so task retries reproduce the row→partition assignment —
     # SPARK-23207) and that sort runs on the very under-partitioned input
     # spread exists to fix: measured 0.75 s vs 0.37 s for the same 600k-row
-    # one-partition redistribution (r14). xxhash64 over the whole row is
-    # deterministic under retries (guide §2.5: derive synthetic keys
-    # deterministically, never from rand()), and 100×tgt distinct values
-    # spread evenly across tgt partitions. Exact-duplicate rows co-locate,
-    # which every downstream here tolerates (their keyed exchanges re-hash).
+    # one-partition redistribution (r14). 100×tgt distinct values of the
+    # whole-row xxhash64 spread evenly across tgt partitions. Exact-duplicate
+    # rows co-locate, which every downstream here tolerates (their keyed
+    # exchanges re-hash).
     par_key = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(100 * tgt))
     return df.repartition(tgt, par_key)
 

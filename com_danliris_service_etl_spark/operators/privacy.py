@@ -16,6 +16,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from com_danliris_service_etl_spark.operators.partitioning import spread
+
 
 def pseudonymize_k_anon(
     df: DataFrame,
@@ -74,10 +76,12 @@ def pii_redact(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """PII scrub pass: count and redact email addresses and international
-    phone numbers. Pure per-row Catalyst regex — no UDF, no shuffle; at
-    100 TB this pipelines into the scan and the redacted text streams
-    straight to the sink. Patterns are backslash-free so the same literal
-    means the same regex in Java (Spark) and RE2 (DuckDB oracle).
+    phone numbers. Pure per-row Catalyst regex — no UDF; at 100 TB this
+    pipelines into the scan and the redacted text streams straight to
+    the sink (a one-file input is first spread on the id, one exchange,
+    so the regexes run on every core). Patterns are backslash-free so
+    the same literal means the same regex in Java (Spark) and RE2
+    (DuckDB oracle).
 
     Output keeps the redacted text as an md5 digest (the driver's
     canonicalizer hashes values; emitting megabytes of redacted text per
@@ -91,7 +95,7 @@ def pii_redact(
         F.lit(PII_PHONE),
         F.lit("<PHONE>"),
     )
-    return df.select(
+    return spread(df, id_col).select(
         F.col(id_col),
         n_emails.alias("n_emails"),
         n_phones.alias("n_phones"),

@@ -38,7 +38,9 @@ def token_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     """Whitespace token count, char count, distinct-token count, mean token
     length, plus the BPE-ish counts: regex pre-token count and estimated
     subword count (ceil(len/4) per pre-token). All narrow per-row codegen
-    expressions — pipelined into the scan at any scale."""
+    expressions; a one-file corpus is spread on the doc id first so they
+    run on every core (pass-through, pipelined into the scan, on an
+    input that already splits)."""
     toks = F.split(F.col(text_col), " ")
     total_len = F.expr(
         f"aggregate(split({text_col}, ' '), 0L, (acc, t) -> acc + length(t))"
@@ -46,7 +48,7 @@ def token_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     # Pattern passed as a Column literal — a SQL-string literal would eat
     # the \s escape (Spark SQL strings process backslashes; DuckDB's don't).
     pieces = F.regexp_extract_all(F.col(text_col), F.lit(BPE_SPLIT_RE), F.lit(0))
-    return docs.select(
+    return spread(docs, id_col).select(
         id_col,
         F.size(toks).alias("n_tokens"),
         F.length(text_col).alias("n_chars_calc"),
@@ -97,9 +99,10 @@ def quality_col(text_col: str = "text") -> Column:
 def quality_score(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Heuristic quality features + aggregate score:
     stopword ratio (fluency proxy), distinct-token ratio (repetition
-    penalty), and mean token length (gibberish guard)."""
+    penalty), and mean token length (gibberish guard). Per-row; the
+    corpus is spread on the doc id first (see token_stats)."""
     stop_ratio, distinct_ratio, avg_len = _quality_parts(text_col)
-    return docs.select(
+    return spread(docs, id_col).select(
         id_col,
         F.round(stop_ratio, 6).alias("stopword_ratio"),
         F.round(distinct_ratio, 6).alias("distinct_ratio"),
@@ -137,11 +140,14 @@ def detect_language(
     alphabetical tiebreak (deterministic). ``lang_col`` names an optional
     ground-truth column carried through as ``lang_actual`` for accuracy
     audits — most real corpora don't have one, and a hardcoded reference
-    to it would fail at plan time, so it is skipped when absent."""
+    to it would fail at plan time, so it is skipped when absent.
+    Per-row; the corpus is spread on the doc id first (see token_stats)."""
     cols = [F.col(id_col)]
     if lang_col and lang_col in docs.columns:
         cols.append(F.col(lang_col).alias("lang_actual"))
-    return docs.select(*cols, language_pred_col(text_col).alias("lang_pred"))
+    return spread(docs, id_col).select(
+        *cols, language_pred_col(text_col).alias("lang_pred")
+    )
 
 
 # Rolling-hash parameters: Rabin-Karp polynomial over codepoints, Horner
@@ -293,12 +299,21 @@ def repetition_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc
     and degenerate (looping) documents from a training corpus.
 
     The distinct-token and bigram ratios are pure per-row array
-    expressions (codegen, no shuffle). The top-token count is computed
-    relationally — explode → (doc, token) count → per-doc max — i.e. one
-    map-side-combinable shuffle keyed on (doc_id, token); the
-    expression-only alternative (count each distinct token with a
-    filter() scan) is O(distinct·n) per row, which a pathological
-    100 MB single-token document would turn quadratic."""
+    expressions (codegen). The top-token count is computed relationally —
+    explode → (doc, token) count → per-doc max; the expression-only
+    alternative (count each distinct token with a filter() scan) is
+    O(distinct·n) per row, which a pathological 100 MB single-token
+    document would turn quadratic.
+
+    Shuffles: both branches start from one `spread` keyed on the doc id.
+    Hash(doc_id) already satisfies the (doc, token) and doc aggregates,
+    so on a one-file corpus the spread is the only exchange that runs
+    (the static plan lists it once per branch; AQE runs it once and
+    reuses it), and the per-doc top counts broadcast into the join. On
+    an input that already splits, spread passes through and the
+    aggregates shuffle on (doc, token) and then doc. Carrying the ratio
+    columns through the aggregates instead of joining measured ~5%
+    slower at sf0.1: the wider grouping keys cost more than the join."""
     toks = F.split(F.col(text_col), " ")
     n = F.size(toks)
     # Bigram array via ONE zip_with pass over two slices of the
@@ -316,7 +331,8 @@ def repetition_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc
         "         slice(__tk, 2, size(__tk) - 1),"
         "         (x, y) -> concat(x, ' ', y))"
     )
-    per_row = docs.select(
+    base = spread(docs, id_col)
+    per_row = base.select(
         F.col(id_col), F.col(text_col), toks.alias("__tk")
     ).select(
         F.col(id_col),
@@ -326,7 +342,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc
         F.size(F.array_distinct(bigrams)).alias("_n_bi_distinct"),
     )
     top = (
-        docs.select(F.col(id_col), F.explode(toks).alias("tok"))
+        base.select(F.col(id_col), F.explode(toks).alias("tok"))
         .groupBy(id_col, "tok")
         .agg(F.count(F.lit(1)).alias("tf"))
         .groupBy(id_col)
@@ -354,14 +370,18 @@ def inverted_index(docs: DataFrame, text_col: str = "text", id_col: str = "doc_i
     list ``doc:tf,doc:tf,…`` (sorted by doc id).
 
     Scale shape: one (doc, term) shuffle with map-side combine for tf,
-    then one (term) shuffle that materializes each term's postings. The
+    then one (term) shuffle that materializes each term's postings. On
+    a one-file corpus the doc-keyed `spread` replaces the first: the tf
+    aggregate runs in its partitioning, on every core. The
     md5 digest stands in for writing the posting payload; a real index
     writer would range-partition terms and spill long postings in
     doc-id-sorted runs — the aggregation key and sort order here are
     exactly those. Hot terms (stopwords) are the skew risk at 100 TB:
     cap or stoplist them upstream, or salt the term key (operators/
     skew.py) — the digest is order-canonical either way."""
-    toks = docs.select(F.col(id_col).alias("doc"), F.explode(F.split(F.col(text_col), " ")).alias("term"))
+    toks = spread(docs, id_col).select(
+        F.col(id_col).alias("doc"), F.explode(F.split(F.col(text_col), " ")).alias("term")
+    )
     tf = toks.groupBy("term", "doc").agg(F.count(F.lit(1)).alias("tf"))
     postings = F.array_join(
         F.transform(
@@ -770,9 +790,11 @@ def vocab_coverage(
     The vocabulary itself is a bounded global top-k
     (``orderBy().limit(V)`` — dimension-sized, broadcast into the
     probe), so the membership test is a map-side LEFT join: no shuffle
-    of the corpus beyond the one (doc, token) aggregate."""
+    of the corpus beyond the one (doc, token) aggregate, and on a
+    one-file corpus the doc-keyed `spread` below the checkpoint."""
     tokens = (
-        docs.filter(F.col(text_col).isNotNull())
+        spread(docs, id_col)
+        .filter(F.col(text_col).isNotNull())
         .select(id_col, F.explode(F.split(F.col(text_col), " ")).alias("__tok"))
         .filter(F.col("__tok") != "")
         .localCheckpoint(eager=False)

@@ -389,9 +389,10 @@ def pv2_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrub (`operators/privacy.py::pii_redact`) over the corpus with
     deterministically injected emails (doc_id % 3 == 0) and phone numbers
     (doc_id % 5 == 0): match counts, flag, and the digest of the redacted
-    text. Pure Catalyst regex — pipelines into the scan, zero shuffle;
-    the backslash-free patterns mean the same literal is the same regex
-    in Java and RE2."""
+    text. Pure Catalyst regex after one doc-keyed spread exchange (the
+    one-file corpus would otherwise run it on one core); the
+    backslash-free patterns mean the same literal is the same regex in
+    Java and RE2."""
     docs = _t(spark, sf_dir, "documents")
     aug = docs.select(
         "doc_id",

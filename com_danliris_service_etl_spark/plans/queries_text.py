@@ -203,8 +203,9 @@ def txt5_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def txt6_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition features (top-token / dup-unigram /
-    dup-bigram fractions) + composite flag. One (doc, token) shuffle with
-    map-side combine; the ratio features are pure codegen."""
+    dup-bigram fractions) + composite flag. One doc-keyed exchange (the
+    spread) feeds the ratio features and the (doc, token) counts; the
+    aggregates add none."""
     return tx.repetition_stats(_t(spark, sf_dir, "documents"))
 
 
@@ -223,7 +224,8 @@ def txt6_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def txt7_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-index dictionary: per-term document frequency, collection
     frequency, and an order-canonical postings digest. Two shuffles —
-    (doc, term) tf with map-side combine, then (term)."""
+    the doc-keyed spread (the tf aggregate runs in its partitioning),
+    then (term)."""
     return tx.inverted_index(_t(spark, sf_dir, "documents"))
 
 

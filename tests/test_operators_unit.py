@@ -1456,6 +1456,96 @@ def test_spread_skips_probe_on_composed_frames(spark):
     )
 
 
+def _formatted(df) -> str:
+    import contextlib
+    import io
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def _shuffles(plan: str) -> int:
+    # "BroadcastExchange (" contains "Exchange (": count tree lines only
+    return plan.count("Exchange (") - plan.count("BroadcastExchange (")
+
+
+def _one_file_docs(spark):
+    from tests.conftest import SF_DIR
+
+    return spark.read.parquet(f"{SF_DIR}/documents.parquet")
+
+
+def test_keyed_spread_hash_partitions_on_the_key(spark):
+    """`spread(df, "doc_id")` on a one-file scan plans one exchange,
+    hash-partitioned on the key rather than on the whole-row hash."""
+    from com_danliris_service_etl_spark.operators.partitioning import spread
+
+    docs = _one_file_docs(spark)
+    plan = _formatted(spread(docs, "doc_id"))
+    assert _shuffles(plan) == 1, plan
+    assert "hashpartitioning(doc_id#" in plan, plan
+    assert "xxhash64" not in plan, plan
+
+
+def test_keyed_spread_satisfies_downstream_doc_groupbys(spark):
+    """groupBy(doc_id, tok) and then groupBy(doc_id) over a doc-keyed
+    spread run in its partitioning: the spread is the only exchange."""
+    from com_danliris_service_etl_spark.operators.partitioning import spread
+
+    docs = _one_file_docs(spark)
+    per_doc = (
+        spread(docs, "doc_id")
+        .select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
+        .groupBy("doc_id", "tok")
+        .count()
+        .groupBy("doc_id")
+        .agg(F.max("count").alias("top"))
+    )
+    assert _shuffles(_formatted(per_doc)) == 1
+
+
+def test_keyed_spread_prunes_unused_columns_below_the_exchange(spark):
+    """The keyed exchange references only its key, so the scan reads just
+    the columns the pipeline uses (the whole-row hash reads them all)."""
+    from com_danliris_service_etl_spark.operators.partitioning import spread
+
+    docs = _one_file_docs(spark)
+    assert len(docs.columns) > 2
+    plan = _formatted(spread(docs, "doc_id").select("doc_id", F.length("text")))
+    read_schema = plan.split("ReadSchema: ")[1].split("\n")[0]
+    assert read_schema == "struct<doc_id:bigint,text:string>", plan
+
+
+def test_keyed_spread_passes_tiny_and_split_inputs_through(spark, tmp_path):
+    """The keyed form keeps the whole-row form's pass-through rules: an
+    input under SPREAD_BYTES, and a scan that already splits into the
+    target count, come back as the same frame in both forms."""
+    from com_danliris_service_etl_spark.operators.partitioning import (
+        SPREAD_BYTES,
+        spread,
+    )
+
+    docs = _one_file_docs(spark)
+    docs.limit(5).write.parquet(str(tmp_path / "tiny"))
+    tiny = spark.read.parquet(str(tmp_path / "tiny"))
+    leaves = tiny._jdf.queryExecution().analyzed().collectLeaves()
+    assert int(leaves.apply(0).stats().sizeInBytes()) < SPREAD_BYTES
+    assert spread(tiny) is tiny
+    assert spread(tiny, "doc_id") is tiny
+
+    size = int(docs._jdf.queryExecution().analyzed().stats().sizeInBytes())
+    par = spark.sparkContext.defaultParallelism
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(-(-size // par)))
+        assert spread(docs) is docs
+        assert spread(docs, "doc_id") is docs
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
 def test_spread_probe_uses_leaf_not_projected_stats(spark, tmp_path):
     """r12 advice: the analyzed ROOT's sizeInBytes is scaled through
     Project by the basic stats visitor, so a narrow projection over a

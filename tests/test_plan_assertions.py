@@ -453,3 +453,39 @@ def test_e6_posexplode_shuffle_free(spark):
     plan = _plan(REGISTRY["e6_posexplode"][0](spark, SF))
     assert "Exchange" not in plan, plan
     assert "Generate" in plan, plan
+
+
+def test_txt6_runs_one_doc_keyed_exchange(spark):
+    """repetition_stats' two branches (per-row ratios, per-doc top token
+    count) both start from one doc-keyed spread. The static plan shows
+    that exchange once per branch; executed, the second is a
+    ReusedExchange and the (doc, token) and doc aggregates add none."""
+    from com_danliris_service_etl_spark.plans.registry import REGISTRY, load_all
+
+    load_all()
+    df = REGISTRY["txt6_repetition_stats"][0](spark, SF)
+    df.collect()
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    # AQE prints the initial plan after the final one: read the final part
+    assert "Final Plan" in executed, executed
+    final = executed.split("Initial Plan")[0]
+    shuffles = [
+        ln for ln in final.splitlines() if ln.lstrip(" :+-").startswith("Exchange ")
+    ]
+    assert len(shuffles) == 1, final
+    assert "hashpartitioning(doc_id" in shuffles[0], final
+    assert "ReusedExchange" in final, final
+
+
+def test_dedup_cluster_labels_broadcast_into_the_split(spark):
+    """llm10: the converged cluster labels are a localCheckpoint whose
+    size estimate is the pre-checkpoint plan's; dedup_clusters hints
+    them to broadcast when their measured row count fits under the
+    broadcast threshold, so the corpus never shuffles for the split."""
+    from com_danliris_service_etl_spark.plans.registry import REGISTRY, load_all
+
+    load_all()
+    plan = _plan(REGISTRY["llm10_leakage_safe_split"][0](spark, SF))
+    assert "BroadcastHashJoin LeftOuter BuildRight" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert plan.count("Exchange (") == plan.count("BroadcastExchange ("), plan

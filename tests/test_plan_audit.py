@@ -104,6 +104,11 @@ _GATED = [
     "dd9_containment",
     "dd15_substring_rewrite",
     "llm5_decontamination",
+    # the doc-keyed spread: dd3's per-doc vote sums run in the spread's
+    # partitioning (one shuffle); txt6's two branches list the same spread
+    # exchange once each (executed once, pinned in test_plan_assertions)
+    "dd3_simhash",
+    "txt6_repetition_stats",
 ]
 
 
@@ -118,6 +123,23 @@ def test_plan_shape_not_regressed(spark, name):
             f"{name}: {metric} regressed {base[metric]} -> {cur[metric]} — "
             "review the plan; if intentional, regenerate PLAN_AUDIT.json"
         )
+
+
+def test_plan_audit_tool_rederives_only_named_entries(spark, tmp_path, monkeypatch):
+    """`tools/plan_audit.py NAME` re-derives the named entry and writes
+    every other entry back byte-identical."""
+    import tools.plan_audit as pa
+
+    # two stale entries; only the named one may be re-derived
+    audit = dict(BASELINE)
+    audit["a0_pricing_summary"] = {m: 77 for m in BASELINE["a0_pricing_summary"]}
+    audit["a5_row_count"] = {m: 99 for m in BASELINE["a5_row_count"]}
+    out = tmp_path / "PLAN_AUDIT.json"
+    out.write_text(json.dumps(audit, indent=1, sort_keys=True))
+    monkeypatch.setattr(pa, "OUT", str(out))
+    assert pa.main(["a5_row_count"]) == 0
+    audit["a5_row_count"] = BASELINE["a5_row_count"]
+    assert out.read_text() == json.dumps(audit, indent=1, sort_keys=True)
 
 
 # Queries ALLOWED to carry an Exchange SinglePartition, with the reason

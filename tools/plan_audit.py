@@ -8,7 +8,12 @@ query gained a shuffle, a sort-merge join, or a cartesian product — the
 regressions that silently turn a 100 TB plan into a re-shuffle storm.
 
 Regenerate (after an INTENTIONAL plan change, with the diff reviewed):
-    python tools/plan_audit.py
+    python tools/plan_audit.py                 # every query
+    python tools/plan_audit.py NAME [NAME ...] # only these entries
+
+With names, only those entries are re-derived; every other entry is
+written back exactly as it was read, so the diff shows the named
+queries alone.
 """
 
 from __future__ import annotations
@@ -47,20 +52,32 @@ def plan_counts(df) -> dict[str, int]:
     }
 
 
-def main() -> int:
+def main(names: list[str]) -> int:
     from com_danliris_service_etl_spark.plans.registry import load_all
     from com_danliris_service_etl_spark.session import get_session
 
-    spark = get_session(app_name="plan-audit", shuffle_partitions=4)
+    registry = load_all()
+    unknown = sorted(set(names) - set(registry))
+    if unknown:
+        print(f"not registry queries: {unknown}", file=sys.stderr)
+        return 2
     audit: dict[str, dict[str, int]] = {}
-    for name, (fn, _sql) in sorted(load_all().items()):
-        audit[name] = plan_counts(fn(spark, SF_DIR))
+    if names:
+        with open(OUT) as f:
+            audit = json.load(f)
+    # Pin the cores as well as the shuffle width: some plans depend on
+    # both (spread sizes to the core count, triangle_counts repartitions
+    # when shuffle partitions < cores), and the snapshot must not change
+    # with the host it is taken on.
+    spark = get_session(app_name="plan-audit", master="local[4]", shuffle_partitions=4)
+    for name in sorted(names or registry):
+        audit[name] = plan_counts(registry[name][0](spark, SF_DIR))
         print(name, audit[name])
     with open(OUT, "w") as f:
         json.dump(audit, f, indent=1, sort_keys=True)
-    print(f"wrote {OUT} ({len(audit)} queries)")
+    print(f"wrote {OUT} ({len(names or registry)} of {len(audit)} queries re-derived)")
     return 0
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))
