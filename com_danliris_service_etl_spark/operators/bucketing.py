@@ -1,22 +1,112 @@
-"""Bucketed-table helpers: co-located joins without shuffles.
+"""Write-once physical layouts: pay a shuffle at write time, not per query.
 
-SCALE.md's bucketing lever made concrete: writing both sides of a
-repeatedly-joined pair bucketed (and sorted) by the join key lets Spark
-plan a SortMergeJoin with NO Exchange on either side — the shuffle is paid
-once at write time and amortized over every subsequent join (the
-purchasing chain's id keys are the canonical use).
+- :func:`ensure_group_items` stores a fact's per-group item arrays
+  (``(group_col, items)``, ``items = sort_array(collect_set(item))``) as
+  plain parquet under ``spark.sql.warehouse.dir``. The co-occurrence graph
+  family (g9/g11/g13/g16/g17) reads them, so no query pass re-runs the
+  per-group aggregate: the fact is grouped once per source version, by
+  whichever session needs it first, and every later pass scans arrays.
+- :func:`write_bucketed` / :func:`bucketed_join`: SCALE.md's bucketing
+  lever. Both sides of a repeatedly-joined pair written bucketed (and
+  sorted) by the join key plan a SortMergeJoin with no Exchange on either
+  side.
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
+import shutil
+import time
+import warnings
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from com_danliris_service_etl_spark.operators.graph import group_items
+from com_danliris_service_etl_spark.sources import fsutil
+
 # Stale-sibling GC defers entries younger than this: a parallel session
-# that adopted the layout just before the fixture regenerated may still
-# be scanning it (see ensure_bucketed_fact's GC pass).
+# that adopted the layout just before the source regenerated may still
+# be scanning it (see ensure_group_items).
 _GC_MIN_AGE_SECONDS = 300.0
+
+
+def _tag(text: str, n: int = 6) -> str:
+    return hashlib.sha1(text.encode()).hexdigest()[:n]
+
+
+def ensure_group_items(
+    spark: SparkSession, sf_dir: str, table: str, group_col: str, item_col: str
+) -> DataFrame:
+    """``{sf_dir}/{table}.parquet`` as per-group item arrays, the frame
+    :func:`~com_danliris_service_etl_spark.operators.graph.group_items`
+    computes, read from a layout written on first use.
+
+    The layout is a directory ``items_<table>_<srctag>_<stattag>_<spec>``
+    in the warehouse: ``srctag`` hashes the source path, ``stattag`` its
+    mtime and size, ``spec`` both plus the two columns. A later session
+    over the same warehouse adopts a completed directory (it holds
+    ``_SUCCESS``) instead of rewriting it, and a regenerated source can
+    never alias a stale layout. Nothing downstream depends on how the
+    arrays are partitioned, so the name holds no session setting and
+    every session shares one layout per source version.
+
+    Write protocol: the arrays go to a pid-salted sibling, which is then
+    renamed onto the canonical name. The rename is atomic; when another
+    writer installed the directory first, the rename fails, the loser
+    drops its copy and reads the winner's. Readers only see complete
+    directories.
+
+    Lifecycle: before a write, layouts of the same source path with a
+    different ``stattag`` (the source was regenerated, so no session can
+    adopt them again) are deleted once older than ``_GC_MIN_AGE_SECONDS``;
+    a younger one may still be under a scan and waits for a later write.
+    Other source paths (another copy of the table) are never touched.
+    When the warehouse cannot be written, the arrays are computed from
+    the plain scan with a RuntimeWarning: the layout is a performance
+    lever, never a correctness dependency."""
+    src = f"{sf_dir}/{table}.parquet"
+    st = os.stat(src)
+    version = f"{st.st_mtime_ns}|{st.st_size}"
+    prefix = f"items_{table}_{_tag(src)}_"
+    live = f"{prefix}{_tag(version)}_"
+    name = live + _tag(f"{src}|{version}|{group_col}|{item_col}", 10)
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    path = os.path.join(wh, name)
+    tmp = f"{path}__w{os.getpid()}"
+
+    def arrays() -> DataFrame:
+        rows = fsutil.read_parquet(spark, src).select(group_col, item_col)
+        return group_items(rows, group_col, item_col)
+
+    try:
+        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+            for entry in os.listdir(wh) if os.path.isdir(wh) else ():
+                if entry.startswith(prefix) and not entry.startswith(live):
+                    try:
+                        age = time.time() - os.path.getmtime(os.path.join(wh, entry))
+                    except OSError:
+                        continue  # vanished under us: another GC won
+                    if age >= _GC_MIN_AGE_SECONDS:
+                        shutil.rmtree(os.path.join(wh, entry), ignore_errors=True)
+            shutil.rmtree(tmp, ignore_errors=True)
+            arrays().write.parquet(tmp)
+            try:
+                os.rename(tmp, path)
+            except OSError:
+                shutil.rmtree(tmp, ignore_errors=True)
+                if not os.path.exists(os.path.join(path, "_SUCCESS")):
+                    raise  # a real failure, not a lost race
+        return fsutil.read_parquet(spark, path)
+    except Exception as exc:  # noqa: BLE001 — a read-only FS raises OSError,
+        # an uncreatable warehouse a JVM-side error; both degrade
+        shutil.rmtree(tmp, ignore_errors=True)
+        warnings.warn(
+            f"ensure_group_items: falling back to per-pass arrays from {src}: "
+            f"{type(exc).__name__}: {exc}", RuntimeWarning, stacklevel=2,
+        )
+        return arrays()
 
 
 def write_bucketed(
@@ -33,181 +123,6 @@ def write_bucketed(
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
-
-
-def ensure_bucketed_fact(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    bucket_cols: Sequence[str],
-    n_buckets: int | None = None,
-    columns: Sequence[str] | None = None,
-) -> DataFrame:
-    """Return ``{sf_dir}/{table}.parquet`` as a managed table bucketed by
-    ``bucket_cols``, materializing the layout on first use per session —
-    the production layout for operators whose first exchange is a groupBy
-    on the fact's natural key (the co-occurrence family g11/g13: at 100 TB
-    the fact is bucketed by design, so the per-group aggregate plans ZERO
-    exchanges and the pair aggregation is the query's only shuffle;
-    measured in BASELINE.md's g13 trail).
-
-    The write is a one-time layout cost amortized over every query against
-    the layout (exactly like a real warehouse's CLUSTERED BY), ACROSS
-    sessions: the table name is a pure content fingerprint of (path,
-    mtime, size, bucket spec) — no session salt — so a later session
-    (the grading driver, a fresh bench) ADOPTS the completed layout by
-    registering an external CLUSTERED BY table over the existing files
-    instead of rewriting multi-GB data, and regenerated fixtures can
-    never alias a stale layout (their fingerprint differs). Exactly one
-    canonical directory per (fixture, spec) ever exists in the
-    warehouse — the r11 review found the earlier applicationId-salted
-    scheme leaked one full bucketed copy per session and made the
-    documented amortization impossible.
-
-    Concurrent sessions (the sharded test runner) are safe via
-    write-then-atomic-rename: each writer materializes under a
-    pid-salted temp name and `os.rename`s the directory onto the
-    canonical path — rename fails if another writer already installed
-    it, in which case the loser discards its copy and adopts the
-    winner's. Readers only ever see a complete directory (the rename is
-    atomic and the temp dir carries _SUCCESS before the move).
-
-    Lifecycle: layouts for a REGENERATED fixture (same source path, new
-    mtime/size ⇒ new spec hash) are garbage-collected at materialization
-    time — the name embeds a separate hash of the source PATH, so only
-    true siblings (same table, same source file, stale spec) are
-    removed; a different fixture copy of the same table (e.g. a test's
-    tmp_path clone) hashes to a different path segment and is never
-    touched. An unwritable/uncreatable warehouse degrades to the plain
-    unbucketed select of the source parquet (correctness over layout)."""
-    import hashlib
-    import os
-    import shutil
-    import time
-    import warnings
-
-    src = f"{sf_dir}/{table}.parquet"
-    st = os.stat(src)
-    if n_buckets is None:
-        n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    spec = "|".join(
-        [
-            src,
-            str(st.st_mtime_ns),
-            str(st.st_size),
-            ",".join(bucket_cols),
-            str(n_buckets),
-            ",".join(columns or []),
-        ]
-    )
-    srctag = hashlib.sha1(src.encode()).hexdigest()[:6]
-    # stattag identifies the source file CONTENT (mtime+size): two specs
-    # over the same live file (e.g. the bench session's 8-bucket layout
-    # and the test sessions' 32-bucket one) carry the same stattag and
-    # must COEXIST — only a regenerated file (new stattag) orphans its
-    # old layouts. GCing on the full spec hash instead would make
-    # alternating sessions delete each other's layouts and re-pay the
-    # write every cycle.
-    stattag = hashlib.sha1(
-        f"{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:6]
-    name = (
-        f"bkt_{table}_{srctag}_{stattag}_"
-        f"{hashlib.sha1(spec.encode()).hexdigest()[:10]}"
-    )
-
-    def _fallback(reason: str) -> DataFrame:
-        warnings.warn(
-            f"ensure_bucketed_fact: falling back to unbucketed scan of {src}: "
-            f"{reason}", RuntimeWarning, stacklevel=2,
-        )
-        df = spark.read.parquet(src)
-        return df.select(*columns) if columns else df
-
-    if spark.catalog.tableExists(name):
-        return spark.table(name)
-
-    try:
-        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        path = os.path.join(wh, name)
-
-        def _adopt() -> DataFrame:
-            # register an EXTERNAL bucketed table over the completed files —
-            # Spark's bucketed writer encodes the bucket id in each file
-            # name, so a CLUSTERED BY table over them plans bucketed scans
-            df = spark.read.parquet(path)
-            cols_ddl = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-            )
-            spark.sql(
-                f"CREATE TABLE IF NOT EXISTS {name} ({cols_ddl}) USING parquet "
-                f"CLUSTERED BY ({', '.join(bucket_cols)}) INTO {n_buckets} BUCKETS "
-                f"LOCATION '{path}'"
-            )
-            return spark.table(name)
-
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            return _adopt()
-
-        # GC stale siblings: same table AND same source path (srctag) but
-        # a DIFFERENT stattag means the fixture file was regenerated — no
-        # session can ever adopt those layouts again (their fingerprints
-        # are dead), so reclaim the disk before paying the new write.
-        # Same-stattag siblings (other bucket counts / column subsets
-        # over the live file) coexist; other source paths share only the
-        # table prefix and are skipped.
-        keep_prefix = f"bkt_{table}_{srctag}_{stattag}_"
-        stale_prefix = f"bkt_{table}_{srctag}_"
-        if os.path.isdir(wh):
-            for entry in os.listdir(wh):
-                if entry.startswith(stale_prefix) and not entry.startswith(
-                    keep_prefix
-                ):
-                    # Age gate: a parallel session that adopted the stale
-                    # layout BEFORE the fixture was regenerated may still
-                    # be mid-scan; deleting under it fails its query. A
-                    # recently-touched sibling is deferred to a later
-                    # session's GC pass (its fingerprint is dead either
-                    # way, so it can never be re-adopted — only reclaimed).
-                    try:
-                        age = time.time() - os.path.getmtime(
-                            os.path.join(wh, entry)
-                        )
-                    except OSError:
-                        continue  # vanished under us: another GC won
-                    if age < _GC_MIN_AGE_SECONDS:
-                        continue
-                    shutil.rmtree(os.path.join(wh, entry), ignore_errors=True)
-                    spark.sql(f"DROP TABLE IF EXISTS {entry}")
-
-        tmp = f"{name}__w{os.getpid()}"
-        shutil.rmtree(os.path.join(wh, tmp), ignore_errors=True)
-        df = spark.read.parquet(src)
-        if columns:
-            df = df.select(*columns)
-        write_bucketed(df, tmp, bucket_cols, n_buckets=n_buckets)
-        # detach the temp catalog entry from its files BEFORE dropping it
-        # (DROP TABLE on a managed table deletes its directory)
-        try:
-            os.rename(os.path.join(wh, tmp), path)
-        except OSError:
-            if not os.path.exists(os.path.join(path, "_SUCCESS")):
-                # rename failed for a real reason (permissions, EXDEV, …),
-                # NOT because another writer won the race — clean up the
-                # orphan (DROP on the still-managed tmp reclaims its dir)
-                # and surface it via the degradation path rather than
-                # letting _adopt() raise a confusing path-not-found later
-                spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-                raise
-            # another writer installed the canonical dir first; discard ours
-            shutil.rmtree(os.path.join(wh, tmp), ignore_errors=True)
-        spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-        return _adopt()
-    except Exception as exc:  # noqa: BLE001 — uncreatable warehouse raises
-        # JVM-side AnalysisException, read-only FS raises OSError; either
-        # way the layout is a performance lever, never a correctness
-        # dependency, so degrade to the plain scan and say so
-        return _fallback(f"{type(exc).__name__}: {exc}")
 
 
 def bucketed_join(

@@ -318,50 +318,60 @@ def pagerank(
     return ranks
 
 
-def cooccurrence_adamic_adar(
-    df: DataFrame,
-    group_col: str,
-    item_col: str,
-    min_common: int = 2,
-) -> DataFrame:
+def group_items(df: DataFrame, group_col: str, item_col: str) -> DataFrame:
+    """``(group_col, items)``: each group's sorted distinct items, the one
+    input of the co-occurrence operators below (items are nodes, a group
+    — order, basket, document — links every pair of its items). One
+    groupBy whose state is bounded by group size; groups of one item are
+    kept, since they still count toward an item's group-degree.
+    `operators/bucketing.ensure_group_items` stores this frame once per
+    source version, so registry queries read it instead of re-running
+    the aggregate every pass."""
+    return df.groupBy(group_col).agg(
+        F.sort_array(F.collect_set(item_col)).alias("items")
+    )
+
+
+def _item_pairs(groups: DataFrame, **extra) -> DataFrame:
+    """``(src, dst, *extra)`` for every pair of items sharing a group,
+    ``src < dst``, once per group: ``Σ C(|group|, 2)`` rows, never a
+    fact×fact self-join. ``extra`` maps names to per-group columns
+    carried onto each of the group's pairs.
+
+    Two chained explodes + the ``src < dst`` filter, not a nested
+    ``transform(slice(...))`` higher-order expression: the HOF form
+    allocates a struct array per element (O(n) slice copies per row) and
+    measured ~40% slower end-to-end at sf1 (2.46 s vs 1.48 s on 6M fact
+    rows) for identical output. The double explode emits n² rows
+    narrowed at once by the filter inside one whole-stage-codegen span,
+    with no materialized intermediate. Groups of one item are dropped
+    first, before ``extra`` is evaluated."""
+    cols = [c.alias(n) for n, c in extra.items()]
+    return (
+        groups.filter(F.size("items") >= 2)
+        .select(F.explode("items").alias("src"), "items", *cols)
+        .select("src", F.explode("items").alias("dst"), *extra)
+        .filter(F.col("src") < F.col("dst"))
+    )
+
+
+def cooccurrence_adamic_adar(groups: DataFrame, min_common: int = 2) -> DataFrame:
     """Adamic-Adar link-prediction scores over a co-occurrence bipartite
     graph: items are nodes, each group (order/basket/document) is a
     common neighbor, and a pair of items co-occurring in a group of size
     n gains ``1/ln(n)`` — frequent co-occurrence inside SMALL groups is
     evidence, membership in huge groups is near-noise.
 
-    Shape (the g9 lesson applied up front): ONE groupBy of the fact into
-    per-group sorted distinct-item arrays (state bounded by group size),
-    then in-array pair generation — ``Σ C(|group|, 2)`` emitted rows,
-    never a fact×fact self-join that shuffles the relation twice. The
-    per-pair aggregation is map-side combinable. ``min_common`` bounds
-    the output to pairs with that many shared groups.
-
-    Pair generation is TWO chained explodes + an inequality filter, not
-    the nested ``transform(slice(...))`` higher-order expression: the HOF
-    form allocates a struct array per element (O(n) slice copies per
-    row), and the r9 sf1 A/B measured it ~40% slower end-to-end (2.46 s
-    vs 1.48 s on 6M fact rows) for identical output. The double explode
-    emits n² rows narrowed immediately by ``src < dst`` inside the same
-    whole-stage-codegen span — no materialized intermediate.
+    Shape: ``groups`` is :func:`group_items`' per-group arrays; in-array
+    pair generation (:func:`_item_pairs`) carries each group's weight onto
+    its pairs, and the per-pair aggregation is map-side combinable (over
+    the stored layout it is the plan's only shuffle). ``min_common``
+    bounds the output to pairs with that many shared groups.
 
     Returns (src, dst, n_common, aa_score) with src < dst and the score
     rounded to 6dp (sums of a handful of ``1/ln`` terms — rounding makes
     the cross-engine comparison order-insensitive)."""
-    per_group = (
-        df.groupBy(group_col)
-        .agg(F.sort_array(F.collect_set(item_col)).alias("__items"))
-        .filter(F.size("__items") >= 2)
-    )
-    pairs = (
-        per_group.select(
-            F.explode("__items").alias("src"),
-            "__items",
-            (1.0 / F.log(F.size("__items").cast("double"))).alias("__w"),
-        )
-        .select("src", F.explode("__items").alias("dst"), "__w")
-        .filter(F.col("src") < F.col("dst"))
-    )
+    pairs = _item_pairs(groups, __w=1.0 / F.log(F.size("items").cast("double")))
     return (
         pairs.groupBy("src", "dst")
         .agg(
@@ -372,12 +382,7 @@ def cooccurrence_adamic_adar(
     )
 
 
-def cooccurrence_jaccard(
-    df: DataFrame,
-    group_col: str,
-    item_col: str,
-    min_common: int = 2,
-) -> DataFrame:
+def cooccurrence_jaccard(groups: DataFrame, min_common: int = 2) -> DataFrame:
     """Jaccard neighborhood similarity over the same co-occurrence
     bipartite as :func:`cooccurrence_adamic_adar`: two items' similarity
     is |shared groups| / |union of their groups| — the set-overlap
@@ -385,21 +390,17 @@ def cooccurrence_jaccard(
     *selective* the shared groups are; Jaccard by how much of each
     item's life is shared).
 
-    Same scale shape: per-group sorted distinct-item arrays → in-array
-    pair generation (never a fact×fact self-join), pair counts map-side
-    combinable. Per-item group-degrees come from the SAME per-group
-    arrays (explode of the already-deduped relation — no second fact
-    scan) and attach to pairs by two joins on the item key; the union
-    size is then inclusion-exclusion dx + dy − n_common, all exact
-    integers, one division rounded 6dp."""
-    per_group = (
-        df.groupBy(group_col)
-        .agg(F.sort_array(F.collect_set(item_col)).alias("__items"))
-        .localCheckpoint(eager=False)  # feeds pair-gen AND degrees: two
-        # different exchanges would re-run the fact groupBy per reference
-    )
+    Same scale shape over :func:`group_items`' arrays: in-array pair
+    generation, pair counts map-side combinable. Per-item group-degrees
+    come from the SAME arrays (an explode of the already-deduped
+    relation, size-1 groups included — no second fact scan) and attach to
+    pairs by two joins on the item key; the union size is then
+    inclusion-exclusion dx + dy − n_common, all exact integers, one
+    division rounded 6dp."""
+    per_group = groups.localCheckpoint(eager=False)  # feeds pair-gen AND
+    # degrees: two different exchanges would re-run its upstream per reference
     deg = (
-        per_group.select(F.explode("__items").alias("__item"))
+        per_group.select(F.explode("items").alias("__item"))
         .groupBy("__item")
         .agg(F.count(F.lit(1)).alias("__d"))
         # deg forks into the src- and dst-side broadcast builds; their
@@ -408,13 +409,8 @@ def cooccurrence_jaccard(
         # layout showed 3 runtime exchanges instead of 2).
         .localCheckpoint(eager=False)
     )
-    # double-explode pair generation — see cooccurrence_adamic_adar for
-    # the measured rationale vs the nested-HOF form
     pairs = (
-        per_group.filter(F.size("__items") >= 2)
-        .select(F.explode("__items").alias("src"), "__items")
-        .select("src", F.explode("__items").alias("dst"))
-        .filter(F.col("src") < F.col("dst"))
+        _item_pairs(per_group)
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("n_common"))
         .filter(F.col("n_common") >= min_common)
@@ -437,13 +433,7 @@ def cooccurrence_jaccard(
     )
 
 
-def kcore_peel(
-    df: DataFrame,
-    group_col: str,
-    item_col: str,
-    k: int,
-    rounds: int = 4,
-) -> DataFrame:
+def kcore_peel(groups: DataFrame, k: int, rounds: int = 4) -> DataFrame:
     """Bounded k-core peeling over the co-occurrence graph (items are
     nodes, an edge joins items sharing a group): each round removes every
     node whose degree in the CURRENT induced subgraph is < k, and the
@@ -463,8 +453,8 @@ def kcore_peel(
     or loop to fixpoint on the survivor count (1 scalar per round — the
     pagerank/bpe driver-loop class).
 
-    Scale shape: edges are built ONCE from per-group arrays (the g9/g11
-    double-explode shape, never a fact×fact self-join) and lazily
+    Scale shape: edges are built ONCE from :func:`group_items`' arrays
+    (:func:`_item_pairs`, never a fact×fact self-join) and lazily
     checkpointed; each round is one map-side-combinable degree aggregate
     plus two semi-joins of the edge list against the (node-grain,
     broadcastable) survivor set, re-checkpointed to cut superstep
@@ -472,18 +462,7 @@ def kcore_peel(
     result — the driver never collects anything (r15: the old
     one-collect-per-round form paid rounds+1 sequential driver
     barriers)."""
-    per_group = (
-        df.groupBy(group_col)
-        .agg(F.sort_array(F.collect_set(item_col)).alias("__items"))
-        .filter(F.size("__items") >= 2)
-    )
-    edges = (
-        per_group.select(F.explode("__items").alias("src"), "__items")
-        .select("src", F.explode("__items").alias("dst"))
-        .filter(F.col("src") < F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    edges = _item_pairs(groups).distinct().localCheckpoint(eager=False)
     # COLLECT-FREE trajectory (r15): the loop used to run one blocking
     # `.collect()` per round — rounds+1 sequential driver round-trips,
     # each a scheduling barrier — and assembled the result with
@@ -534,11 +513,7 @@ def kcore_peel(
 
 
 def label_propagation(
-    df: DataFrame,
-    group_col: str,
-    item_col: str,
-    rounds: int = 3,
-    broadcast_labels: bool = True,
+    groups: DataFrame, rounds: int = 3, broadcast_labels: bool = True
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et
     al. 2007, arXiv:0709.2938) over the co-occurrence graph, bounded to
@@ -559,8 +534,8 @@ def label_propagation(
     whether or not it oscillates); production callers loop on a
     label-change count scalar instead.
 
-    Scale shape: edges are built once from per-group arrays (the
-    g9/g16 double-explode shape, never fact×fact) and checkpointed;
+    Scale shape: edges are built once from :func:`group_items`' arrays
+    (:func:`_item_pairs`, never fact×fact) and checkpointed;
     each superstep is one join of the node-grain label relation into
     the adjacency (the measured pagerank ladder: with
     ``broadcast_labels=True``, the default, the |V|-row side rides a
@@ -572,15 +547,8 @@ def label_propagation(
     then the per-node argmax as min(struct(-cnt, label)), no window
     over the edge relation. Labels are re-checkpointed per round to cut
     superstep lineage."""
-    per_group = (
-        df.groupBy(group_col)
-        .agg(F.sort_array(F.collect_set(item_col)).alias("__items"))
-        .filter(F.size("__items") >= 2)
-    )
     edges = (
-        per_group.select(F.explode("__items").alias("src"), "__items")
-        .select("src", F.explode("__items").alias("dst"))
-        .filter(F.col("src") < F.col("dst"))
+        _item_pairs(groups)
         .distinct()
         .localCheckpoint(eager=False)  # feeds both adjacency directions
     )

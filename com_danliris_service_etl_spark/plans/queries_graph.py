@@ -14,9 +14,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from com_danliris_service_etl_spark.operators import rollup as rl
+from com_danliris_service_etl_spark.operators.bucketing import ensure_group_items
 from com_danliris_service_etl_spark.operators.graph import (
+    _item_pairs,
     bfs_hops,
+    cooccurrence_adamic_adar,
     cooccurrence_jaccard,
+    kcore_peel,
+    label_propagation,
     pagerank,
     triangle_counts,
 )
@@ -490,6 +495,20 @@ def g8_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# The part co-purchase graph (g9, g11, g13, g16, g17)
+# ---------------------------------------------------------------------------
+
+
+def _order_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(l_orderkey, items)``: each order's sorted distinct parts, the
+    one input of the co-purchase queries. Read from the layout
+    `ensure_group_items` writes once per lineitem version, so no pass
+    re-runs the per-order aggregate and the queries' pair aggregations
+    are their first fact-scale shuffle."""
+    return ensure_group_items(spark, sf_dir, "lineitem", "l_orderkey", "l_partkey")
+
+
+# ---------------------------------------------------------------------------
 # G9 — per-node triangle counts over the part co-purchase graph
 # ---------------------------------------------------------------------------
 
@@ -522,50 +541,18 @@ SELECT node, count(*)::BIGINT AS triangles FROM corners GROUP BY node
 def g9_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle counting over the part co-purchase graph (parts linked
     when they appear in the same order) — the local-clustering primitive
-    behind community structure and recommendation features. The edge
-    build is one self-equi-join on the order key (never all-pairs across
+    behind community structure and recommendation features. The edges
+    are the in-array part pairs of each order (never all-pairs across
     orders); `triangle_counts` then orients every edge by the (degree,
     id) total order, so two-path generation is Σ C(out-deg, 2) with
     out-degrees O(√m) — the compact-forward bound that survives hub
     nodes at 100 TB, where orienting by raw id would square the hottest
     part's full degree."""
-    # Runs over the PRODUCTION LAYOUT shared with g11/g13/g16/g17 —
-    # lineitem bucketed by the order key (same fingerprint → same
-    # materialized directory), so the per-order collect_set plans ZERO
-    # exchanges and the edge build's first shuffle disappears (r12,
-    # VERDICT task 4: the iterative/graph family's setup was measured to
-    # dominate its runtime).
-    from com_danliris_service_etl_spark.operators.bucketing import (
-        ensure_bucketed_fact,
-    )
-
-    li = ensure_bucketed_fact(
-        spark, sf_dir, "lineitem", ["l_orderkey"],
-        columns=["l_orderkey", "l_partkey"],
-    )
-    # Per-order pair generation in-array (the LSH-bucket trick): ONE
-    # groupBy of the fact — exchange-free on the bucketed layout —
-    # instead of a fact×fact self-join; collect_set state is bounded by
-    # the order's line count. sort_array ⇒ pairs come out src < dst for
-    # free. double-explode pair generation: ~40% faster end-to-end than
-    # the nested transform(slice(...)) HOF at sf1 (r9 A/B: 2.14 s vs
-    # 1.43 s for this edge build) — the HOF allocates a struct array per
-    # element; the chained explodes + src<dst filter stay in one
-    # whole-stage-codegen span (operators/graph.py same rationale).
-    per_order = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("ps")
-    )
-    edges = (
-        per_order.select(F.explode("ps").alias("src"), "ps")
-        .select("src", F.explode("ps").alias("dst"))
-        .filter(F.col("src") < F.col("dst"))
-        # no .distinct() here (r15): triangle_counts canonicalizes its
-        # input with least/greatest + distinct anyway, and for src < dst
-        # pairs that distinct dedups exactly this key set — the caller's
-        # own distinct was a second full exchange of the ~1.2M-row edge
-        # multiset for nothing (guide §2.4: a distinct on data the next
-        # operator re-distincts).
-    )
+    # No .distinct() here (r15): triangle_counts canonicalizes its input
+    # with least/greatest + distinct anyway, and for src < dst pairs that
+    # distinct dedups exactly this key set — a caller-side distinct was a
+    # second full exchange of the ~1.2M-row edge multiset for nothing.
+    edges = _item_pairs(_order_parts(spark, sf_dir))
     return triangle_counts(edges, broadcast_degrees=True)
 
 
@@ -668,30 +655,13 @@ def g11_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adamic-Adar link-prediction scores over the part co-purchase
     bipartite (operators/graph.py::cooccurrence_adamic_adar): each order
     is a common neighbor weighting its item pairs by 1/ln(order size).
-    One groupBy of the fact into per-order arrays + in-array pair
-    generation (the g9 shape) — never a fact×fact self-join. Scores are
+    In-array pair generation over the stored per-order part arrays
+    (`_order_parts`, shared with g9/g13/g16/g17) — never a fact×fact
+    self-join; the pair aggregation is the plan's one shuffle (pinned in
+    test_cooccurrence_on_bucketed_layout_single_exchange). Scores are
     sums of a handful of 1/ln terms, rounded 6dp for order-insensitive
-    cross-engine comparison.
-
-    Runs over the SAME canonical bucketed layout as g13 (identical
-    fingerprint — table, key, columns, bucket count — so the two
-    queries share ONE materialized directory and the per-order
-    aggregate plans zero exchanges; the whole plan carries exactly one
-    shuffle, the CI-pinned claim in
-    test_cooccurrence_on_bucketed_layout_single_exchange, measured
-    1.31× vs the oracle at sf10 against 1.55× unbucketed)."""
-    from com_danliris_service_etl_spark.operators.bucketing import (
-        ensure_bucketed_fact,
-    )
-    from com_danliris_service_etl_spark.operators.graph import (
-        cooccurrence_adamic_adar,
-    )
-
-    li = ensure_bucketed_fact(
-        spark, sf_dir, "lineitem", ["l_orderkey"],
-        columns=["l_orderkey", "l_partkey"],
-    )
-    return cooccurrence_adamic_adar(li, "l_orderkey", "l_partkey", min_common=2)
+    cross-engine comparison."""
+    return cooccurrence_adamic_adar(_order_parts(spark, sf_dir), min_common=2)
 
 
 # ---------------------------------------------------------------------------
@@ -776,29 +746,17 @@ def g13_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jaccard set-overlap similarity between co-purchased parts
     (operators/graph.py `cooccurrence_jaccard`): |shared orders| over
     |union of orders|, exact integers via inclusion-exclusion. Same
-    in-array pair generation as g11 (one fact groupBy, never a
-    fact×fact self-join); the oracle states the relation as the naive
-    equi-self-join, which is what the operator avoids at scale.
+    in-array pair generation as g11 (never a fact×fact self-join); the
+    oracle states the relation as the naive equi-self-join, which is
+    what the operator avoids at scale.
 
-    Runs over the PRODUCTION LAYOUT — the fact bucketed by the group key
-    (`ensure_bucketed_fact`; first call per session materializes it, the
-    layout cost a real warehouse pays once at load) — so the per-order
-    collect_set aggregate plans zero exchanges and the pair aggregation
-    is the only fact-scale shuffle. Promoted from a CI pin to the
-    registry path per VERDICT r10 task 1; the unbucketed form measured
-    3.56x vs the oracle at the sf10 decade, this layout 2.75x with an
-    identical result (BASELINE.md g13 trail; five alternative plans —
-    diagonal-fused degree, deg-from-base, deg-early struct arrays —
-    measured slower or OOM there, recorded in the same trail)."""
-    from com_danliris_service_etl_spark.operators.bucketing import (
-        ensure_bucketed_fact,
-    )
-
-    li = ensure_bucketed_fact(
-        spark, sf_dir, "lineitem", ["l_orderkey"],
-        columns=["l_orderkey", "l_partkey"],
-    )
-    return cooccurrence_jaccard(li, "l_orderkey", "l_partkey", min_common=2)
+    Reads the stored per-order part arrays (`_order_parts`), so no pass
+    runs the per-order aggregate and the pair aggregation is the only
+    fact-scale shuffle (BASELINE.md's g13 trail measured the earlier
+    bucketed-row layout; five alternative plans — diagonal-fused degree,
+    deg-from-base, deg-early struct arrays — measured slower or OOM
+    there)."""
+    return cooccurrence_jaccard(_order_parts(spark, sf_dir), min_common=2)
 
 
 # ---------------------------------------------------------------------------
@@ -990,20 +948,7 @@ def g16_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle expressible as an unrolled CTE chain (the txt19 discipline) —
     production loops the same superstep to fixpoint on the survivor
     scalar."""
-    from com_danliris_service_etl_spark.operators.bucketing import (
-        ensure_bucketed_fact,
-    )
-    from com_danliris_service_etl_spark.operators.graph import kcore_peel
-
-    # shared canonical layout (g9/g11/g13/g17 fingerprint): the edge
-    # build's per-order collect_set plans zero exchanges (r12 task 4)
-    li = ensure_bucketed_fact(
-        spark, sf_dir, "lineitem", ["l_orderkey"],
-        columns=["l_orderkey", "l_partkey"],
-    )
-    return kcore_peel(
-        li, "l_orderkey", "l_partkey", k=_KCORE_K, rounds=_KCORE_ROUNDS
-    )
+    return kcore_peel(_order_parts(spark, sf_dir), k=_KCORE_K, rounds=_KCORE_ROUNDS)
 
 
 # ---------------------------------------------------------------------------
@@ -1049,15 +994,4 @@ def g17_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the g16 discipline) and, like the rest of that family, the
     recursive single-node formulation grows super-linearly with scale
     while the checkpointed superstep loop stays near-linear."""
-    from com_danliris_service_etl_spark.operators.bucketing import (
-        ensure_bucketed_fact,
-    )
-    from com_danliris_service_etl_spark.operators.graph import label_propagation
-
-    # shared canonical layout (g9/g11/g13/g16 fingerprint): the edge
-    # build's per-order collect_set plans zero exchanges (r12 task 4)
-    li = ensure_bucketed_fact(
-        spark, sf_dir, "lineitem", ["l_orderkey"],
-        columns=["l_orderkey", "l_partkey"],
-    )
-    return label_propagation(li, "l_orderkey", "l_partkey", rounds=_LPA_ROUNDS)
+    return label_propagation(_order_parts(spark, sf_dir), rounds=_LPA_ROUNDS)

@@ -21,6 +21,7 @@ from com_danliris_service_etl_spark.functions import (
 )
 from com_danliris_service_etl_spark.operators.joins import asof_join, first_match_join
 from com_danliris_service_etl_spark.operators.multimodal import extract_features
+from tests.conftest import SF_DIR
 
 
 def _one(spark, expr_col, **cols):
@@ -300,160 +301,414 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS bkt_right")
 
 
-def test_cooccurrence_on_bucketed_layout_single_exchange(spark):
-    """The documented production layout for the co-occurrence family
-    (g11/g13, BASELINE.md): the fact bucketed by the group key. The
-    per-group collect_set aggregate must then plan ZERO exchanges, so
-    adamic-adar's whole plan carries exactly ONE shuffle (the pair
-    aggregation) — the claim the r9 verdict asked to make CI-visible
-    (task 4), asserted here instead of in a bench note. Results must be
-    identical to the unbucketed path."""
+LINEITEM = f"{SF_DIR}/lineitem.parquet"
+CO_PURCHASE = (
+    "g9_triangle_count",
+    "g11_adamic_adar",
+    "g13_jaccard_neighbors",
+    "g16_kcore_peel",
+    "g17_label_propagation",
+)
+
+
+def _plan(df) -> str:
     import io
     from contextlib import redirect_stdout
 
-    from pyspark.sql import functions as F
-
-    from com_danliris_service_etl_spark.operators.bucketing import write_bucketed
-    from com_danliris_service_etl_spark.operators.graph import (
-        cooccurrence_adamic_adar,
-    )
-
-    spark.sql("DROP TABLE IF EXISTS bkt_cooc")
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").select(
-        "l_orderkey", "l_partkey"
-    )
-    write_bucketed(li, "bkt_cooc", ["l_orderkey"], n_buckets=4)
-    try:
-        bucketed = cooccurrence_adamic_adar(
-            spark.table("bkt_cooc"), "l_orderkey", "l_partkey", min_common=2
-        )
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            bucketed.explain("formatted")
-        plan = buf.getvalue()
-        shuffles = plan.count("Exchange (") - plan.count("BroadcastExchange (")
-        assert shuffles == 1, f"expected 1 shuffle on bucketed layout:\n{plan}"
-
-        plain = cooccurrence_adamic_adar(li, "l_orderkey", "l_partkey", min_common=2)
-        assert sorted(map(tuple, bucketed.collect())) == sorted(
-            map(tuple, plain.collect())
-        )
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_cooc")
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
 
 
-def test_g13_registry_runs_on_bucketed_layout(spark):
-    """g13's REGISTRY path (VERDICT r10 task 1) runs over the production
-    bucketed layout: ensure_bucketed_fact materializes once per session
-    (second call returns the same catalog table, no rewrite), the scan is
-    bucketed, and the result is identical to the unbucketed operator."""
+def _plain_order_parts(spark, sf_dir):
+    """The per-order part arrays computed from the plain scan: the
+    reference every read of the stored layout must equal."""
+    from com_danliris_service_etl_spark.operators.graph import group_items
+    from com_danliris_service_etl_spark.sources import fsutil
+
+    rows = fsutil.read_parquet(spark, f"{sf_dir}/lineitem.parquet")
+    return group_items(rows.select("l_orderkey", "l_partkey"), "l_orderkey", "l_partkey")
+
+
+def _layouts(spark, src) -> set[str]:
+    """Completed and in-flight array layouts of the source at ``src``."""
+    import hashlib
     import os
 
-    from pyspark.sql import functions as F
-
-    from com_danliris_service_etl_spark.operators.bucketing import (
-        ensure_bucketed_fact,
-    )
-    from com_danliris_service_etl_spark.operators.graph import (
-        cooccurrence_jaccard,
-    )
-    from com_danliris_service_etl_spark.plans.registry import load_all
-
-    sf_dir = "/root/testdata/sf0.001"
-    fn, _sql = load_all()["g13_jaccard_neighbors"]
-    got = fn(spark, sf_dir)
-    # the operator's lazy checkpoints truncate the final visible plan
-    # (Scan ExistingRDD — the g16/g17 audit caveat), so audit the
-    # constituent: the layout table must exist and the per-group
-    # aggregate over it must plan ZERO exchanges (bucket distribution)
-    bkt = [t.name for t in spark.catalog.listTables() if t.name.startswith("bkt_lineitem_")]
-    assert bkt, "registry path did not materialize the bucketed layout"
-    agg_plan = (
-        spark.table(bkt[0])
-        .groupBy("l_orderkey")
-        .agg(F.collect_set("l_partkey"))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange hashpartitioning" not in agg_plan, agg_plan
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey"
-    )
-    plain = cooccurrence_jaccard(li, "l_orderkey", "l_partkey", min_common=2)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, plain.collect()))
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    tag = hashlib.sha1(str(src).encode()).hexdigest()[:6]
+    return {d for d in os.listdir(wh) if d.startswith(f"items_lineitem_{tag}_")}
 
 
-def test_ensure_bucketed_fact_idempotent_and_adoptable(spark, tmp_path):
-    """Layout lifecycle on an ISOLATED fixture copy (tmp_path — the
-    shared warehouse is touched by concurrent test shards, so mtime
-    assertions there would race): the second call must be
-    catalog-served (no rewrite), and after the catalog entry is dropped
-    (simulating a NEW session over the same warehouse) the call must
-    ADOPT the existing canonical directory — registering an external
-    CLUSTERED BY table over it, still planning bucketed scans — rather
-    than re-paying the write (the r11 review item on the appId-salted
-    scheme that could never reuse a layout)."""
+def _drop_layouts(spark, src) -> None:
     import os
     import shutil
 
-    from pyspark.sql import functions as F
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    for d in _layouts(spark, src):
+        shutil.rmtree(os.path.join(wh, d), ignore_errors=True)
+
+
+def _count_group_items(monkeypatch) -> list:
+    """Record every per-group aggregate the layout module builds."""
+    from com_danliris_service_etl_spark.operators import bucketing
+
+    calls = []
+    real = bucketing.group_items
+
+    def counted(*args, **kwargs):
+        calls.append(args[1:])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(bucketing, "group_items", counted)
+    return calls
+
+
+def _rows(df) -> list:
+    return sorted(map(tuple, df.collect()))
+
+
+def test_cooccurrence_on_bucketed_layout_single_exchange(spark):
+    """g11's registry path reads the stored per-order arrays, so its whole
+    plan carries exactly ONE shuffle (the pair aggregation) and scans the
+    array layout, never lineitem; the scores equal Adamic-Adar over the
+    arrays computed from the plain scan."""
+    from com_danliris_service_etl_spark.operators.graph import (
+        cooccurrence_adamic_adar,
+    )
+    from com_danliris_service_etl_spark.plans.registry import load_all
+
+    sf_dir = SF_DIR
+    got = load_all()["g11_adamic_adar"][0](spark, sf_dir)
+    plan = _plan(got)
+    shuffles = plan.count("Exchange (") - plan.count("BroadcastExchange (")
+    assert shuffles == 1, f"expected 1 shuffle over the array layout:\n{plan}"
+    assert "items_lineitem_" in plan and "lineitem.parquet" not in plan, plan
+    assert "collect_set" not in plan, plan
+    plain = cooccurrence_adamic_adar(_plain_order_parts(spark, sf_dir), min_common=2)
+    assert _rows(got) == _rows(plain)
+
+
+def test_g13_registry_runs_on_bucketed_layout(spark, monkeypatch):
+    """The co-purchase queries' registry path: the first call leaves a
+    completed array layout of the fixture's lineitem in the warehouse,
+    and a later pass builds no per-group aggregate at all: the frame it
+    reads is a plain scan of the layout, and g13 still equals Jaccard
+    over the plain-scan arrays."""
+    import os
+
+    from com_danliris_service_etl_spark.operators.graph import cooccurrence_jaccard
+    from com_danliris_service_etl_spark.plans import queries_graph
+    from com_danliris_service_etl_spark.plans.registry import load_all
+
+    sf_dir = SF_DIR
+    g13 = load_all()["g13_jaccard_neighbors"][0]
+    g13(spark, sf_dir)
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    done = [d for d in _layouts(spark, f"{sf_dir}/lineitem.parquet")
+            if os.path.exists(os.path.join(wh, d, "_SUCCESS"))]
+    assert len(done) == 1, done
+
+    built = _count_group_items(monkeypatch)
+    got = g13(spark, sf_dir)
+    parts_plan = _plan(queries_graph._order_parts(spark, sf_dir))
+    assert built == [], "a pass over the stored layout re-ran the per-group aggregate"
+    assert "Aggregate" not in parts_plan and done[0] in parts_plan, parts_plan
+    plain = cooccurrence_jaccard(_plain_order_parts(spark, sf_dir), min_common=2)
+    assert _rows(got) == _rows(plain)
+
+
+@pytest.mark.parametrize("name", CO_PURCHASE)
+def test_co_purchase_queries_equal_their_plain_scan_form(spark, name):
+    """Each co-purchase query over the stored array layout equals its
+    operator fed `group_items` of the plain sf0.001 lineitem scan."""
+    from com_danliris_service_etl_spark.operators import graph
+    from com_danliris_service_etl_spark.plans import queries_graph as qg
+    from com_danliris_service_etl_spark.plans.registry import load_all
+
+    sf_dir = SF_DIR
+    plain = _plain_order_parts(spark, sf_dir)
+    expected = {
+        "g9_triangle_count": lambda: graph.triangle_counts(
+            graph._item_pairs(plain), broadcast_degrees=True
+        ),
+        "g11_adamic_adar": lambda: graph.cooccurrence_adamic_adar(plain, min_common=2),
+        "g13_jaccard_neighbors": lambda: graph.cooccurrence_jaccard(plain, min_common=2),
+        "g16_kcore_peel": lambda: graph.kcore_peel(
+            plain, k=qg._KCORE_K, rounds=qg._KCORE_ROUNDS
+        ),
+        "g17_label_propagation": lambda: graph.label_propagation(
+            plain, rounds=qg._LPA_ROUNDS
+        ),
+    }[name]()
+    got = _rows(load_all()[name][0](spark, sf_dir))
+    assert got and got == _rows(expected)
+
+
+def test_group_items_layout_idempotent_and_adoptable(
+    spark, tmp_path, monkeypatch, spark_jobs
+):
+    """Layout lifecycle on an ISOLATED fixture copy (tmp_path — the shared
+    warehouse is touched by concurrent test shards, so mtime assertions
+    there would race): the first call writes one layout holding exactly
+    the plain-scan arrays; a second call writes nothing; a new session
+    over the same warehouse adopts the completed directory without
+    rewriting it, learns its schema without a Spark job (pinned read)
+    and plans a plain scan of it."""
+    import os
+    import shutil
+
+    from com_danliris_service_etl_spark.operators.bucketing import ensure_group_items
+
+    src = tmp_path / "lineitem.parquet"
+    shutil.copy(LINEITEM, src)
+    sf_dir = str(tmp_path)
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    try:
+        first = ensure_group_items(spark, sf_dir, "lineitem", "l_orderkey", "l_partkey")
+        (layout,) = _layouts(spark, src)
+        assert first.columns == ["l_orderkey", "items"]
+        assert _rows(first) == _rows(_plain_order_parts(spark, sf_dir))
+
+        def stamps() -> dict:
+            root = os.path.join(wh, layout)
+            return {f: os.path.getmtime(os.path.join(root, f))
+                    for f in [".", *os.listdir(root)]}
+
+        before = stamps()
+        built = _count_group_items(monkeypatch)
+        again = ensure_group_items(spark, sf_dir, "lineitem", "l_orderkey", "l_partkey")
+        assert _rows(again) == _rows(first)
+        fresh = spark.newSession()
+        jobs = spark_jobs()
+        adopted = ensure_group_items(fresh, sf_dir, "lineitem", "l_orderkey", "l_partkey")
+        assert jobs() == 0
+        assert _rows(adopted) == _rows(first)
+        assert built == [] and stamps() == before, "layout rewritten"
+        assert _layouts(spark, src) == {layout}
+        plan = _plan(adopted)
+        assert "Aggregate" not in plan and layout in plan, plan
+    finally:
+        _drop_layouts(spark, src)
+
+
+def test_group_items_layout_gc_scope(spark, tmp_path):
+    """GC boundary: two specs over the same live source COEXIST; a
+    REGENERATED source (new mtime) orphans its old layouts, which the next
+    write defers while they are young (a parallel session may still scan
+    them) and reclaims once they pass the age gate; a layout of ANOTHER
+    source path is never touched, however old."""
+    import os
+    import shutil
+    import time
+
+    from com_danliris_service_etl_spark.operators import bucketing
+
+    a, b = tmp_path / "a", tmp_path / "b"
+    for d in (a, b):
+        d.mkdir()
+        shutil.copy(LINEITEM, d / "lineitem.parquet")
+    src_a, src_b = a / "lineitem.parquet", b / "lineitem.parquet"
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+
+    def build(d, item="l_partkey"):
+        return bucketing.ensure_group_items(spark, str(d), "lineitem", "l_orderkey", item)
+
+    def backdate(names):
+        old = time.time() - 2 * bucketing._GC_MIN_AGE_SECONDS
+        for n in names:
+            os.utime(os.path.join(wh, n), (old, old))
+
+    try:
+        build(a)
+        build(b)
+        build(a, "l_suppkey")
+        assert len(_layouts(spark, src_a)) == 2  # same file: specs coexist
+        other = _layouts(spark, src_b)
+        assert len(other) == 1
+
+        time.sleep(0.01)
+        os.utime(src_a)  # regenerated: content-identical, new mtime
+        stale = _layouts(spark, src_a)
+        assert build(a).count() > 0
+        assert stale < _layouts(spark, src_a)  # young: deferred, not deleted
+
+        backdate(stale | other)
+        build(a, "l_suppkey")
+        survivors = _layouts(spark, src_a)
+        assert stale.isdisjoint(survivors), survivors
+        assert len(survivors) == 2, survivors  # the live version's two specs
+        assert _layouts(spark, src_b) == other  # another path: never touched
+        assert _rows(build(b)) == _rows(_plain_order_parts(spark, str(b)))
+    finally:
+        _drop_layouts(spark, src_a)
+        _drop_layouts(spark, src_b)
+
+
+def test_group_items_layout_unwritable_warehouse_degrades(spark, tmp_path, monkeypatch):
+    """An unwritable warehouse DEGRADES to arrays computed from the plain
+    scan (correctness over layout) with a RuntimeWarning instead of
+    failing the query, and leaves neither a layout nor a temp directory
+    behind that a later call could mistake for a completed one. Simulated
+    at both points a read-only checkout fails: the parquet write, and
+    the rename onto the canonical name."""
+    import shutil
+    import warnings
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from com_danliris_service_etl_spark.operators import bucketing
+
+    src = tmp_path / "lineitem.parquet"
+    shutil.copy(LINEITEM, src)
+    expected = _rows(_plain_order_parts(spark, str(tmp_path)))
+
+    def boom(*a, **k):
+        raise OSError("read-only file system (simulated)")
+
+    try:
+        for target, attr in ((DataFrameWriter, "parquet"), (bucketing.os, "rename")):
+            monkeypatch.setattr(target, attr, boom)
+            try:
+                with warnings.catch_warnings(record=True) as w:
+                    warnings.simplefilter("always")
+                    df = bucketing.ensure_group_items(
+                        spark, str(tmp_path), "lineitem", "l_orderkey", "l_partkey"
+                    )
+            finally:
+                monkeypatch.undo()
+            assert any(
+                issubclass(x.category, RuntimeWarning)
+                and "falling back to per-pass arrays" in str(x.message)
+                for x in w
+            ), (attr, [str(x.message) for x in w])
+            assert df.columns == ["l_orderkey", "items"]
+            assert _rows(df) == expected, attr
+            assert _layouts(spark, src) == set(), attr
+    finally:
+        _drop_layouts(spark, src)
+
+
+def test_group_items_layout_never_reads_a_bucketed_row_layout(spark, tmp_path):
+    """A warehouse carried over from the bucketed-row layout still holds
+    `bkt_lineitem_<srctag>_<stattag>_*` row-level copies of the same
+    source, as a directory and as a catalog table. The array layout never
+    reads either: it writes and scans its own `items_lineitem_*`
+    directory, returns the arrays, and leaves the old copy alone."""
+    import hashlib
+    import os
+    import shutil
 
     from com_danliris_service_etl_spark.operators.bucketing import (
-        ensure_bucketed_fact,
+        ensure_group_items,
+        write_bucketed,
     )
+    from com_danliris_service_etl_spark.sources import fsutil
 
-    shutil.copy("/root/testdata/sf0.001/lineitem.parquet", tmp_path / "lineitem.parquet")
-    sf_dir = str(tmp_path)
-    t1 = ensure_bucketed_fact(
-        spark, sf_dir, "lineitem", ["l_orderkey"],
-        columns=["l_orderkey", "l_partkey"],
-    )
-    n1 = t1.count()
-    bkt = [t.name for t in spark.catalog.listTables() if t.name.startswith("bkt_lineitem_")]
-    assert bkt
-    # find the canonical dir for THIS fixture: exactly one bkt_lineitem_*
-    # name both in the catalog and materialized since the copy above
+    src = tmp_path / "lineitem.parquet"
+    shutil.copy(LINEITEM, src)
+    st = os.stat(src)
+    tag = hashlib.sha1(str(src).encode()).hexdigest()[:6]
+    version = hashlib.sha1(f"{st.st_mtime_ns}|{st.st_size}".encode()).hexdigest()[:6]
+    old = f"bkt_lineitem_{tag}_{version}_0123456789"
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    dirs = {n: os.path.getmtime(os.path.join(wh, n)) for n in bkt
-            if os.path.isdir(os.path.join(wh, n))}
-    t2 = ensure_bucketed_fact(
-        spark, sf_dir, "lineitem", ["l_orderkey"],
-        columns=["l_orderkey", "l_partkey"],
-    )
-    for n, mt in dirs.items():
-        assert os.path.getmtime(os.path.join(wh, n)) == mt, "layout rewritten"
-    assert t2.count() == n1
+    rows = fsutil.read_parquet(spark, str(src)).select("l_orderkey", "l_partkey")
+    spark.sql(f"DROP TABLE IF EXISTS {old}")
+    write_bucketed(rows, old, ["l_orderkey"], n_buckets=4)
+    try:
+        df = ensure_group_items(spark, str(tmp_path), "lineitem", "l_orderkey", "l_partkey")
+        plan = _plan(df)
+        assert df.columns == ["l_orderkey", "items"]
+        assert "items_lineitem_" in plan and old not in plan, plan
+        assert _rows(df) == _rows(_plain_order_parts(spark, str(tmp_path)))
+        assert spark.catalog.tableExists(old)
+        assert os.path.exists(os.path.join(wh, old, "_SUCCESS"))
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {old}")
+        _drop_layouts(spark, src)
 
-    # adoption path: a fresh session's empty catalog over the same
-    # warehouse — simulate by dropping the entries (external tables:
-    # files survive the drop)
-    for n in bkt:
-        spark.sql(f"DROP TABLE IF EXISTS {n}")
-    t3 = ensure_bucketed_fact(
-        spark, sf_dir, "lineitem", ["l_orderkey"],
-        columns=["l_orderkey", "l_partkey"],
-    )
-    for n, mt in dirs.items():
-        assert os.path.getmtime(os.path.join(wh, n)) == mt, "adoption rewrote the layout"
-    assert t3.count() == n1
-    agg_plan = (
-        t3.groupBy("l_orderkey").agg(F.collect_set("l_partkey"))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange hashpartitioning" not in agg_plan, agg_plan
-    # teardown: this fixture's source path is unique per run (tmp_path),
-    # so the in-engine stale-sibling GC (same srctag, different spec) can
-    # never reclaim it — rmtree the layout dirs here or the shared
-    # warehouse leaks one fact-sized copy per suite run (r11 advice)
-    import hashlib
 
-    srctag = hashlib.sha1(f"{sf_dir}/lineitem.parquet".encode()).hexdigest()[:6]
-    for n in [t.name for t in spark.catalog.listTables() if t.name.startswith("bkt_lineitem_")]:
-        spark.sql(f"DROP TABLE IF EXISTS {n}")
-        if f"_{srctag}_" in n:
-            shutil.rmtree(os.path.join(wh, n), ignore_errors=True)
+def test_cooccurrence_stages_live_once():
+    """Layout guard over operators/graph.py and plans/queries_graph.py:
+    ONE function builds the per-group `collect_set` arrays and ONE
+    generates in-array pairs (two explodes of the same array), and every
+    co-occurrence operator and query goes through them."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "com_danliris_service_etl_spark"
+
+    def called(n: ast.Call) -> str | None:
+        f = n.func
+        return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+    collect_sets, pair_generators = [], []
+    for module in ("operators/graph.py", "plans/queries_graph.py"):
+        tree = ast.parse((pkg / module).read_text())
+        for fn in tree.body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            calls = [n for n in ast.walk(fn) if isinstance(n, ast.Call)]
+            collect_sets += [
+                f"{module}:{fn.name}" for n in calls if called(n) == "collect_set"
+            ]
+            exploded = [
+                ast.dump(n.args[0]) for n in calls if called(n) == "explode" and n.args
+            ]
+            if any(exploded.count(a) >= 2 for a in exploded):
+                pair_generators.append(f"{module}:{fn.name}")
+    assert collect_sets == ["operators/graph.py:group_items"]
+    assert pair_generators == ["operators/graph.py:_item_pairs"]
+
+
+def test_pagerank_node_cover_callers_pass_bidirected_edges(spark, monkeypatch):
+    """`pagerank(sources_cover_nodes=True)` reads the node set off the
+    out-degree aggregate, which is complete only for a bidirected edge
+    list. Every engine caller that sets it (found by AST, so a new one
+    joins this check) hands pagerank edges where each (u, v) has a
+    matching (v, u) on the sf0.001 fixture."""
+    import ast
+    import pathlib
+
+    from com_danliris_service_etl_spark.plans import queries_graph, queries_llm
+    from com_danliris_service_etl_spark.plans.registry import load_all
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "com_danliris_service_etl_spark"
+    callers = set()
+    for path in pkg.rglob("*.py"):
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if isinstance(fn, ast.FunctionDef) and any(
+                isinstance(n, ast.Call)
+                and getattr(n.func, "id", getattr(n.func, "attr", None)) == "pagerank"
+                and any(k.arg == "sources_cover_nodes"
+                        and isinstance(k.value, ast.Constant) and k.value.value is True
+                        for k in n.keywords)
+                for n in ast.walk(fn)
+            ):
+                callers.add(fn.name)
+    assert callers == {"g8_pagerank", "llm12_centrality_keeper"}
+
+    seen = []
+    for module in (queries_graph, queries_llm):
+        real = module.pagerank
+
+        def recording(edges, *args, _real=real, **kwargs):
+            seen.append((edges, kwargs))
+            return _real(edges, *args, **kwargs)
+
+        monkeypatch.setattr(module, "pagerank", recording)
+    registry = load_all()
+    for name in sorted(callers):
+        seen.clear()
+        registry[name][0](spark, SF_DIR)
+        (edges, kwargs), = seen
+        assert kwargs.get("sources_cover_nodes") is True
+        e = edges.select("src", "dst")
+        reverse = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        assert e.count() > 0, name
+        assert e.subtract(reverse).count() == 0, name
+        assert reverse.subtract(e).count() == 0, name
 
 
 def test_asof_join_broadcast_strategy_agrees_with_sort(spark):
@@ -497,111 +752,6 @@ def test_asof_join_broadcast_strategy_agrees_with_sort(spark):
     }
     assert back[1] == 250.0  # equal-ts tie -> highest tiebreak
     assert back[2] is None  # before the first rate
-
-
-def test_ensure_bucketed_fact_gc_scope(spark, tmp_path):
-    """GC boundary (r12): two DIFFERENT specs over the same live source
-    file (bench's 8-bucket layout vs the tests' 32-bucket one) must
-    COEXIST — GCing on the spec hash would make alternating sessions
-    delete each other's layouts and re-pay the write every cycle — while
-    REGENERATING the source file (new mtime) must reclaim every layout
-    of the old file version on the next materialization."""
-    import hashlib
-    import os
-    import shutil
-    import time
-
-    from com_danliris_service_etl_spark.operators.bucketing import (
-        ensure_bucketed_fact,
-    )
-
-    src = tmp_path / "lineitem.parquet"
-    shutil.copy("/root/testdata/sf0.001/lineitem.parquet", src)
-    sf_dir = str(tmp_path)
-    srctag = hashlib.sha1(str(src).encode()).hexdigest()[:6]
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-
-    def mine() -> set[str]:
-        return {
-            d for d in os.listdir(wh)
-            if d.startswith(f"bkt_lineitem_{srctag}_") and "__w" not in d
-        }
-
-    try:
-        ensure_bucketed_fact(spark, sf_dir, "lineitem", ["l_orderkey"],
-                             n_buckets=8, columns=["l_orderkey", "l_partkey"])
-        ensure_bucketed_fact(spark, sf_dir, "lineitem", ["l_orderkey"],
-                             n_buckets=4, columns=["l_orderkey", "l_partkey"])
-        assert len(mine()) == 2, mine()  # same file: specs coexist
-
-        # regenerate the fixture (content-identical, new mtime suffices)
-        time.sleep(0.01)
-        os.utime(src)
-        stale = mine()
-        t = ensure_bucketed_fact(spark, sf_dir, "lineitem", ["l_orderkey"],
-                                 n_buckets=8, columns=["l_orderkey", "l_partkey"])
-        assert t.count() > 0
-        # r12-advice age gate: the dead-fingerprint siblings are YOUNG (a
-        # parallel session that adopted them pre-regeneration could still
-        # be mid-scan), so this pass DEFERS them instead of deleting
-        assert stale <= mine(), (stale, mine())
-        # back-date them past the gate; the next materialization reclaims
-        from com_danliris_service_etl_spark.operators import bucketing as _bkt
-
-        old_ts = time.time() - 2 * _bkt._GC_MIN_AGE_SECONDS
-        for d in stale:
-            os.utime(os.path.join(wh, d), (old_ts, old_ts))
-        ensure_bucketed_fact(spark, sf_dir, "lineitem", ["l_orderkey"],
-                             n_buckets=2, columns=["l_orderkey", "l_partkey"])
-        survivors = mine()
-        assert stale.isdisjoint(survivors), survivors  # old-version GC'd
-        assert len(survivors) == 2, survivors  # the two live-version specs
-    finally:
-        for n in [t.name for t in spark.catalog.listTables()
-                  if t.name.startswith(f"bkt_lineitem_{srctag}_")]:
-            spark.sql(f"DROP TABLE IF EXISTS {n}")
-        for d in mine():
-            shutil.rmtree(os.path.join(wh, d), ignore_errors=True)
-
-
-def test_ensure_bucketed_fact_unwritable_warehouse_degrades(spark, tmp_path, monkeypatch):
-    """r12 advice: an unwritable/uncreatable warehouse must DEGRADE the
-    layout to a plain unbucketed scan (correctness over performance),
-    with a warning — not fail the query. Simulated by making the
-    bucketed write raise (the failure point a read-only checkout hits);
-    rows must still come back, and nothing may be registered."""
-    import shutil
-    import warnings
-
-    from com_danliris_service_etl_spark.operators import bucketing
-
-    shutil.copy(
-        "/root/testdata/sf0.001/lineitem.parquet", tmp_path / "lineitem.parquet"
-    )
-
-    def boom(*a, **k):
-        raise OSError("read-only file system (simulated)")
-
-    monkeypatch.setattr(bucketing, "write_bucketed", boom)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        df = bucketing.ensure_bucketed_fact(
-            spark, str(tmp_path), "lineitem", ["l_orderkey"],
-            columns=["l_orderkey", "l_partkey"],
-        )
-        n = df.count()
-    assert n == spark.read.parquet(str(tmp_path / "lineitem.parquet")).count()
-    assert df.columns == ["l_orderkey", "l_partkey"]
-    assert any("falling back to unbucketed" in str(x.message) for x in w)
-    # degraded path must not leave a catalog entry that a later call
-    # would mistake for a completed layout
-    import hashlib
-
-    srctag = hashlib.sha1(f"{tmp_path}/lineitem.parquet".encode()).hexdigest()[:6]
-    assert not [
-        t.name for t in spark.catalog.listTables()
-        if t.name.startswith("bkt_lineitem_") and f"_{srctag}_" in t.name
-    ]
 
 
 def test_asof_join_segmented_strategy_agrees_with_sort(spark):

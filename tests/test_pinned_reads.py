@@ -232,8 +232,8 @@ def test_reads_learn_their_schema_without_a_spark_job(spark, spark_jobs, tmp_pat
 
 
 ENGINE = pathlib.Path(com_danliris_service_etl_spark.__file__).parent
-# A local warehouse cache with its own adopt protocol, outside the rule.
-SCHEMA_RULE_EXEMPT = {"sources/fsutil.py", "operators/bucketing.py"}
+# The one module that pins schemas.
+SCHEMA_RULE_EXEMPT = {"sources/fsutil.py"}
 
 
 def _chain(node: ast.AST) -> list[ast.Call]:
@@ -281,8 +281,7 @@ def test_only_fsutil_decides_a_parquet_schema():
     """Layout guard: outside `fsutil`, no engine module reads parquet
     through a reader without a schema (``.read.parquet(``: Spark's
     inference, one job per read) or hands a reader a schema that is not
-    `fsutil.parquet_schema`'s. Bucketing and registry query bodies are
-    exempt."""
+    `fsutil.parquet_schema`'s. Registry query bodies are exempt."""
     offences, pinned = [], 0
     for path in sorted(ENGINE.rglob("*.py")):
         rel = path.relative_to(ENGINE).as_posix()

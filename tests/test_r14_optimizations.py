@@ -81,7 +81,7 @@ def test_pair_shingle_intersection_array_form(spark):
 def test_label_propagation_branches_agree(spark):
     """g17's one-exchange superstep fusion lives on the broadcast_labels
     branch only; both branches must emit identical labels."""
-    from com_danliris_service_etl_spark.operators.graph import label_propagation
+    from com_danliris_service_etl_spark.operators.graph import group_items, label_propagation
 
     rows = [
         # two baskets forming one dense community, one separate pair
@@ -93,12 +93,12 @@ def test_label_propagation_branches_agree(spark):
     df = spark.createDataFrame(rows, "g long, i long")
     a = {
         (r.node, r.label)
-        for r in label_propagation(df, "g", "i", rounds=3,
+        for r in label_propagation(group_items(df, "g", "i"), rounds=3,
                                    broadcast_labels=True).collect()
     }
     b = {
         (r.node, r.label)
-        for r in label_propagation(df, "g", "i", rounds=3,
+        for r in label_propagation(group_items(df, "g", "i"), rounds=3,
                                    broadcast_labels=False).collect()
     }
     assert a == b and len(a) == 5

@@ -323,7 +323,7 @@ def test_g16_kcore_peel_semantics(spark):
     degree 3) survives k=3 peeling forever; a pendant chain hanging off
     it is peeled layer by layer — one chain node per round, which a
     one-shot degree filter cannot reproduce."""
-    from com_danliris_service_etl_spark.operators.graph import kcore_peel
+    from com_danliris_service_etl_spark.operators.graph import group_items, kcore_peel
 
     # groups: the 4-clique via one group {0,1,2,3}; chain 3-10-11 via
     # pair groups (10 hangs off clique node 3, 11 off 10)
@@ -332,7 +332,7 @@ def test_g16_kcore_peel_semantics(spark):
     ]
     df = spark.createDataFrame(rows, "g long, item long")
     out = {r.round: (r.n_nodes, r.n_edges) for r in
-           kcore_peel(df, "g", "item", k=3, rounds=3).collect()}
+           kcore_peel(group_items(df, "g", "item"), k=3, rounds=3).collect()}
     # round 0: 6 nodes, clique 6 edges + 2 chain edges
     assert out[0] == (6, 8)
     # round 1: node 11 (deg 1) and 10 (deg 2) both drop — both are
@@ -347,13 +347,13 @@ def test_g16_kcore_peel_cascade_needs_iteration(spark):
     round 1, which lowers their neighbors below k, and the whole chain
     unravels ONE LAYER PER ROUND. Any single-pass filter would keep the
     middle nodes."""
-    from com_danliris_service_etl_spark.operators.graph import kcore_peel
+    from com_danliris_service_etl_spark.operators.graph import group_items, kcore_peel
 
     rows = [(i, x) for i, (x, y) in enumerate(
         [(0, 1), (1, 2), (2, 3), (3, 4)]) for x in (x, y)]
     df = spark.createDataFrame(rows, "g long, item long")
     out = {r.round: r.n_nodes for r in
-           kcore_peel(df, "g", "item", k=2, rounds=3).collect()}
+           kcore_peel(group_items(df, "g", "item"), k=2, rounds=3).collect()}
     # n_nodes counts EDGE ENDPOINTS: round 2's sole survivor (the chain
     # middle) is isolated, carries no edge, and would be peeled next
     # round anyway — so it reports 0, same as the oracle's endpoint count
@@ -373,13 +373,13 @@ def test_kcore_peel_matches_python_recompute(spark, groups, k):
     """Random small co-occurrence graphs vs an independent Python peel:
     trajectory (endpoint counts, edge counts) must match exactly for
     every round at every k."""
-    from com_danliris_service_etl_spark.operators.graph import kcore_peel
+    from com_danliris_service_etl_spark.operators.graph import group_items, kcore_peel
 
     rows = [(gi, item) for gi, g in enumerate(groups) for item in g]
     df = spark.createDataFrame(rows, "g long, item long")
     got = {
         r.round: (r.n_nodes, r.n_edges)
-        for r in kcore_peel(df, "g", "item", k=k, rounds=3).collect()
+        for r in kcore_peel(group_items(df, "g", "item"), k=k, rounds=3).collect()
     }
 
     edges = set()
@@ -526,14 +526,14 @@ def test_lpa_two_cliques_stay_separate_communities(spark):
     """Two disjoint triangles: LPA must converge each to its own min
     label and NEVER merge them — the community structure CC would also
     find, pinned as the base case before the density-sensitive ones."""
-    from com_danliris_service_etl_spark.operators.graph import label_propagation
+    from com_danliris_service_etl_spark.operators.graph import group_items, label_propagation
 
     rows = [(0, 1), (0, 2), (0, 3), (1, 10), (1, 11), (1, 12)]
     df = spark.createDataFrame(
         [(g, x) for g, x in rows], "g long, item long"
     )
     out = {r.node: r.label for r in
-           label_propagation(df, "g", "item", rounds=3).collect()}
+           label_propagation(group_items(df, "g", "item"), rounds=3).collect()}
     assert {out[1], out[2], out[3]} == {1}
     assert {out[10], out[11], out[12]} == {10}
 
@@ -543,13 +543,13 @@ def test_lpa_min_label_tiebreak_is_pinned(spark):
     labels {1, 3} at count 1 each and must take the MINIMUM (1); the
     endpoints see only the middle (2). Any other tiebreak or an
     asynchronous update order would differ."""
-    from com_danliris_service_etl_spark.operators.graph import label_propagation
+    from com_danliris_service_etl_spark.operators.graph import group_items, label_propagation
 
     df = spark.createDataFrame(
         [(0, 1), (0, 2), (1, 2), (1, 3)], "g long, item long"
     )
     out = {r.node: r.label for r in
-           label_propagation(df, "g", "item", rounds=1).collect()}
+           label_propagation(group_items(df, "g", "item"), rounds=1).collect()}
     assert out == {1: 2, 2: 1, 3: 2}
 
 
@@ -558,13 +558,14 @@ def test_lpa_shuffle_join_ladder_agrees_with_broadcast(spark):
     |V|-row label relation that stops fitting an executor — must produce
     identical labels, and its superstep vote frame must NOT carry a
     forced broadcast hint (the OOM risk the r10 advice flagged)."""
-    from com_danliris_service_etl_spark.operators.graph import label_propagation
+    from com_danliris_service_etl_spark.operators.graph import group_items, label_propagation
 
     rows = [(0, 1), (0, 2), (0, 3), (1, 10), (1, 11), (1, 12), (2, 3), (2, 10)]
     df = spark.createDataFrame(rows, "g long, item long")
-    bc = sorted(map(tuple, label_propagation(df, "g", "item", rounds=2).collect()))
+    groups = group_items(df, "g", "item")
+    bc = sorted(map(tuple, label_propagation(groups, rounds=2).collect()))
     sh = sorted(map(tuple, label_propagation(
-        df, "g", "item", rounds=2, broadcast_labels=False).collect()))
+        groups, rounds=2, broadcast_labels=False).collect()))
     assert bc == sh
 
 
@@ -577,11 +578,11 @@ def test_lpa_is_checkpoint_tailed(spark):
     counts re-engage. The superstep's internal shape (broadcast label
     join, two hash aggregates) is covered by the recompute law tests
     above plus the broadcast/shuffle ladder equivalence."""
-    from com_danliris_service_etl_spark.operators.graph import label_propagation
+    from com_danliris_service_etl_spark.operators.graph import group_items, label_propagation
 
     df = spark.createDataFrame([(0, 1), (0, 2), (1, 2), (1, 3)], "g long, item long")
     plan = (
-        label_propagation(df, "g", "item", rounds=1)
+        label_propagation(group_items(df, "g", "item"), rounds=1)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -604,7 +605,7 @@ def test_lpa_matches_python_recompute(spark, groups, rounds):
     bounded round count."""
     from collections import Counter, defaultdict
 
-    from com_danliris_service_etl_spark.operators.graph import label_propagation
+    from com_danliris_service_etl_spark.operators.graph import group_items, label_propagation
 
     adj = defaultdict(set)
     for items in groups:
@@ -625,5 +626,5 @@ def test_lpa_matches_python_recompute(spark, groups, rounds):
     rows = [(g, x) for g, items in enumerate(groups) for x in items]
     df = spark.createDataFrame(rows, "g long, item long")
     got = {r.node: r.label for r in
-           label_propagation(df, "g", "item", rounds=rounds).collect()}
+           label_propagation(group_items(df, "g", "item"), rounds=rounds).collect()}
     assert got == labels, (groups, rounds)

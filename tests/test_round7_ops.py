@@ -377,6 +377,7 @@ def test_vocab_coverage_hand_computed(spark):
 def test_adamic_adar_hand_computed(spark):
     from com_danliris_service_etl_spark.operators.graph import (
         cooccurrence_adamic_adar,
+        group_items,
     )
 
     rows = [
@@ -392,13 +393,13 @@ def test_adamic_adar_hand_computed(spark):
     df = spark.createDataFrame(rows, "gid long, item string")
     got = {
         (r.src, r.dst): (r.n_common, r.aa_score)
-        for r in cooccurrence_adamic_adar(df, "gid", "item", min_common=2).collect()
+        for r in cooccurrence_adamic_adar(group_items(df, "gid", "item"), min_common=2).collect()
     }
     assert got == {("a", "b"): (2, round(1 / math.log(3) + 1 / math.log(2), 6))}
     # min_common=1 keeps every co-occurring pair
     got1 = {
         (r.src, r.dst)
-        for r in cooccurrence_adamic_adar(df, "gid", "item", min_common=1).collect()
+        for r in cooccurrence_adamic_adar(group_items(df, "gid", "item"), min_common=1).collect()
     }
     assert got1 == {("a", "b"), ("a", "c"), ("b", "c"), ("a", "d")}
 

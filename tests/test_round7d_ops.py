@@ -35,7 +35,7 @@ def _jaccard_ref(rows, min_common=2):
 
 
 def test_cooccurrence_jaccard_matches_set_model(spark):
-    from com_danliris_service_etl_spark.operators.graph import cooccurrence_jaccard
+    from com_danliris_service_etl_spark.operators.graph import cooccurrence_jaccard, group_items
 
     rows = [
         # items 1,2 share groups g1,g2; item 3 only in g1; item 4 alone;
@@ -47,7 +47,7 @@ def test_cooccurrence_jaccard_matches_set_model(spark):
     df = spark.createDataFrame(rows, "g string, item long")
     got = {
         (r.src, r.dst): (r.n_common, r.jaccard)
-        for r in cooccurrence_jaccard(df, "g", "item").collect()
+        for r in cooccurrence_jaccard(group_items(df, "g", "item")).collect()
     }
     assert got == _jaccard_ref(rows)
     # item 1 ∈ {g1,g2}, item 2 ∈ {g1,g2,g3} → 2 common / 3 union
@@ -55,11 +55,11 @@ def test_cooccurrence_jaccard_matches_set_model(spark):
 
 
 def test_cooccurrence_jaccard_perfect_overlap_is_one(spark):
-    from com_danliris_service_etl_spark.operators.graph import cooccurrence_jaccard
+    from com_danliris_service_etl_spark.operators.graph import cooccurrence_jaccard, group_items
 
     rows = [(g, i) for g in ("a", "b") for i in (7, 8)]
     df = spark.createDataFrame(rows, "g string, item long")
-    got = cooccurrence_jaccard(df, "g", "item").collect()
+    got = cooccurrence_jaccard(group_items(df, "g", "item")).collect()
     assert len(got) == 1 and got[0].jaccard == 1.0
 
 

@@ -11,11 +11,11 @@ awaits wall-clock timeouts, hypothesis suites replay many examples), the
 classic LPT greedy bound.
 
 Safe to parallelize because test isolation is already per-process-ready:
-managed-table names are per-test or content-fingerprinted with a
-pid-salted temp write + atomic os.rename install + adoption of the
-winner's directory (ensure_bucketed_fact — concurrent-shard safety
-rests on that rename protocol, NOT on any session salt; do not weaken
-it), Derby JDBC contracts use in-memory databases,
+managed-table names are per-test, the co-purchase array layout is
+content-fingerprinted with a pid-salted temp write + atomic os.rename
+install + adoption of the winner's directory (ensure_group_items —
+concurrent-shard safety rests on that rename protocol, NOT on any
+session salt; do not weaken it), Derby JDBC contracts use in-memory databases,
 streaming checkpoints live under pytest tmp_path, and the shared
 spark-warehouse dir is only ever written under distinct table names.
 
